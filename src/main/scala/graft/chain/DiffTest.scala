@@ -48,44 +48,11 @@ object DiffTest {
   }
 
   /** the pinned corpus: every scalar datatype this engine collects live
-    * (superset of cryo_test defaults.py's 24) */
-  val corpus: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "blocks" -> (ChainDatasets.blocks(_, _)),
-    "transactions" -> ((s: SparkSession, d: String) => ChainDatasets.transactions(s, d)),
-    "logs" -> ((s: SparkSession, d: String) => ChainDatasets.logs(s, d)),
-    "traces" -> ((s: SparkSession, d: String) => ChainDatasets.traces(s, d)),
-    "erc20_transfers" -> ((s: SparkSession, d: String) => ChainDatasets.erc20Transfers(s, d)),
-    "erc20_approvals" -> ((s: SparkSession, d: String) => ChainDatasets.erc20Approvals(s, d)),
-    "erc721_transfers" -> ((s: SparkSession, d: String) => ChainDatasets.erc721Transfers(s, d)),
-    "native_transfers" -> ((s: SparkSession, d: String) => ChainDatasets.nativeTransfers(s, d)),
-    "contracts" -> ((s: SparkSession, d: String) => ChainDatasets.contracts(s, d)),
-    "four_byte_counts" -> ((s: SparkSession, d: String) => ChainDatasets.fourByteCounts(s, d)),
-    "address_appearances" -> ((s: SparkSession, d: String) => ChainDatasets.addressAppearances(s, d)),
-    "balances" -> ((s: SparkSession, d: String) => ChainDatasets.balances(s, d)),
-    "nonces" -> ((s: SparkSession, d: String) => ChainDatasets.nonces(s, d)),
-    "codes" -> ((s: SparkSession, d: String) => ChainDatasets.codes(s, d)),
-    "slots" -> ((s: SparkSession, d: String) => ChainDatasets.slots(s, d)),
-    "balance_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.balanceDiffs(s, d)),
-    "code_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.codeDiffs(s, d)),
-    "nonce_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.nonceDiffs(s, d)),
-    "storage_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.storageDiffs(s, d)),
-    "eth_calls" -> ((s: SparkSession, d: String) => ChainDatasets.ethCalls(s, d)),
-    "erc20_metadata" -> ((s: SparkSession, d: String) => ChainDatasets.erc20Metadata(s, d)),
-    "erc20_supplies" -> ((s: SparkSession, d: String) => ChainDatasets.erc20Supplies(s, d)),
-    "erc20_balances" -> ((s: SparkSession, d: String) => ChainDatasets.erc20Balances(s, d)),
-    "erc721_metadata" -> ((s: SparkSession, d: String) => ChainDatasets.erc721Metadata(s, d)),
-    "trace_calls" -> ((s: SparkSession, d: String) => ChainDatasets.traceCalls(s, d)),
-    "vm_traces" -> ((s: SparkSession, d: String) => ChainDatasets.vmTraces(s, d)),
-    "geth_opcodes" -> ((s: SparkSession, d: String) => ChainDatasets.gethOpcodes(s, d)),
-    "geth_calls" -> ((s: SparkSession, d: String) => ChainDatasets.gethCalls(s, d)),
-    "geth_balance_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.gethBalanceDiffs(s, d)),
-    "geth_code_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.gethCodeDiffs(s, d)),
-    "geth_nonce_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.gethNonceDiffs(s, d)),
-    "geth_storage_diffs" -> ((s: SparkSession, d: String) => ChainDatasets.gethStorageDiffs(s, d)),
-    "balance_reads" -> ((s: SparkSession, d: String) => ChainDatasets.balanceReads(s, d)),
-    "code_reads" -> ((s: SparkSession, d: String) => ChainDatasets.codeReads(s, d)),
-    "nonce_reads" -> ((s: SparkSession, d: String) => ChainDatasets.nonceReads(s, d)),
-    "storage_reads" -> ((s: SparkSession, d: String) => ChainDatasets.storageReads(s, d)))
+    * (superset of cryo_test defaults.py's 24) — every Freeze builder but
+    * javascript_traces, whose opaque JSON output compares through
+    * canonJs, in name order */
+  val corpus: Seq[(String, Freeze.DatasetBuilder)] =
+    (Freeze.allBuilders - "javascript_traces").toSeq.sortBy(_._1)
 
   /** canonical row rendering: null-safe, binary as hex, deterministic
     * sort — engine-neutral so two collections compare as row SETS */
@@ -115,32 +82,27 @@ object DiffTest {
     }.sorted.toSeq
   }
 
-  /** Materialize every bronze the corpus needs from the live endpoint,
-    * using the SAME fetch loops production freezing uses. Entity work
-    * lists (addresses / slots / calls) are pinned from the reference
-    * dir's own bronzes. */
+  /** datasets whose bronzes are together every block-range bronze the
+    * corpus reads (blocks, transactions, receipts, logs, traces, the
+    * four state diffs, prestate, geth calls and opcodes, vm and js
+    * traces) */
+  private val rangeDatasets = Seq("address_appearances", "balance_diffs",
+    "geth_balance_diffs", "geth_calls", "geth_opcodes", "vm_traces",
+    "javascript_traces")
+
+  /** Materialize every bronze the corpus needs from the live endpoint:
+    * the block-range bronzes through the production materializeBronze,
+    * the entity-scoped ones over work lists (blocks × addresses / slots /
+    * calls) pinned from the reference dir's own bronzes. */
   def materializeBronzes(spark: SparkSession, src: RpcSource,
       refDir: String, outDir: String, range: BlockSyntax.Range,
       nParts: Int, jsTracer: String): Unit = {
-    def put(name: String)(df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-
-    // block-range bronzes, one fetch pass each (blocks+txs shared)
-    val (b, t, done) = src.fetchBlocksAndTransactions(spark, range, nParts)
-    put("rpc_blocks")(b); put("rpc_transactions")(t); done()
-    put("rpc_receipts")(src.fetchReceipts(spark, range, nParts))
-    put("rpc_logs")(src.fetchLogs(spark, range, numPartitions = nParts))
-    put("rpc_traces")(src.fetchTraces(spark, range, nParts))
-    put("rpc_geth_prestate")(src.fetchGethPrestate(spark, range, nParts))
-    put("rpc_geth_calls")(src.fetchGethCalls(spark, range, nParts))
-    put("rpc_geth_opcodes")(src.fetchGethOpcodes(spark, range, nParts))
-    put("rpc_vm_traces")(src.fetchVmTraces(spark, range, nParts))
-    put("rpc_js_traces")(src.fetchJsTraces(spark, range, jsTracer, nParts))
-    val (sd, sdDone) = src.fetchStateDiffs(spark, range, nParts)
-    sd.foreach { case (name, df) => put(name)(df) }
-    sdDone()
+    src.materializeBronze(spark, outDir, range, rangeDatasets,
+      jsTracer = Some(jsTracer), numPartitions = nParts)
 
     // entity-scoped bronzes, work lists pinned from the reference side
+    def put(name: String)(df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     def hexes(table: String, col: String): Seq[String] =
       spark.read.parquet(s"$refDir/$table.parquet")
         .select(col).distinct().collect()

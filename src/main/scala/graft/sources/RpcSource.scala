@@ -5,7 +5,10 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
+import scala.reflect.ClassTag
+
 import graft.chain.BlockSyntax
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -24,8 +27,11 @@ case class RpcConfig(
     initialBackoffMs: Long = 500,
     innerRequestSize: Long = 100,
     /** provider compute-units budget (args.rs:109-111, default 50):
-      * sizes the rate-limit retry backoff — a 429'd batch waits at least
-      * long enough for its compute units to refill before retrying. */
+      * sizes the floor of the retry backoff — after a failed synchronous
+      * attempt the next waits at least innerRequestSize / this many
+      * seconds. A batch whose pipelined attempt fails (a 429 included) is
+      * re-sent at once as the synchronous path's first attempt; only a
+      * failure of that attempt starts the wait. */
     computeUnitsPerSecond: Long = 50)
 
 object RpcConfig {
@@ -109,14 +115,10 @@ object RpcCodec {
   def getBlockRequest(id: Long, blockNumber: Long, fullTxs: Boolean): String =
     s"""{"jsonrpc":"2.0","id":$id,"method":"eth_getBlockByNumber","params":["${hexQuantity(blockNumber)}",$fullTxs]}"""
 
+  /** eth_getLogs with the topic0..3 position filter
+    * (types/rpc_params.rs:99-131): trailing null positions are trimmed;
+    * interior wildcards serialize as null. */
   def getLogsRequest(id: Long, fromBlock: Long, toBlock: Long,
-      address: Option[String], topic0: Option[String]): String =
-    getLogsRequestTopics(id, fromBlock, toBlock, address,
-      Seq(topic0, None, None, None))
-
-  /** full topic0..3 position filter (types/rpc_params.rs:99-131): trailing
-    * null positions are trimmed; interior wildcards serialize as null. */
-  def getLogsRequestTopics(id: Long, fromBlock: Long, toBlock: Long,
       address: Option[String], topics: Seq[Option[String]]): String = {
     val addr = address.map(a => s""","address":"$a"""").getOrElse("")
     val trimmed = topics.reverse.dropWhile(_.isEmpty).reverse
@@ -245,24 +247,40 @@ final class TokenBucket(ratePerSecond: Double) extends Serializable {
   }
 }
 
-/** Distributed JSON-RPC extraction: a driver DataFrame of request params
-  * partitioned into chunks → `mapPartitions` with a per-partition HTTP
-  * client → rows shaped exactly like the `rpc_*` bronze tables the
+/** Distributed JSON-RPC extraction: a driver-side list of work (a block
+  * range, or entity × block items) is partitioned into Spark tasks, each
+  * task streams its items through ONE fetch loop, and the responses are
+  * parsed into rows shaped exactly like the `rpc_*` bronze tables the
   * dataset transforms consume (graft.chain.ChainDatasets). Freezing from
   * a live node is: RpcSource materializes bronze, transforms project
   * silver — same code path as the fixtures.
   *
-  * Parallelism model (SURVEY §3 mapping): Spark tasks = cryo's chunk
-  * fan-out; per-partition sequential requests with rate limit + retries =
-  * cryo's per-request semaphore; no shuffle anywhere — each partition
-  * fetches a disjoint block range.
+  * The fetch loop is cryo's `Source` envelope (sources.rs:52-58,
+  * 986-997), split across tasks: each task holds one [[Link]] — an HTTP
+  * client, a token bucket with the task's share of
+  * `--requests-per-second`, and the task's share of the
+  * `--max-concurrent-requests` window — and every request the task makes
+  * goes through it. Items are batched `innerRequestSize` calls per HTTP
+  * round trip (ids are batch indices), the batch's answer is checked for
+  * one part per request, and responses come back in submission order.
+  * Tasks fetch disjoint work; there is no shuffle.
+  *
+  * Error parts: a node that rejects one request still answers the batch
+  * with HTTP 200 and an `error` object for that request. Such a part
+  * fails the batch, naming the item, so a bronze never misses a block or
+  * holds a made-up row. Two readers take error parts as data instead:
+  * eth_calls, where an error is a revert and the output is null, and the
+  * receipt fast path, where an error sends the block to the per-tx
+  * fallback.
   */
 class RpcSource(config: RpcConfig) extends Serializable {
+  import RpcSource.{Fail, Keep, OnError}
 
   private def retrying[T](f: => T): T = {
     var attempt = 0
-    // first backoff waits at least long enough for one batch's compute
-    // units to refill (1 CU/request floor; RetryBackoffLayer semantics)
+    // the wait after the first failed attempt is at least one batch's
+    // compute-unit refill time (1 CU/request floor), then doubles; the
+    // first attempt itself runs at once (RetryBackoffLayer semantics)
     var backoff = math.max(config.initialBackoffMs,
       1000L * config.innerRequestSize /
         math.max(1L, config.computeUnitsPerSecond))
@@ -295,39 +313,20 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * per-byte cost that matters at 100 TB. A well-formed but
     * semantically wrong body still surfaces at parse time as the real
     * error it is. */
-  private def checkBody(s: String): String = {
-    val t = s.trim
+  private def checkBody(resp: HttpResponse[String]): String = {
+    require(resp.statusCode() == 200, s"RPC HTTP ${resp.statusCode()}")
+    val t = resp.body().trim
     require(t.nonEmpty && (t.head == '{' || t.head == '[') &&
       (t.last == '}' || t.last == ']'),
       s"malformed RPC response body: '${t.take(80)}'")
-    s
+    resp.body()
   }
 
-  private def post(client: HttpClient, body: String): String = {
-    val req = HttpRequest.newBuilder(URI.create(config.url))
+  private def httpRequest(body: String): HttpRequest =
+    HttpRequest.newBuilder(URI.create(config.url))
       .header("Content-Type", "application/json")
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
       .build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"RPC HTTP ${resp.statusCode()}")
-    checkBody(resp.body())
-  }
-
-  private def postAsync(client: HttpClient,
-      body: String): java.util.concurrent.CompletableFuture[String] = {
-    val req = HttpRequest.newBuilder(URI.create(config.url))
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
-      .build()
-    client.sendAsync(req, HttpResponse.BodyHandlers.ofString())
-      .thenApply[String] { resp =>
-        require(resp.statusCode() == 200, s"RPC HTTP ${resp.statusCode()}")
-        // same transport-sanity gate as the sync path: a truncated body
-        // fails the future, and the caller's fallback re-runs the batch
-        // through the synchronous retrying path
-        checkBody(resp.body())
-      }
-  }
 
   /** Per-task share of the global in-flight budget: cryo holds up to
     * `max_concurrent_requests` requests in flight via a semaphore
@@ -337,50 +336,112 @@ class RpcSource(config: RpcConfig) extends Serializable {
     math.max(1, config.maxConcurrentRequests / math.max(1, numTasks))
 
   /** each task's share of the GLOBAL --requests-per-second: the buckets
-    * are per-partition (one per mapPartitions task), so handing every
-    * task the full rate would multiply the aggregate send rate by the
-    * task count — the same division discipline as inflightWindow. ≤0
-    * stays "unlimited". */
+    * are per-task, so handing every task the full rate would multiply
+    * the aggregate send rate by the task count — the same division
+    * discipline as inflightWindow. ≤0 stays "unlimited". */
   private def rateShare(numTasks: Int): Double =
     if (config.requestsPerSecond <= 0) 0.0
     else config.requestsPerSecond.toDouble / math.max(1, numTasks)
 
-  /** Sliding-window async request pipeline — the Spark-side equivalent of
-    * cryo's per-request concurrency semaphore (sources.rs:114): up to
-    * `window` batch POSTs are in flight per partition (java.net.http
-    * sendAsync), and responses are re-joined in SUBMISSION order so
-    * downstream parsing stays deterministic. The token bucket is acquired
-    * at submission, so `--requests-per-second` still governs the send
-    * rate. A batch whose async attempt fails falls back to the
-    * synchronous retrying path (backoff semantics unchanged). */
-  private def pipelinePosts[A](groups: Iterator[A], window: Int,
-      client: HttpClient, bucket: TokenBucket)(
-      mkBody: A => String): Iterator[(A, String)] = {
-    val inflight = scala.collection.mutable.Queue
-      .empty[(A, String, java.util.concurrent.CompletableFuture[String])]
-    new Iterator[(A, String)] {
-      private def fill(): Unit =
-        while (inflight.size < window && groups.hasNext) {
-          val g = groups.next()
-          val body = mkBody(g)
-          bucket.acquire()
-          inflight.enqueue((g, body, postAsync(client, body)))
+  /** One task's slice of the request envelope: the only place an HTTP
+    * client and a token bucket are made. Every stage a task runs goes
+    * through its one Link, so the receipt fallback stages share the fast
+    * path's client and rate budget. */
+  private final class Link(window: Int, rps: Double) {
+    private val client = HttpClient.newHttpClient()
+    private val bucket = new TokenBucket(rps)
+
+    /** one synchronous request through the retry layer */
+    def call(body: String): String =
+      retrying(checkBody(client.send(httpRequest(body),
+        HttpResponse.BodyHandlers.ofString())))
+
+    /** Sliding-window pipeline, one request body per item — the
+      * Spark-side equivalent of cryo's per-request concurrency semaphore
+      * (sources.rs:114): up to `window` POSTs are in flight (sendAsync),
+      * and responses are re-joined in SUBMISSION order so downstream
+      * parsing stays deterministic. The token bucket is acquired at
+      * submission, so `--requests-per-second` governs the send rate. A
+      * body whose async attempt fails (HTTP error, malformed body,
+      * dropped connection) is re-sent at once through `call`, whose
+      * backoff starts only if that attempt fails too. */
+    def each[A](items: Iterator[A])(body: A => String): Iterator[(A, String)] = {
+      val inflight = scala.collection.mutable.Queue
+        .empty[(A, String, java.util.concurrent.CompletableFuture[String])]
+      new Iterator[(A, String)] {
+        private def fill(): Unit =
+          while (inflight.size < window && items.hasNext) {
+            val a = items.next()
+            val b = body(a)
+            bucket.acquire()
+            inflight.enqueue((a, b, client.sendAsync(httpRequest(b),
+              HttpResponse.BodyHandlers.ofString()).thenApply[String](checkBody(_))))
+          }
+        def hasNext: Boolean = { fill(); inflight.nonEmpty }
+        def next(): (A, String) = {
+          fill()
+          val (a, b, fut) = inflight.dequeue()
+          val json =
+            try fut.join()
+            catch { case _: Throwable => call(b) }
+          (a, json)
         }
-      def hasNext: Boolean = { fill(); inflight.nonEmpty }
-      def next(): (A, String) = {
-        fill()
-        val (g, body, fut) = inflight.dequeue()
-        val json =
-          try fut.join()
-          catch { case _: Throwable => retrying(post(client, body)) }
-        (g, json)
+      }
+    }
+
+    /** JSON-RPC batches over [[each]]: `calls(item, firstId)` gives an
+      * item's `callsPerItem` requests (ids `firstId`, `firstId + 1`, …,
+      * batch-local), as many items ride one batch as fit in
+      * `innerRequestSize` calls, and each answer is split back into the
+      * item's parts in id order. A short answer fails (splitBatch); an
+      * error part fails the batch unless `onError` is Keep. */
+    def batched[A](items: Iterator[A], callsPerItem: Int = 1)(
+        onError: OnError[A], calls: (A, Long) => Seq[String]): Iterator[(A, Seq[String])] = {
+      val perBatch = math.max(1, config.innerRequestSize.toInt / callsPerItem)
+      each(items.grouped(perBatch)) { group =>
+        RpcCodec.batch(group.zipWithIndex.flatMap { case (a, i) =>
+          calls(a, callsPerItem.toLong * i) })
+      }.flatMap { case (group, json) =>
+        group.iterator.zip(RpcSource.splitBatch(json, group.size * callsPerItem)
+          .grouped(callsPerItem)).map { case (a, parts) =>
+          onError match {
+            case Fail(what) => parts.find(RpcSource.isError).foreach { p =>
+              throw new RuntimeException(s"RPC error for ${what(a)}: ${p.take(300)}")
+            }
+            case Keep =>
+          }
+          (a, parts)
+        }
       }
     }
   }
 
-  /** Fetch block headers for a range into the rpc_blocks shape. One task
-    * per `tasksPerPartition` blocks; requests batched `innerRequestSize`
-    * per HTTP round trip. */
+  /** The fetch loop: each partition of `work` gets one Link sized for
+    * `tasks` concurrent tasks, and `stage` streams the partition's items
+    * through it. */
+  private def fetchLoop[A, R: ClassTag](work: RDD[A], tasks: Int)(
+      stage: (Link, Iterator[A]) => Iterator[R]): RDD[R] = {
+    val window = inflightWindow(tasks)
+    val rps = rateShare(tasks)
+    work.mapPartitions(items => stage(new Link(window, rps), items))
+  }
+
+  /** per-block work: the range in `numPartitions` contiguous slices */
+  private def overBlocks[R: ClassTag](spark: SparkSession,
+      range: BlockSyntax.Range, numPartitions: Int)(
+      stage: (Link, Iterator[Long]) => Iterator[R]): RDD[R] =
+    fetchLoop(spark.sparkContext.range(range.start, range.endExclusive,
+      numSlices = numPartitions), numPartitions)(stage)
+
+  /** a driver-side work list, at most one task per item */
+  private def overList[A: ClassTag, R: ClassTag](spark: SparkSession,
+      work: Seq[A], numPartitions: Int)(
+      stage: (Link, Iterator[A]) => Iterator[R]): RDD[R] = {
+    val tasks = math.min(numPartitions, work.size).max(1)
+    fetchLoop(spark.sparkContext.parallelize(work, tasks), tasks)(stage)
+  }
+
+  /** Fetch block headers for a range into the rpc_blocks shape. */
   def fetchBlocks(spark: SparkSession, range: BlockSyntax.Range,
       numPartitions: Int = 32): DataFrame =
     fetchPerBlock(spark, range, RpcSource.blocksSchema, numPartitions)(
@@ -412,84 +473,66 @@ class RpcSource(config: RpcConfig) extends Serializable {
     (blocksDf, txDf, () => { raw.unpersist(); () })
   }
 
-  /** Fetch logs over block ranges (range-batched per innerRequestSize —
-    * the use_block_ranges path, cryo datasets/logs.rs:58-60; address and
-    * topic0 predicates push down into the server-side filter,
-    * types/rpc_params.rs:99-131). */
+  /** Fetch logs over block ranges, one unbatched eth_getLogs per
+    * `innerRequestSize` blocks (the use_block_ranges path, cryo
+    * datasets/logs.rs:58-60). The address and the topic0..3 position
+    * filter push down into the server-side filter
+    * (types/rpc_params.rs:99-131): interior wildcards are None, trailing
+    * ones are trimmed. */
   def fetchLogs(spark: SparkSession, range: BlockSyntax.Range,
-      address: Option[String] = None, topic0: Option[String] = None,
-      numPartitions: Int = 32): DataFrame =
-    fetchLogsTopics(spark, range, address,
-      Seq(topic0, None, None, None), numPartitions)
-
-  /** fetchLogs with the full topic0..3 position filter
-    * (types/rpc_params.rs:99-131): interior wildcards are null, trailing
-    * nulls trimmed — the predicates push down into the server-side
-    * eth_getLogs filter. */
-  def fetchLogsTopics(spark: SparkSession, range: BlockSyntax.Range,
-      address: Option[String], topics: Seq[Option[String]],
+      address: Option[String] = None, topics: Seq[Option[String]] = Nil,
       numPartitions: Int = 32): DataFrame = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val conf = config
     val starts = range.start until range.endExclusive by conf.innerRequestSize
-    val nParts = math.min(numPartitions, starts.size).max(1)
-    val window = inflightWindow(nParts)
-    val rps = rateShare(nParts)
-    val rdd = spark.sparkContext
-      .parallelize(starts, nParts)
-      .mapPartitions { ss =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(ss, window, client, bucket) { s0 =>
-          val to = math.min(s0 + conf.innerRequestSize, range.endExclusive) - 1
-          RpcCodec.getLogsRequestTopics(1, s0, to, address, topics)
-        }.flatMap { case (s0, json) =>
-          val parsed = JsonMethods.parse(json)
-          val results = (parsed \ "result") match {
-            case JArray(xs) => xs
-            case JNothing | JNull =>
-              // an error response (e.g. the ubiquitous provider cap
-              // "query returned more than 10000 results") must FAIL the
-              // range, not silently write a bronze missing its logs
-              throw new RuntimeException(
-                s"eth_getLogs failed for blocks from $s0: " +
-                  JsonMethods.compact(JsonMethods.render(parsed \ "error")) +
-                  " — lower --inner-request-size to shrink the window")
-            case other => throw new RuntimeException(
-              s"eth_getLogs: unexpected result shape from $s0: " +
-                JsonMethods.compact(JsonMethods.render(other)).take(200))
+    val rdd = overList(spark, starts, numPartitions) { (link, ss) =>
+      link.each(ss) { s0 =>
+        val to = math.min(s0 + conf.innerRequestSize, range.endExclusive) - 1
+        RpcCodec.getLogsRequest(1, s0, to, address, topics)
+      }.flatMap { case (s0, json) =>
+        val parsed = JsonMethods.parse(json)
+        val results = (parsed \ "result") match {
+          case JArray(xs) => xs
+          case JNothing | JNull =>
+            // an error response (e.g. the ubiquitous provider cap
+            // "query returned more than 10000 results") must FAIL the
+            // range, not silently write a bronze missing its logs
+            throw new RuntimeException(
+              s"eth_getLogs failed for blocks from $s0: " +
+                JsonMethods.compact(JsonMethods.render(parsed \ "error")) +
+                " — lower --inner-request-size to shrink the window")
+          case other => throw new RuntimeException(
+            s"eth_getLogs: unexpected result shape from $s0: " +
+              JsonMethods.compact(JsonMethods.render(other)).take(200))
+        }
+        results.iterator.map { r =>
+          def str(k: String): String = (r \ k) match {
+            case JString(v) => v; case _ => null
           }
-          results.iterator.map { r =>
-            def str(k: String): String = (r \ k) match {
-              case JString(v) => v; case _ => null
-            }
-            val topics = (r \ "topics") match {
-              case JArray(ts) => ts.collect { case JString(t) => RpcCodec.parseHexBytes(t) }
-              case _ => Nil
-            }
-            val data = RpcCodec.parseHexBytes(str("data"))
-            Row(
-              RpcCodec.parseHexLong(str("blockNumber")).toInt,
-              RpcCodec.parseHexLong(str("transactionIndex")).toInt,
-              RpcCodec.parseHexLong(str("logIndex")).toInt,
-              RpcCodec.parseHexBytes(str("transactionHash")),
-              RpcCodec.parseHexBytes(str("blockHash")),
-              RpcCodec.parseHexBytes(str("address")),
-              topics, data,
-              if (data == null) 0 else data.length,
-              conf.chainId)
+          val topics = (r \ "topics") match {
+            case JArray(ts) => ts.collect { case JString(t) => RpcCodec.parseHexBytes(t) }
+            case _ => Nil
           }
+          val data = RpcCodec.parseHexBytes(str("data"))
+          Row(
+            RpcCodec.parseHexLong(str("blockNumber")).toInt,
+            RpcCodec.parseHexLong(str("transactionIndex")).toInt,
+            RpcCodec.parseHexLong(str("logIndex")).toInt,
+            RpcCodec.parseHexBytes(str("transactionHash")),
+            RpcCodec.parseHexBytes(str("blockHash")),
+            RpcCodec.parseHexBytes(str("address")),
+            topics, data,
+            if (data == null) 0 else data.length,
+            conf.chainId)
         }
       }
+    }
     spark.createDataFrame(rdd, RpcSource.logsSchema)
   }
 
-  /** Generic per-block fetch: `innerRequestSize` blocks batched into one
-    * JSON-RPC array per HTTP round trip (sources.rs:110 — the same
-    * batching fetchBlocks uses), split back per-request in id order and
-    * parsed by a pure RpcExtract function into bronze rows. Partitions
-    * fetch disjoint block ranges; no shuffle. */
+  /** Generic per-block fetch: one request per block, batched by the fetch
+    * loop and parsed by a pure RpcExtract function into bronze rows. */
   private def fetchPerBlock(spark: SparkSession, range: BlockSyntax.Range,
       schema: StructType, numPartitions: Int)(
       request: (Long, Long) => String)(
@@ -499,47 +542,18 @@ class RpcSource(config: RpcConfig) extends Serializable {
         .flatMap { case (n, part) => parse(part, n) },
       schema)
 
-  /** The fetch loop under fetchPerBlock, yielding raw (block, response
-    * part) pairs so a shared extraction pass can persist once and parse
-    * into several bronze shapes. */
+  /** The fetch under fetchPerBlock, yielding raw (block, response part)
+    * pairs so a shared extraction pass can persist once and parse into
+    * several bronze shapes. An error part fails the block: every
+    * array-shaped parser downstream maps "not an array" to Nil, which
+    * would write a bronze missing the block. */
   private def fetchPerBlockRaw(spark: SparkSession, range: BlockSyntax.Range,
       numPartitions: Int)(
-      request: (Long, Long) => String): org.apache.spark.rdd.RDD[(Long, String)] = {
-    val conf = config
-    val window = inflightWindow(numPartitions)
-    val rps = rateShare(numPartitions)
-    spark.sparkContext
-      .range(range.start, range.endExclusive, numSlices = numPartitions)
-      .mapPartitions { nums =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(nums.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-            window, client, bucket) { blocks =>
-          RpcCodec.batch(blocks.zipWithIndex.map { case (n, i) => request(i, n) })
-        }.flatMap { case (blocks, json) =>
-          blocks.zip(RpcSource.splitBatch(json, blocks.size)).map {
-            case (n, part) =>
-              // a per-request error part must FAIL the block, not parse
-              // to zero rows: every array-shaped parser downstream maps
-              // "not an array" to Nil, which silently wrote bronzes
-              // missing whole blocks on provider timeouts/caps — the
-              // same loud-failure contract as fetchLogs and splitBatch
-              if (RpcSource.isError(part))
-                throw new RuntimeException(
-                  s"RPC error for block $n: ${part.take(300)}")
-              (n, part)
-          }
-        }
-      }
-  }
-
-  /** rpc_transactions via eth_getBlockByNumber(fullTxs=true)
-    * (transactions.rs:124-130). */
-  def fetchTransactions(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.transactionsSchema, numPartitions)(
-      (i, n) => RpcCodec.getBlockRequest(i, n, fullTxs = true))(
-      (body, _) => RpcExtract.blockTransactions(body, config.chainId))
+      request: (Long, Long) => String): RDD[(Long, String)] =
+    overBlocks(spark, range, numPartitions) { (link, nums) =>
+      link.batched(nums)(Fail(n => s"block $n"), (n, id) => Seq(request(id, n)))
+        .map { case (n, Seq(part)) => (n, part) }
+    }
 
   /** rpc_receipts via eth_getBlockReceipts (transactions.rs:131-135),
     * degrading per block to batched eth_getTransactionReceipt when the
@@ -547,65 +561,33 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * back the same way — older geth and several hosted providers lack
     * eth_getBlockReceipts). Failed blocks re-fetch their tx hash lists
     * (eth_getBlockByNumber, hashes only) and fan out per-tx receipt
-    * requests, all still through the sliding async window, so degraded
-    * mode keeps the fast path's concurrency. Blocks the node answers
-    * cost zero extra round trips. */
+    * requests through the same Link, so degraded mode keeps the fast
+    * path's window and rate budget. Blocks the node answers cost zero
+    * extra round trips. */
   def fetchReceipts(spark: SparkSession, range: BlockSyntax.Range,
       numPartitions: Int = 32): DataFrame = {
-    val conf = config
-    val window = inflightWindow(numPartitions)
-    val rps = rateShare(numPartitions)
-    val rdd = spark.sparkContext
-      .range(range.start, range.endExclusive, numSlices = numPartitions)
-      .mapPartitions { nums =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        val failed = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val fast = pipelinePosts(
-            nums.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-            window, client, bucket) { blocks =>
-          RpcCodec.batch(blocks.zipWithIndex.map { case (n, i) =>
-            RpcCodec.getBlockReceiptsRequest(i, n) })
-        }.flatMap { case (blocks, json) =>
-          blocks.zip(RpcSource.splitBatch(json, blocks.size)).flatMap { case (n, part) =>
-            if (RpcSource.isError(part)) { failed += n; Nil }
-            else RpcExtract.blockReceipts(part)
-          }
-        }
-        // evaluated only after `fast` drains (Iterator.++ is by-name), so
-        // `failed` is complete; both stages stay inside the async window
-        def fallback: Iterator[Row] = {
-          val hashes = pipelinePosts(
-              failed.iterator.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-              window, client, bucket) { blocks =>
-            RpcCodec.batch(blocks.zipWithIndex.map { case (n, i) =>
-              RpcCodec.getBlockRequest(i, n, fullTxs = false) })
-          }.flatMap { case (blocks, json) =>
-            // the fallback is the LAST resort: an error here (or below)
-            // has no further degradation and silently dropping it would
-            // write a short rpc_receipts with null joins downstream
-            blocks.zip(RpcSource.splitBatch(json, blocks.size))
-              .flatMap { case (n, part) =>
-                if (RpcSource.isError(part)) throw new RuntimeException(
-                  s"receipt fallback: block $n hash fetch failed: ${part.take(300)}")
-                RpcExtract.blockTxHashes(part)
-              }
-          }
-          pipelinePosts(hashes.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-              window, client, bucket) { hs =>
-            RpcCodec.batch(hs.zipWithIndex.map { case (h, i) =>
-              RpcCodec.getTransactionReceiptRequest(i, h) })
-          }.flatMap { case (hs, json) =>
-            hs.zip(RpcSource.splitBatch(json, hs.size))
-              .flatMap { case (h, part) =>
-                if (RpcSource.isError(part)) throw new RuntimeException(
-                  s"receipt fallback: receipt for $h failed: ${part.take(300)}")
-                RpcExtract.transactionReceipt(part)
-              }
-          }
-        }
-        fast ++ fallback
+    val rdd = overBlocks(spark, range, numPartitions) { (link, nums) =>
+      val failed = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val fast = link.batched(nums)(Keep,
+        (n, id) => Seq(RpcCodec.getBlockReceiptsRequest(id, n))).flatMap {
+        case (n, Seq(part)) =>
+          if (RpcSource.isError(part)) { failed += n; Nil }
+          else RpcExtract.blockReceipts(part)
       }
+      // evaluated only after `fast` drains (Iterator.++ is by-name), so
+      // `failed` is complete. The fallback is the LAST resort: its error
+      // parts fail, or rpc_receipts would come out short
+      def fallback: Iterator[Row] = {
+        val hashes = link.batched(failed.iterator)(
+          Fail(n => s"block $n (receipt fallback hash list)"),
+          (n, id) => Seq(RpcCodec.getBlockRequest(id, n, fullTxs = false)))
+          .flatMap { case (_, Seq(part)) => RpcExtract.blockTxHashes(part) }
+        link.batched(hashes)(Fail(h => s"receipt of $h (receipt fallback)"),
+          (h, id) => Seq(RpcCodec.getTransactionReceiptRequest(id, h)))
+          .flatMap { case (_, Seq(part)) => RpcExtract.transactionReceipt(part) }
+      }
+      fast ++ fallback
+    }
     spark.createDataFrame(rdd, RpcSource.receiptsSchema)
   }
 
@@ -683,31 +665,20 @@ class RpcSource(config: RpcConfig) extends Serializable {
 
   /** rpc_calls via batched eth_call: the (contract, calldata) cross
     * product at each sampled block (eth_calls.rs extract; the param
-    * cross-product of cli/parse/args). */
+    * cross-product of cli/parse/args). The one batched reader that keeps
+    * error parts: a reverted call is a row with a null output. */
   def fetchEthCalls(spark: SparkSession, blocks: Seq[Long],
       calls: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val nParts = math.min(numPartitions, work.size).max(1)
-    val window = inflightWindow(nParts)
-    val rps = rateShare(nParts)
-    val rdd = spark.sparkContext
-      .parallelize(work, nParts)
-      .mapPartitions { items =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(items.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-            window, client, bucket) { group =>
-          RpcCodec.batch(group.zipWithIndex.map { case ((b, to, data), i) =>
-            RpcCodec.ethCallRequest(i, to, data, b)
-          })
-        }.flatMap { case (group, json) =>
-          group.zip(RpcSource.splitBatch(json, group.size)).map { case ((b, to, data), res) =>
-            RpcExtract.ethCallRow(b.toInt, RpcCodec.parseHexBytes(to),
-              RpcCodec.parseHexBytes(data), res, conf.chainId)
-          }
-        }
+    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+      link.batched(items)(Keep, { case ((b, to, data), id) =>
+        Seq(RpcCodec.ethCallRequest(id, to, data, b)) }).map {
+        case ((b, to, data), Seq(res)) =>
+          RpcExtract.ethCallRow(b.toInt, RpcCodec.parseHexBytes(to),
+            RpcCodec.parseHexBytes(data), res, conf.chainId)
       }
+    }
     spark.createDataFrame(rdd, RpcSource.callsSchema)
   }
 
@@ -744,41 +715,28 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * requests per item ride one batch, ids encode item×3+field. */
   def fetchAccounts(spark: SparkSession, blocks: Seq[Long],
       addresses: Seq[String], numPartitions: Int = 32): DataFrame = {
+    import org.json4s._
     val conf = config
     val work = for (b <- blocks; a <- addresses) yield (b, a)
-    val nParts = math.min(numPartitions, work.size).max(1)
-    val window = inflightWindow(nParts)
-    val rps = rateShare(nParts)
-    val rdd = spark.sparkContext
-      .parallelize(work, nParts)
-      .mapPartitions { items =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(items.grouped((conf.innerRequestSize.toInt / 3).max(1))
-            .map(_.toSeq), window, client, bucket) { group =>
-          RpcCodec.batch(group.zipWithIndex.flatMap { case ((b, a), i) => Seq(
-            RpcCodec.getBalanceRequest(3L * i, a, b),
-            RpcCodec.getTransactionCountRequest(3L * i + 1, a, b),
-            RpcCodec.getCodeRequest(3L * i + 2, a, b))
-          })
-        }.flatMap { case (group, json) =>
-          val parts = RpcSource.splitBatch(json, group.size * 3).grouped(3).toSeq
-          group.zip(parts).map { case ((b, a), triple) =>
-            val Seq(balB, nonB, codB) = triple: @unchecked
-            def res(s: String): String = {
-              import org.json4s._
-              (org.json4s.jackson.JsonMethods.parse(s) \ "result") match {
-                case JString(x) => x; case _ => null
-              }
-            }
-            Row(b.toInt, RpcCodec.parseHexBytes(a),
-              Option(res(balB)).map(RpcCodec.parseHexU256).orNull,
-              Option(res(nonB)).map(RpcCodec.parseHexLong).getOrElse(0L),
-              Option(res(codB)).map(RpcCodec.parseHexBytes).orNull,
-              conf.chainId)
-          }
-        }
+    def res(s: String): String =
+      (org.json4s.jackson.JsonMethods.parse(s) \ "result") match {
+        case JString(x) => x; case _ => null
       }
+    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+      link.batched(items, callsPerItem = 3)(
+        Fail { case (b, a) => s"account $a at block $b" },
+        { case ((b, a), id) => Seq(
+          RpcCodec.getBalanceRequest(id, a, b),
+          RpcCodec.getTransactionCountRequest(id + 1, a, b),
+          RpcCodec.getCodeRequest(id + 2, a, b)) }).map {
+        case ((b, a), Seq(balB, nonB, codB)) =>
+          Row(b.toInt, RpcCodec.parseHexBytes(a),
+            Option(res(balB)).map(RpcCodec.parseHexU256).orNull,
+            Option(res(nonB)).map(RpcCodec.parseHexLong).getOrElse(0L),
+            Option(res(codB)).map(RpcCodec.parseHexBytes).orNull,
+            conf.chainId)
+      }
+    }
     spark.createDataFrame(rdd, RpcSource.accountsSchema)
   }
 
@@ -786,32 +744,20 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * (block × (address, slot)) (datasets/storages.rs extract). */
   def fetchStorage(spark: SparkSession, blocks: Seq[Long],
       slots: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
+    import org.json4s._
     val conf = config
     val work = for (b <- blocks; (a, s) <- slots) yield (b, a, s)
-    val nParts = math.min(numPartitions, work.size).max(1)
-    val window = inflightWindow(nParts)
-    val rps = rateShare(nParts)
-    val rdd = spark.sparkContext
-      .parallelize(work, nParts)
-      .mapPartitions { items =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(items.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-            window, client, bucket) { group =>
-          RpcCodec.batch(group.zipWithIndex.map { case ((b, a, s), i) =>
-            RpcCodec.getStorageAtRequest(i, a, s, b)
-          })
-        }.flatMap { case (group, json) =>
-          group.zip(RpcSource.splitBatch(json, group.size)).map { case ((b, a, s), part) =>
-            import org.json4s._
-            val v = (org.json4s.jackson.JsonMethods.parse(part) \ "result") match {
-              case JString(x) => RpcCodec.parseHexU256(x); case _ => null
-            }
-            Row(b.toInt, RpcCodec.parseHexBytes(a),
-              RpcCodec.parseHexU256(s), v, conf.chainId)
+    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+      link.batched(items)(Fail { case (b, a, s) => s"slot $s of $a at block $b" },
+        { case ((b, a, s), id) => Seq(RpcCodec.getStorageAtRequest(id, a, s, b)) })
+        .map { case ((b, a, s), Seq(part)) =>
+          val v = (org.json4s.jackson.JsonMethods.parse(part) \ "result") match {
+            case JString(x) => RpcCodec.parseHexU256(x); case _ => null
           }
+          Row(b.toInt, RpcCodec.parseHexBytes(a),
+            RpcCodec.parseHexU256(s), v, conf.chainId)
         }
-      }
+    }
     spark.createDataFrame(rdd, RpcSource.storageSchema)
   }
 
@@ -821,35 +767,26 @@ class RpcSource(config: RpcConfig) extends Serializable {
       calls: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val nParts = math.min(numPartitions, work.size).max(1)
-    val window = inflightWindow(nParts)
-    val rps = rateShare(nParts)
-    val rdd = spark.sparkContext
-      .parallelize(work, nParts)
-      .mapPartitions { items =>
-        val client = HttpClient.newHttpClient()
-        val bucket = new TokenBucket(rps)
-        pipelinePosts(items.grouped(conf.innerRequestSize.toInt).map(_.toSeq),
-            window, client, bucket) { group =>
-          RpcCodec.batch(group.zipWithIndex.map { case ((b, to, data), i) =>
-            RpcCodec.traceCallRequest(i, to, data, b)
-          })
-        }.flatMap { case (group, json) =>
-          group.zip(RpcSource.splitBatch(json, group.size)).flatMap { case ((b, to, data), part) =>
-            RpcExtract.traceCallRows(part, b.toInt,
-              RpcCodec.parseHexBytes(to), RpcCodec.parseHexBytes(data),
-              conf.chainId)
-          }
+    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+      link.batched(items)(Fail { case (b, to, _) => s"trace_call to $to at block $b" },
+        { case ((b, to, data), id) => Seq(RpcCodec.traceCallRequest(id, to, data, b)) })
+        .flatMap { case ((b, to, data), Seq(part)) =>
+          RpcExtract.traceCallRows(part, b.toInt,
+            RpcCodec.parseHexBytes(to), RpcCodec.parseHexBytes(data),
+            conf.chainId)
         }
-      }
+    }
     spark.createDataFrame(rdd, RpcSource.traceCallsSchema)
   }
 
+  /** one driver-side request (no rate share: the driver sends one at a
+    * time) */
+  private def driverCall(body: String): String = new Link(1, 0.0).call(body)
+
   /** latest block via eth_blockNumber (driver-side, one request) */
   def fetchLatestBlock(): Long = {
-    val client = HttpClient.newHttpClient()
-    val body = retrying(post(client,
-      """{"jsonrpc":"2.0","id":1,"method":"eth_blockNumber","params":[]}"""))
+    val body = driverCall(
+      """{"jsonrpc":"2.0","id":1,"method":"eth_blockNumber","params":[]}""")
     import org.json4s._
     (org.json4s.jackson.JsonMethods.parse(body) \ "result") match {
       case JString(s) => RpcCodec.parseHexLong(s)
@@ -858,14 +795,100 @@ class RpcSource(config: RpcConfig) extends Serializable {
   }
 
   /** chain id via eth_chainId (driver-side; sources.rs:119-150 detect) */
-  def fetchChainId(): Long = {
-    val client = HttpClient.newHttpClient()
-    RpcConfig.parseChainId(retrying(post(client, RpcConfig.chainIdRequest(1))))
+  def fetchChainId(): Long =
+    RpcConfig.parseChainId(driverCall(RpcConfig.chainIdRequest(1)))
+
+  /** Live-mode bronze materialization for a CLI run: fetch ONLY the
+    * bronze tables the requested datasets read, into `outDir` — after
+    * this every ChainDatasets transform runs unchanged against outDir.
+    * Entity-scoped bronzes (accounts/storage/calls) require the matching
+    * entity lists and fail fast with a clear message otherwise.
+    *
+    * `txNeedsReceipts=false` is the column-aware half of the transactions
+    * dependency: when the resolved schema excludes gas_used AND success,
+    * the receipt fetch is skipped entirely — one fewer RPC per block on
+    * the most-used dataset (cryo transactions.rs:124-135 fetches receipts
+    * conditionally the same way). Other receipt consumers
+    * (address_appearances) keep their dependency regardless. */
+  def materializeBronze(spark: SparkSession, outDir: String,
+      range: BlockSyntax.Range, datasets: Seq[String],
+      addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
+      calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
+      numPartitions: Int = 32, txNeedsReceipts: Boolean = true): Unit = {
+    val deps = RpcSource.bronzeDeps
+    val unknown = datasets.filterNot(deps.contains)
+    require(unknown.isEmpty,
+      s"live extraction not wired for: ${unknown.mkString(", ")}")
+    val need = datasets.flatMap { d =>
+      if (d == "transactions" && !txNeedsReceipts) deps(d) - "rpc_receipts"
+      else deps(d)
+    }.toSet
+    val blocks = range.start until range.endExclusive
+    def write(name: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+    def put(name: String)(df: => DataFrame): Unit =
+      if (need(name)) write(name, df)
+    if (need("rpc_transactions")) {
+      // blocks_and_transactions multi: ONE full-block pass serves both
+      // bronzes — every dataset that reads rpc_transactions also reads
+      // rpc_blocks, so there is no separate header fetch
+      val (b, t, done) = fetchBlocksAndTransactions(spark, range, numPartitions)
+      write("rpc_blocks", b)
+      write("rpc_transactions", t)
+      done()
+    } else put("rpc_blocks")(fetchBlocks(spark, range, numPartitions))
+    put("rpc_receipts")(fetchReceipts(spark, range, numPartitions))
+    put("rpc_logs")(fetchLogs(spark, range, numPartitions = numPartitions))
+    put("rpc_traces")(fetchTraces(spark, range, numPartitions))
+    put("rpc_geth_prestate")(fetchGethPrestate(spark, range, numPartitions))
+    put("rpc_geth_calls")(fetchGethCalls(spark, range, numPartitions))
+    put("rpc_geth_opcodes")(fetchGethOpcodes(spark, range, numPartitions))
+    put("rpc_vm_traces")(fetchVmTraces(spark, range, numPartitions))
+    if (need.exists(_.endsWith("_diffs"))) {
+      val (diffs, diffsDone) = fetchStateDiffs(spark, range, numPartitions)
+      diffs.foreach { case (name, df) => put(name)(df) }
+      diffsDone()
+    }
+    if (need("rpc_accounts")) {
+      require(addresses.nonEmpty,
+        "balances/nonces/codes live extraction requires --address")
+      write("rpc_accounts", fetchAccounts(spark, blocks, addresses, numPartitions))
+    }
+    if (need("rpc_storage")) {
+      require(slots.nonEmpty && addresses.nonEmpty,
+        "slots live extraction requires --address and --slot")
+      val pairs = for (a <- addresses; s <- slots) yield (a, s)
+      write("rpc_storage", fetchStorage(spark, blocks, pairs, numPartitions))
+    }
+    if (need("rpc_calls")) {
+      require(calls.nonEmpty,
+        "eth_calls live extraction requires --contract and --call-data/--function")
+      write("rpc_calls", fetchEthCalls(spark, blocks, calls, numPartitions))
+    }
+    if (need("rpc_trace_calls")) {
+      require(calls.nonEmpty,
+        "trace_calls live extraction requires --contract and --call-data/--function")
+      write("rpc_trace_calls", fetchTraceCalls(spark, blocks, calls, numPartitions))
+    }
+    if (need("rpc_js_traces")) {
+      require(jsTracer.nonEmpty,
+        "javascript_traces live extraction requires --js-tracer")
+      write("rpc_js_traces", fetchJsTraces(spark, range, jsTracer.get, numPartitions))
+    }
   }
+}
+
+object RpcSource {
+  /** What a batched stage does with a per-request JSON-RPC error part. */
+  private sealed trait OnError[-A]
+  /** fail the batch, naming the item the part answers */
+  private final case class Fail[A](what: A => String) extends OnError[A]
+  /** hand the part to the caller, which reads the error as data */
+  private case object Keep extends OnError[Any]
 
   /** which bronze tables each dataset's transform reads (mirrors the
-    * fx() calls in ChainDatasets) */
-  private val bronzeDeps: Map[String, Set[String]] = {
+    * fx() calls in ChainDatasets; BronzeDepsSpec pins the two together) */
+  private[graft] val bronzeDeps: Map[String, Set[String]] = {
     val logsD = Set("rpc_logs")
     val tracesD = Set("rpc_traces")
     val prestateD = Set("rpc_geth_prestate")
@@ -898,122 +921,6 @@ class RpcSource(config: RpcConfig) extends Serializable {
       "trace_calls" -> Set("rpc_trace_calls"))
   }
 
-  /** Live-mode bronze materialization for a CLI run: fetch ONLY the
-    * bronze tables the requested datasets read, into `outDir` — after
-    * this every ChainDatasets transform runs unchanged against outDir.
-    * Entity-scoped bronzes (accounts/storage/calls) require the matching
-    * entity lists and fail fast with a clear message otherwise.
-    *
-    * `txNeedsReceipts=false` is the column-aware half of the transactions
-    * dependency: when the resolved schema excludes gas_used AND success,
-    * the receipt fetch is skipped entirely — one fewer RPC per block on
-    * the most-used dataset (cryo transactions.rs:124-135 fetches receipts
-    * conditionally the same way). Other receipt consumers
-    * (address_appearances) keep their dependency regardless. */
-  def materializeBronze(spark: SparkSession, outDir: String,
-      range: BlockSyntax.Range, datasets: Seq[String],
-      addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
-      calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
-      numPartitions: Int = 32, txNeedsReceipts: Boolean = true): Unit = {
-    val unknown = datasets.filterNot(bronzeDeps.contains)
-    require(unknown.isEmpty,
-      s"live extraction not wired for: ${unknown.mkString(", ")}")
-    val need = datasets.flatMap { d =>
-      if (d == "transactions" && !txNeedsReceipts) bronzeDeps(d) - "rpc_receipts"
-      else bronzeDeps(d)
-    }.toSet
-    val blocks = range.start until range.endExclusive
-    def put(name: String)(df: => DataFrame): Unit =
-      if (need(name))
-        df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    if (need("rpc_blocks") && need("rpc_transactions")) {
-      // blocks_and_transactions multi: ONE full-block pass serves both
-      // bronzes — no redundant header fetch
-      val (b, t, done) = fetchBlocksAndTransactions(spark, range, numPartitions)
-      b.write.mode("overwrite").parquet(s"$outDir/rpc_blocks.parquet")
-      t.write.mode("overwrite").parquet(s"$outDir/rpc_transactions.parquet")
-      done()
-    } else {
-      put("rpc_blocks")(fetchBlocks(spark, range, numPartitions))
-      put("rpc_transactions")(fetchTransactions(spark, range, numPartitions))
-    }
-    put("rpc_receipts")(fetchReceipts(spark, range, numPartitions))
-    put("rpc_logs")(fetchLogs(spark, range, numPartitions = numPartitions))
-    put("rpc_traces")(fetchTraces(spark, range, numPartitions))
-    put("rpc_geth_prestate")(fetchGethPrestate(spark, range, numPartitions))
-    put("rpc_geth_calls")(fetchGethCalls(spark, range, numPartitions))
-    put("rpc_geth_opcodes")(fetchGethOpcodes(spark, range, numPartitions))
-    put("rpc_vm_traces")(fetchVmTraces(spark, range, numPartitions))
-    if (need.exists(_.endsWith("_diffs"))) {
-      val (diffs, diffsDone) = fetchStateDiffs(spark, range, numPartitions)
-      diffs.foreach { case (name, df) =>
-        if (need(name))
-          df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      }
-      diffsDone()
-    }
-    if (need("rpc_accounts")) {
-      require(addresses.nonEmpty,
-        "balances/nonces/codes live extraction requires --address")
-      fetchAccounts(spark, blocks, addresses, numPartitions)
-        .write.mode("overwrite").parquet(s"$outDir/rpc_accounts.parquet")
-    }
-    if (need("rpc_storage")) {
-      require(slots.nonEmpty && addresses.nonEmpty,
-        "slots live extraction requires --address and --slot")
-      val pairs = for (a <- addresses; s <- slots) yield (a, s)
-      fetchStorage(spark, blocks, pairs, numPartitions)
-        .write.mode("overwrite").parquet(s"$outDir/rpc_storage.parquet")
-    }
-    if (need("rpc_calls")) {
-      require(calls.nonEmpty,
-        "eth_calls live extraction requires --contract and --call-data/--function")
-      fetchEthCalls(spark, blocks, calls, numPartitions)
-        .write.mode("overwrite").parquet(s"$outDir/rpc_calls.parquet")
-    }
-    if (need("rpc_trace_calls")) {
-      require(calls.nonEmpty,
-        "trace_calls live extraction requires --contract and --call-data/--function")
-      fetchTraceCalls(spark, blocks, calls, numPartitions)
-        .write.mode("overwrite").parquet(s"$outDir/rpc_trace_calls.parquet")
-    }
-    if (need("rpc_js_traces")) {
-      require(jsTracer.nonEmpty,
-        "javascript_traces live extraction requires --js-tracer")
-      fetchJsTraces(spark, range, jsTracer.get, numPartitions)
-        .write.mode("overwrite").parquet(s"$outDir/rpc_js_traces.parquet")
-    }
-  }
-
-  /** Materialize the bronze tables for a range under `outDir` — after
-    * this, every ChainDatasets transform runs unchanged against outDir. */
-  def freezeBronze(spark: SparkSession, range: BlockSyntax.Range,
-      outDir: String): Unit = {
-    val (b, t, done) = fetchBlocksAndTransactions(spark, range)
-    b.write.mode("overwrite").parquet(s"$outDir/rpc_blocks.parquet")
-    t.write.mode("overwrite").parquet(s"$outDir/rpc_transactions.parquet")
-    done()
-    fetchReceipts(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_receipts.parquet")
-    fetchLogs(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_logs.parquet")
-    fetchTraces(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_traces.parquet")
-    fetchGethPrestate(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_geth_prestate.parquet")
-    val (diffs, diffsDone) = fetchStateDiffs(spark, range)
-    diffs.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    }
-    diffsDone()
-    fetchGethOpcodes(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_geth_opcodes.parquet")
-    fetchVmTraces(spark, range).write.mode("overwrite")
-      .parquet(s"$outDir/rpc_vm_traces.parquet")
-  }
-}
-
-object RpcSource {
   /** split a batched JSON-RPC response into per-request bodies, in id
     * order (ids are the batch indices). The `error` member rides along
     * so callers can detect per-request failures (a node rejecting one

@@ -1737,7 +1737,7 @@ class RpcCodecSpec extends AnyFunSuite {
   test("request bodies are well-formed JSON-RPC") {
     assert(RpcCodec.getBlockRequest(7, 255, fullTxs = true) ==
       """{"jsonrpc":"2.0","id":7,"method":"eth_getBlockByNumber","params":["0xff",true]}""")
-    val logs = RpcCodec.getLogsRequest(1, 16, 31, Some("0xabc"), Some("0xddf2"))
+    val logs = RpcCodec.getLogsRequest(1, 16, 31, Some("0xabc"), Seq(Some("0xddf2")))
     assert(logs.contains(""""fromBlock":"0x10""""))
     assert(logs.contains(""""toBlock":"0x1f""""))
     assert(logs.contains(""""address":"0xabc""""))
@@ -1934,10 +1934,10 @@ class RpcCodecSpec extends AnyFunSuite {
   }
 
   test("getLogs topic position filters: trailing trim, interior wildcard") {
-    val r = RpcCodec.getLogsRequestTopics(1, 0, 10, None,
+    val r = RpcCodec.getLogsRequest(1, 0, 10, None,
       Seq(Some("0xaa"), None, Some("0xbb"), None))
     assert(r.contains(""""topics":["0xaa",null,"0xbb"]"""))
-    val none = RpcCodec.getLogsRequestTopics(1, 0, 10, None, Seq(None, None, None, None))
+    val none = RpcCodec.getLogsRequest(1, 0, 10, None, Seq(None, None, None, None))
     assert(!none.contains("topics"))
   }
 

@@ -244,14 +244,17 @@ class RpcLoopSpec extends AnyFunSuite {
   }
 
   test("fetchTransactions: full-tx blocks flatten, batched") {
+    // rpc_transactions comes from the shared full-block pass alone
     withStub { (url, posts) =>
-      val df = src(url).fetchTransactions(spark, range, numPartitions = 1)
-      val rows = df.collect()
+      val (_, t, done) = src(url).fetchBlocksAndTransactions(spark, range,
+        numPartitions = 1)
+      val rows = t.collect()
       assert(rows.length == 8) // 2 txs × 4 blocks
       assert(posts.get() == 2)
       val r0 = rows.sortBy(r => (r.getInt(0), r.getInt(1))).head
       assert(r0.getInt(0) == 16 && r0.getInt(1) == 0)
       assert(r0.getAs[Int]("timestamp") == 1700000000 + 16 * 12)
+      done()
     }
   }
 
@@ -423,6 +426,20 @@ class RpcLoopSpec extends AnyFunSuite {
       assert(sto.length == 2)
       assert(sto.forall(r => BigInt(r.getAs[Array[Byte]]("value")) == 321))
     }
+    // a JSON-RPC error part fails the lookup instead of writing a row
+    // with a made-up nonce 0 / null code, or a null storage value
+    withStubRejecting(Set("eth_getCode", "eth_getStorageAt")) { (url, _) =>
+      val s = src(url, batchSize = 6)
+      val ea = intercept[org.apache.spark.SparkException] {
+        s.fetchAccounts(spark, Seq(16L), Seq(h40(1)), numPartitions = 1).collect()
+      }
+      assert(ea.getMessage.contains("RPC error for account"), ea.getMessage)
+      val es = intercept[org.apache.spark.SparkException] {
+        s.fetchStorage(spark, Seq(16L), Seq((h40(1), h64(0))),
+          numPartitions = 1).collect()
+      }
+      assert(es.getMessage.contains("RPC error for slot"), es.getMessage)
+    }
   }
 
   test("fetchTraceCalls: simulated call trace tagged with request context") {
@@ -435,12 +452,20 @@ class RpcLoopSpec extends AnyFunSuite {
           Seq(0x18, 0x16, 0x0d, 0xdd).map(_.toByte)))
       assert(rows.map(_.getAs[String]("trace_address")).toSet == Set("", "0"))
     }
+    // a JSON-RPC error part fails the call instead of silently dropping it
+    withStubRejecting(Set("trace_call")) { (url, _) =>
+      val e = intercept[org.apache.spark.SparkException] {
+        src(url).fetchTraceCalls(spark, Seq(16L),
+          Seq((h40(7), "0x18160ddd")), numPartitions = 1).collect()
+      }
+      assert(e.getMessage.contains("RPC error for trace_call"), e.getMessage)
+    }
   }
 
   test("fetchLogs: range-batched getLogs with topic pushdown") {
     withStub { (url, posts) =>
       val sig = h64(0xbeef)
-      val df = src(url).fetchLogsTopics(spark, range,
+      val df = src(url).fetchLogs(spark, range,
         address = Some(h40(5)), topics = Seq(Some(sig), None, None, None),
         numPartitions = 1)
       val rows = df.collect()
