@@ -33,6 +33,14 @@ object Bench {
     }
   }
 
+  /** The registered queries a harness run covers, in name order: all
+    * of them, or the subset named by SPARK_GRAFT_ONLY=q_a,q_b. */
+  private[graft] def selectedQueries: Seq[String] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+  }
+
   /** clear the Spark cache, then rebuild the memoized dedup tables
     * UNTIMED (their persisted blocks died with the clear): without
     * this, the first dedup consumer of the next timed pass is charged
@@ -66,15 +74,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def runNoop(name: String): Double = runNoopOn(spark, name, sfDir)
 
@@ -90,11 +90,7 @@ object Bench {
         try spark.read.parquet(f.toString).count() catch { case _: Throwable => () }
     }
 
-    // dev aid: SPARK_GRAFT_ONLY=q_a,q_b benches a subset (driver unset)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = selectedQueries
     // full untimed pre-pass: every query executes once so whole-stage
     // codegen compilation, JIT, and broadcast machinery are warm for the
     // timed pass (cold codegen was charging the first doc-pipeline query

@@ -252,12 +252,7 @@ object Cli {
       printHelp(args.drop(1).toSeq)
       return
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try {
       if (args.headOption.contains("pipeline")) {
         runPipeline(args.drop(1).toSeq, spark); ()

@@ -64,12 +64,7 @@ object GenFixtures {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/root/repo/fixtures/chain"
     val nb = if (args.length > 1) args(1).toInt else NBlocks
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     generate(spark, out, nb)
     spark.stop()
   }

@@ -345,9 +345,9 @@ object FollowMode {
     * overflow emits the NULL-prior keep=true the batch mega-cell path
     * produces.
     *
-    * State-store configuration (r14, measured — SemStreamProbe +
-    * FollowBench on the sf0.1 corpus, trigger unchanged): the r13
-    * bottleneck attribution was wrong in detail — per-batch STATE
+    * State-store configuration (r14, measured with FollowBench on
+    * the sf0.1 corpus, trigger unchanged): the r13 bottleneck
+    * attribution was wrong in detail — per-batch STATE
     * FIXED COSTS dominate, not member serialization. (a) Partition
     * sizing: every partition commits per micro-batch with a
     * ~100-300 ms per-task constant on the HDFS store; 32 partitions

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Density-scale proof for the embedding near-dup family (round-11
   * brief item 4, second half). The fixed-knob sidecars
   * (r11_sf{1,30,100}_true.json) measure what everyone suspects: with a
@@ -38,14 +36,7 @@ object DensityScale {
       val i = a.lastIndexOf(':')
       (a.substring(0, i), a.substring(i + 1).toInt)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -47,15 +47,8 @@ object FollowBench {
     val docsPath = args.lift(1).getOrElse("/root/testdata/sf0.1/documents.parquet")
     val outJson = args.lift(2).getOrElse("bench_history/r13_follow.json")
     val embPath = args.lift(3).getOrElse("/root/testdata/sf0.1/embeddings.parquet")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // AQE is batch-only anyway
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.GraftSession.defaultCpus
+    val spark = graft.GraftSession(cpus)
     import graft.streaming.FollowMode
 
     val work = java.nio.file.Files.createTempDirectory("graft_followbench").toString
@@ -192,7 +185,7 @@ object FollowBench {
     // FIXED COSTS were, and they scale with partition count: every
     // partition commits per micro-batch with a ~100-300 ms per-task
     // constant, so 32 partitions over 16 cells read 12.7 s where 2
-    // read ~3 s (SemStreamProbe, same trigger). THE fix is partition
+    // read ~3 s (the drain timed alone, same trigger). THE fix is partition
     // sizing: state partitions = min(parallelism, ceil(cells/8)) —
     // per-task constants amortize over ≥8 cells, and at production k
     // (cells ∝ corpus) the rule resolves to full parallelism, so it
@@ -208,7 +201,7 @@ object FollowBench {
     // run is the without-the-manual-rule parity evidence. semParts is
     // recomputed only for the record line.
     val semParts = graft.streaming.FollowMode
-      .semdedupStatePartitions(kCells, cpus.toInt)
+      .semdedupStatePartitions(kCells, cpus)
     val mSemdedup = run("embed_semdedup", embStaged,
       df => FollowMode.semdedupStream(spark,
         df.select("vec_id", "embedding"), semCents).toDF(),
@@ -271,7 +264,7 @@ object FollowBench {
         s"$semMismatches of ${batchKeep.size} verdicts")
     println(s"[follow] semdedup stream==batch keep/drop: " +
       s"${batchKeep.size - semMismatches}/${batchKeep.size} match")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
 
     // reorg recovery, the production healing path: rewrite bronze
     // canonical-only (tail window re-fetched) via replaceDir, restart

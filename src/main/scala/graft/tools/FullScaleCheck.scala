@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** FULL-suite true-sf1 runner (round-9 brief item 3): every registered
   * query executes against BOTH an sf0.1-shaped dir and a 10×
   * (ScaleUp-generated) sf1 dir; per query it reports warm seconds at
@@ -25,23 +23,12 @@ object FullScaleCheck {
       "usage: FullScaleCheck <dirSmall> <dirLarge> [outJson]")
     val Seq(small, large) = args.take(2).toSeq
     val outJson = args.lift(2).getOrElse("bench_history/r09_sf1_sidecar.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the sweep (same dev aid as
-    // Bench) — the true-sf1 sidecar runs the top-10 heavy hitters on a
-    // generator corpus that carries only the tables those queries read
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the sweep (Bench's selector) —
+    // the true-sf1 sidecar runs the top-10 heavy hitters on a generator
+    // corpus that carries only the tables those queries read
+    val names = graft.Bench.selectedQueries
 
     // shared harness primitives (graft.Bench — one benchmarking
     // contract for the per-round bench and this scale checker). loud:

@@ -65,12 +65,7 @@ object ScaleGen extends Serializable {
     // 60M lineitem rows for a dedup-cluster timing would be waste
     val only = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     generate(spark, out, m, only)
     spark.stop()
   }

@@ -32,13 +32,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: ScaleUp <srcDir> <outDir> <m>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     generate(spark, args(0), args(1), args(2).toInt)
     spark.stop()
   }

@@ -350,6 +350,25 @@ class PipelineOpsSpec extends AnyFunSuite {
     } finally graft.queries.TextOps.ccFinishCapOverride = None
   }
 
+  test("constraint barrier: a checkpoint loses its carried constraints " +
+    "and its sizeInBytes is clamped to Long.MaxValue") {
+    // the two per-level compounding costs of the monotone-path test
+    // above, asserted on plan structure: a LAZY checkpoint (nothing
+    // executes) of a filtered triple cross join carries the join's
+    // constraint set and a sizeInBytes that is the product of its three
+    // inputs (2^24 bytes each, so 2^72)
+    def side(c: String) = spark.range(1L << 21).select(col("id").as(c))
+    val ckpt = side("a").crossJoin(side("b")).crossJoin(side("c"))
+      .filter(col("a") < col("b") && col("b") < col("c"))
+      .localCheckpoint(eager = false)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+    assert(plan(ckpt).constraints.nonEmpty)
+    assert(plan(ckpt).stats.sizeInBytes > BigInt(Long.MaxValue))
+    val barred = org.apache.spark.sql.GraftSql.constraintBarrier(ckpt)
+    assert(plan(barred).constraints.isEmpty)
+    assert(plan(barred).stats.sizeInBytes <= BigInt(Long.MaxValue))
+  }
+
   test("dedup clusters: reliable checkpoint dir yields identical labels") {
     import spark.implicits._
     // a 9-node chain (diameter 8) forces several batches, exercising the
