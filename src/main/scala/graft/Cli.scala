@@ -821,26 +821,28 @@ object Cli {
 
   /** freeze with a JSON result summary — the python `freeze()` surface
     * (py4j-friendly: plain String instead of Scala collections). */
-  def freezeJson(args: Array[String], spark: SparkSession): String =
+  def freezeJson(args: Array[String], spark: SparkSession): String = {
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods
     run(args, spark) match {
       case None => "null"
-      case Some(r) =>
-        def s(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-        def arr(xs: Seq[String]) = xs.map(s).mkString("[", ",", "]")
-        s"""{"completed":${arr(r.completed)},"skipped":${arr(r.skipped)},""" +
-          s""""errored":${arr(r.errored)},"rows":${r.rows}}"""
+      case Some(r) => JsonMethods.compact(JsonMethods.render(
+        ("completed" -> r.completed) ~ ("skipped" -> r.skipped) ~
+          ("errored" -> r.errored) ~ ("rows" -> r.rows)))
     }
+  }
 
   /** difftest with a JSON outcome list — the python `difftest()`
     * surface (py4j-friendly String). Does NOT throw on mismatches: the
     * caller inspects per-datatype `ok`. */
   def diffTestJson(args: Array[String], spark: SparkSession): String = {
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods
     val outcomes = runDiffTest(args.toSeq, spark, failOnMismatch = false)
-    def s(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    outcomes.map { o =>
-      s"""{"datatype":${s(o.datatype)},"ok":${o.ok},"ref_rows":${o.refRows},""" +
-        s""""live_rows":${o.liveRows}}"""
-    }.mkString("[", ",", "]")
+    JsonMethods.compact(JsonMethods.render(outcomes.map { o =>
+      ("datatype" -> o.datatype) ~ ("ok" -> o.ok) ~
+        ("ref_rows" -> o.refRows) ~ ("live_rows" -> o.liveRows)
+    }))
   }
 
   private def runImpl(args: Array[String], spark: SparkSession,
@@ -1135,29 +1137,15 @@ object Cli {
         TableSchema.resolve(Datatypes(n), Seq.empty, Seq.empty, Some(cols)))
     }
 
-    val overrides: Map[String, Freeze.DatasetBuilder] =
+    // --event-signature ABI-decodes logs into event__ columns
+    // (log_decoder.rs); --exclude-failed drops failed txs / failed trace
+    // subtrees (args.rs)
+    val buildOptions = Freeze.BuildOptions(reprs, includeCols, excludeCols,
+      explicitCols, eventSignature, excludeFailed)
+    val decorated: Map[String, Freeze.DatasetBuilder] =
       expanded.map { name =>
-        name -> ((s: SparkSession, d: String) => {
-          val base = (name, eventSignature, excludeFailed) match {
-            // --event-signature: ABI-decode logs into event__ columns
-            // (log_decoder.rs; topic1-3/data drop after decode)
-            case ("logs", Some(sig), _) =>
-              ChainDatasets.logs(s, d, eventSignature = Some(sig),
-                u256Reprs = reprs, include = includeCols,
-                exclude = excludeCols, columns = explicitCols)
-            // --exclude-failed (args.rs): failed txs / failed trace
-            // subtrees drop
-            case ("transactions", _, true) =>
-              ChainDatasets.transactions(s, d, excludeFailed = true,
-                include = includeCols, exclude = excludeCols,
-                columns = explicitCols)
-            case ("traces", _, true) =>
-              ChainDatasets.traces(s, d, excludeFailed = true)
-            case _ => Freeze.builderWith(name, reprs,
-              includeCols, excludeCols, explicitCols)(s, d)
-          }
-          decorate(name)(base)
-        })
+        val build = Freeze.catalog(name).build(buildOptions)
+        name -> ((s: SparkSession, d: String) => decorate(name)(build(s, d)))
       }.toMap
 
     // TimeDimension::Transactions: a tx-hash list replaces the block range
@@ -1246,10 +1234,6 @@ object Cli {
 
     // dry runs plan file layout only — no node traffic (run.rs dry path)
     if (!dryRun) liveSource.foreach { src =>
-      val range = blocksSpec match {
-        case r: BlockSyntax.Range => r
-        case BlockSyntax.Numbers(ns) => BlockSyntax.Range(ns.min, ns.max + 1)
-      }
       // bronze is driver-local STAGING (FollowMode's reorg swap runs
       // java.nio on it by contract) — a scheme'd --output-dir
       // (s3a://…) must not have Paths.get mangle the URI into a
@@ -1273,18 +1257,10 @@ object Cli {
         to <- contract
         data <- if (composedCallData.nonEmpty) composedCallData else Seq.empty[String]
       } yield (to, data)
-      // column-aware receipt dependency: the transactions schema needs
-      // receipts only for gas_used/success (transactions.rs:124-135) —
-      // an --exclude-columns run without them skips the fetch
-      val txNeedsReceipts = !expanded.contains("transactions") ||
-        excludeFailed || {
-          val used = TableSchema.resolve(Datatypes.transactions,
-            includeCols, excludeCols, explicitCols)
-          used.contains("gas_used") || used.contains("success")
-        }
-      src.materializeBronze(spark, bronzeDir.toString, range, expanded,
+      src.materializeBronze(spark, bronzeDir.toString,
+        BlockSyntax.span(blocksSpec), expanded,
         addresses = addressF, slots = slotsF, calls = liveCalls,
-        jsTracer = jsTracer, txNeedsReceipts = txNeedsReceipts)
+        jsTracer = jsTracer, options = buildOptions)
       sourceDir = bronzeDir.toString
     }
 
@@ -1293,7 +1269,7 @@ object Cli {
     if (collectMode) {
       require(expanded.size == 1, "collect() takes exactly one datatype")
       val df = Freeze.filterBlocks(
-        overrides(expanded.head)(spark, sourceDir), blocksSpec)
+        decorated(expanded.head)(spark, sourceDir), blocksSpec)
       return Left(if (hex) Freeze.hexifyBinary(df) else df)
     }
 
@@ -1335,13 +1311,8 @@ object Cli {
       noReport = noReport, reportDirOverride = reportDir,
       subdirs = subdirs)
 
+    val chunks = BlockSyntax.chunks(blocksSpec, chunkSize, nChunks, align)
     if (dryRun) {
-      val range = blocksSpec match {
-        case r: BlockSyntax.Range => r
-        case BlockSyntax.Numbers(ns) => BlockSyntax.Range(ns.min, ns.max + 1)
-      }
-      val chunks = nChunks.map(n => BlockSyntax.subchunkByCount(range, n))
-        .getOrElse(BlockSyntax.subchunk(range, chunkSize, align))
       println(s"[dry-run] datasets: ${expanded.mkString(", ")}")
       println(s"[dry-run] blocks: $blocksSpec → ${chunks.size} chunk(s)")
       for (d <- expanded; c <- chunks)
@@ -1349,17 +1320,11 @@ object Cli {
       return Right(None)
     }
 
-    val fullRange = blocksSpec match {
-      case r: BlockSyntax.Range => r
-      case BlockSyntax.Numbers(ns) => BlockSyntax.Range(ns.min, ns.max + 1)
-    }
-    val chunkCount = nChunks.map(n => BlockSyntax.subchunkByCount(fullRange, n))
-      .getOrElse(BlockSyntax.subchunk(fullRange, chunkSize, align)).size
-    if (verbose) printIntro(spec, chunkCount, sourceDir)
+    if (verbose) printIntro(spec, chunks.size, sourceDir)
     val t0 = System.nanoTime()
-    val result = Freeze.freeze(spark, sourceDir, spec, overrides)
+    val result = Freeze.freeze(spark, sourceDir, spec, decorated)
     if (verbose)
-      printConclusion(result, chunkCount * expanded.size, (System.nanoTime() - t0) / 1e9)
+      printConclusion(result, chunks.size * expanded.size, (System.nanoTime() - t0) / 1e9)
     Right(Some(result))
   }
 }

@@ -120,6 +120,21 @@ object BlockSyntax {
     subchunk(r, size)
   }
 
+  /** the contiguous span of a block spec: a list densifies to
+    * [min, max] */
+  def span(b: Blocks): Range = b match {
+    case r: Range => r
+    case Numbers(ns) => Range(ns.min, ns.max + 1)
+  }
+
+  /** the chunk list of a block spec's span, in block order: `nChunks`
+    * equal chunks when given, else `chunkSize`-block chunks */
+  def chunks(b: Blocks, chunkSize: Long, nChunks: Option[Int],
+      align: Boolean): Seq[Range] = nChunks match {
+    case Some(n) => subchunkByCount(span(b), n)
+    case None => subchunk(span(b), chunkSize, align)
+  }
+
   /** clamp the range end to latest − reorgBuffer
     * (cryo parse/blocks.rs:126 apply_reorg_buffer) */
   def applyReorgBuffer(r: Range, latest: Long, buffer: Long): Option[Range] = {

@@ -57,12 +57,7 @@ object ChainDatasets {
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None): DataFrame = {
     val used = TableSchema.resolve(Datatypes.transactions, include, exclude, columns)
-    // receipts feed exactly gas_used and success — when the resolved
-    // schema carries neither (and excludeFailed doesn't need the status
-    // flag), skip reading the receipts bronze entirely so a live run
-    // never fetches it (cryo transactions.rs:124-135)
-    val needReceipts = excludeFailed ||
-      used.contains("gas_used") || used.contains("success")
+    val needReceipts = transactionsNeedReceipts(excludeFailed, include, exclude, columns)
     val txs = fx(spark, dir, "rpc_transactions")
     val baseFees = fx(spark, dir, "rpc_blocks")
       .select(col("block_number").as("bf_bn"), col("base_fee_per_gas"))
@@ -97,6 +92,18 @@ object ChainDatasets {
     filtered
       .select(used.map(col): _*)
       .sortWithinPartitions("block_number", "transaction_index")
+  }
+
+  /** Whether `transactions` reads the receipts bronze. Receipts feed
+    * exactly gas_used and success: when the resolved schema carries
+    * neither (and excludeFailed doesn't need the status flag), the
+    * receipts bronze is never read, so a live run never fetches it
+    * (cryo transactions.rs:124-135). */
+  def transactionsNeedReceipts(excludeFailed: Boolean,
+      include: Seq[String], exclude: Seq[String],
+      columns: Option[Seq[String]]): Boolean = {
+    val used = TableSchema.resolve(Datatypes.transactions, include, exclude, columns)
+    excludeFailed || used.contains("gas_used") || used.contains("success")
   }
 
   /** datasets/logs.rs:11-191 — topics split to topic0..3; optional

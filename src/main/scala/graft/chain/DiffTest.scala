@@ -48,11 +48,11 @@ object DiffTest {
   }
 
   /** the pinned corpus: every scalar datatype this engine collects live
-    * (superset of cryo_test defaults.py's 24) — every Freeze builder but
-    * javascript_traces, whose opaque JSON output compares through
-    * canonJs, in name order */
+    * (superset of cryo_test defaults.py's 24) — every Freeze.catalog
+    * entry but javascript_traces, whose opaque JSON output compares
+    * through canonJs, at default options, in name order */
   val corpus: Seq[(String, Freeze.DatasetBuilder)] =
-    (Freeze.allBuilders - "javascript_traces").toSeq.sortBy(_._1)
+    (Freeze.builders - "javascript_traces").toSeq.sortBy(_._1)
 
   /** canonical row rendering: null-safe, binary as hex, deterministic
     * sort — engine-neutral so two collections compare as row SETS */

@@ -1,5 +1,6 @@
 package graft.chain
 
+import graft.functions.U256
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -92,53 +93,107 @@ object Freeze {
   /** dataset name → full DataFrame builder over the fixture/RPC source dir */
   type DatasetBuilder = (SparkSession, String) => DataFrame
 
-  val builders: Map[String, DatasetBuilder] = Map(
-    "blocks" -> ((s, d) => ChainDatasets.blocks(s, d)),
-    "transactions" -> ((s, d) => ChainDatasets.transactions(s, d)),
-    "logs" -> ((s, d) => ChainDatasets.logs(s, d)),
-    "traces" -> ((s, d) => ChainDatasets.traces(s, d)),
-    "erc20_transfers" -> ((s, d) => ChainDatasets.erc20Transfers(s, d)),
-    "erc20_approvals" -> ((s, d) => ChainDatasets.erc20Approvals(s, d)),
-    "erc721_transfers" -> ((s, d) => ChainDatasets.erc721Transfers(s, d)),
-    "native_transfers" -> ((s, d) => ChainDatasets.nativeTransfers(s, d)),
-    "contracts" -> ((s, d) => ChainDatasets.contracts(s, d)),
-    "four_byte_counts" -> ((s, d) => ChainDatasets.fourByteCounts(s, d)),
-    "address_appearances" -> ((s, d) => ChainDatasets.addressAppearances(s, d)),
-    "balances" -> ((s, d) => ChainDatasets.balances(s, d)),
-    "nonces" -> ((s, d) => ChainDatasets.nonces(s, d)),
-    "codes" -> ((s, d) => ChainDatasets.codes(s, d)),
-    "slots" -> ((s, d) => ChainDatasets.slots(s, d)),
-    "storage_diffs" -> ((s, d) => ChainDatasets.storageDiffs(s, d)),
-    "balance_diffs" -> ((s, d) => ChainDatasets.balanceDiffs(s, d)),
-    "nonce_diffs" -> ((s, d) => ChainDatasets.nonceDiffs(s, d)),
-    "code_diffs" -> ((s, d) => ChainDatasets.codeDiffs(s, d)),
-    "eth_calls" -> ((s, d) => ChainDatasets.ethCalls(s, d)),
-    "erc20_metadata" -> ((s, d) => ChainDatasets.erc20Metadata(s, d)),
-    "erc20_supplies" -> ((s, d) => ChainDatasets.erc20Supplies(s, d)),
-    "erc20_balances" -> ((s, d) => ChainDatasets.erc20Balances(s, d)),
-    // tracer-family datasets: registered here so the CLI freeze path
-    // covers them too, not just the driver query registry — the
-    // file-layer differential sweep caught `graft.Cli vm_traces`
-    // erroring per chunk while chain_vm_traces was green
-    "vm_traces" -> ((s, d) => ChainDatasets.vmTraces(s, d)),
-    "geth_opcodes" -> ((s, d) => ChainDatasets.gethOpcodes(s, d)),
-    "geth_calls" -> ((s, d) => ChainDatasets.gethCalls(s, d)),
-    "javascript_traces" -> ((s, d) => ChainDatasets.javascriptTraces(s, d)),
-    "trace_calls" -> ((s, d) => ChainDatasets.traceCalls(s, d)),
-    "erc721_metadata" -> ((s, d) => ChainDatasets.erc721Metadata(s, d)))
+  /** The schema and filter settings a builder takes: `--u256-types`,
+    * `--include-columns`, `--exclude-columns`, `--columns`,
+    * `--event-signature` and `--exclude-failed`. Each builder reads the
+    * ones that apply to its dataset. */
+  case class BuildOptions(
+      u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
+      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
+      columns: Option[Seq[String]] = None,
+      eventSignature: Option[String] = None,
+      excludeFailed: Boolean = false)
+
+  /** One dataset, declared once (cryo datatype_macros.rs
+    * define_datatypes!): the bronze tables its builder reads and the
+    * builder itself, both for given options. */
+  case class Entry(bronze: BuildOptions => Set[String],
+      build: BuildOptions => DatasetBuilder)
+
+  private def reads(tables: String*)(build: BuildOptions => DatasetBuilder): Entry =
+    Entry(_ => tables.toSet, build)
+
+  /** The chain catalog: every dataset by canonical name. Live extraction
+    * fetches an entry's bronze (RpcSource.materializeBronze), a multi
+    * bundle persists the union of its members' bronze (collectMulti),
+    * and BronzeDepsSpec builds every entry from its bronze alone. */
+  val catalog: Map[String, Entry] = {
+    import graft.chain.{ChainDatasets => CD}
+    val logs = "rpc_logs"
+    val traces = "rpc_traces"
+    val prestate = "rpc_geth_prestate"
+    val calls = "rpc_calls"
+    // the four state-diff tables come from one replay pass, so each
+    // member declares all four
+    val diffs = Seq("rpc_balance_diffs", "rpc_code_diffs",
+      "rpc_nonce_diffs", "rpc_storage_diffs")
+    Map(
+      "blocks" -> reads("rpc_blocks")(o =>
+        CD.blocks(_, _, o.include, o.exclude, o.columns)),
+      "transactions" -> Entry(
+        o => Set("rpc_transactions", "rpc_blocks") ++ (
+          if (CD.transactionsNeedReceipts(o.excludeFailed,
+              o.include, o.exclude, o.columns)) Set("rpc_receipts")
+          else Set.empty),
+        o => CD.transactions(_, _, o.excludeFailed, o.include, o.exclude, o.columns)),
+      "logs" -> reads(logs)(o => CD.logs(_, _, eventSignature = o.eventSignature,
+        u256Reprs = o.u256Reprs, include = o.include, exclude = o.exclude,
+        columns = o.columns)),
+      "traces" -> reads(traces)(o => CD.traces(_, _, o.excludeFailed)),
+      "erc20_transfers" -> reads(logs)(o => CD.erc20Transfers(_, _, o.u256Reprs)),
+      "erc20_approvals" -> reads(logs)(o => CD.erc20Approvals(_, _, o.u256Reprs)),
+      "erc721_transfers" -> reads(logs)(o => CD.erc721Transfers(_, _, o.u256Reprs)),
+      "native_transfers" -> reads(traces)(o => CD.nativeTransfers(_, _, o.u256Reprs)),
+      "contracts" -> reads(traces)(_ => CD.contracts),
+      "four_byte_counts" -> reads(traces)(_ => CD.fourByteCounts),
+      "address_appearances" -> reads("rpc_blocks", "rpc_transactions",
+        "rpc_receipts", logs, traces)(_ => CD.addressAppearances),
+      "balances" -> reads("rpc_accounts")(o => CD.balances(_, _, o.u256Reprs)),
+      "nonces" -> reads("rpc_accounts")(_ => CD.nonces),
+      "codes" -> reads("rpc_accounts")(_ => CD.codes),
+      "slots" -> reads("rpc_storage")(o => CD.slots(_, _, o.u256Reprs)),
+      "storage_diffs" -> reads(diffs: _*)(o => CD.storageDiffs(_, _, o.u256Reprs)),
+      "balance_diffs" -> reads(diffs: _*)(o => CD.balanceDiffs(_, _, o.u256Reprs)),
+      "nonce_diffs" -> reads(diffs: _*)(_ => CD.nonceDiffs),
+      "code_diffs" -> reads(diffs: _*)(_ => CD.codeDiffs),
+      "geth_balance_diffs" -> reads(prestate)(o => CD.gethBalanceDiffs(_, _, o.u256Reprs)),
+      "geth_code_diffs" -> reads(prestate)(_ => CD.gethCodeDiffs),
+      "geth_nonce_diffs" -> reads(prestate)(_ => CD.gethNonceDiffs),
+      "geth_storage_diffs" -> reads(prestate)(o => CD.gethStorageDiffs(_, _, o.u256Reprs)),
+      "balance_reads" -> reads(prestate)(o => CD.balanceReads(_, _, o.u256Reprs)),
+      "code_reads" -> reads(prestate)(_ => CD.codeReads),
+      "nonce_reads" -> reads(prestate)(_ => CD.nonceReads),
+      "storage_reads" -> reads(prestate)(_ => CD.storageReads),
+      "eth_calls" -> reads(calls)(_ => CD.ethCalls),
+      "erc20_metadata" -> reads(calls)(_ => CD.erc20Metadata),
+      "erc20_supplies" -> reads(calls)(o => CD.erc20Supplies(_, _, o.u256Reprs)),
+      "erc20_balances" -> reads(calls)(o => CD.erc20Balances(_, _, o.u256Reprs)),
+      // tracer-family datasets are catalogued like the rest so the CLI
+      // freeze path covers them, not just the driver query registry
+      "vm_traces" -> reads("rpc_vm_traces")(_ => CD.vmTraces),
+      "geth_opcodes" -> reads("rpc_geth_opcodes")(_ => CD.gethOpcodes(_, _)),
+      "geth_calls" -> reads("rpc_geth_calls")(o => CD.gethCalls(_, _, o.u256Reprs)),
+      "javascript_traces" -> reads("rpc_js_traces")(_ => CD.javascriptTraces),
+      "trace_calls" -> reads("rpc_trace_calls")(_ => CD.traceCalls),
+      "erc721_metadata" -> reads("rpc_calls_erc721")(_ => CD.erc721Metadata))
+  }
+
+  /** every dataset's builder at the default options */
+  val builders: Map[String, DatasetBuilder] =
+    catalog.transform((_, e) => e.build(BuildOptions()))
 
   /** In-memory collect — the library API of the reference
     * (cryo collect.rs:5-30): one dataset, no files. Takes the same
     * schema/representation options as the CLI. */
   def collect(spark: SparkSession, sourceDir: String, dataset: String,
       blocks: BlockSyntax.Blocks,
-      u256Reprs: Seq[graft.functions.U256.Repr] = graft.functions.U256.defaultReprs,
+      u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None,
       hex: Boolean = false): DataFrame = {
     val canonical = Datatypes(dataset).name
-    val df0 = builderWith(canonical, u256Reprs, include, exclude, columns)(
-      spark, sourceDir)
+    val df0 = catalog(canonical).build(
+      BuildOptions(u256Reprs, include, exclude, columns))(spark, sourceDir)
     val df = if (hex) hexifyBinary(df0) else df0
     filterBlocks(df, blocks)
   }
@@ -166,7 +221,7 @@ object Freeze {
       dataset: String, txHashes: Seq[Array[Byte]]): DataFrame = {
     val ds = Datatypes(dataset)
     require(ds.byTransaction, s"${ds.name} does not support tx-hash collection")
-    val df = allBuilders(ds.name)(spark, sourceDir)
+    val df = builders(ds.name)(spark, sourceDir)
     if (df.columns.contains("transaction_hash"))
       df.filter(col("transaction_hash").isin(txHashes: _*))
     else {
@@ -200,67 +255,14 @@ object Freeze {
     */
   case class MultiResult(tables: Map[String, DataFrame], release: () => Unit)
 
-  private val multiBronze: Map[String, Seq[String]] = Map(
-    "blocks_and_transactions" -> Seq("rpc_blocks", "rpc_transactions", "rpc_receipts"),
-    "call_trace_derivatives" -> Seq("rpc_traces"),
-    "state_diffs" -> Seq("rpc_balance_diffs", "rpc_code_diffs",
-      "rpc_nonce_diffs", "rpc_storage_diffs"),
-    "geth_state_diffs" -> Seq("rpc_geth_prestate"),
-    "state_reads" -> Seq("rpc_geth_prestate"))
-
-  private val multiBuilders: Map[String, DatasetBuilder] = Map(
-    "geth_balance_diffs" -> ((s, d) => ChainDatasets.gethBalanceDiffs(s, d)),
-    "geth_code_diffs" -> ((s, d) => ChainDatasets.gethCodeDiffs(s, d)),
-    "geth_nonce_diffs" -> ((s, d) => ChainDatasets.gethNonceDiffs(s, d)),
-    "geth_storage_diffs" -> ((s, d) => ChainDatasets.gethStorageDiffs(s, d)),
-    "balance_reads" -> ((s, d) => ChainDatasets.balanceReads(s, d)),
-    "code_reads" -> ((s, d) => ChainDatasets.codeReads(s, d)),
-    "nonce_reads" -> ((s, d) => ChainDatasets.nonceReads(s, d)),
-    "storage_reads" -> ((s, d) => ChainDatasets.storageReads(s, d)))
-
-  /** every dataset buildable standalone (scalar builders + multi members) */
-  lazy val allBuilders: Map[String, DatasetBuilder] = builders ++ multiBuilders
-
-  /** builder with a caller-chosen u256 representation set (--u256-types,
-    * cryo cli/args.rs u256_types) for the datasets that expand u256
-    * columns; others fall back to the standard builder. */
-  def builderWith(name: String, reprs: Seq[graft.functions.U256.Repr],
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None): DatasetBuilder = {
-    import graft.chain.{ChainDatasets => CD}
-    name match {
-      case "blocks" => (s, d) => CD.blocks(s, d, include, exclude, columns)
-      case "transactions" => (s, d) =>
-        CD.transactions(s, d, include = include, exclude = exclude, columns = columns)
-      case "logs" => (s, d) => CD.logs(s, d, u256Reprs = reprs,
-        include = include, exclude = exclude, columns = columns)
-      case "erc20_transfers" => (s, d) => CD.erc20Transfers(s, d, u256Reprs = reprs)
-      case "erc20_approvals" => (s, d) => CD.erc20Approvals(s, d, u256Reprs = reprs)
-      case "erc721_transfers" => (s, d) => CD.erc721Transfers(s, d, u256Reprs = reprs)
-      case "native_transfers" => (s, d) => CD.nativeTransfers(s, d, u256Reprs = reprs)
-      case "balances" => (s, d) => CD.balances(s, d, u256Reprs = reprs)
-      case "slots" => (s, d) => CD.slots(s, d, u256Reprs = reprs)
-      case "storage_diffs" => (s, d) => CD.storageDiffs(s, d, u256Reprs = reprs)
-      case "balance_diffs" => (s, d) => CD.balanceDiffs(s, d, u256Reprs = reprs)
-      case "erc20_supplies" => (s, d) => CD.erc20Supplies(s, d, u256Reprs = reprs)
-      case "erc20_balances" => (s, d) => CD.erc20Balances(s, d, u256Reprs = reprs)
-      case "geth_balance_diffs" => (s, d) => CD.gethBalanceDiffs(s, d, u256Reprs = reprs)
-      case "geth_storage_diffs" => (s, d) => CD.gethStorageDiffs(s, d, u256Reprs = reprs)
-      case "geth_calls" => (s, d) => CD.gethCalls(s, d, u256Reprs = reprs)
-      case "balance_reads" => (s, d) => CD.balanceReads(s, d, u256Reprs = reprs)
-      case other => allBuilders(other)
-    }
-  }
-
   def collectMulti(spark: SparkSession, sourceDir: String,
       multiName: String): MultiResult = {
     val members = Datatypes.multis.getOrElse(multiName,
       throw new IllegalArgumentException(s"unknown multi: $multiName"))
-    val bronze = multiBronze(multiName).map(t => ChainDatasets.fx(spark, sourceDir, t))
+    val bronze = members.flatMap(catalog(_).bronze(BuildOptions())).distinct
+      .map(ChainDatasets.fx(spark, sourceDir, _))
     bronze.foreach(_.persist())
-    val tables = members.map { m =>
-      m -> allBuilders(m)(spark, sourceDir)
-    }.toMap
+    val tables = members.map(m => m -> builders(m)(spark, sourceDir)).toMap
     MultiResult(tables, () => bronze.foreach(_.unpersist()))
   }
 
@@ -282,7 +284,7 @@ object Freeze {
   def freeze(spark: SparkSession, sourceDir: String, spec: FreezeSpec,
       overrides: Map[String, DatasetBuilder] = Map.empty): FreezeResult = {
     def builderOf(canonical: String): DatasetBuilder =
-      overrides.getOrElse(canonical, allBuilders(canonical))
+      overrides.getOrElse(canonical, builders(canonical))
     // a label equal to a dataset name would make cryo filenames
     // ambiguous for lake readers (Lake.readStream prunes by globbing
     // the dataset segment; `*__blocks__*` would also match a
@@ -299,14 +301,8 @@ object Freeze {
     LakeFs.mkdirs(spec.outputDir)
     val tStart = java.time.LocalDateTime.now()
     writeReport(spec, tStart, None)
-    val range = spec.blocks match {
-      case r: BlockSyntax.Range => r
-      case BlockSyntax.Numbers(ns) => BlockSyntax.Range(ns.min, ns.max + 1)
-    }
-    val ordered = spec.nChunks match {
-      case Some(n) => BlockSyntax.subchunkByCount(range, n)
-      case None => BlockSyntax.subchunk(range, spec.chunkSize, spec.align)
-    }
+    val ordered = BlockSyntax.chunks(spec.blocks, spec.chunkSize,
+      spec.nChunks, spec.align)
     // chunk collection order (cli/parse/partitions.rs:110-123)
     val chunks = spec.chunkOrder match {
       case "normal" => ordered
@@ -532,20 +528,20 @@ object Freeze {
     if (spec.noReport) return
     val dir = reportDir(spec)
     LakeFs.mkdirs(dir)
-    def s(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    def arr(xs: Seq[String]) = xs.map(s).mkString("[", ",", "]")
-    val results = result match {
-      case None => "null"
-      case Some(r) =>
-        s"""{"completed_paths":${arr(r.completed)},"errored_paths":${arr(r.errored)},
-           |"n_skipped":${r.skipped.size},"rows":${r.rows}}""".stripMargin
-    }
-    val json =
-      s"""{"graft_version":${s(Version)},
-         |"cli_command":${spec.cliCommand.map(s).getOrElse("null")},
-         |"args":{"datasets":${arr(spec.datasets)},"network":${s(spec.network)},
-         |"format":${s(spec.format)},"chunk_order":${s(spec.chunkOrder)}},
-         |"results":$results}""".stripMargin
+    import org.json4s._
+    import org.json4s.JsonDSL._
+    import org.json4s.jackson.JsonMethods
+    // absent values are written as null, not dropped
+    val results: JValue = result.map { r =>
+      ("completed_paths" -> r.completed) ~ ("errored_paths" -> r.errored) ~
+        ("n_skipped" -> r.skipped.size) ~ ("rows" -> r.rows)
+    }.getOrElse(JNull)
+    val cli: JValue = spec.cliCommand.map(JString(_)).getOrElse(JNull)
+    val json = JsonMethods.compact(JsonMethods.render(
+      ("graft_version" -> Version) ~ ("cli_command" -> cli) ~
+        ("args" -> ("datasets" -> spec.datasets) ~ ("network" -> spec.network) ~
+          ("format" -> spec.format) ~ ("chunk_order" -> spec.chunkOrder)) ~
+        ("results" -> results)))
     val stamp = reportStamp(tStart)
     val name = if (result.isDefined) s"$stamp.json" else s"incomplete_$stamp.json"
     LakeFs.writeString(new HPath(dir, name).toString, json)

@@ -4,6 +4,7 @@ import java.math.BigInteger
 import java.util.{Random => JRandom}
 
 import graft.functions.{Keccak, U256}
+import graft.sources.RpcSource
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -72,7 +73,7 @@ object GenFixtures {
   def generate(spark: SparkSession, out: String, nBlocks: Int = NBlocks,
       chainId: Long = GenFixtures.ChainId): Unit = {
     val rnd = new JRandom(42)
-    val B = BinaryType; val I = IntegerType; val L = LongType; val S = StringType
+    val B = BinaryType; val I = IntegerType; val L = LongType
 
     def f(n: String, t: DataType, nullable: Boolean = true) = StructField(n, t, nullable)
     // r17 (guide §6 file layout): split each table into contiguous,
@@ -91,12 +92,16 @@ object GenFixtures {
     // parallelism on a 13 MB fixture. Row CONTENT is unchanged — same
     // rows, same order, same schema; only the physical file count
     // changes.
-    def write(name: String, schema: StructType, rows: Seq[Row]): Unit = {
+    def writeAs(name: String, schema: StructType, rows: Seq[Row]): Unit = {
       val k = math.max(1, math.min(4, rows.size / 4000))
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, k), schema)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
     }
+    // a table the live source also fetches takes the live schema, so
+    // fixture bronze and live bronze cannot drift apart
+    def write(name: String, rows: Seq[Row]): Unit =
+      writeAs(name, RpcSource.bronzeSchemas(name), rows)
 
     // ---- blocks ----
     val blockRows = (0 until nBlocks).map { i =>
@@ -115,15 +120,7 @@ object GenFixtures {
         u256(new BigInteger("58750003716598352816469").add(BigInteger.valueOf(n))),
         chainId)
     }
-    write("rpc_blocks", StructType(Seq(
-      f("block_number", I, false), f("block_hash", B, false), f("parent_hash", B, false),
-      f("uncles_hash", B), f("author", B), f("state_root", B),
-      f("transactions_root", B), f("receipts_root", B), f("gas_used", L),
-      f("gas_limit", L), f("extra_data", B), f("logs_bloom", B),
-      f("timestamp", I, false), f("difficulty", L), f("size", L),
-      f("mix_hash", B), f("nonce", B), f("base_fee_per_gas", L),
-      f("withdrawals_root", B), f("total_difficulty", B), f("chain_id", L, false))),
-      blockRows)
+    write("rpc_blocks", blockRows)
 
     // ---- transactions + receipts ----
     val txs = scala.collection.mutable.ArrayBuffer.empty[Tx]
@@ -157,24 +154,14 @@ object GenFixtures {
           21000L + rnd.nextInt(200000), if (rnd.nextInt(10) == 0) 0 else 1)
       }
     }
-    write("rpc_transactions", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("transaction_hash", B, false), f("block_hash", B), f("nonce", L),
-      f("from_address", B), f("to_address", B), f("value", B),
-      f("input", B), f("gas_limit", L), f("gas_price", L),
-      f("max_fee_per_gas", L), f("max_priority_fee_per_gas", L),
-      f("transaction_type", I), f("r", B), f("s", B), f("v", BooleanType),
-      f("timestamp", I), f("chain_id", L, false))),
-      txs.toSeq.map { t =>
+    write("rpc_transactions", txs.toSeq.map { t =>
         Row(t.bn, t.idx, t.hash, Keccak.hash(s"block${t.bn}"),
           rnd.nextInt(100).toLong, t.from, t.to, u256(t.value), t.input,
           t.gasLimit, t.gasPrice, t.maxFee, t.maxPriority, t.txType,
           Keccak.hash(s"r${t.bn}-${t.idx}"), Keccak.hash(s"s${t.bn}-${t.idx}"),
           rnd.nextBoolean(), 1700000000 + 12 * t.bn, chainId)
       })
-    write("rpc_receipts", StructType(Seq(
-      f("transaction_hash", B, false), f("gas_used", L), f("status", I))),
-      txs.toSeq.map(t => Row(t.hash, t.gasUsed, t.status)))
+    write("rpc_receipts", txs.toSeq.map(t => Row(t.hash, t.gasUsed, t.status)))
 
     // ---- logs ----
     val logRows = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -201,13 +188,7 @@ object GenFixtures {
           data.length, chainId)
       }
     }
-    write("rpc_logs", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("log_index", I, false), f("transaction_hash", B, false),
-      f("block_hash", B), f("address", B, false),
-      f("topics", ArrayType(B, containsNull = false), false),
-      f("data", B), f("n_data_bytes", I), f("chain_id", L, false))),
-      logRows.toSeq)
+    write("rpc_logs", logRows.toSeq)
 
     // ---- traces ----
     val traceRows = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -266,15 +247,7 @@ object GenFixtures {
         null, null, null, null, "block", "reward", null, null, null, null,
         "", 0, null, n, Keccak.hash(s"block$n"), null, null, chainId)
     }
-    write("rpc_traces", StructType(Seq(
-      f("action_from", B), f("action_to", B), f("action_value", S),
-      f("action_gas", I), f("action_input", B), f("action_call_type", S),
-      f("action_init", B), f("action_reward_type", S), f("action_type", S, false),
-      f("result_gas_used", I), f("result_output", B), f("result_code", B),
-      f("result_address", B), f("trace_address", S, false), f("subtraces", I, false),
-      f("error", S), f("block_number", I, false), f("block_hash", B),
-      f("transaction_index", I), f("transaction_hash", B), f("chain_id", L, false))),
-      traceRows.toSeq)
+    write("rpc_traces", traceRows.toSeq)
 
     // ---- state diffs ----
     val balRows = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -306,14 +279,14 @@ object GenFixtures {
       f("block_number", I, false), f("transaction_index", I, false),
       f("transaction_hash", B, false), f("address", B, false),
       f("from_value", B), f("to_value", B), f("chain_id", L, false)))
-    write("rpc_balance_diffs", diffSchema, balRows.toSeq)
-    write("rpc_nonce_diffs", StructType(Seq(
+    writeAs("rpc_balance_diffs", diffSchema, balRows.toSeq)
+    writeAs("rpc_nonce_diffs", StructType(Seq(
       f("block_number", I, false), f("transaction_index", I, false),
       f("transaction_hash", B, false), f("address", B, false),
       f("from_value", L), f("to_value", L), f("chain_id", L, false))),
       nonceRows.toSeq)
-    write("rpc_code_diffs", diffSchema, codeRows.toSeq)
-    write("rpc_storage_diffs", StructType(Seq(
+    writeAs("rpc_code_diffs", diffSchema, codeRows.toSeq)
+    writeAs("rpc_storage_diffs", StructType(Seq(
       f("block_number", I, false), f("transaction_index", I, false),
       f("transaction_hash", B, false), f("address", B, false), f("slot", B, false),
       f("from_value", B), f("to_value", B), f("chain_id", L, false))),
@@ -328,20 +301,14 @@ object GenFixtures {
       Row(n, addr(a), u256(new BigInteger("1000000000000000000").multiply(BigInteger.valueOf(a * 7L + i))),
         (a * 3 + i).toLong, if (a % 4 == 0) Keccak.hash(s"acctcode$a") else Array.emptyByteArray, chainId)
     }
-    write("rpc_accounts", StructType(Seq(
-      f("block_number", I, false), f("address", B, false), f("balance", B),
-      f("nonce", L), f("code", B), f("chain_id", L, false))),
-      acctRows)
+    write("rpc_accounts", acctRows)
     val storageRows = for {
       i <- 0 until nBlocks by 10
       tk <- 0 until 3
       sl <- 0 until 3
     } yield Row(FirstBlock + i, token(tk), Keccak.hash(s"gslot$sl"),
       u256(BigInteger.valueOf(1000L * tk + 10L * sl + i)), chainId)
-    write("rpc_storage", StructType(Seq(
-      f("block_number", I, false), f("address", B, false), f("slot", B, false),
-      f("value", B), f("chain_id", L, false))),
-      storageRows)
+    write("rpc_storage", storageRows)
 
     // ---- eth_call results (ERC20 metadata etc.) ----
     val names = Seq("Alpha Token", "BetaToken", "Gamma") // control char scrub case
@@ -361,10 +328,7 @@ object GenFixtures {
     }
     // a reverted call
     callRows += Row(lastBlock, token(0), Array[Byte](0x12, 0x34, 0x56, 0x78), null, chainId)
-    write("rpc_calls", StructType(Seq(
-      f("block_number", I, false), f("contract_address", B, false),
-      f("call_data", B, false), f("output_data", B), f("chain_id", L, false))),
-      callRows.toSeq)
+    write("rpc_calls", callRows.toSeq)
 
     // ---- geth prestate-tracer diffMode (pre/post account + storage rows) ----
     // fresh RNG so earlier tables stay byte-identical across generator edits
@@ -422,12 +386,7 @@ object GenFixtures {
         }
       }
     }
-    write("rpc_geth_prestate", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("transaction_hash", B, false), f("phase", S, false),
-      f("address", B, false), f("balance", B), f("nonce", L), f("code", B),
-      f("slot", B), f("slot_value", B), f("chain_id", L, false))),
-      gethRows.toSeq)
+    write("rpc_geth_prestate", gethRows.toSeq)
 
     // ---- opcode-level traces (parity vmTrace / geth struct-log shapes) ----
     val vrnd = new JRandom(44)
@@ -454,18 +413,8 @@ object GenFixtures {
           chainId)
       }
     }
-    write("rpc_vm_traces", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("pc", L, false), f("cost", L), f("used", L), f("push", B),
-      f("mem_off", I), f("mem_data", B), f("storage_key", B),
-      f("storage_val", B), f("op", S, false), f("chain_id", L, false))),
-      vmRows.toSeq)
-    write("rpc_geth_opcodes", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("pc", L, false), f("op", S, false), f("gas", L), f("gas_cost", L),
-      f("depth", I), f("memory", S), f("stack", S), f("storage", S),
-      f("chain_id", L, false))),
-      opRows.toSeq)
+    write("rpc_vm_traces", vmRows.toSeq)
+    write("rpc_geth_opcodes", opRows.toSeq)
 
     // ---- geth callTracer frames (flattened CallFrame tree) ----
     val gcRows = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -479,13 +428,7 @@ object GenFixtures {
           50000L, 21000L, selTotalSupply.clone(), u256(42L), "STATICCALL",
           null, 1, chainId)
     }
-    write("rpc_geth_calls", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("from_address", B), f("to_address", B), f("value", B),
-      f("gas", L), f("gas_used", L), f("input", B), f("output", B),
-      f("call_type", S, false), f("error", S), f("depth", I, false),
-      f("chain_id", L, false))),
-      gcRows.toSeq)
+    write("rpc_geth_calls", gcRows.toSeq)
 
     // ---- user JS-tracer outputs (opaque JSON strings) ----
     val jsRows = txs.filter(_.idx == 0).map { t =>
@@ -493,11 +436,7 @@ object GenFixtures {
         s"""{"gasUsed": ${t.gasUsed}, "reverted": ${t.status == 0}, "steps": ${4 + t.bn % 7}}""",
         chainId)
     }
-    write("rpc_js_traces", StructType(Seq(
-      f("block_number", I, false), f("transaction_index", I, false),
-      f("transaction_hash", B, false), f("output", S, false),
-      f("chain_id", L, false))),
-      jsRows.toSeq)
+    write("rpc_js_traces", jsRows.toSeq)
 
     // ---- simulated call trees (trace_call results) ----
     val tcRows = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -508,22 +447,13 @@ object GenFixtures {
       tcRows += Row(lastBlock, token(i), cd, token(i), addr(8), "0", 40000,
         Array.emptyByteArray, "staticcall", "0", 0, null, chainId)
     }
-    write("rpc_trace_calls", StructType(Seq(
-      f("block_number", I, false), f("contract_address", B, false),
-      f("tx_call_data", B, false), f("action_from", B), f("action_to", B),
-      f("action_value", S), f("action_gas", I), f("action_input", B),
-      f("action_type", S, false), f("trace_address", S, false),
-      f("subtraces", I, false), f("error", S), f("chain_id", L, false))),
-      tcRows.toSeq)
+    write("rpc_trace_calls", tcRows.toSeq)
 
     // ---- erc721 metadata calls (separate from rpc_calls so erc20_metadata
     //      results stay unchanged) ----
     val nftCalls = Seq(
       Row(lastBlock, nft, selName.clone(), abiString("Punk Apes"), chainId),
       Row(lastBlock, nft, selSymbol.clone(), abiString("PUNKAPE"), chainId))
-    write("rpc_calls_erc721", StructType(Seq(
-      f("block_number", I, false), f("contract_address", B, false),
-      f("call_data", B, false), f("output_data", B), f("chain_id", L, false))),
-      nftCalls)
+    writeAs("rpc_calls_erc721", RpcSource.callsSchema, nftCalls)
   }
 }

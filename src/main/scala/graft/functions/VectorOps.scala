@@ -207,4 +207,9 @@ object VectorOps {
     GraftSql.column(AbsMaxF32(GraftSql.expression(c)))
   def sub(a: Column, b: Column): Column =
     GraftSql.column(SubF32(GraftSql.expression(a), GraftSql.expression(b)))
+  /** cosine similarity, dot(a, b) / (sqrt(sumSq(a)) * sqrt(sumSq(b))) —
+    * this operand order is the one the DuckDB oracles mirror */
+  def cosine(a: Column, b: Column): Column =
+    dot(a, b) / (org.apache.spark.sql.functions.sqrt(sumSq(a)) *
+      org.apache.spark.sql.functions.sqrt(sumSq(b)))
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.functions.VectorOps.cosine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -36,8 +37,6 @@ object SimilarityOps {
 
   private val duckSumSq =
     "list_reduce(list_transform(embedding, x -> CAST(x AS DOUBLE) * x), (a, b) -> a + b)"
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_transform(range(1, 65), i -> CAST($a.embedding[i] AS DOUBLE) * $b.embedding[i]), (x, y) -> x + y)"
   private def duckBucketOf(bits: Int): String =
     (0 until bits).map(i =>
       s"(CASE WHEN embedding[${i + 1}] > 0 THEN (1::BIGINT << $i) ELSE 0 END)").mkString(" + ")
@@ -48,6 +47,9 @@ object SimilarityOps {
     s"list_reduce(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * $b[i]), (x, y) -> x + y)"
   private def duckSS(c: String): String =
     s"list_reduce(list_transform($c, x -> CAST(x AS DOUBLE) * x), (p, q) -> p + q)"
+  /** cosine over DuckDB list columns, in VectorOps.cosine's operand order */
+  private def duckCos(a: String, b: String): String =
+    s"${duckDotCols(a, b)} / (sqrt(${duckSS(a)}) * sqrt(${duckSS(b)}))"
 
   /** Sign-LSH bucket cap for near-dup pair generation — the same hygiene
     * as TextOps.LshBucketCap: a degenerate bucket (e.g. a mass of
@@ -436,9 +438,7 @@ object SimilarityOps {
     val b = e.select(col("bucket"), col("vec_id").as("id_b"), col("embedding").as("emb_b"))
     a.join(b, "bucket")
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) /
-          (sqrt(sumSq(col("emb_a"))) * sqrt(sumSq(col("emb_b")))))
+      .withColumn("cosine", cosine(col("emb_a"), col("emb_b")))
       .filter(col("cosine") > threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -485,9 +485,7 @@ object SimilarityOps {
       col("embedding").as("emb_b"))
     a.join(b, "centroid_id")
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        dot(col("emb_a"), col("emb_b")) /
-          (sqrt(sumSq(col("emb_a"))) * sqrt(sumSq(col("emb_b")))))
+      .withColumn("cosine", cosine(col("emb_a"), col("emb_b")))
       .filter(col("cosine") > threshold)
       .select("id_a", "id_b", "cosine")
   }
@@ -541,9 +539,7 @@ object SimilarityOps {
       col("embedding").as("emb_b"))
     val sims = inPlay.join(b, "centroid_id")
       .filter(col("id_b") < col("vec_id"))
-      .withColumn("cosine",
-        dot(col("embedding"), col("emb_b")) /
-          (sqrt(sumSq(col("embedding"))) * sqrt(sumSq(col("emb_b")))))
+      .withColumn("cosine", cosine(col("embedding"), col("emb_b")))
       .groupBy("vec_id").agg(max(col("cosine")).as("max_prior_cosine"))
     sized.select("vec_id", "centroid_id")
       .join(sims, Seq("vec_id"), "left")
@@ -1017,9 +1013,7 @@ object SimilarityOps {
         col("label").as("c_label"))
       val scored = c.crossJoin(broadcast(q))
         .filter(col("c_label") =!= col("q_label"))
-        .withColumn("cosine",
-          dot(col("q_emb"), col("c_emb")) /
-            (sqrt(sumSq(col("q_emb"))) * sqrt(sumSq(col("c_emb")))))
+        .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
       graft.operators.TopKPerKey.topK(s, scored, "q_id", "cosine", "c_id", 3)
         .select("q_id", "c_id", "rk", "cosine")
     },
@@ -1041,9 +1035,7 @@ object SimilarityOps {
       val c = e.filter(col("vec_id") >= 10)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
       val scored = c.crossJoin(broadcast(q.drop("q_label")))
-        .withColumn("cosine",
-          dot(col("q_emb"), col("c_emb")) /
-            (sqrt(sumSq(col("q_emb"))) * sqrt(sumSq(col("c_emb")))))
+        .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
       val topk = graft.operators.TopKPerKey.topK(s, scored,
         "q_id", "cosine", "c_id", 5)
       val labels = e.select(col("vec_id").as("c_id"),
@@ -1365,9 +1357,7 @@ object SimilarityOps {
       val exact = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
         .join(broadcast(short), "c_id")
         .join(broadcast(qv), "q_id")
-        .withColumn("cosine",
-          dot(col("q_emb"), col("c_emb")) /
-            (sqrt(sumSq(col("q_emb"))) * sqrt(sumSq(col("c_emb")))))
+        .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
       graft.operators.TopKPerKey.topK(s, exact, "q_id", "cosine", "c_id", 3)
         .select(col("q_id"), col("c_id"), col("rk"), col("cosine"))
     },
@@ -1442,7 +1432,7 @@ object SimilarityOps {
         val qd = slice(col("q_emb"), 1, d)
         val cd = slice(col("c_emb"), 1, d)
         struct(lit(d.toLong).as("d"),
-          (dot(qd, cd) / (sqrt(sumSq(qd)) * sqrt(sumSq(cd)))).as("cosine"))
+          cosine(qd, cd).as("cosine"))
       }: _*)
       val scored = c.crossJoin(broadcast(q))
         .filter(col("q_id") =!= col("c_id"))
@@ -1481,9 +1471,7 @@ object SimilarityOps {
       val w = Window.partitionBy("vec_id")
         .orderBy(col("cosine").desc, col("centroid_id").asc)
       val probes = e.filter(col("vec_id") < 10).crossJoin(broadcast(cents))
-        .withColumn("cosine",
-          dot(col("embedding"), col("c_emb")) /
-            (sqrt(sumSq(col("embedding"))) * sqrt(sumSq(col("c_emb")))))
+        .withColumn("cosine", cosine(col("embedding"), col("c_emb")))
         .withColumn("cell_rank", row_number().over(w))
         .filter(col("cell_rank") <= nps.max)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_e"),
@@ -1493,9 +1481,7 @@ object SimilarityOps {
           col("centroid_id"))
       val cand = probes.join(assign, "centroid_id")
         .filter(col("q_id") =!= col("c_id"))
-        .withColumn("cosine",
-          dot(col("q_e"), col("c_e")) /
-            (sqrt(sumSq(col("q_e"))) * sqrt(sumSq(col("c_e")))))
+        .withColumn("cosine", cosine(col("q_e"), col("c_e")))
         .select(col("q_id"), col("c_id"), col("cosine"),
           explode(filter(array(nps.map(n => lit(n.toLong)): _*),
             np => np >= col("cell_rank"))).as("nprobe"))
@@ -1568,9 +1554,7 @@ object SimilarityOps {
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_e"))
       .crossJoin(broadcast(supersDf))
-      .withColumn("scos",
-        dot(col("q_e"), col("s_emb")) /
-          (sqrt(sumSq(col("q_e"))) * sqrt(sumSq(col("s_emb")))))
+      .withColumn("scos", cosine(col("q_e"), col("s_emb")))
       .withColumn("super_rank", row_number().over(w))
       .filter(col("super_rank") <= lit(nps.max))
       .select(col("q_id"), col("q_e"), col("super_id"), col("super_rank"))
@@ -1589,9 +1573,7 @@ object SimilarityOps {
       idx2.children.iterator.flatMap(_.ids).toSet.size
     val scored0 = assign.join(broadcast(probeCells), "centroid_id")
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine",
-        dot(col("q_e"), col("c_e")) /
-          (sqrt(sumSq(col("q_e"))) * sqrt(sumSq(col("c_e")))))
+      .withColumn("cosine", cosine(col("q_e"), col("c_e")))
     val scored =
       if (dupFree)
         scored0.select(col("q_id"), col("c_id"), col("cosine"),
@@ -1626,9 +1608,7 @@ object SimilarityOps {
     val c = e.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine",
-        dot(col("q_emb"), col("c_emb")) /
-          (sqrt(sumSq(col("q_emb"))) * sqrt(sumSq(col("c_emb")))))
+      .withColumn("cosine", cosine(col("q_emb"), col("c_emb")))
     graft.operators.TopKPerKey.topK(e.sparkSession, scored,
       "q_id", "cosine", "c_id", k)
       .select("q_id", "c_id", "rk", "cosine")
@@ -1704,9 +1684,7 @@ object SimilarityOps {
     val w1 = Window.partitionBy("vec_id")
       .orderBy(col("cosine").desc, col("centroid_id").asc)
     val probesPlan = queries.crossJoin(broadcast(cents))
-      .withColumn("cosine",
-        dot(col("embedding"), col("c_emb")) /
-          (sqrt(sumSq(col("embedding"))) * sqrt(sumSq(col("c_emb")))))
+      .withColumn("cosine", cosine(col("embedding"), col("c_emb")))
       .withColumn("rk", row_number().over(w1))
       .filter(col("rk") <= 2)
       .select(col("vec_id").as("q_id"), col("centroid_id"),
@@ -1902,9 +1880,7 @@ object SimilarityOps {
     def nearestCells(src: DataFrame, idCol: String, n: Int): DataFrame = {
       val w = Window.partitionBy(idCol).orderBy(col("cosine").desc, col("centroid_id").asc)
       src.crossJoin(broadcast(cents))
-        .withColumn("cosine",
-          dot(col("embedding"), col("c_emb")) /
-            (sqrt(sumSq(col("embedding"))) * sqrt(sumSq(col("c_emb")))))
+        .withColumn("cosine", cosine(col("embedding"), col("c_emb")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= n)
     }
@@ -1918,9 +1894,7 @@ object SimilarityOps {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_e"), col("centroid_id"))
     val cand = probes.join(assign, "centroid_id")
       .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cosine",
-        dot(col("q_e"), col("c_e")) /
-          (sqrt(sumSq(col("q_e"))) * sqrt(sumSq(col("c_e")))))
+      .withColumn("cosine", cosine(col("q_e"), col("c_e")))
     graft.operators.TopKPerKey.topK(e.sparkSession, cand,
       "q_id", "cosine", "c_id", 3)
       .select("q_id", "c_id", "rk", "cosine")
@@ -1934,9 +1908,7 @@ object SimilarityOps {
       s"""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |scored AS (
         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q", "c")} /
-        |   (sqrt(list_reduce(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * x), (a, b) -> a + b)) *
-        |    sqrt(list_reduce(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * x), (a, b) -> a + b))) AS cosine
+        |  ${duckCos("q.embedding", "c.embedding")} AS cosine
         | FROM q, embeddings c WHERE q.vec_id <> c.vec_id)
         |SELECT q_id, c_id, rk, cosine FROM (
         | SELECT q_id, c_id, cosine,
@@ -1946,9 +1918,7 @@ object SimilarityOps {
       s"""WITH q AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id < 10),
         |scored AS (
         | SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q", "c")} /
-        |   (sqrt(list_reduce(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * x), (a, b) -> a + b)) *
-        |    sqrt(list_reduce(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * x), (a, b) -> a + b))) AS cosine
+        |  ${duckCos("q.embedding", "c.embedding")} AS cosine
         | FROM q, embeddings c WHERE c.label <> q.label)
         |SELECT q_id, c_id, rk, cosine FROM (
         | SELECT q_id, c_id, cosine,
@@ -1961,8 +1931,7 @@ object SimilarityOps {
         |  FROM embeddings WHERE vec_id >= 10),
         |scored AS (
         | SELECT q.q_id, q.q_label, c.c_id, c.c_label,
-        |  ${duckDot("q", "c")} /
-        |   (sqrt(${duckSS("q.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q.embedding", "c.embedding")} AS cosine
         | FROM q, c),
         |votes AS (
         | SELECT q_id, q_label, c_label, count(*) AS n_votes, min(rk) AS best_rk
@@ -2026,8 +1995,7 @@ object SimilarityOps {
         | SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings WHERE vec_id < 16),
         |scored AS (
         | SELECT e.vec_id, c.centroid_id,
-        |  ${duckDotCols("e.embedding", "c.c_emb")} /
-        |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+        |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
         | FROM embeddings e, cents c)
         |SELECT vec_id, centroid_id, cosine FROM (
         | SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosine DESC, centroid_id ASC) AS rk
@@ -2054,25 +2022,21 @@ object SimilarityOps {
         | SELECT centroid_id, c_emb, super_id FROM (
         |  SELECT c.centroid_id, c.c_emb, s.super_id,
         |   row_number() OVER (PARTITION BY c.centroid_id ORDER BY
-        |    ${duckDotCols("c.c_emb", "s.s_emb")} /
-        |     (sqrt(${duckSS("c.c_emb")}) * sqrt(${duckSS("s.s_emb")})) DESC,
+        |    ${duckCos("c.c_emb", "s.s_emb")} DESC,
         |    s.super_id ASC) AS rk
         |  FROM cents c, supers s) WHERE rk = 1),
         |vroute AS (
         | SELECT vec_id, embedding, super_id FROM (
         |  SELECT e.vec_id, e.embedding, s.super_id,
         |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |    ${duckDotCols("e.embedding", "s.s_emb")} /
-        |     (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("s.s_emb")})) DESC,
+        |    ${duckCos("e.embedding", "s.s_emb")} DESC,
         |    s.super_id ASC) AS rk
         |  FROM embeddings e, supers s) WHERE rk = 1)
         |SELECT vec_id, centroid_id, cosine FROM (
         | SELECT v.vec_id, c.centroid_id,
-        |  ${duckDotCols("v.embedding", "c.c_emb")} /
-        |   (sqrt(${duckSS("v.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine,
+        |  ${duckCos("v.embedding", "c.c_emb")} AS cosine,
         |  row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |   ${duckDotCols("v.embedding", "c.c_emb")} /
-        |    (sqrt(${duckSS("v.embedding")}) * sqrt(${duckSS("c.c_emb")})) DESC,
+        |   ${duckCos("v.embedding", "c.c_emb")} DESC,
         |   c.centroid_id ASC) AS rk
         | FROM vroute v JOIN croute c ON v.super_id = c.super_id) WHERE rk = 1""".stripMargin,
     "q_embed_kmeans_step" ->
@@ -2080,8 +2044,7 @@ object SimilarityOps {
         | SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings WHERE vec_id < 16),
         |scored AS (
         | SELECT e.vec_id, e.embedding, c.centroid_id,
-        |  ${duckDotCols("e.embedding", "c.c_emb")} /
-        |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+        |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
         | FROM embeddings e, cents c),
         |assign AS (
         | SELECT vec_id, embedding, centroid_id FROM (
@@ -2148,8 +2111,7 @@ object SimilarityOps {
         |  FROM approx) WHERE rk <= 10),
         |rer AS (
         | SELECT s.q_id, s.c_id,
-        |  ${duckDotCols("q.embedding", "c.embedding")} /
-        |   (sqrt(${duckSS("q.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q.embedding", "c.embedding")} AS cosine
         | FROM shortlist s
         | JOIN embeddings q ON q.vec_id = s.q_id
         | JOIN embeddings c ON c.vec_id = s.c_id)
@@ -2166,8 +2128,7 @@ object SimilarityOps {
         |q2 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |bf AS (
         | SELECT q2.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q2", "c")} /
-        |   (sqrt(${duckSS("q2.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q2.embedding", "c.embedding")} AS cosine
         | FROM q2, embeddings c WHERE q2.vec_id <> c.vec_id),
         |exact AS (
         | SELECT q_id, c_id FROM (
@@ -2223,8 +2184,7 @@ object SimilarityOps {
       s"""WITH q2 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |bf AS (
         | SELECT q2.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q2", "c")} /
-        |   (sqrt(${duckSS("q2.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q2.embedding", "c.embedding")} AS cosine
         | FROM q2, embeddings c WHERE q2.vec_id <> c.vec_id),
         |exact AS (
         | SELECT q_id, c_id FROM (
@@ -2240,8 +2200,6 @@ object SimilarityOps {
         |GROUP BY nprobe""".stripMargin
     },
     "q_embed_2level_recall" -> {
-      def cos(a: String, b: String) =
-        s"${duckDotCols(a, b)} / (sqrt(${duckSS(a)}) * sqrt(${duckSS(b)}))"
       // trained supers over trained cells: cells from the shared 3-round
       // Lloyd unroll, supers from buildTrained's 5 driver-side rounds
       // (duckSupersCtes — same integer-grid arithmetic), nSupers =
@@ -2253,14 +2211,14 @@ object SimilarityOps {
         |vranked AS MATERIALIZED (
         | SELECT e.vec_id, e.embedding, s.super_id,
         |  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |   ${cos("e.embedding", "s.s_emb")} DESC, s.super_id ASC) AS rk
+        |   ${duckCos("e.embedding", "s.s_emb")} DESC, s.super_id ASC) AS rk
         | FROM embeddings e, supers5 s),
         |vroute AS (SELECT vec_id, embedding, super_id FROM vranked WHERE rk = 1),
         |assign2 AS MATERIALIZED (
         | SELECT vec_id, embedding, centroid_id FROM (
         |  SELECT v.vec_id, v.embedding, cc.centroid_id,
         |   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-        |    ${cos("v.embedding", "cc.c_emb")} DESC, cc.centroid_id ASC) AS rk
+        |    ${duckCos("v.embedding", "cc.c_emb")} DESC, cc.centroid_id ASC) AS rk
         |  FROM vroute v JOIN croute cr ON v.super_id = cr.super_id
         |   JOIN cord cc ON cc.centroid_id = cr.centroid_id) WHERE rk = 1),
         |qprobes AS (
@@ -2269,7 +2227,7 @@ object SimilarityOps {
         |cand2 AS MATERIALIZED (
         | SELECT q_id, c_id, cosine, min(super_rank) AS r FROM (
         |  SELECT p.q_id, a.vec_id AS c_id,
-        |   ${cos("p.q_e", "a.embedding")} AS cosine, p.super_rank
+        |   ${duckCos("p.q_e", "a.embedding")} AS cosine, p.super_rank
         |  FROM qprobes p JOIN croute cr ON p.super_id = cr.super_id
         |   JOIN assign2 a ON a.centroid_id = cr.centroid_id
         |  WHERE a.vec_id <> p.q_id)
@@ -2282,8 +2240,7 @@ object SimilarityOps {
         |q2 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |bf AS (
         | SELECT q2.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q2", "c")} /
-        |   (sqrt(${duckSS("q2.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q2.embedding", "c.embedding")} AS cosine
         | FROM q2, embeddings c WHERE q2.vec_id <> c.vec_id),
         |exact AS (
         | SELECT q_id, c_id FROM (
@@ -2304,8 +2261,7 @@ object SimilarityOps {
         |q2 AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
         |bf AS (
         | SELECT q2.vec_id AS q_id, c.vec_id AS c_id,
-        |  ${duckDot("q2", "c")} /
-        |   (sqrt(${duckSS("q2.embedding")}) * sqrt(${duckSS("c.embedding")})) AS cosine
+        |  ${duckCos("q2.embedding", "c.embedding")} AS cosine
         | FROM q2, embeddings c WHERE q2.vec_id <> c.vec_id),
         |exact AS (
         | SELECT q_id, c_id FROM (
@@ -2348,14 +2304,12 @@ object SimilarityOps {
     * `croute` (centroid_id → super_id, backfill rows included). */
   private def duckSupersCtes(centsCte: String, nSupersExpr: String,
       iters: Int, gate: String = "TRUE"): String = {
-    def cos(a: String, b: String) =
-      s"${duckDotCols(a, b)} / (sqrt(${duckSS(a)}) * sqrt(${duckSS(b)}))"
     val rounds = (1 to iters).map { r =>
       s"""sroute$r AS (
         | SELECT pos, c_emb, super_id FROM (
         |  SELECT c.pos, c.c_emb, s.super_id,
         |   row_number() OVER (PARTITION BY c.pos ORDER BY
-        |    ${cos("c.c_emb", "s.s_emb")} DESC, s.super_id ASC) AS rk
+        |    ${duckCos("c.c_emb", "s.s_emb")} DESC, s.super_id ASC) AS rk
         |  FROM cord c, supers${r - 1} s) WHERE rk = 1),
         |smean$r AS (
         | SELECT super_id, list(CAST(c_val AS FLOAT) ORDER BY dim) AS s_emb FROM (
@@ -2381,7 +2335,7 @@ object SimilarityOps {
         | SELECT pos, super_id FROM (
         |  SELECT c.pos, s.super_id,
         |   row_number() OVER (PARTITION BY c.pos ORDER BY
-        |    ${cos("c.c_emb", "s.s_emb")} DESC, s.super_id ASC) AS rk
+        |    ${duckCos("c.c_emb", "s.s_emb")} DESC, s.super_id ASC) AS rk
         |  FROM cord c, supers$iters s) WHERE rk = 1),
         |croute AS MATERIALIZED (
         | SELECT c.centroid_id, f.super_id
@@ -2397,8 +2351,7 @@ object SimilarityOps {
     val rounds = (1 to iters).map { r =>
       s"""scored_t$r AS (
         | SELECT e.vec_id, e.embedding, c.centroid_id,
-        |  ${duckDotCols("e.embedding", "c.c_emb")} /
-        |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+        |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
         | FROM embeddings e, cents${r - 1} c),
         |assign_t$r AS (
         | SELECT vec_id, embedding, centroid_id FROM (
@@ -2429,8 +2382,7 @@ object SimilarityOps {
   private[queries] def duckFlatAssignCtes(centsCte: String): String =
     s"""scored AS (
       | SELECT e.vec_id, e.embedding, c.centroid_id,
-      |  ${duckDotCols("e.embedding", "c.c_emb")} /
-      |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+      |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
       | FROM embeddings e, $centsCte c),
       |assign AS (
       | SELECT vec_id, embedding, centroid_id FROM (
@@ -2449,8 +2401,6 @@ object SimilarityOps {
     * semantics, not drift. Emits `assign` (vec_id, embedding,
     * centroid_id) plus the supers chain; build bodies on `assign`. */
   private[queries] def duckTrainedAssignCtes(centsCte: String): String = {
-    def cos(a: String, b: String) =
-      s"${duckDotCols(a, b)} / (sqrt(${duckSS(a)}) * sqrt(${duckSS(b)}))"
     val nsup = "greatest(2, CAST(floor(sqrt(CAST((SELECT count(*) " +
       s"FROM $centsCte) AS DOUBLE))) AS BIGINT))"
     // r16 (ADVICE r15): the 5-round supers training is gated on the
@@ -2463,14 +2413,14 @@ object SimilarityOps {
       | SELECT vec_id, embedding, centroid_id FROM (
       |  SELECT e.vec_id, e.embedding, c.centroid_id,
       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    ${cos("e.embedding", "c.c_emb")} DESC, c.centroid_id ASC) AS rk
+      |    ${duckCos("e.embedding", "c.c_emb")} DESC, c.centroid_id ASC) AS rk
       |  FROM embeddings e, $centsCte c
       |  WHERE ($duckScaledK) < $TwoLevelAssignK) WHERE rk = 1),
       |vroute2 AS (
       | SELECT vec_id, embedding, super_id FROM (
       |  SELECT e.vec_id, e.embedding, s.super_id,
       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    ${cos("e.embedding", "s.s_emb")} DESC, s.super_id ASC) AS rk
+      |    ${duckCos("e.embedding", "s.s_emb")} DESC, s.super_id ASC) AS rk
       |  FROM embeddings e, supers5 s
       |  WHERE ($duckScaledK) >= $TwoLevelAssignK) WHERE rk = 1),
       |assign AS (
@@ -2479,7 +2429,7 @@ object SimilarityOps {
       | SELECT vec_id, embedding, centroid_id FROM (
       |  SELECT v.vec_id, v.embedding, cc.centroid_id,
       |   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-      |    ${cos("v.embedding", "cc.c_emb")} DESC, cc.centroid_id ASC) AS rk
+      |    ${duckCos("v.embedding", "cc.c_emb")} DESC, cc.centroid_id ASC) AS rk
       |  FROM vroute2 v JOIN croute cr ON v.super_id = cr.super_id
       |   JOIN cord cc ON cc.centroid_id = cr.centroid_id) WHERE rk = 1)""".stripMargin
   }
@@ -2491,8 +2441,7 @@ object SimilarityOps {
       | SELECT *, count(*) OVER (PARTITION BY centroid_id) AS csz FROM $assignCte),
       |sims AS (
       | SELECT a.vec_id,
-      |  max(${duckDotCols("a.embedding", "b.embedding")} /
-      |   (sqrt(${duckSS("a.embedding")}) * sqrt(${duckSS("b.embedding")}))) AS max_prior_cosine
+      |  max(${duckCos("a.embedding", "b.embedding")}) AS max_prior_cosine
       | FROM sized a JOIN sized b
       |  ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
       | WHERE a.csz <= $EmbBucketCap AND b.csz <= $EmbBucketCap
@@ -2522,8 +2471,7 @@ object SimilarityOps {
       | WHERE csz <= $EmbBucketCap)
       |SELECT id_a, id_b, cosine FROM (
       | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |  ${duckDotCols("a.embedding", "b.embedding")} /
-      |   (sqrt(${duckSS("a.embedding")}) * sqrt(${duckSS("b.embedding")})) AS cosine
+      |  ${duckCos("a.embedding", "b.embedding")} AS cosine
       | FROM e a JOIN e b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id)
       |WHERE cosine > 0.25""".stripMargin
 
@@ -2538,9 +2486,7 @@ object SimilarityOps {
       | WHERE bsz <= $EmbBucketCap)
       |SELECT id_a, id_b, cosine FROM (
       | SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |  ${duckDot("a", "b")} /
-      |   (sqrt(list_reduce(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * x), (p, q) -> p + q)) *
-      |    sqrt(list_reduce(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * x), (p, q) -> p + q))) AS cosine
+      |  ${duckCos("a.embedding", "b.embedding")} AS cosine
       | FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
       |WHERE cosine > 0.25""".stripMargin
 
@@ -2580,8 +2526,7 @@ object SimilarityOps {
       | SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings WHERE vec_id < 16),
       |ascored AS (
       | SELECT e.vec_id, e.embedding, c.centroid_id, c.c_emb,
-      |  ${duckDotCols("e.embedding", "c.c_emb")} /
-      |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+      |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
       | FROM embeddings e, cents c),
       |resid AS (
       | SELECT vec_id, centroid_id,
@@ -2641,8 +2586,7 @@ object SimilarityOps {
       | SELECT vec_id AS centroid_id, embedding AS c_emb FROM embeddings WHERE vec_id < 16),
       |scored AS (
       | SELECT e.vec_id, e.embedding, c.centroid_id,
-      |  ${duckDotCols("e.embedding", "c.c_emb")} /
-      |   (sqrt(${duckSS("e.embedding")}) * sqrt(${duckSS("c.c_emb")})) AS cosine
+      |  ${duckCos("e.embedding", "c.c_emb")} AS cosine
       | FROM embeddings e, cents c),
       |ranked AS (
       | SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cosine DESC, centroid_id ASC) AS rk
@@ -2652,6 +2596,6 @@ object SimilarityOps {
       |           WHERE rk <= $nprobe AND vec_id < 10),
       |cand AS (
       | SELECT q_id, c_id,
-      |  ${duckDotCols("q_e", "c_e")} / (sqrt(${duckSS("q_e")}) * sqrt(${duckSS("c_e")})) AS cosine
+      |  ${duckCos("q_e", "c_e")} AS cosine
       | FROM probes JOIN assign USING (centroid_id) WHERE q_id <> c_id)""".stripMargin
 }

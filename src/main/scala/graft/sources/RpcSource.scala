@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.reflect.ClassTag
 
-import graft.chain.BlockSyntax
+import graft.chain.{BlockSyntax, Freeze}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -799,30 +799,28 @@ class RpcSource(config: RpcConfig) extends Serializable {
     RpcConfig.parseChainId(driverCall(RpcConfig.chainIdRequest(1)))
 
   /** Live-mode bronze materialization for a CLI run: fetch ONLY the
-    * bronze tables the requested datasets read, into `outDir` — after
-    * this every ChainDatasets transform runs unchanged against outDir.
-    * Entity-scoped bronzes (accounts/storage/calls) require the matching
-    * entity lists and fail fast with a clear message otherwise.
+    * bronze tables the requested datasets read under `options` (their
+    * Freeze.catalog entries), into `outDir` — after this every
+    * ChainDatasets transform runs unchanged against outDir. A dataset
+    * whose bronze has no live fetch fails fast, and so do entity-scoped
+    * bronzes (accounts/storage/calls) without the matching entity lists.
     *
-    * `txNeedsReceipts=false` is the column-aware half of the transactions
-    * dependency: when the resolved schema excludes gas_used AND success,
-    * the receipt fetch is skipped entirely — one fewer RPC per block on
-    * the most-used dataset (cryo transactions.rs:124-135 fetches receipts
-    * conditionally the same way). Other receipt consumers
-    * (address_appearances) keep their dependency regardless. */
+    * The options make the fetch column-aware: a transactions schema
+    * without gas_used and success skips the receipt fetch entirely — one
+    * fewer RPC per block on the most-used dataset (cryo
+    * transactions.rs:124-135 fetches receipts conditionally the same
+    * way). */
   def materializeBronze(spark: SparkSession, outDir: String,
       range: BlockSyntax.Range, datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
       calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
-      numPartitions: Int = 32, txNeedsReceipts: Boolean = true): Unit = {
-    val deps = RpcSource.bronzeDeps
-    val unknown = datasets.filterNot(deps.contains)
+      numPartitions: Int = 32,
+      options: Freeze.BuildOptions = Freeze.BuildOptions()): Unit = {
+    val unknown = datasets.filterNot(d =>
+      Freeze.catalog.get(d).exists(_.bronze(options).subsetOf(RpcSource.liveBronze)))
     require(unknown.isEmpty,
       s"live extraction not wired for: ${unknown.mkString(", ")}")
-    val need = datasets.flatMap { d =>
-      if (d == "transactions" && !txNeedsReceipts) deps(d) - "rpc_receipts"
-      else deps(d)
-    }.toSet
+    val need = datasets.flatMap(Freeze.catalog(_).bronze(options)).toSet
     val blocks = range.start until range.endExclusive
     def write(name: String, df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
@@ -885,41 +883,6 @@ object RpcSource {
   private final case class Fail[A](what: A => String) extends OnError[A]
   /** hand the part to the caller, which reads the error as data */
   private case object Keep extends OnError[Any]
-
-  /** which bronze tables each dataset's transform reads (mirrors the
-    * fx() calls in ChainDatasets; BronzeDepsSpec pins the two together) */
-  private[graft] val bronzeDeps: Map[String, Set[String]] = {
-    val logsD = Set("rpc_logs")
-    val tracesD = Set("rpc_traces")
-    val prestateD = Set("rpc_geth_prestate")
-    val callsD = Set("rpc_calls")
-    val diffsD = Set("rpc_balance_diffs", "rpc_code_diffs",
-      "rpc_nonce_diffs", "rpc_storage_diffs")
-    Map(
-      "blocks" -> Set("rpc_blocks"),
-      "transactions" -> Set("rpc_transactions", "rpc_receipts", "rpc_blocks"),
-      "logs" -> logsD, "erc20_transfers" -> logsD, "erc20_approvals" -> logsD,
-      "erc721_transfers" -> logsD,
-      "traces" -> tracesD, "native_transfers" -> tracesD,
-      "contracts" -> tracesD, "four_byte_counts" -> tracesD,
-      "address_appearances" -> Set("rpc_blocks", "rpc_transactions",
-        "rpc_receipts", "rpc_logs", "rpc_traces"),
-      "balances" -> Set("rpc_accounts"), "nonces" -> Set("rpc_accounts"),
-      "codes" -> Set("rpc_accounts"), "slots" -> Set("rpc_storage"),
-      "balance_diffs" -> diffsD, "code_diffs" -> diffsD,
-      "nonce_diffs" -> diffsD, "storage_diffs" -> diffsD,
-      "geth_balance_diffs" -> prestateD, "geth_code_diffs" -> prestateD,
-      "geth_nonce_diffs" -> prestateD, "geth_storage_diffs" -> prestateD,
-      "balance_reads" -> prestateD, "code_reads" -> prestateD,
-      "nonce_reads" -> prestateD, "storage_reads" -> prestateD,
-      "eth_calls" -> callsD, "erc20_metadata" -> callsD,
-      "erc20_supplies" -> callsD, "erc20_balances" -> callsD,
-      "vm_traces" -> Set("rpc_vm_traces"),
-      "geth_opcodes" -> Set("rpc_geth_opcodes"),
-      "geth_calls" -> Set("rpc_geth_calls"),
-      "javascript_traces" -> Set("rpc_js_traces"),
-      "trace_calls" -> Set("rpc_trace_calls"))
-  }
 
   /** split a batched JSON-RPC response into per-request bodies, in id
     * order (ids are the batch indices). The `error` member rides along
@@ -1058,6 +1021,23 @@ object RpcSource {
     f("action_type", StringType), f("trace_address", StringType),
     f("subtraces", IntegerType), f("error", StringType),
     f("chain_id", LongType, false)))
+  /** every bronze table a fetch method writes rows for, by name — the
+    * fixture generator writes the same tables with the same schemas */
+  val bronzeSchemas: Map[String, StructType] = Map(
+    "rpc_blocks" -> blocksSchema, "rpc_transactions" -> transactionsSchema,
+    "rpc_receipts" -> receiptsSchema, "rpc_logs" -> logsSchema,
+    "rpc_traces" -> tracesSchema, "rpc_geth_prestate" -> gethPrestateSchema,
+    "rpc_geth_calls" -> gethCallsSchema, "rpc_calls" -> callsSchema,
+    "rpc_geth_opcodes" -> gethOpcodesSchema, "rpc_js_traces" -> jsTracesSchema,
+    "rpc_vm_traces" -> vmTracesSchema, "rpc_accounts" -> accountsSchema,
+    "rpc_storage" -> storageSchema, "rpc_trace_calls" -> traceCallsSchema)
+
+  /** the bronze tables materializeBronze can write: the fetched ones
+    * above plus the four state-diff tables fetchStateDiffs projects from
+    * its one replay pass */
+  private val liveBronze: Set[String] = bronzeSchemas.keySet ++ Set(
+    "rpc_balance_diffs", "rpc_code_diffs", "rpc_nonce_diffs", "rpc_storage_diffs")
+
   /** tagged union of the four state-diff families — one fetch pass,
     * projected into the per-family bronze shapes by fetchStateDiffs */
   val stateDiffUnionSchema: StructType = StructType(Seq(

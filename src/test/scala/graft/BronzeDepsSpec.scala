@@ -2,16 +2,15 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import graft.chain.{Freeze, LakeFs}
+import graft.chain.{Datatypes, Freeze, LakeFs}
 import graft.queries.ChainQueries
-import graft.sources.RpcSource
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `RpcSource.bronzeDeps` is a second copy of which bronze tables each
-  * ChainDatasets builder reads: live extraction fetches exactly those.
-  * A builder that reads a bronze the map leaves out would fail on every
-  * live freeze, so each wired dataset is built from a directory holding
-  * only its declared bronzes. */
+/** Each `Freeze.catalog` entry declares the bronze tables its builder
+  * reads: live extraction fetches exactly those, and a multi bundle
+  * persists their union. A builder that reads a bronze its entry leaves
+  * out would fail on every live freeze, so each entry is built from a
+  * directory holding only its declared bronzes. */
 class BronzeDepsSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -24,12 +23,18 @@ class BronzeDepsSpec extends AnyFunSuite {
     } finally files.close()
   }
 
-  test("every live-wired dataset builds from its declared bronzes alone") {
+  test("the catalog has one entry per dataset and per multi member") {
+    assert(Freeze.catalog.keySet == Datatypes.canonicalNames,
+      Freeze.catalog.keySet diff Datatypes.canonicalNames)
+    val members = Datatypes.multis.values.flatten.toSet
+    assert(members.subsetOf(Freeze.catalog.keySet), members -- Freeze.catalog.keySet)
+  }
+
+  test("every catalog entry builds from its declared bronzes alone") {
     val root = Files.createTempDirectory("graft_bronze_deps")
     try {
-      assert(RpcSource.bronzeDeps.keySet.subsetOf(Freeze.allBuilders.keySet),
-        RpcSource.bronzeDeps.keySet -- Freeze.allBuilders.keySet)
-      for ((dataset, bronzes) <- RpcSource.bronzeDeps.toSeq.sortBy(_._1)) {
+      for ((dataset, entry) <- Freeze.catalog.toSeq.sortBy(_._1)) {
+        val bronzes = entry.bronze(Freeze.BuildOptions())
         val dir = root.resolve(dataset)
         Files.createDirectories(dir)
         bronzes.foreach { b =>
@@ -37,7 +42,7 @@ class BronzeDepsSpec extends AnyFunSuite {
             dir.resolve(s"$b.parquet"))
         }
         withClue(s"$dataset from ${bronzes.toSeq.sorted.mkString(", ")}: ") {
-          Freeze.allBuilders(dataset)(spark, dir.toString)
+          entry.build(Freeze.BuildOptions())(spark, dir.toString)
             .write.format("noop").mode("overwrite").save()
         }
       }

@@ -171,10 +171,12 @@ class FreezeSpec extends AnyFunSuite {
 
   test("run report: final report written, incomplete marker removed") {
     val out = Files.createTempDirectory("graft_report").toString
+    val command = "graft freeze blocks -b 1000:1020 --js-tracer " +
+      "\"{\n\tresult: function() { return \\\"ok\\\"; }\n}\""
     Freeze.freeze(spark, fixDir, Freeze.FreezeSpec(
       datasets = Seq("blocks"), blocks = Range(1000, 1020),
       chunkSize = 20, outputDir = out,
-      cliCommand = Some("graft freeze blocks -b 1000:1020")))
+      cliCommand = Some(command)))
     val dir = Paths.get(out, ".graft", "reports")
     val reports = Files.list(dir).toArray.map(_.toString).toSeq
     assert(reports.size == 1, reports)
@@ -184,6 +186,12 @@ class FreezeSpec extends AnyFunSuite {
     assert(body.contains("graft freeze blocks -b 1000:1020"))
     assert(body.contains("\"completed_paths\""))
     assert(body.contains("\"n_skipped\":0"))
+    // a JS tracer carries newlines and tabs: the report stays valid JSON
+    // (raw control characters inside a string are not) and round-trips
+    import org.json4s._
+    val json = org.json4s.jackson.JsonMethods.parse(body)
+    assert(json \ "cli_command" == JString(command))
+    assert(json \ "results" \ "n_skipped" == JInt(0))
   }
 
   test("collect returns one in-memory DataFrame filtered to blocks") {

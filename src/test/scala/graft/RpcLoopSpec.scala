@@ -527,6 +527,21 @@ class RpcLoopSpec extends AnyFunSuite {
     }
   }
 
+  test("materializeBronze refuses a dataset whose bronze has no live fetch") {
+    // erc721_metadata reads rpc_calls_erc721, which no fetch writes: the
+    // run must fail before any node traffic, not write an empty bronze
+    withStub { (url, posts) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_unwired").toString
+      val e = intercept[IllegalArgumentException] {
+        new RpcSource(RpcConfig(url)).materializeBronze(spark, out,
+          BlockSyntax.Range(16, 20), Seq("erc721_metadata"))
+      }
+      assert(e.getMessage.contains("live extraction not wired for"), e.getMessage)
+      assert(e.getMessage.contains("erc721_metadata"), e.getMessage)
+      assert(posts.get() == 0)
+    }
+  }
+
   test("collectDf with --rpc: in-memory collect straight from a node") {
     withStub { (url, _) =>
       val out = java.nio.file.Files.createTempDirectory("graft_live3").toString
