@@ -1183,13 +1183,15 @@ object Cli {
     // below then runs unchanged against that dir (live extraction and
     // fixtures share one transform path).
     val liveSource: Option[graft.sources.RpcSource] = rpcUrl.map { url =>
-      def src(cid: Long) = new graft.sources.RpcSource(
-        graft.sources.RpcConfig(url, chainId = cid,
-          maxConcurrentRequests = maxConcurrentRequests,
-          requestsPerSecond = requestsPerSecond, maxRetries = maxRetries,
-          initialBackoffMs = initialBackoffMs,
-          innerRequestSize = innerRequestSize,
-          computeUnitsPerSecond = computeUnitsPerSecond))
+      // built outside the chain-id probe, so a bad flag value reports
+      // itself instead of reading as an unreachable node
+      val config = graft.sources.RpcConfig(url,
+        maxConcurrentRequests = maxConcurrentRequests,
+        requestsPerSecond = requestsPerSecond, maxRetries = maxRetries,
+        initialBackoffMs = initialBackoffMs,
+        innerRequestSize = innerRequestSize,
+        computeUnitsPerSecond = computeUnitsPerSecond)
+      def src(cid: Long) = new graft.sources.RpcSource(config.copy(chainId = cid))
       val cid = try src(1).fetchChainId() catch {
         case e: Exception => throw new IllegalStateException(
           s"could not detect the chain id from $url: ${e.getMessage} — " +

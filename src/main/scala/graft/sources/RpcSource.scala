@@ -13,16 +13,23 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** JSON-RPC source config — mirrors the reference's `Source` concurrency
-  * envelope (cryo types/sources.rs:44-61, defaults 110-114):
-  * per-executor request concurrency, token-bucket rate limiting, retries
-  * with exponential backoff (args.rs:101-107), and range batching
-  * (inner_request_size) for range-capable endpoints like eth_getLogs.
+  * envelope (cryo types/sources.rs:44-61, defaults 110-114): request
+  * concurrency, token-bucket rate limiting, retries with exponential
+  * backoff (args.rs:101-107), and range batching (inner_request_size) for
+  * range-capable endpoints like eth_getLogs.
   */
 case class RpcConfig(
     url: String,
     chainId: Long = 1,
+    /** requests in flight across ALL tasks of one fetch, like cryo's
+      * process-wide semaphore (sources.rs:114): each task holds an even
+      * share, and the shares add up to this total because a fetch runs
+      * no more tasks than the session has cores (nor than this total),
+      * so all run at once */
     maxConcurrentRequests: Int = 100,
-    requestsPerSecond: Int = 0, // 0 = unlimited (args.rs:97-99)
+    /** the send rate across all tasks of one fetch (0 = unlimited,
+      * args.rs:97-99), shared out the same way */
+    requestsPerSecond: Int = 0,
     maxRetries: Int = 5,
     initialBackoffMs: Long = 500,
     innerRequestSize: Long = 100,
@@ -32,7 +39,15 @@ case class RpcConfig(
       * seconds. A batch whose pipelined attempt fails (a 429 included) is
       * re-sent at once as the synchronous path's first attempt; only a
       * failure of that attempt starts the wait. */
-    computeUnitsPerSecond: Long = 50)
+    computeUnitsPerSecond: Long = 50) {
+  // a step of 0 or less would cut a block range into no requests at all:
+  // eth_getLogs over `start until end by step` would come back empty and
+  // write an empty logs bronze without an error
+  require(innerRequestSize >= 1,
+    s"--inner-request-size must be at least 1, got $innerRequestSize")
+  require(maxConcurrentRequests >= 1,
+    s"--max-concurrent-requests must be at least 1, got $maxConcurrentRequests")
+}
 
 object RpcConfig {
   /** URL resolution chain (cryo types/sources.rs:119-150): explicit flag →
@@ -220,14 +235,15 @@ object RpcCodec {
 
 /** Simple token bucket for rate limiting (the reference's governor
   * limiter, sources.rs:986-997). Thread-safe enough for one
-  * partition-iterator thread. The rate is a Double: each task gets its
-  * SHARE of the global --requests-per-second (see rateShare), which for
-  * rate < tasks is fractional — an Int floor would read as 0 =
-  * unlimited, the exact opposite of a tight limit. */
+  * partition-iterator thread. The rate is a Double: each fetch task gets
+  * its SHARE of the global --requests-per-second (see rateShare), and
+  * since all of a fetch's tasks run at once the shares add up to the
+  * global rate. For rate < tasks a share is fractional — an Int floor
+  * would read as 0 = unlimited, the exact opposite of a tight limit. */
 final class TokenBucket(ratePerSecond: Double) extends Serializable {
   private var last = System.nanoTime()
   // Burst capacity ≥ 1 token: a fractional rate (global rps split across
-  // more tasks than rps, e.g. 10 rps / 32 tasks = 0.3125) must still be
+  // more tasks than rps, e.g. 3 rps / 4 tasks = 0.75) must still be
   // able to ACCUMULATE the single token acquire() waits for — capping the
   // refill at ratePerSecond < 1 would make `tokens < 1.0` permanently
   // true and hang every task in the sleep loop. With cap 1.0 a
@@ -248,8 +264,10 @@ final class TokenBucket(ratePerSecond: Double) extends Serializable {
 }
 
 /** Distributed JSON-RPC extraction: a driver-side list of work (a block
-  * range, or entity × block items) is partitioned into Spark tasks, each
-  * task streams its items through ONE fetch loop, and the responses are
+  * range, or entity × block items) is cut into HTTP requests and the
+  * requests into Spark tasks, one task per core, each a contiguous run of
+  * whole requests (see `overList`). Each task streams its items through
+  * ONE fetch loop, and the responses are
   * parsed into rows shaped exactly like the `rpc_*` bronze tables the
   * dataset transforms consume (graft.chain.ChainDatasets). Freezing from
   * a live node is: RpcSource materializes bronze, transforms project
@@ -260,10 +278,15 @@ final class TokenBucket(ratePerSecond: Double) extends Serializable {
   * client, a token bucket with the task's share of
   * `--requests-per-second`, and the task's share of the
   * `--max-concurrent-requests` window — and every request the task makes
-  * goes through it. Items are batched `innerRequestSize` calls per HTTP
-  * round trip (ids are batch indices), the batch's answer is checked for
-  * one part per request, and responses come back in submission order.
-  * Tasks fetch disjoint work; there is no shuffle.
+  * goes through it. A fetch runs no more tasks than the session has
+  * cores, so they all run at once and the shares add up to the totals.
+  * Items are batched `innerRequestSize` calls per HTTP round trip (ids
+  * are batch indices), the batch's answer is checked for one part per
+  * request, and responses come back in submission order. Tasks fetch
+  * disjoint work; there is no shuffle. The `numPartitions` every fetch
+  * takes is an upper bound on its tasks, not a task count: the default,
+  * Int.MaxValue, leaves the count to the session's cores and the work's
+  * requests (see `overList`).
   *
   * Error parts: a node that rejects one request still answers the batch
   * with HTTP 200 and an `error` object for that request. Such a part
@@ -330,15 +353,18 @@ class RpcSource(config: RpcConfig) extends Serializable {
 
   /** Per-task share of the global in-flight budget: cryo holds up to
     * `max_concurrent_requests` requests in flight via a semaphore
-    * (sources.rs:114); here the budget is split evenly across the Spark
-    * tasks that fetch concurrently. */
+    * (sources.rs:114); here the budget is split evenly across a fetch's
+    * tasks, which all run at once (see `overList`), so the shares add up
+    * to the total. */
   private def inflightWindow(numTasks: Int): Int =
     math.max(1, config.maxConcurrentRequests / math.max(1, numTasks))
 
   /** each task's share of the GLOBAL --requests-per-second: the buckets
     * are per-task, so handing every task the full rate would multiply
     * the aggregate send rate by the task count — the same division
-    * discipline as inflightWindow. ≤0 stays "unlimited". */
+    * discipline as inflightWindow, and the shares of a fetch's tasks,
+    * which all run at once, add up to the global rate. ≤0 stays
+    * "unlimited". */
   private def rateShare(numTasks: Int): Double =
     if (config.requestsPerSecond <= 0) 0.0
     else config.requestsPerSecond.toDouble / math.max(1, numTasks)
@@ -397,8 +423,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
       * error part fails the batch unless `onError` is Keep. */
     def batched[A](items: Iterator[A], callsPerItem: Int = 1)(
         onError: OnError[A], calls: (A, Long) => Seq[String]): Iterator[(A, Seq[String])] = {
-      val perBatch = math.max(1, config.innerRequestSize.toInt / callsPerItem)
-      each(items.grouped(perBatch)) { group =>
+      each(items.grouped(perBatch(callsPerItem))) { group =>
         RpcCodec.batch(group.zipWithIndex.flatMap { case (a, i) =>
           calls(a, callsPerItem.toLong * i) })
       }.flatMap { case (group, json) =>
@@ -416,34 +441,40 @@ class RpcSource(config: RpcConfig) extends Serializable {
     }
   }
 
-  /** The fetch loop: each partition of `work` gets one Link sized for
-    * `tasks` concurrent tasks, and `stage` streams the partition's items
-    * through it. */
-  private def fetchLoop[A, R: ClassTag](work: RDD[A], tasks: Int)(
-      stage: (Link, Iterator[A]) => Iterator[R]): RDD[R] = {
-    val window = inflightWindow(tasks)
-    val rps = rateShare(tasks)
-    work.mapPartitions(items => stage(new Link(window, rps), items))
-  }
+  /** items of `callsPerItem` requests each that ride one batch */
+  private def perBatch(callsPerItem: Int): Int =
+    math.max(1, config.innerRequestSize.toInt / callsPerItem)
 
-  /** per-block work: the range in `numPartitions` contiguous slices */
-  private def overBlocks[R: ClassTag](spark: SparkSession,
-      range: BlockSyntax.Range, numPartitions: Int)(
-      stage: (Link, Iterator[Long]) => Iterator[R]): RDD[R] =
-    fetchLoop(spark.sparkContext.range(range.start, range.endExclusive,
-      numSlices = numPartitions), numPartitions)(stage)
-
-  /** a driver-side work list, at most one task per item */
+  /** The fetch loop, and the one rule that sizes every fetch. `work` is
+    * cut into HTTP requests of `perRequest` items (only the last may be
+    * short), and the requests into contiguous runs, one per task; each
+    * task streams its run through one Link. Tasks: the fewest of the
+    * session's cores, the requests, `--max-concurrent-requests` and
+    * `cap`, so every task runs at once and the window and rate shares
+    * add up to the configured totals. */
   private def overList[A: ClassTag, R: ClassTag](spark: SparkSession,
-      work: Seq[A], numPartitions: Int)(
+      work: Seq[A], perRequest: Int, cap: Int)(
       stage: (Link, Iterator[A]) => Iterator[R]): RDD[R] = {
-    val tasks = math.min(numPartitions, work.size).max(1)
-    fetchLoop(spark.sparkContext.parallelize(work, tasks), tasks)(stage)
+    val runs = RpcSource.runs(work.size, perRequest,
+      Seq(spark.sparkContext.defaultParallelism, config.maxConcurrentRequests, cap).min)
+      // drop/take, unlike slice, keep a block range a NumericRange
+      .map { case (from, until) => work.drop(from).take(until - from) }
+    val window = inflightWindow(runs.size)
+    val rps = rateShare(runs.size)
+    spark.sparkContext.parallelize(runs, runs.size)
+      .mapPartitions(rs => stage(new Link(window, rps), rs.flatMap(_.iterator)))
   }
+
+  /** per-block work, one request per `innerRequestSize` blocks: a task's
+    * run starts at `range.start + k·innerRequestSize` */
+  private def overBlocks[R: ClassTag](spark: SparkSession,
+      range: BlockSyntax.Range, cap: Int)(
+      stage: (Link, Iterator[Long]) => Iterator[R]): RDD[R] =
+    overList(spark, range.start until range.endExclusive, perBatch(1), cap)(stage)
 
   /** Fetch block headers for a range into the rpc_blocks shape. */
   def fetchBlocks(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.blocksSchema, numPartitions)(
       (i, n) => RpcCodec.getBlockRequest(i, n, fullTxs = false))(
       (body, _) => Seq(RpcExtract.blockHeader(body, config.chainId)))
@@ -458,7 +489,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * resource, not local IO. The third element unpersists the shared
     * pass; call it after both frames are written. */
   def fetchBlocksAndTransactions(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): (DataFrame, DataFrame, () => Unit) = {
+      numPartitions: Int = Int.MaxValue): (DataFrame, DataFrame, () => Unit) = {
     import org.apache.spark.storage.StorageLevel
     val conf = config
     val raw = fetchPerBlockRaw(spark, range, numPartitions)(
@@ -481,12 +512,12 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * ones are trimmed. */
   def fetchLogs(spark: SparkSession, range: BlockSyntax.Range,
       address: Option[String] = None, topics: Seq[Option[String]] = Nil,
-      numPartitions: Int = 32): DataFrame = {
+      numPartitions: Int = Int.MaxValue): DataFrame = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val conf = config
     val starts = range.start until range.endExclusive by conf.innerRequestSize
-    val rdd = overList(spark, starts, numPartitions) { (link, ss) =>
+    val rdd = overList(spark, starts, 1, numPartitions) { (link, ss) =>
       link.each(ss) { s0 =>
         val to = math.min(s0 + conf.innerRequestSize, range.endExclusive) - 1
         RpcCodec.getLogsRequest(1, s0, to, address, topics)
@@ -565,7 +596,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * path's window and rate budget. Blocks the node answers cost zero
     * extra round trips. */
   def fetchReceipts(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame = {
+      numPartitions: Int = Int.MaxValue): DataFrame = {
     val rdd = overBlocks(spark, range, numPartitions) { (link, nums) =>
       val failed = scala.collection.mutable.ArrayBuffer.empty[Long]
       val fast = link.batched(nums)(Keep,
@@ -593,7 +624,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
 
   /** rpc_traces via trace_block (traces.rs extract). */
   def fetchTraces(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.tracesSchema, numPartitions)(
       (i, n) => RpcCodec.traceBlockRequest(i, n))(
       (body, _) => RpcExtract.traceBlock(body, config.chainId))
@@ -601,7 +632,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_geth_prestate via debug_traceBlockByNumber(prestateTracer,
     * diffMode) (geth_state_diffs.rs extract). */
   def fetchGethPrestate(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.gethPrestateSchema, numPartitions)(
       (i, n) => RpcCodec.debugTraceBlockRequest(i, n,
         tracer = Some("prestateTracer"), diffMode = true))(
@@ -610,7 +641,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_geth_calls via debug_traceBlockByNumber(callTracer)
     * (geth_calls.rs extract). */
   def fetchGethCalls(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.gethCallsSchema, numPartitions)(
       (i, n) => RpcCodec.debugTraceBlockRequest(i, n, tracer = Some("callTracer")))(
       (body, n) => RpcExtract.gethCallFrames(body, n.toInt, config.chainId))
@@ -621,7 +652,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * into the per-family bronze shapes — the node is hit once per block,
     * not once per family. Caller unpersists via the returned handle. */
   def fetchStateDiffs(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): (Map[String, DataFrame], () => Unit) = {
+      numPartitions: Int = Int.MaxValue): (Map[String, DataFrame], () => Unit) = {
     val conf = config
     val unified = fetchPerBlock(spark, range,
       RpcSource.stateDiffUnionSchema, numPartitions)(
@@ -668,10 +699,10 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * cross-product of cli/parse/args). The one batched reader that keeps
     * error parts: a reverted call is a row with a null output. */
   def fetchEthCalls(spark: SparkSession, blocks: Seq[Long],
-      calls: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
+      calls: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
       link.batched(items)(Keep, { case ((b, to, data), id) =>
         Seq(RpcCodec.ethCallRequest(id, to, data, b)) }).map {
         case ((b, to, data), Seq(res)) =>
@@ -687,7 +718,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * default off: memory/stack/storage cost the node dearly and are
     * excluded from the default schema (schema-pruned fetch flags). */
   def fetchGethOpcodes(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32, memory: Boolean = false,
+      numPartitions: Int = Int.MaxValue, memory: Boolean = false,
       stack: Boolean = false, storage: Boolean = false): DataFrame =
     fetchPerBlock(spark, range, RpcSource.gethOpcodesSchema, numPartitions)(
       (i, n) => RpcCodec.debugTraceBlockOpcodeRequest(i, n, memory, stack, storage))(
@@ -696,7 +727,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_js_traces via debug_traceBlockByNumber with a user JS tracer
     * (javascript_traces.rs extract). */
   def fetchJsTraces(spark: SparkSession, range: BlockSyntax.Range,
-      js: String, numPartitions: Int = 32): DataFrame =
+      js: String, numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.jsTracesSchema, numPartitions)(
       (i, n) => RpcCodec.debugTraceBlockJsRequest(i, n, js))(
       (body, n) => RpcExtract.jsTraceBlock(body, n.toInt, config.chainId))
@@ -704,7 +735,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_vm_traces via trace_replayBlockTransactions(vmTrace)
     * (vm_traces.rs extract). */
   def fetchVmTraces(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = 32): DataFrame =
+      numPartitions: Int = Int.MaxValue): DataFrame =
     fetchPerBlock(spark, range, RpcSource.vmTracesSchema, numPartitions)(
       (i, n) => RpcCodec.traceReplayBlockVmRequest(i, n))(
       (body, n) => RpcExtract.vmTraceBlock(body, n.toInt, config.chainId))
@@ -714,7 +745,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * (datasets/{balances,nonces,codes}.rs) share one bronze. Three
     * requests per item ride one batch, ids encode item×3+field. */
   def fetchAccounts(spark: SparkSession, blocks: Seq[Long],
-      addresses: Seq[String], numPartitions: Int = 32): DataFrame = {
+      addresses: Seq[String], numPartitions: Int = Int.MaxValue): DataFrame = {
     import org.json4s._
     val conf = config
     val work = for (b <- blocks; a <- addresses) yield (b, a)
@@ -722,7 +753,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
       (org.json4s.jackson.JsonMethods.parse(s) \ "result") match {
         case JString(x) => x; case _ => null
       }
-    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(3), numPartitions) { (link, items) =>
       link.batched(items, callsPerItem = 3)(
         Fail { case (b, a) => s"account $a at block $b" },
         { case ((b, a), id) => Seq(
@@ -743,11 +774,11 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_storage via batched eth_getStorageAt over
     * (block × (address, slot)) (datasets/storages.rs extract). */
   def fetchStorage(spark: SparkSession, blocks: Seq[Long],
-      slots: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
+      slots: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
     import org.json4s._
     val conf = config
     val work = for (b <- blocks; (a, s) <- slots) yield (b, a, s)
-    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
       link.batched(items)(Fail { case (b, a, s) => s"slot $s of $a at block $b" },
         { case ((b, a, s), id) => Seq(RpcCodec.getStorageAtRequest(id, a, s, b)) })
         .map { case ((b, a, s), Seq(part)) =>
@@ -764,10 +795,10 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_trace_calls via batched trace_call: the simulated call's trace
     * tree per (block × (contract, calldata)) (trace_calls.rs extract). */
   def fetchTraceCalls(spark: SparkSession, blocks: Seq[Long],
-      calls: Seq[(String, String)], numPartitions: Int = 32): DataFrame = {
+      calls: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val rdd = overList(spark, work, numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
       link.batched(items)(Fail { case (b, to, _) => s"trace_call to $to at block $b" },
         { case ((b, to, data), id) => Seq(RpcCodec.traceCallRequest(id, to, data, b)) })
         .flatMap { case ((b, to, data), Seq(part)) =>
@@ -809,12 +840,16 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * without gas_used and success skips the receipt fetch entirely — one
     * fewer RPC per block on the most-used dataset (cryo
     * transactions.rs:124-135 fetches receipts conditionally the same
-    * way). */
+    * way).
+    *
+    * Every fetch is sized by the rule in `overList`, so each bronze
+    * table is written as at most one file per core; `numPartitions`
+    * lowers that bound. */
   def materializeBronze(spark: SparkSession, outDir: String,
       range: BlockSyntax.Range, datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
       calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
-      numPartitions: Int = 32,
+      numPartitions: Int = Int.MaxValue,
       options: Freeze.BuildOptions = Freeze.BuildOptions()): Unit = {
     val unknown = datasets.filterNot(d =>
       Freeze.catalog.get(d).exists(_.bronze(options).subsetOf(RpcSource.liveBronze)))
@@ -877,6 +912,18 @@ class RpcSource(config: RpcConfig) extends Serializable {
 }
 
 object RpcSource {
+  /** A fetch's runs: `items` work items in requests of `perRequest`
+    * (only the last may be short) are split into `maxTasks` (at least
+    * one, at most one per request) contiguous runs of whole requests, as
+    * even as they can be, given as [from, until) item bounds. */
+  def runs(items: Int, perRequest: Int, maxTasks: Int): Seq[(Int, Int)] = {
+    val requests = (items.toLong + perRequest - 1) / perRequest
+    val tasks = math.max(1L, math.min(requests, maxTasks.toLong))
+    val bounds = (0L to tasks).map(k =>
+      math.min(items.toLong, requests * k / tasks * perRequest).toInt)
+    bounds.zip(bounds.tail)
+  }
+
   /** What a batched stage does with a per-request JSON-RPC error part. */
   private sealed trait OnError[-A]
   /** fail the batch, naming the item the part answers */

@@ -693,11 +693,17 @@ object FollowMode {
     * honest scope: headers only (spec.datasets = blocks); the wider
     * bronze set follows the same append pattern via materializeBronze.
     * Bounded by `maxPolls`; returns once the spec's range is fully
-    * observed (or the poll budget runs out) and the stream has drained. */
+    * observed (or the poll budget runs out) and the stream has drained.
+    *
+    * A poll's new headers are one fetchBlocks call, sized like every
+    * fetch: one request per `innerRequestSize` blocks, the requests in
+    * whole runs on at most one task per core. A poll of about 110 blocks
+    * at the default 100 is 2 requests on 2 tasks. `fetchPartitions` is
+    * an upper bound on those tasks. */
   def followLive(spark: SparkSession, source: graft.sources.RpcSource,
       bronzeDir: String, spec: graft.chain.Freeze.FreezeSpec,
       checkpointDir: String, pollMs: Long = 250, maxPolls: Int = 600,
-      fetchPartitions: Int = 4): Unit = {
+      fetchPartitions: Int = Int.MaxValue): Unit = {
     import graft.chain.BlockSyntax
     val blocksPath = s"$bronzeDir/rpc_blocks.parquet"
     // same contiguity contract as incrementalFreeze (which this drives)

@@ -592,12 +592,17 @@ class DifferentialSpec extends AnyFunSuite {
     // row-identical on every datatype, through the SAME retrying()
     // path production freeze uses. Backoff floor is shrunk via the
     // compute-units knob (the 1 CU/req refill floor would otherwise
-    // put a 2 s sleep under every injected fault).
-    val h = FixtureRpcServer.start(spark, fixDir)
+    // put a 2 s sleep under every injected fault). The corpus is 600
+    // blocks, not the 60-block fixture: a fetch sends whole batches of
+    // 100 blocks, so 60 blocks would be one request per fetch, too few
+    // for the fault and traffic counts checked below.
+    val dir = java.nio.file.Files.createTempDirectory("graft_fix_faults").toString
+    graft.chain.GenFixtures.generate(spark, dir, nBlocks = 600)
+    val h = FixtureRpcServer.start(spark, dir)
     val p = FaultInjectingProxy.start(h.url, period = 16)
     try {
       val outcomes = Cli.runDiffTest(Seq("--rpc", p.url,
-        "--source-dir", fixDir, "--blocks", "1000:1060",
+        "--source-dir", dir, "--blocks", "1000:1600",
         "--partitions", "4", "--max-retries", "8",
         "--initial-backoff", "5",
         "--compute-units-per-second", "1000000"), spark)

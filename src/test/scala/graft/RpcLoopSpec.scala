@@ -499,11 +499,12 @@ class RpcLoopSpec extends AnyFunSuite {
         "rpc_receipts.parquet"))
       // blocks+transactions share ONE full-block pass
       // (blocks_and_transactions multi): 2 driver probes (eth_chainId,
-      // eth_blockNumber) + 4 shared full-block trips + 4 receipt trips
-      // (materializeBronze runs 32 partitions, so these 4 blocks land one
-      // per partition and per-partition batching can't pair them) — the
-      // full-block count is N, not the 2N a separate header pass would add
-      assert(posts.get() == 10, s"expected 10 round trips, got ${posts.get()}")
+      // eth_blockNumber) + 2 shared full-block trips + 2 receipt trips
+      // (4 blocks at --inner-request-size 2 are 2 whole batches per
+      // fetch, each task's run starting on a batch boundary) — the
+      // full-block count is one pass, not the two a separate header
+      // pass would add
+      assert(posts.get() == 6, s"expected 6 round trips, got ${posts.get()}")
     }
   }
 
@@ -520,11 +521,64 @@ class RpcLoopSpec extends AnyFunSuite {
       // receipts bronze never materialized...
       val bronze = new java.io.File(s"$out/.graft/bronze").list().toSet
       assert(bronze == Set("rpc_blocks.parquet", "rpc_transactions.parquet"))
-      // ...and never fetched: 2 driver probes + 4 full-block trips (one
-      // per block across 32 partitions), ZERO receipt round trips
+      // ...and never fetched: 2 driver probes + 2 full-block trips (4
+      // blocks in whole batches of 2), ZERO receipt round trips
       // (transactions.rs:124-135 semantics)
-      assert(posts.get() == 6, s"expected 6 round trips, got ${posts.get()}")
+      assert(posts.get() == 4, s"expected 4 round trips, got ${posts.get()}")
     }
+  }
+
+  test("fetch sizing: one task per core, each a run of whole batches") {
+    assert(spark.sparkContext.defaultParallelism == 4, "a 4-core session")
+    /** the fetch's partition count, each partition's lowest block, and
+      * the POSTs one pass over the range makes */
+    def layout(blocks: Long, cap: Option[Int] = None,
+        window: Int = 100): (Int, Seq[Long], Int) =
+      withStub { (url, posts) =>
+        val s = new RpcSource(RpcConfig(url, innerRequestSize = 100,
+          maxConcurrentRequests = window, maxRetries = 0))
+        val r = BlockSyntax.Range(1000, 1000 + blocks)
+        val df = cap.fold(s.fetchBlocks(spark, r))(s.fetchBlocks(spark, r, _))
+        val lows = df.rdd.mapPartitions(rows =>
+          if (rows.hasNext) Iterator(rows.map(_.getInt(0).toLong).min)
+          else Iterator.empty).collect().sorted.toSeq
+        (df.rdd.getNumPartitions, lows, posts.get())
+      }
+    // 1000 blocks are 10 requests: 4 tasks, never a partial batch inside
+    // the range, so 10 POSTs (a task boundary off the batch grid would
+    // split a batch in two)
+    val (parts, lows, posts) = layout(1000)
+    assert(parts == 4)
+    assert(lows.size == 4 && lows.forall(b => (b - 1000) % 100 == 0), lows)
+    assert(posts == 10)
+    // 150 blocks are 2 requests, so 2 tasks, the second one partial
+    val (parts150, lows150, posts150) = layout(150)
+    assert(parts150 == 2 && lows150 == Seq(1000L, 1100L) && posts150 == 2)
+    // an explicit numPartitions is an upper bound, and so is the
+    // request window: each task holds at least one request in flight
+    assert(layout(1000, cap = Some(1))._1 == 1)
+    assert(layout(1000, window = 2)._1 == 2)
+    // the runs are whole requests, as even as they can be
+    assert(RpcSource.runs(10, 1, 4) == Seq((0, 2), (2, 5), (5, 7), (7, 10)))
+    assert(RpcSource.runs(150, 100, 4) == Seq((0, 100), (100, 150)))
+    assert(RpcSource.runs(0, 100, 4) == Seq((0, 0)))
+  }
+
+  test("--rpc live mode: a request size or window below 1 is refused") {
+    // `--inner-request-size -1` made eth_getLogs' range step negative,
+    // so the logs bronze came out empty without an error; 0 failed with
+    // "step cannot be 0"
+    for ((flag, value) <- Seq("--inner-request-size" -> "-1",
+        "--inner-request-size" -> "0", "--max-concurrent-requests" -> "0"))
+      withStub { (url, posts) =>
+        val out = java.nio.file.Files.createTempDirectory("graft_badflag").toString
+        val e = intercept[IllegalArgumentException] {
+          Cli.run(Array("logs", "--rpc", url, "--blocks", "16:20",
+            "--output-dir", out, flag, value, "--no-verbose"), spark)
+        }
+        assert(e.getMessage.contains(flag), e.getMessage)
+        assert(posts.get() == 0)
+      }
   }
 
   test("materializeBronze refuses a dataset whose bronze has no live fetch") {
