@@ -1,6 +1,6 @@
 package graft
 
-import graft.chain.{BlockSyntax, ChainDatasets, Datatypes, Freeze, TableSchema, TimestampSyntax}
+import graft.chain.{BlockSyntax, Bronze, Datatypes, Freeze, TableSchema, TimestampSyntax}
 import graft.functions.U256
 import graft.sources.RpcCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -98,14 +98,14 @@ object Cli {
 
   /** intro summary before collection (summaries.rs print_cryo_intro) */
   private def printIntro(spec: Freeze.FreezeSpec, nChunks: Int,
-      sourceDir: String): Unit = {
+      source: String): Unit = {
     println("graft parameters")
     println(s"- version: $Version")
     println(s"- datatypes: ${spec.datasets.mkString(", ")}")
     println(s"- blocks: ${spec.blocks}")
     println(s"- chunks: $nChunks (chunk size ${spec.chunkSize})")
     println(s"- network: ${spec.network}")
-    println(s"- source: $sourceDir")
+    println(s"- source: $source")
     println(s"- output dir: ${spec.outputDir}")
     println(s"- format: ${spec.format}" +
       spec.compression.map(c => s" ($c)").getOrElse(""))
@@ -306,77 +306,6 @@ object Cli {
     df
   }
 
-  /** `graft.Cli lake <dataset> --lake-dir DIR [--blocks SPEC]
-    * [--timestamps T1:T2] [--network NAME] [--tag T] [--out DIR]
-    * [--show N]` — scan a FROZEN lake (the chunk files freeze/followLive
-    * wrote) back into a DataFrame, pruning files by their filename block
-    * ranges at planning time (Lake.scala). `latest` in a block spec
-    * resolves against the lake itself: the highest frozen block of the
-    * dataset. `--timestamps` resolves through the LAKE'S OWN frozen
-    * blocks dataset (≤-semantics binary search, TimestampSyntax) — the
-    * read-side twin of freeze's timestamp dimension, requiring `blocks`
-    * to be frozen alongside.
-    *
-    * `graft.Cli lake compact --lake-dir DIR --target-chunk-size N
-    * [--network NAME]` — coalesce contiguous small chunk files
-    * (LakeCompact.scala). */
-  /** Driver-local bronze staging for a scheme'd output dir, balancing
-    * three hazards a fixed /tmp name or a fresh dir-per-run each get
-    * wrong: (1) SQUATTING — the base dir is per-user and forced to
-    * 0700; if it exists but is not ours, setPosixFilePermissions fails
-    * loudly instead of staging into someone else's tree. (2) CLOBBER —
-    * the leaf is per-(outputDir, pid), so two concurrent freezes to
-    * one target never share staging. (3) UNBOUNDED GROWTH — one dir
-    * per (JVM, outputDir) memoized here (repeat freezes in a process
-    * reuse it), a shutdown hook removes it on clean exit, and first
-    * use per key sweeps sibling `p<pid>` dirs whose processes are DEAD
-    * — so even SIGKILL'd scheduled runs cannot accumulate corpses. */
-  private val bronzeStaging =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]
-  private[graft] def bronzeStagingFor(outputDir: String): java.nio.file.Path =
-    bronzeStaging.computeIfAbsent(outputDir, _ => {
-      import java.nio.file.{Files, Paths}
-      def deleteTree(p: java.nio.file.Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-      val user = System.getProperty("user.name", "unknown")
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_bronze_$user")
-      Files.createDirectories(base)
-      try Files.setPosixFilePermissions(base,
-        java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
-      catch {
-        case _: UnsupportedOperationException => () // non-POSIX tmp FS
-        case e: Exception => throw new IllegalStateException(
-          s"bronze staging base $base exists but is not ours " +
-            "(squatted shared tmpdir?)", e)
-      }
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(outputDir.getBytes("UTF-8"))
-        .take(8).map("%02x".format(_)).mkString
-      val keyDir = base.resolve(key)
-      Files.createDirectories(keyDir)
-      Option(keyDir.toFile.listFiles()).getOrElse(Array.empty).foreach { f =>
-        val n = f.getName
-        // toLongOption, not toLong: a digit string that overflows Long
-        // is not a pid we can check — leave it rather than throw
-        if (f.isDirectory && n.startsWith("p") &&
-            n.drop(1).toLongOption.exists(p =>
-              p >= 0 && !ProcessHandle.of(p).isPresent))
-          try deleteTree(f.toPath) catch { case _: Exception => () }
-      }
-      val mine = keyDir.resolve(s"p${ProcessHandle.current().pid()}")
-      Files.createDirectories(mine)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try deleteTree(mine) catch { case _: Throwable => () }))
-      mine
-    })
-
   /** bounds-checked flag value: args(i+1) or a usage-bearing error */
   private def flagValue(args: Seq[String], i: Int, flag: String,
       usage: String): String = {
@@ -457,6 +386,20 @@ object Cli {
     outcomes
   }
 
+  /** `graft.Cli lake <dataset> --lake-dir DIR [--blocks SPEC]
+    * [--timestamps T1:T2] [--network NAME] [--tag T] [--out DIR]
+    * [--show N]` — scan a FROZEN lake (the chunk files freeze/followLive
+    * wrote) back into a DataFrame, pruning files by their filename block
+    * ranges at planning time (Lake.scala). `latest` in a block spec
+    * resolves against the lake itself: the highest frozen block of the
+    * dataset. `--timestamps` resolves through the LAKE'S OWN frozen
+    * blocks dataset (≤-semantics binary search, TimestampSyntax) — the
+    * read-side twin of freeze's timestamp dimension, requiring `blocks`
+    * to be frozen alongside.
+    *
+    * `graft.Cli lake compact --lake-dir DIR --target-chunk-size N
+    * [--network NAME]` — coalesce contiguous small chunk files
+    * (LakeCompact.scala). */
   def runLake(args: Seq[String], spark: SparkSession): DataFrame = {
     val usage = "usage: lake <dataset> --lake-dir DIR [--blocks SPEC] " +
       "[--timestamps T1:T2] [--network NAME] [--tag T] [--out DIR] " +
@@ -1145,7 +1088,7 @@ object Cli {
     val decorated: Map[String, Freeze.DatasetBuilder] =
       expanded.map { name =>
         val build = Freeze.catalog(name).build(buildOptions)
-        name -> ((s: SparkSession, d: String) => decorate(name)(build(s, d)))
+        name -> ((b: Bronze) => decorate(name)(build(b)))
       }.toMap
 
     // TimeDimension::Transactions: a tx-hash list replaces the block range
@@ -1161,13 +1104,13 @@ object Cli {
       if (collectMode) {
         require(expanded.size == 1, "collect() takes exactly one datatype")
         val df = decorate(expanded.head)(Freeze.collectByTransaction(
-          spark, sourceDir, expanded.head, hashes.toSeq))
+          Bronze.dir(spark, sourceDir), expanded.head, hashes.toSeq))
         return Left(if (hex) Freeze.hexifyBinary(df) else df)
       }
       graft.chain.LakeFs.mkdirs(outputDir)
       val completed = expanded.map { name =>
         val df = decorate(name)(
-          Freeze.collectByTransaction(spark, sourceDir, name, hashes.toSeq))
+          Freeze.collectByTransaction(Bronze.dir(spark, sourceDir), name, hashes.toSeq))
         val stub = txHashes.head.stripPrefix("0x").take(8) + s"_${txHashes.size}txs"
         val target = graft.chain.LakeFs.display(new org.apache.hadoop.fs.Path(
           outputDir, s"${network}__${name}__txs_$stub.$format"))
@@ -1178,10 +1121,10 @@ object Cli {
     }
 
     // Live mode (--rpc, sources.rs:119-150): detect the chain id, resolve
-    // `latest` from the node, and materialize ONLY the bronze tables the
-    // requested datasets read under <output>/.graft/bronze — the freeze
-    // below then runs unchanged against that dir (live extraction and
-    // fixtures share one transform path).
+    // `latest` from the node, and fetch ONLY the bronze tables the
+    // requested datasets read into Spark's cache — the builders read
+    // them as they read a --source-dir (live extraction and fixtures
+    // share one transform path), and nothing is staged on disk.
     val liveSource: Option[graft.sources.RpcSource] = rpcUrl.map { url =>
       // built outside the chain-id probe, so a bad flag value reports
       // itself instead of reading as an unreachable node
@@ -1217,7 +1160,7 @@ object Cli {
       // --timestamps T1:T2 → block range via the ≤-semantics binary search
       // (cli/parse/timestamps.rs)
       case Some(ts) =>
-        val blocksDf = ChainDatasets.fx(spark, sourceDir, "rpc_blocks")
+        val blocksDf = Bronze.dir(spark, sourceDir)("rpc_blocks")
         TimestampSyntax.resolveRange(ts, blocksDf,
           now = System.currentTimeMillis() / 1000)
       case None => parseBlocksArgs(spark, blocks, maxFixtureBlock)
@@ -1234,44 +1177,28 @@ object Cli {
         blocksSpec = BlockSyntax.Numbers(kept)
     }
 
-    // dry runs plan file layout only — no node traffic (run.rs dry path)
-    if (!dryRun) liveSource.foreach { src =>
-      // bronze is driver-local STAGING (FollowMode's reorg swap runs
-      // java.nio on it by contract) — a scheme'd --output-dir
-      // (s3a://…) must not have Paths.get mangle the URI into a
-      // relative local `s3a:/…` tree; the staging resolves through
-      // bronzeStagingFor (per-user 0700 base against tmp squatting,
-      // per-pid leaf against concurrent-freeze clobbering, in-JVM
-      // memoized + dead-pid sweep + shutdown hook against unbounded
-      // growth), while the freeze output itself still lands on the
-      // scheme'd dir through the Hadoop-FS write path
-      val bronzeDir = {
-        val hasScheme = new org.apache.hadoop.fs.Path(outputDir)
-          .toUri.getScheme != null
-        if (hasScheme) bronzeStagingFor(outputDir)
-        else {
-          val p = java.nio.file.Paths.get(outputDir, ".graft", "bronze")
-          java.nio.file.Files.createDirectories(p)
-          p
-        }
-      }
-      val liveCalls = for {
-        to <- contract
-        data <- if (composedCallData.nonEmpty) composedCallData else Seq.empty[String]
-      } yield (to, data)
-      src.materializeBronze(spark, bronzeDir.toString,
-        BlockSyntax.span(blocksSpec), expanded,
-        addresses = addressF, slots = slotsF, calls = liveCalls,
-        jsTracer = jsTracer, options = buildOptions)
-      sourceDir = bronzeDir.toString
+    // the bronze the builders read: fetched from the node under --rpc
+    // (every request made before this returns), else --source-dir's
+    // tables. Dry runs plan file layout only — no node traffic (run.rs
+    // dry path).
+    def openBronze(): Bronze = liveSource match {
+      case Some(src) if !dryRun =>
+        val liveCalls = for {
+          to <- contract
+          data <- composedCallData
+        } yield (to, data)
+        src.fetchBronze(spark, blocksSpec, expanded,
+          addresses = addressF, slots = slotsF, calls = liveCalls,
+          jsTracer = jsTracer, options = buildOptions)
+      case _ => Bronze.dir(spark, sourceDir)
     }
 
     // In-memory collect: one datatype, decorated + block-filtered, no
-    // files (cryo collect.rs:5-30 single-datatype guard).
+    // files (cryo collect.rs:5-30 single-datatype guard). A fetched
+    // bronze stays held for as long as the returned frame is used.
     if (collectMode) {
       require(expanded.size == 1, "collect() takes exactly one datatype")
-      val df = Freeze.filterBlocks(
-        decorated(expanded.head)(spark, sourceDir), blocksSpec)
+      val df = Freeze.filterBlocks(decorated(expanded.head)(openBronze()), blocksSpec)
       return Left(if (hex) Freeze.hexifyBinary(df) else df)
     }
 
@@ -1322,9 +1249,10 @@ object Cli {
       return Right(None)
     }
 
-    if (verbose) printIntro(spec, chunks.size, sourceDir)
+    if (verbose) printIntro(spec, chunks.size, rpcUrl.getOrElse(sourceDir))
     val t0 = System.nanoTime()
-    val result = Freeze.freeze(spark, sourceDir, spec, decorated)
+    val bronze = openBronze()
+    val result = try Freeze.freeze(bronze, spec, decorated) finally bronze.release()
     if (verbose)
       printConclusion(result, chunks.size * expanded.size, (System.nanoTime() - t0) / 1e9)
     Right(Some(result))

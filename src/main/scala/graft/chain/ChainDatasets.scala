@@ -1,28 +1,25 @@
 package graft.chain
 
 import graft.functions.{Abi, BinaryStats, Keccak, Keccak256, U256}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Dataset transforms: RPC-response-shaped inputs (ChainSource tables) →
-  * the engine's output tables, mirroring each reference dataset's
-  * `transform` phase (SURVEY §2.1). All logic is declarative DataFrame
-  * code — Catalyst prunes, pushes filters into the parquet scan, and
+/** Dataset transforms: RPC-response-shaped inputs (the `rpc_*` tables of
+  * a [[Bronze]]) → the engine's output tables, mirroring each reference
+  * dataset's `transform` phase (SURVEY §2.1). All logic is declarative
+  * DataFrame code — Catalyst prunes, pushes filters into the scan, and
   * broadcasts the dimension sides; nothing here shuffles except the few
   * window/groupBy operators, which shuffle on their natural keys.
   */
 object ChainDatasets {
 
-  def fx(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   /** datasets/blocks.rs:11-125 — header projection; include/exclude/
     * columns follow the effective-schema rules (types/schemas.rs). */
-  def blocks(spark: SparkSession, dir: String,
+  def blocks(bronze: Bronze,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None): DataFrame =
-    blocksOf(fx(spark, dir, "rpc_blocks"), include, exclude, columns)
+    blocksOf(bronze("rpc_blocks"), include, exclude, columns)
 
   /** streaming-composable twin of `blocks`: the same projection over an
     * ALREADY-READ bronze frame (FollowMode.readAppendOnly hands a
@@ -52,18 +49,18 @@ object ChainDatasets {
     * effective gas price inline per chunk, transactions.rs:287-302; no
     * broadcast exists to mimic.)
     */
-  def transactions(spark: SparkSession, dir: String,
+  def transactions(bronze: Bronze,
       excludeFailed: Boolean = false,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None): DataFrame = {
     val used = TableSchema.resolve(Datatypes.transactions, include, exclude, columns)
     val needReceipts = transactionsNeedReceipts(excludeFailed, include, exclude, columns)
-    val txs = fx(spark, dir, "rpc_transactions")
-    val baseFees = fx(spark, dir, "rpc_blocks")
+    val txs = bronze("rpc_transactions")
+    val baseFees = bronze("rpc_blocks")
       .select(col("block_number").as("bf_bn"), col("base_fee_per_gas"))
     val withReceipts =
       if (needReceipts)
-        txs.join(fx(spark, dir, "rpc_receipts")
+        txs.join(bronze("rpc_receipts")
             .withColumnRenamed("gas_used", "receipt_gas_used"),
           Seq("transaction_hash"), "left")
       else txs
@@ -110,23 +107,15 @@ object ChainDatasets {
     * address/topic0 predicate; optional ABI decode appending event__*
     * columns and dropping raw topic/data columns (to_df/lib.rs:165-166).
     */
-  def logs(spark: SparkSession, dir: String,
+  def logs(bronze: Bronze,
       address: Option[Array[Byte]] = None,
       eventSignature: Option[String] = None,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None): DataFrame = {
-    val raw = fx(spark, dir, "rpc_logs")
-    val filtered = address.map(a => raw.filter(col("address") === lit(a))).getOrElse(raw)
-    val split = filtered
-      .withColumn("topic0", get(col("topics"), lit(0)))
-      .withColumn("topic1", get(col("topics"), lit(1)))
-      .withColumn("topic2", get(col("topics"), lit(2)))
-      .withColumn("topic3", get(col("topics"), lit(3)))
-      .withColumn("n_data_bytes", length(col("data")))
+      columns: Option[Seq[String]] = None): DataFrame =
     eventSignature match {
       case None =>
-        logsOf(raw, address, include, exclude, columns)
+        logsOf(bronze("rpc_logs"), address, include, exclude, columns)
       case Some(sig) =>
         val event = Abi.parseEvent(sig)
         // the user's column selection applies to the BASE columns in
@@ -135,7 +124,7 @@ object ChainDatasets {
         // decode-consumed topics/data stay excluded either way
         val base = TableSchema.resolve(Datatypes.logs, include, exclude, columns)
           .filterNot(Seq("topic1", "topic2", "topic3", "data").contains)
-        val decoded = split
+        val decoded = splitTopics(bronze("rpc_logs"), address)
           .withColumn("dec", Abi.decodeEvent(col("topics"), col("data"), sig))
           .filter(col("dec").isNotNull) // skip-on-error, logs.rs:161
         val eventCols = event.params.flatMap { p =>
@@ -149,11 +138,20 @@ object ChainDatasets {
         decoded.select(base.map(col) ++ eventCols: _*)
           .sortWithinPartitions("block_number", "log_index")
     }
-  }
 
   // null-safe topic accessor (get() returns null out of bounds; ANSI
   // element_at/[] would throw on anonymous logs with no topics)
   private def logTopic(i: Int): Column = get(col("topics"), lit(i - 1))
+
+  /** the logs bronze (of one emitter, given an address) with its topics
+    * split to topic0..3 and its data bytes counted */
+  private def splitTopics(logs: DataFrame, address: Option[Array[Byte]]): DataFrame =
+    address.map(a => logs.filter(col("address") === lit(a))).getOrElse(logs)
+      .withColumn("topic0", get(col("topics"), lit(0)))
+      .withColumn("topic1", get(col("topics"), lit(1)))
+      .withColumn("topic2", get(col("topics"), lit(2)))
+      .withColumn("topic3", get(col("topics"), lit(3)))
+      .withColumn("n_data_bytes", length(col("data")))
 
   /** streaming-composable twin of `logs` (non-decoded branch): topic
     * split + byte stats over an already-read bronze frame */
@@ -161,14 +159,7 @@ object ChainDatasets {
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None,
       ordered: Boolean = true): DataFrame = {
-    val filtered = address.map(a => bronze.filter(col("address") === lit(a)))
-      .getOrElse(bronze)
-    val out = filtered
-      .withColumn("topic0", get(col("topics"), lit(0)))
-      .withColumn("topic1", get(col("topics"), lit(1)))
-      .withColumn("topic2", get(col("topics"), lit(2)))
-      .withColumn("topic3", get(col("topics"), lit(3)))
-      .withColumn("n_data_bytes", length(col("data")))
+    val out = splitTopics(bronze, address)
       .select(TableSchema.resolve(Datatypes.logs, include, exclude, columns)
         .map(col): _*)
     if (ordered) out.sortWithinPartitions("block_number", "log_index") else out
@@ -200,11 +191,11 @@ object ChainDatasets {
     if (ordered) out.sortWithinPartitions("block_number", "log_index") else out
   }
 
-  def erc20Transfers(spark: SparkSession, dir: String,
+  def erc20Transfers(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       from: Option[Array[Byte]] = None,
       to: Option[Array[Byte]] = None): DataFrame =
-    erc20Shaped(fx(spark, dir, "rpc_logs"),
+    erc20Shaped(bronze("rpc_logs"),
       Keccak.hash("Transfer(address,address,uint256)"),
       "erc20", u256Reprs, from, to)
 
@@ -216,16 +207,16 @@ object ChainDatasets {
     erc20Shaped(logsBronze, Keccak.hash("Transfer(address,address,uint256)"),
       "erc20", u256Reprs, ordered = ordered)
 
-  def erc20Approvals(spark: SparkSession, dir: String,
+  def erc20Approvals(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    erc20Shaped(fx(spark, dir, "rpc_logs"),
+    erc20Shaped(bronze("rpc_logs"),
       Keccak.hash("Approval(address,address,uint256)"),
       "erc20", u256Reprs)
 
   /** datasets/erc721_transfers.rs — 4 topics disambiguate from erc20. */
-  def erc721Transfers(spark: SparkSession, dir: String,
+  def erc721Transfers(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_logs")
+    bronze("rpc_logs")
       .filter(logTopic(1) === lit(Keccak.hash("Transfer(address,address,uint256)")) &&
               size(col("topics")) === 4)
       .select(Seq(
@@ -247,9 +238,9 @@ object ChainDatasets {
     * broadcasts when runtime stats say the failed side is genuinely
     * small.
     */
-  def traces(spark: SparkSession, dir: String,
+  def traces(bronze: Bronze,
       excludeFailed: Boolean = false): DataFrame = {
-    val t = fx(spark, dir, "rpc_traces")
+    val t = bronze("rpc_traces")
     val out = if (!excludeFailed) t else {
       val failed = t.filter(col("error").isNotNull)
         .select(col("transaction_hash").as("f_tx"), col("trace_address").as("f_path"))
@@ -268,9 +259,9 @@ object ChainDatasets {
     * creates with value, suicides (refund), block rewards. transfer_index
     * enumerates per block.
     */
-  def nativeTransfers(spark: SparkSession, dir: String,
+  def nativeTransfers(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame = {
-    val t = fx(spark, dir, "rpc_traces").filter(col("error").isNull)
+    val t = bronze("rpc_traces").filter(col("error").isNull)
     // reward endpoints (native_transfers.rs:99-103): from = the zero
     // address, to = the author — which the traces bronze stores in
     // action_from (traces.rs Action::Reward), so the endpoints swap here
@@ -303,8 +294,8 @@ object ChainDatasets {
     * the order-sensitive deployer propagation done with a window over
     * trace_address (contracts.rs:74-84).
     */
-  def contracts(spark: SparkSession, dir: String): DataFrame = {
-    val t = fx(spark, dir, "rpc_traces").filter(col("transaction_hash").isNotNull)
+  def contracts(bronze: Bronze): DataFrame = {
+    val t = bronze("rpc_traces").filter(col("transaction_hash").isNotNull)
     val byTx = Window.partitionBy("transaction_hash")
       .orderBy(length(col("trace_address")), col("trace_address"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -330,8 +321,8 @@ object ChainDatasets {
     * from traces via groupBy (the reference's only aggregation-shaped
     * dataset; map-side partial agg keeps the shuffle tiny).
     */
-  def fourByteCounts(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_traces")
+  def fourByteCounts(bronze: Bronze): DataFrame =
+    bronze("rpc_traces")
       .filter(col("transaction_hash").isNotNull && length(col("action_input")) >= 4)
       // chain_id rides the groupBy from the bronze (constant per chain,
       // a grouping key so multi-chain lakes never cross-attribute) —
@@ -349,7 +340,7 @@ object ChainDatasets {
   /** datasets/address_appearances.rs:15-344 — union of address mentions
     * across blocks/txs/logs/traces with relationship labels (an unpivot).
     */
-  def addressAppearances(spark: SparkSession, dir: String): DataFrame = {
+  def addressAppearances(bronze: Bronze): DataFrame = {
     // r17 (guide §6 read-once): ONE scan per fixture table. The former
     // 9 union legs re-scanned their table per leg (txs ×2, logs ×3,
     // traces ×3) — each leg re-decoding the shared block/tx-id columns.
@@ -375,10 +366,10 @@ object ChainDatasets {
         .filter(col("address").isNotNull)
         .select("block_number", "transaction_index", "transaction_hash",
           "address", "relationship", "chain_id")
-    val blocksDf = fx(spark, dir, "rpc_blocks")
-    val txsDf = fx(spark, dir, "rpc_transactions")
-    val logsDf = fx(spark, dir, "rpc_logs")
-    val tracesDf = fx(spark, dir, "rpc_traces")
+    val blocksDf = bronze("rpc_blocks")
+    val txsDf = bronze("rpc_transactions")
+    val logsDf = bronze("rpc_logs")
+    val tracesDf = bronze("rpc_traces")
     val sigT = lit(Keccak.hash("Transfer(address,address,uint256)"))
     val isTransfer = get(col("topics"), lit(0)) === sigT &&
       size(col("topics")) >= 3
@@ -402,26 +393,26 @@ object ChainDatasets {
 
   /** point-lookup family (balances/codes/nonces/slots, datasets/balances.rs
     * family) — projections of account state at sampled blocks. */
-  def balances(spark: SparkSession, dir: String,
+  def balances(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_accounts")
+    bronze("rpc_accounts")
       .select(Seq(col("block_number"), col("address")) ++
         U256.expand(col("balance"), "balance", u256Reprs) :+ col("chain_id"): _*)
       .sortWithinPartitions("block_number", "address")
 
-  def nonces(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_accounts")
+  def nonces(bronze: Bronze): DataFrame =
+    bronze("rpc_accounts")
       .select("block_number", "address", "nonce", "chain_id")
       .sortWithinPartitions("block_number", "address")
 
-  def codes(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_accounts")
+  def codes(bronze: Bronze): DataFrame =
+    bronze("rpc_accounts")
       .select("block_number", "address", "code", "chain_id")
       .sortWithinPartitions("block_number", "address")
 
-  def slots(spark: SparkSession, dir: String,
+  def slots(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_storage")
+    bronze("rpc_storage")
       .select(Seq(col("block_number"), col("address"), col("slot")) ++
         U256.expand(col("value"), "value", u256Reprs) :+ col("chain_id"): _*)
       .sortWithinPartitions("block_number", "address", "slot")
@@ -429,32 +420,32 @@ object ChainDatasets {
   /** state-diff family (multi_datasets/state_diffs.rs:8-75) — one shared
     * scan would feed all four at once via persist(); as standalone
     * datasets each projects its own fixture table. */
-  def storageDiffs(spark: SparkSession, dir: String,
+  def storageDiffs(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_storage_diffs")
+    bronze("rpc_storage_diffs")
       .select(Seq(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address"), col("slot")) ++
         U256.expand(col("from_value"), "from_value", u256Reprs) ++
         U256.expand(col("to_value"), "to_value", u256Reprs) :+ col("chain_id"): _*)
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def balanceDiffs(spark: SparkSession, dir: String,
+  def balanceDiffs(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_balance_diffs")
+    bronze("rpc_balance_diffs")
       .select(Seq(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address")) ++
         U256.expand(col("from_value"), "from_value", u256Reprs) ++
         U256.expand(col("to_value"), "to_value", u256Reprs) :+ col("chain_id"): _*)
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def nonceDiffs(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_nonce_diffs")
+  def nonceDiffs(bronze: Bronze): DataFrame =
+    bronze("rpc_nonce_diffs")
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "from_value", "to_value", "chain_id")
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def codeDiffs(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_code_diffs")
+  def codeDiffs(bronze: Bronze): DataFrame =
+    bronze("rpc_code_diffs")
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "from_value", "to_value", "chain_id")
       .sortWithinPartitions("block_number", "transaction_index")
@@ -466,11 +457,11 @@ object ChainDatasets {
     * them; one shuffle on the composite key, emitted rows only where the
     * value actually changed.
     */
-  private def gethDiff(spark: SparkSession, dir: String, valueCol: String,
+  private def gethDiff(bronze: Bronze, valueCol: String,
       withSlot: Boolean, zero: Column,
       project: (DataFrame, Seq[U256.Repr]) => DataFrame,
       u256Reprs: Seq[U256.Repr]): DataFrame = {
-    val base = fx(spark, dir, "rpc_geth_prestate")
+    val base = bronze("rpc_geth_prestate")
       .filter(if (withSlot) col("slot").isNotNull else col("slot").isNull)
       .filter(col(valueCol).isNotNull)
     val keys = Seq("block_number", "transaction_index", "transaction_hash",
@@ -494,33 +485,33 @@ object ChainDatasets {
       U256.expand(col("from_value"), "from_value", reprs) ++
       U256.expand(col("to_value"), "to_value", reprs) :+ col("chain_id"): _*)
 
-  def gethBalanceDiffs(spark: SparkSession, dir: String,
+  def gethBalanceDiffs(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    gethDiff(spark, dir, "balance", withSlot = false,
+    gethDiff(bronze, "balance", withSlot = false,
       lit(new Array[Byte](32)), u256DiffProject(withSlot = false), u256Reprs)
 
-  def gethStorageDiffs(spark: SparkSession, dir: String,
+  def gethStorageDiffs(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    gethDiff(spark, dir, "slot_value", withSlot = true,
+    gethDiff(bronze, "slot_value", withSlot = true,
       lit(new Array[Byte](32)), u256DiffProject(withSlot = true), u256Reprs)
 
-  def gethCodeDiffs(spark: SparkSession, dir: String): DataFrame =
-    gethDiff(spark, dir, "code", withSlot = false,
+  def gethCodeDiffs(bronze: Bronze): DataFrame =
+    gethDiff(bronze, "code", withSlot = false,
       lit(Array.emptyByteArray),
       (df, _) => df.select("block_number", "transaction_index",
         "transaction_hash", "address", "from_value", "to_value", "chain_id"),
       Seq.empty)
 
-  def gethNonceDiffs(spark: SparkSession, dir: String): DataFrame =
-    gethDiff(spark, dir, "nonce", withSlot = false, lit(0L),
+  def gethNonceDiffs(bronze: Bronze): DataFrame =
+    gethDiff(bronze, "nonce", withSlot = false, lit(0L),
       (df, _) => df.select("block_number", "transaction_index",
         "transaction_hash", "address", "from_value", "to_value", "chain_id"),
       Seq.empty)
 
   /** datasets/eth_calls.rs:11-82 — call results + keccak of calldata and
     * output. */
-  def ethCalls(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_calls")
+  def ethCalls(bronze: Bronze): DataFrame =
+    bronze("rpc_calls")
       .select(
         col("block_number"), col("contract_address"), col("call_data"),
         Keccak256.keccak256(col("call_data")).as("call_data_hash"),
@@ -542,8 +533,8 @@ object ChainDatasets {
       "[\\x00-\\x1F\\x7F]", "")
   }
 
-  def erc20Metadata(spark: SparkSession, dir: String): DataFrame = {
-    val calls = fx(spark, dir, "rpc_calls")
+  def erc20Metadata(bronze: Bronze): DataFrame = {
+    val calls = bronze("rpc_calls")
     def sel(selector: Array[Byte]): Column = col("call_data") === lit(selector)
     calls
       .groupBy(col("block_number"), col("contract_address").as("erc20"), col("chain_id"))
@@ -562,9 +553,9 @@ object ChainDatasets {
   }
 
   /** datasets/erc20_supplies.rs — totalSupply per contract/block. */
-  def erc20Supplies(spark: SparkSession, dir: String,
+  def erc20Supplies(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_calls")
+    bronze("rpc_calls")
       .filter(col("call_data") === lit(GenFixtures.selTotalSupply))
       .select(Seq(col("block_number"), col("contract_address").as("erc20")) ++
         U256.expand(col("output_data"), "total_supply", u256Reprs) :+ col("chain_id"): _*)
@@ -572,8 +563,8 @@ object ChainDatasets {
 
   /** datasets/vm_traces.rs:13-133 — one row per EVM opcode step (the
     * recursive sub-call flatten already happened at bronze time). */
-  def vmTraces(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_vm_traces")
+  def vmTraces(bronze: Bronze): DataFrame =
+    bronze("rpc_vm_traces")
       .select("block_number", "transaction_index", "pc", "cost", "used",
         "push", "mem_off", "mem_data", "storage_key", "storage_val", "op",
         "chain_id")
@@ -584,7 +575,7 @@ object ChainDatasets {
     * tracer's fetch options (schema-pruned IO: the flags are only read —
     * and at RPC time only requested — when the schema asks for them,
     * geth_opcodes.rs:44-59). */
-  def gethOpcodes(spark: SparkSession, dir: String,
+  def gethOpcodes(bronze: Bronze,
       includeMemory: Boolean = false, includeStack: Boolean = false,
       includeStorage: Boolean = false): DataFrame = {
     val base = Seq("block_number", "transaction_index", "pc", "op", "gas",
@@ -592,15 +583,15 @@ object ChainDatasets {
     val opt = (if (includeMemory) Seq("memory") else Nil) ++
       (if (includeStack) Seq("stack") else Nil) ++
       (if (includeStorage) Seq("storage") else Nil)
-    fx(spark, dir, "rpc_geth_opcodes")
+    bronze("rpc_geth_opcodes")
       .select(base ++ opt :+ "chain_id" map col: _*)
       .sortWithinPartitions("block_number", "transaction_index", "pc")
   }
 
   /** datasets/geth_calls.rs — flattened callTracer frames. */
-  def gethCalls(spark: SparkSession, dir: String,
+  def gethCalls(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_geth_calls")
+    bronze("rpc_geth_calls")
       .select(Seq(col("block_number"), col("transaction_index"),
         col("from_address"), col("to_address")) ++
         U256.expand(col("value"), "value", u256Reprs) ++
@@ -610,16 +601,16 @@ object ChainDatasets {
 
   /** datasets/javascript_traces.rs:10-90 — opaque user-tracer JSON
     * strings; downstream extraction is from_json/get_json_object. */
-  def javascriptTraces(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_js_traces")
+  def javascriptTraces(bronze: Bronze): DataFrame =
+    bronze("rpc_js_traces")
       .select("block_number", "transaction_index", "transaction_hash",
         "output", "chain_id")
       .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/trace_calls.rs:9-179 — call tree of a simulated call,
     * keyed by (contract, calldata) instead of a transaction. */
-  def traceCalls(spark: SparkSession, dir: String): DataFrame =
-    fx(spark, dir, "rpc_trace_calls")
+  def traceCalls(bronze: Bronze): DataFrame =
+    bronze("rpc_trace_calls")
       .select("block_number", "contract_address", "tx_call_data",
         "action_from", "action_to", "action_value", "action_gas",
         "action_input", "action_type", "trace_address", "subtraces",
@@ -629,43 +620,43 @@ object ChainDatasets {
   /** state-reads family (multi_datasets/state_reads.rs:8-111) — account
     * state touched during execution: the prestate tracer's pre-phase
     * rows, one shared scan feeding all four tables. */
-  private def stateReads(spark: SparkSession, dir: String,
+  private def stateReads(bronze: Bronze,
       valueCol: String, withSlot: Boolean): DataFrame =
-    fx(spark, dir, "rpc_geth_prestate")
+    bronze("rpc_geth_prestate")
       .filter(col("phase") === "pre" &&
         (if (withSlot) col("slot").isNotNull else col("slot").isNull) &&
         col(valueCol).isNotNull)
 
-  def balanceReads(spark: SparkSession, dir: String,
+  def balanceReads(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    stateReads(spark, dir, "balance", withSlot = false)
+    stateReads(bronze, "balance", withSlot = false)
       .select(Seq(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address")) ++
         U256.expand(col("balance"), "balance", u256Reprs) :+ col("chain_id"): _*)
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def nonceReads(spark: SparkSession, dir: String): DataFrame =
-    stateReads(spark, dir, "nonce", withSlot = false)
+  def nonceReads(bronze: Bronze): DataFrame =
+    stateReads(bronze, "nonce", withSlot = false)
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "nonce", "chain_id")
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def codeReads(spark: SparkSession, dir: String): DataFrame =
-    stateReads(spark, dir, "code", withSlot = false)
+  def codeReads(bronze: Bronze): DataFrame =
+    stateReads(bronze, "code", withSlot = false)
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "code", "chain_id")
       .sortWithinPartitions("block_number", "transaction_index")
 
-  def storageReads(spark: SparkSession, dir: String): DataFrame =
-    stateReads(spark, dir, "slot_value", withSlot = true)
+  def storageReads(bronze: Bronze): DataFrame =
+    stateReads(bronze, "slot_value", withSlot = true)
       .select(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address"), col("slot"),
         col("slot_value").as("value"), col("chain_id"))
       .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/erc721_metadata.rs — name/symbol per NFT contract. */
-  def erc721Metadata(spark: SparkSession, dir: String): DataFrame = {
-    val calls = fx(spark, dir, "rpc_calls_erc721")
+  def erc721Metadata(bronze: Bronze): DataFrame = {
+    val calls = bronze("rpc_calls_erc721")
     def sel(selector: Array[Byte]): Column = col("call_data") === lit(selector)
     calls
       .groupBy(col("block_number"), col("contract_address").as("erc721"), col("chain_id"))
@@ -682,9 +673,9 @@ object ChainDatasets {
 
   /** datasets/erc20_balances.rs:8-58 — balanceOf(address) results; the
     * queried address is recovered from the calldata tail. */
-  def erc20Balances(spark: SparkSession, dir: String,
+  def erc20Balances(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
-    fx(spark, dir, "rpc_calls")
+    bronze("rpc_calls")
       .filter(expr("substring(call_data, 1, 4)") === lit(GenFixtures.selBalanceOf) &&
         length(col("call_data")) === 36)
       .select(Seq(col("block_number"), col("contract_address").as("erc20"),

@@ -52,7 +52,8 @@ object DiffTest {
     * entry but javascript_traces, whose opaque JSON output compares
     * through canonJs, at default options, in name order */
   val corpus: Seq[(String, Freeze.DatasetBuilder)] =
-    (Freeze.builders - "javascript_traces").toSeq.sortBy(_._1)
+    (Freeze.catalog.keySet - "javascript_traces").toSeq.sorted
+      .map(n => n -> Freeze.builder(n))
 
   /** canonical row rendering: null-safe, binary as hex, deterministic
     * sort — engine-neutral so two collections compare as row SETS */
@@ -180,10 +181,10 @@ object DiffTest {
     materializeBronzes(spark, src, refDir, live, range, nParts, jsTracer)
 
     def compare(name: String, c: DataFrame => Seq[String],
-        bld: (SparkSession, String) => DataFrame,
+        bld: Freeze.DatasetBuilder,
         allowEmpty: Boolean = false): Outcome = {
-      val ref = c(bld(spark, refDir))
-      val liv = c(bld(spark, live))
+      val ref = c(bld(Bronze.dir(spark, refDir)))
+      val liv = c(bld(Bronze.dir(spark, live)))
       Outcome(name, ref.size, liv.size,
         ref.zipAll(liv, "<missing>", "<missing>").find(p => p._1 != p._2),
         allowEmpty)
@@ -191,7 +192,7 @@ object DiffTest {
 
     val scalar = corpus.map { case (n, bld) => compare(n, canon, bld) }
     val js = compare("javascript_traces", canonJs,
-      (s, d) => ChainDatasets.javascriptTraces(s, d))
+      ChainDatasets.javascriptTraces)
 
     // by-transaction dimension: hash list sampled from one reference
     // block (cryo_test default_combos pairs every datatype with both
@@ -225,7 +226,7 @@ object DiffTest {
         val ds = try Some(Datatypes(name)) catch { case _: Throwable => None }
         if (!ds.exists(_.byTransaction)) None
         else Some(compare(s"$name (by-transaction)", canon,
-          (s, d) => Freeze.collectByTransaction(s, d, name, hashes),
+          Freeze.collectByTransaction(_, name, hashes),
           allowEmpty = true))
       }
     scalar ++ Seq(js) ++ byTx

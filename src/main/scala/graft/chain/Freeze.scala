@@ -90,8 +90,8 @@ object Freeze {
     s"${spec.network}__${dataset}${label}__${chunkStub(r)}.${spec.format}"
   }
 
-  /** dataset name → full DataFrame builder over the fixture/RPC source dir */
-  type DatasetBuilder = (SparkSession, String) => DataFrame
+  /** dataset name → full DataFrame builder over its bronze tables */
+  type DatasetBuilder = Bronze => DataFrame
 
   /** The schema and filter settings a builder takes: `--u256-types`,
     * `--include-columns`, `--exclude-columns`, `--columns`,
@@ -114,9 +114,10 @@ object Freeze {
     Entry(_ => tables.toSet, build)
 
   /** The chain catalog: every dataset by canonical name. Live extraction
-    * fetches an entry's bronze (RpcSource.materializeBronze), a multi
-    * bundle persists the union of its members' bronze (collectMulti),
-    * and BronzeDepsSpec builds every entry from its bronze alone. */
+    * fetches exactly an entry's bronze (RpcSource.fetchBronze), a multi
+    * bundle holds the union of its members' bronze in one persisted
+    * Bronze (collectMulti), and BronzeDepsSpec builds every entry from a
+    * Bronze holding its declared tables alone. */
   val catalog: Map[String, Entry] = {
     import graft.chain.{ChainDatasets => CD}
     val logs = "rpc_logs"
@@ -129,63 +130,67 @@ object Freeze {
       "rpc_nonce_diffs", "rpc_storage_diffs")
     Map(
       "blocks" -> reads("rpc_blocks")(o =>
-        CD.blocks(_, _, o.include, o.exclude, o.columns)),
+        CD.blocks(_, o.include, o.exclude, o.columns)),
       "transactions" -> Entry(
         o => Set("rpc_transactions", "rpc_blocks") ++ (
           if (CD.transactionsNeedReceipts(o.excludeFailed,
               o.include, o.exclude, o.columns)) Set("rpc_receipts")
           else Set.empty),
-        o => CD.transactions(_, _, o.excludeFailed, o.include, o.exclude, o.columns)),
-      "logs" -> reads(logs)(o => CD.logs(_, _, eventSignature = o.eventSignature,
+        o => CD.transactions(_, o.excludeFailed, o.include, o.exclude, o.columns)),
+      "logs" -> reads(logs)(o => CD.logs(_, eventSignature = o.eventSignature,
         u256Reprs = o.u256Reprs, include = o.include, exclude = o.exclude,
         columns = o.columns)),
-      "traces" -> reads(traces)(o => CD.traces(_, _, o.excludeFailed)),
-      "erc20_transfers" -> reads(logs)(o => CD.erc20Transfers(_, _, o.u256Reprs)),
-      "erc20_approvals" -> reads(logs)(o => CD.erc20Approvals(_, _, o.u256Reprs)),
-      "erc721_transfers" -> reads(logs)(o => CD.erc721Transfers(_, _, o.u256Reprs)),
-      "native_transfers" -> reads(traces)(o => CD.nativeTransfers(_, _, o.u256Reprs)),
+      "traces" -> reads(traces)(o => CD.traces(_, o.excludeFailed)),
+      "erc20_transfers" -> reads(logs)(o => CD.erc20Transfers(_, o.u256Reprs)),
+      "erc20_approvals" -> reads(logs)(o => CD.erc20Approvals(_, o.u256Reprs)),
+      "erc721_transfers" -> reads(logs)(o => CD.erc721Transfers(_, o.u256Reprs)),
+      "native_transfers" -> reads(traces)(o => CD.nativeTransfers(_, o.u256Reprs)),
       "contracts" -> reads(traces)(_ => CD.contracts),
       "four_byte_counts" -> reads(traces)(_ => CD.fourByteCounts),
       "address_appearances" -> reads("rpc_blocks", "rpc_transactions",
         "rpc_receipts", logs, traces)(_ => CD.addressAppearances),
-      "balances" -> reads("rpc_accounts")(o => CD.balances(_, _, o.u256Reprs)),
+      "balances" -> reads("rpc_accounts")(o => CD.balances(_, o.u256Reprs)),
       "nonces" -> reads("rpc_accounts")(_ => CD.nonces),
       "codes" -> reads("rpc_accounts")(_ => CD.codes),
-      "slots" -> reads("rpc_storage")(o => CD.slots(_, _, o.u256Reprs)),
-      "storage_diffs" -> reads(diffs: _*)(o => CD.storageDiffs(_, _, o.u256Reprs)),
-      "balance_diffs" -> reads(diffs: _*)(o => CD.balanceDiffs(_, _, o.u256Reprs)),
+      "slots" -> reads("rpc_storage")(o => CD.slots(_, o.u256Reprs)),
+      "storage_diffs" -> reads(diffs: _*)(o => CD.storageDiffs(_, o.u256Reprs)),
+      "balance_diffs" -> reads(diffs: _*)(o => CD.balanceDiffs(_, o.u256Reprs)),
       "nonce_diffs" -> reads(diffs: _*)(_ => CD.nonceDiffs),
       "code_diffs" -> reads(diffs: _*)(_ => CD.codeDiffs),
-      "geth_balance_diffs" -> reads(prestate)(o => CD.gethBalanceDiffs(_, _, o.u256Reprs)),
+      "geth_balance_diffs" -> reads(prestate)(o => CD.gethBalanceDiffs(_, o.u256Reprs)),
       "geth_code_diffs" -> reads(prestate)(_ => CD.gethCodeDiffs),
       "geth_nonce_diffs" -> reads(prestate)(_ => CD.gethNonceDiffs),
-      "geth_storage_diffs" -> reads(prestate)(o => CD.gethStorageDiffs(_, _, o.u256Reprs)),
-      "balance_reads" -> reads(prestate)(o => CD.balanceReads(_, _, o.u256Reprs)),
+      "geth_storage_diffs" -> reads(prestate)(o => CD.gethStorageDiffs(_, o.u256Reprs)),
+      "balance_reads" -> reads(prestate)(o => CD.balanceReads(_, o.u256Reprs)),
       "code_reads" -> reads(prestate)(_ => CD.codeReads),
       "nonce_reads" -> reads(prestate)(_ => CD.nonceReads),
       "storage_reads" -> reads(prestate)(_ => CD.storageReads),
       "eth_calls" -> reads(calls)(_ => CD.ethCalls),
       "erc20_metadata" -> reads(calls)(_ => CD.erc20Metadata),
-      "erc20_supplies" -> reads(calls)(o => CD.erc20Supplies(_, _, o.u256Reprs)),
-      "erc20_balances" -> reads(calls)(o => CD.erc20Balances(_, _, o.u256Reprs)),
+      "erc20_supplies" -> reads(calls)(o => CD.erc20Supplies(_, o.u256Reprs)),
+      "erc20_balances" -> reads(calls)(o => CD.erc20Balances(_, o.u256Reprs)),
       // tracer-family datasets are catalogued like the rest so the CLI
       // freeze path covers them, not just the driver query registry
       "vm_traces" -> reads("rpc_vm_traces")(_ => CD.vmTraces),
-      "geth_opcodes" -> reads("rpc_geth_opcodes")(_ => CD.gethOpcodes(_, _)),
-      "geth_calls" -> reads("rpc_geth_calls")(o => CD.gethCalls(_, _, o.u256Reprs)),
+      "geth_opcodes" -> reads("rpc_geth_opcodes")(_ => CD.gethOpcodes(_)),
+      "geth_calls" -> reads("rpc_geth_calls")(o => CD.gethCalls(_, o.u256Reprs)),
       "javascript_traces" -> reads("rpc_js_traces")(_ => CD.javascriptTraces),
       "trace_calls" -> reads("rpc_trace_calls")(_ => CD.traceCalls),
       "erc721_metadata" -> reads("rpc_calls_erc721")(_ => CD.erc721Metadata))
   }
 
-  /** every dataset's builder at the default options */
-  val builders: Map[String, DatasetBuilder] =
-    catalog.transform((_, e) => e.build(BuildOptions()))
+  /** a dataset's builder at the default options */
+  def builder(dataset: String): DatasetBuilder =
+    catalog(dataset).build(BuildOptions())
+
+  /** every dataset's default builder over a bronze directory */
+  val builders: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.transform((name, _) => (spark, dir) => builder(name)(Bronze.dir(spark, dir)))
 
   /** In-memory collect — the library API of the reference
     * (cryo collect.rs:5-30): one dataset, no files. Takes the same
     * schema/representation options as the CLI. */
-  def collect(spark: SparkSession, sourceDir: String, dataset: String,
+  def collect(bronze: Bronze, dataset: String,
       blocks: BlockSyntax.Blocks,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
@@ -193,7 +198,7 @@ object Freeze {
       hex: Boolean = false): DataFrame = {
     val canonical = Datatypes(dataset).name
     val df0 = catalog(canonical).build(
-      BuildOptions(u256Reprs, include, exclude, columns))(spark, sourceDir)
+      BuildOptions(u256Reprs, include, exclude, columns))(bronze)
     val df = if (hex) hexifyBinary(df0) else df0
     filterBlocks(df, blocks)
   }
@@ -217,11 +222,11 @@ object Freeze {
     * (cryo types/queries.rs:75-80, collect_generic.rs:14-19): the unit of
     * collection is a tx-hash list instead of a block range. Hash lists are
     * small → an isin/broadcast-semi filter on transaction_hash. */
-  def collectByTransaction(spark: SparkSession, sourceDir: String,
-      dataset: String, txHashes: Seq[Array[Byte]]): DataFrame = {
+  def collectByTransaction(bronze: Bronze, dataset: String,
+      txHashes: Seq[Array[Byte]]): DataFrame = {
     val ds = Datatypes(dataset)
     require(ds.byTransaction, s"${ds.name} does not support tx-hash collection")
-    val df = builders(ds.name)(spark, sourceDir)
+    val df = builder(ds.name)(bronze)
     if (df.columns.contains("transaction_hash"))
       df.filter(col("transaction_hash").isin(txHashes: _*))
     else {
@@ -231,7 +236,7 @@ object Freeze {
       // transactions bronze, then filter the block dimension. The
       // collect is |hash list|-bounded (tx lists are small by
       // construction, the same discipline as the isin filter above).
-      val bns = ChainDatasets.fx(spark, sourceDir, "rpc_transactions")
+      val bns = bronze("rpc_transactions")
         .filter(col("transaction_hash").isin(txHashes: _*))
         .select("block_number").distinct()
         .collect().map(_.get(0)).toSeq
@@ -248,22 +253,19 @@ object Freeze {
     }
 
   /** Multi-dataset collection sharing one extraction pass
-    * (cryo types/datatypes/meta.rs:23-39 clustering): the shared bronze
-    * table is persisted once; member builders hit Spark's cache manager
-    * via plan-fragment matching, so N member tables cost one scan.
-    * Call `release()` when done.
+    * (cryo types/datatypes/meta.rs:23-39 clustering): the union of the
+    * members' bronze tables is held once in a `Bronze.persisted`, and
+    * every member builds from it, so N member tables cost one scan of
+    * each table. Call `release()` when done.
     */
   case class MultiResult(tables: Map[String, DataFrame], release: () => Unit)
 
-  def collectMulti(spark: SparkSession, sourceDir: String,
-      multiName: String): MultiResult = {
+  def collectMulti(bronze: Bronze, multiName: String): MultiResult = {
     val members = Datatypes.multis.getOrElse(multiName,
       throw new IllegalArgumentException(s"unknown multi: $multiName"))
-    val bronze = members.flatMap(catalog(_).bronze(BuildOptions())).distinct
-      .map(ChainDatasets.fx(spark, sourceDir, _))
-    bronze.foreach(_.persist())
-    val tables = members.map(m => m -> builders(m)(spark, sourceDir)).toMap
-    MultiResult(tables, () => bronze.foreach(_.unpersist()))
+    val held = Bronze.persisted(members.flatMap(catalog(_).bronze(BuildOptions()))
+      .distinct.map(t => t -> bronze(t)).toMap)
+    MultiResult(members.map(m => m -> builder(m)(held)).toMap, () => held.release())
   }
 
   private sealed trait TaskOutcome
@@ -281,10 +283,10 @@ object Freeze {
     * discovered in ONE job per dataset (a broadcast range-join against the
     * chunk table) instead of a driver collect per chunk.
     */
-  def freeze(spark: SparkSession, sourceDir: String, spec: FreezeSpec,
+  def freeze(bronze: Bronze, spec: FreezeSpec,
       overrides: Map[String, DatasetBuilder] = Map.empty): FreezeResult = {
     def builderOf(canonical: String): DatasetBuilder =
-      overrides.getOrElse(canonical, builders(canonical))
+      overrides.getOrElse(canonical, builder(canonical))
     // a label equal to a dataset name would make cryo filenames
     // ambiguous for lake readers (Lake.readStream prunes by globbing
     // the dataset segment; `*__blocks__*` would also match a
@@ -327,18 +329,19 @@ object Freeze {
           chunks.indices
             .map(_ -> spec.partitionValues.map(Option(_))).toMap
         case Some(dim) =>
+          // spec.blocks, NOT the densified range: a Numbers list must
+          // not discover dim values that exist only at unlisted blocks
+          // (runTask's membership filter would then write empty
+          // partition files for them)
+          val scan = filterBlocks(builderOf(canonical)(bronze), spec.blocks)
+          val spark = scan.sparkSession
           import spark.implicits._
           val bounds = chunks.zipWithIndex
             .map { case (c, i) => (i, c.start, c.endExclusive) }
             .toDF("chunk_idx", "c_start", "c_end")
           // limit BEFORE collect: bounds the driver-side list, so a
           // high-cardinality dim fails fast instead of OOMing the driver.
-          // spec.blocks, NOT the densified range: a Numbers list must
-          // not discover dim values that exist only at unlisted blocks
-          // (runTask's membership filter would then write empty
-          // partition files for them)
-          val collected = filterBlocks(builderOf(canonical)(spark, sourceDir), spec.blocks)
-            .join(broadcast(bounds),
+          val collected = scan.join(broadcast(bounds),
               col("block_number") >= col("c_start") &&
                 col("block_number") < col("c_end"))
             .select(col("chunk_idx"), col(dim).as("dim_value"))
@@ -395,7 +398,7 @@ object Freeze {
       if (LakeFs.exists(target) && !spec.overwrite) {
         Skipped(target) // freeze.rs:92-110 idempotent skip
       } else try {
-        val ranged = filterBlocks(builderOf(canonical)(spark, sourceDir), chunk)
+        val ranged = filterBlocks(builderOf(canonical)(bronze), chunk)
         // explicit block LISTS (a:b/n sampling, a:b:k strides, parquet
         // refs) keep their membership filter inside each chunk — the
         // chunk range alone would admit unlisted blocks
@@ -444,6 +447,10 @@ object Freeze {
     writeReport(spec, tStart, Some(result))
     result
   }
+
+  /** `freeze` over the bronze tables of a directory */
+  def freeze(spark: SparkSession, sourceDir: String, spec: FreezeSpec): FreezeResult =
+    freeze(Bronze.dir(spark, sourceDir), spec)
 
   /** re-encode all binary columns as 0x-hex strings */
   private[graft] def hexifyBinary(df: DataFrame): DataFrame = {

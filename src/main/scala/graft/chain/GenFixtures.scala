@@ -63,7 +63,7 @@ object GenFixtures {
     * bench-scale variant while the default stays the canonical 60-block
     * correctness fixture the oracle SQL reads. */
   def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "/root/repo/fixtures/chain"
+    val out = if (args.nonEmpty) args(0) else graft.queries.ChainQueries.FixDir
     val nb = if (args.length > 1) args(1).toInt else NBlocks
     val spark = graft.GraftSession()
     generate(spark, out, nb)

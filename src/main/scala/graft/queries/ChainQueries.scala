@@ -1,11 +1,11 @@
 package graft.queries
 
-import graft.chain.{BlockSyntax, ChainDatasets => CD, Freeze, GenFixtures, Lake}
+import graft.chain.{BlockSyntax, Bronze, ChainDatasets => CD, Freeze, GenFixtures, Lake}
 import graft.functions.U256
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-contract entries for the chain datasets (SURVEY §2.1), running
-  * over the deterministic chain fixtures at /root/repo/fixtures/chain
+  * over the deterministic chain fixtures at fixtures/chain
   * (they ignore the sf dir — the chain tables are scale-independent).
   *
   * Oracle SQL reads the same parquet via read_parquet() with byte-level
@@ -17,7 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object ChainQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  val FixDir = "/root/repo/fixtures/chain"
+  /** the checkout's fixtures: `fixtures/chain` under the working
+    * directory, absolute because the oracle SQL reads it elsewhere */
+  val FixDir: String = new java.io.File("fixtures/chain").getAbsolutePath
 
   /** Resolve the chain fixture dir for a testdata sf dir: an sf-scaled
     * variant (`fixtures/chain_sf0.1`, generated by GenFixtures with a
@@ -28,8 +30,8 @@ object ChainQueries {
     * identical inputs there). */
   def chainDir(sfDir: String): String = {
     val base = new java.io.File(sfDir).getName
-    val cand = s"/root/repo/fixtures/chain_$base"
-    if (new java.io.File(cand).isDirectory) cand else FixDir
+    val cand = new java.io.File(s"fixtures/chain_$base")
+    if (cand.isDirectory) cand.getAbsolutePath else FixDir
   }
 
   /** The sf dir the oracle SQL should resolve fixtures against. Verify
@@ -343,8 +345,12 @@ object ChainQueries {
       org.apache.spark.sql.types.StructType]
   private def hexBlocksSchema(s: SparkSession, fixDir: String) =
     hexBlocksSchemas.computeIfAbsent(fixDir, _ =>
-      Freeze.collect(s, fixDir, "blocks", BlockSyntax.Range(1000, 1001),
+      Freeze.collect(Bronze.dir(s, fixDir), "blocks", BlockSyntax.Range(1000, 1001),
         hex = true).schema)
+
+  /** the chain fixture bronze for a testdata sf dir */
+  private def bronze(s: SparkSession, sfDir: String): Bronze =
+    Bronze.dir(s, chainDir(sfDir))
 
   private val rawDefs: Map[String, Q] = Map(
     // Frozen-lake read-back — freeze the fixture blocks into a 6-chunk
@@ -437,16 +443,16 @@ object ChainQueries {
         min(col("block_number")).as("first_block"),
         max(col("block_number")).as("last_block"))
     },
-    "chain_blocks" -> ((s, d) => CD.blocks(s, chainDir(d))),
+    "chain_blocks" -> ((s, d) => CD.blocks(bronze(s, d))),
     "chain_transactions" -> { (s, d) =>
-      CD.transactions(s, chainDir(d)).select(
+      CD.transactions(bronze(s, d)).select(
         "block_number", "transaction_index", "transaction_hash",
         "from_address", "to_address", "value", "gas_limit", "gas_used",
         "gas_price", "transaction_type", "success", "n_input_bytes",
         "n_input_zero_bytes", "chain_id")
     },
     "chain_transactions_exclude_failed" -> { (s, d) =>
-      CD.transactions(s, chainDir(d), excludeFailed = true)
+      CD.transactions(bronze(s, d), excludeFailed = true)
         .select("block_number", "transaction_index", "transaction_hash",
           "success", "gas_price", "chain_id")
     },
@@ -458,7 +464,7 @@ object ChainQueries {
     // scale, and DuckDB errors on bigint overflow where Spark wraps).
     "chain_fee_analytics" -> { (s, d) =>
       import org.apache.spark.sql.functions._
-      CD.transactions(s, chainDir(d))
+      CD.transactions(bronze(s, d))
         .groupBy("block_number")
         .agg(count(lit(1)).as("n_txs"),
           sum(when(col("success"), 1L).otherwise(0L)).as("n_success"),
@@ -481,7 +487,7 @@ object ChainQueries {
     "chain_fee_percentiles" -> { (s, d) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val ranked = CD.transactions(s, chainDir(d))
+      val ranked = CD.transactions(bronze(s, d))
         .select("block_number", "transaction_index", "gas_price")
         .filter(col("gas_price").isNotNull)
         .withColumn("rn", row_number().over(Window.partitionBy("block_number")
@@ -505,7 +511,7 @@ object ChainQueries {
     // aggregates Catalyst plans itself.
     "chain_factory_stats" -> { (s, d) =>
       import org.apache.spark.sql.functions._
-      CD.contracts(s, chainDir(d))
+      CD.contracts(bronze(s, d))
         .groupBy(col("factory"))
         .agg(count(lit(1)).as("n_contracts"),
           countDistinct(col("deployer")).as("n_deployers"),
@@ -540,7 +546,7 @@ object ChainQueries {
     "chain_erc20_net_flows" -> { (s, d) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.GraftSql
-      val t = CD.erc20Transfers(s, chainDir(d), u256Reprs = Seq(U256.Binary))
+      val t = CD.erc20Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))
         .select(col("erc20"), col("from_address"), col("to_address"),
           GraftSql.column(graft.functions.U256ToDecimal(
             GraftSql.expression(col("value_binary")))).as("v"))
@@ -566,18 +572,18 @@ object ChainQueries {
           (sum(col("in_v")) - sum(col("out_v")))
             .cast("decimal(38,0)").cast("double").as("net_flow"))
     },
-    "chain_logs" -> ((s, d) => CD.logs(s, chainDir(d))),
+    "chain_logs" -> ((s, d) => CD.logs(bronze(s, d))),
     "chain_logs_decoded" -> { (s, d) =>
-      CD.logs(s, chainDir(d),
+      CD.logs(bronze(s, d),
         eventSignature = Some("Transfer(address indexed from, address indexed to, uint256 value)"),
         u256Reprs = Seq(U256.Binary))
     },
     "chain_erc20_transfers" -> ((s, d) =>
-      CD.erc20Transfers(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.erc20Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     // hex output mode (--hex / CSV coupling): binary → 0x-prefixed strings
     "chain_logs_hex" -> { (s, d) =>
       import org.apache.spark.sql.types.BinaryType
-      val df = CD.logs(s, chainDir(d))
+      val df = CD.logs(bronze(s, d))
       df.select(df.schema.fields.map { f =>
         if (f.dataType == BinaryType)
           graft.functions.HexCodec.toHex(org.apache.spark.sql.functions.col(f.name)).as(f.name)
@@ -585,66 +591,66 @@ object ChainQueries {
       }.toSeq: _*)
     },
     "chain_erc20_approvals" -> ((s, d) =>
-      CD.erc20Approvals(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.erc20Approvals(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_erc721_transfers" -> ((s, d) =>
-      CD.erc721Transfers(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
-    "chain_traces" -> ((s, d) => CD.traces(s, chainDir(d))),
+      CD.erc721Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_traces" -> ((s, d) => CD.traces(bronze(s, d))),
     "chain_traces_exclude_failed" -> ((s, d) =>
-      CD.traces(s, chainDir(d), excludeFailed = true)
+      CD.traces(bronze(s, d), excludeFailed = true)
         .select("block_number", "transaction_index", "transaction_hash",
           "trace_address", "action_type", "error", "chain_id")),
     "chain_native_transfers" -> ((s, d) =>
-      CD.nativeTransfers(s, chainDir(d), u256Reprs = Seq(U256.Str))),
+      CD.nativeTransfers(bronze(s, d), u256Reprs = Seq(U256.Str))),
     "chain_contracts" -> ((s, d) =>
-      CD.contracts(s, chainDir(d))
+      CD.contracts(bronze(s, d))
         .select("block_number", "create_index", "transaction_hash",
           "contract_address", "deployer", "factory", "n_init_code_bytes",
           "n_code_bytes", "chain_id")),
-    "chain_four_byte_counts" -> ((s, d) => CD.fourByteCounts(s, chainDir(d))),
-    "chain_address_appearances" -> ((s, d) => CD.addressAppearances(s, chainDir(d))),
+    "chain_four_byte_counts" -> ((s, d) => CD.fourByteCounts(bronze(s, d))),
+    "chain_address_appearances" -> ((s, d) => CD.addressAppearances(bronze(s, d))),
     "chain_balances" -> ((s, d) =>
-      CD.balances(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonces" -> ((s, d) => CD.nonces(s, chainDir(d))),
+      CD.balances(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_nonces" -> ((s, d) => CD.nonces(bronze(s, d))),
     "chain_slots" -> ((s, d) =>
-      CD.slots(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.slots(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_storage_diffs" -> ((s, d) =>
-      CD.storageDiffs(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.storageDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_eth_calls" -> ((s, d) =>
-      CD.ethCalls(s, chainDir(d))
+      CD.ethCalls(bronze(s, d))
         .select("block_number", "contract_address", "call_data",
           "output_data", "chain_id")),
     "chain_balance_diffs" -> ((s, d) =>
-      CD.balanceDiffs(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonce_diffs" -> ((s, d) => CD.nonceDiffs(s, chainDir(d))),
-    "chain_code_diffs" -> ((s, d) => CD.codeDiffs(s, chainDir(d))),
-    "chain_codes" -> ((s, d) => CD.codes(s, chainDir(d))),
-    "chain_vm_traces" -> ((s, d) => CD.vmTraces(s, chainDir(d))),
-    "chain_geth_opcodes" -> ((s, d) => CD.gethOpcodes(s, chainDir(d))),
+      CD.balanceDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_nonce_diffs" -> ((s, d) => CD.nonceDiffs(bronze(s, d))),
+    "chain_code_diffs" -> ((s, d) => CD.codeDiffs(bronze(s, d))),
+    "chain_codes" -> ((s, d) => CD.codes(bronze(s, d))),
+    "chain_vm_traces" -> ((s, d) => CD.vmTraces(bronze(s, d))),
+    "chain_geth_opcodes" -> ((s, d) => CD.gethOpcodes(bronze(s, d))),
     "chain_geth_calls" -> ((s, d) =>
-      CD.gethCalls(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.gethCalls(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_js_traces" -> { (s, d) =>
       import org.apache.spark.sql.functions.{col, get_json_object}
-      CD.javascriptTraces(s, chainDir(d))
+      CD.javascriptTraces(bronze(s, d))
         .withColumn("gas_used", get_json_object(col("output"), "$.gasUsed").cast("long"))
     },
-    "chain_trace_calls" -> ((s, d) => CD.traceCalls(s, chainDir(d))),
+    "chain_trace_calls" -> ((s, d) => CD.traceCalls(bronze(s, d))),
     "chain_balance_reads" -> ((s, d) =>
-      CD.balanceReads(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonce_reads" -> ((s, d) => CD.nonceReads(s, chainDir(d))),
-    "chain_code_reads" -> ((s, d) => CD.codeReads(s, chainDir(d))),
-    "chain_storage_reads" -> ((s, d) => CD.storageReads(s, chainDir(d))),
-    "chain_erc721_metadata" -> ((s, d) => CD.erc721Metadata(s, chainDir(d))),
+      CD.balanceReads(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_nonce_reads" -> ((s, d) => CD.nonceReads(bronze(s, d))),
+    "chain_code_reads" -> ((s, d) => CD.codeReads(bronze(s, d))),
+    "chain_storage_reads" -> ((s, d) => CD.storageReads(bronze(s, d))),
+    "chain_erc721_metadata" -> ((s, d) => CD.erc721Metadata(bronze(s, d))),
     "chain_geth_balance_diffs" -> ((s, d) =>
-      CD.gethBalanceDiffs(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.gethBalanceDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_geth_storage_diffs" -> ((s, d) =>
-      CD.gethStorageDiffs(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
-    "chain_geth_nonce_diffs" -> ((s, d) => CD.gethNonceDiffs(s, chainDir(d))),
-    "chain_geth_code_diffs" -> ((s, d) => CD.gethCodeDiffs(s, chainDir(d))),
-    "chain_erc20_metadata" -> ((s, d) => CD.erc20Metadata(s, chainDir(d))),
+      CD.gethStorageDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_geth_nonce_diffs" -> ((s, d) => CD.gethNonceDiffs(bronze(s, d))),
+    "chain_geth_code_diffs" -> ((s, d) => CD.gethCodeDiffs(bronze(s, d))),
+    "chain_erc20_metadata" -> ((s, d) => CD.erc20Metadata(bronze(s, d))),
     "chain_erc20_supplies" -> ((s, d) =>
-      CD.erc20Supplies(s, chainDir(d), u256Reprs = Seq(U256.Binary))),
+      CD.erc20Supplies(bronze(s, d), u256Reprs = Seq(U256.Binary))),
     "chain_erc20_balances" -> ((s, d) =>
-      CD.erc20Balances(s, chainDir(d), u256Reprs = Seq(U256.Binary)))
+      CD.erc20Balances(bronze(s, d), u256Reprs = Seq(U256.Binary)))
   )
 
   /** driver-facing entries: raw transforms behind the comparator-safe hex

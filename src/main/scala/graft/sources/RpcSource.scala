@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.reflect.ClassTag
 
-import graft.chain.{BlockSyntax, Freeze}
+import graft.chain.{BlockSyntax, Bronze, Freeze}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -487,7 +487,8 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * the transaction projection re-read local (spillable) bytes instead
     * of re-fetching from the node — the node round trips are the scarce
     * resource, not local IO. The third element unpersists the shared
-    * pass; call it after both frames are written. */
+    * pass; call it once both frames are materialized (fetchBronze does,
+    * after persisting them). */
   def fetchBlocksAndTransactions(spark: SparkSession, range: BlockSyntax.Range,
       numPartitions: Int = Int.MaxValue): (DataFrame, DataFrame, () => Unit) = {
     import org.apache.spark.storage.StorageLevel
@@ -689,8 +690,9 @@ class RpcSource(config: RpcConfig) extends Serializable {
         .select(common ++ Seq(col("slot"), col("from_bin").as("from_value"),
           col("to_bin").as("to_value"), col("chain_id")): _*)) ->
       // unpersist handle — same contract as fetchBlocksAndTransactions:
-      // the caller frees the shared replay pass after writing all four
-      // bronzes, or the MEMORY_AND_DISK blocks pin for the session
+      // the caller frees the shared replay pass once all four bronzes
+      // are materialized, or the MEMORY_AND_DISK blocks pin for the
+      // session
       (() => { unified.unpersist(); () })
   }
 
@@ -829,46 +831,56 @@ class RpcSource(config: RpcConfig) extends Serializable {
   def fetchChainId(): Long =
     RpcConfig.parseChainId(driverCall(RpcConfig.chainIdRequest(1)))
 
-  /** Live-mode bronze materialization for a CLI run: fetch ONLY the
-    * bronze tables the requested datasets read under `options` (their
-    * Freeze.catalog entries), into `outDir` — after this every
-    * ChainDatasets transform runs unchanged against outDir. A dataset
-    * whose bronze has no live fetch fails fast, and so do entity-scoped
-    * bronzes (accounts/storage/calls) without the matching entity lists.
+  /** The bronze a live run reads: ONLY the tables the requested
+    * datasets read under `options` (their Freeze.catalog entries), each
+    * fetched once and held in Spark's cache before this returns — the
+    * builders read it as they read a fixture dir, and nothing is staged
+    * on disk. The caller releases it. A dataset whose bronze has no live
+    * fetch, or an entity-scoped bronze (accounts/storage/calls) without
+    * its entity list, fails before any request.
     *
     * The options make the fetch column-aware: a transactions schema
-    * without gas_used and success skips the receipt fetch entirely — one
-    * fewer RPC per block on the most-used dataset (cryo
-    * transactions.rs:124-135 fetches receipts conditionally the same
-    * way).
-    *
-    * Every fetch is sized by the rule in `overList`, so each bronze
-    * table is written as at most one file per core; `numPartitions`
-    * lowers that bound. */
-  def materializeBronze(spark: SparkSession, outDir: String,
-      range: BlockSyntax.Range, datasets: Seq[String],
+    * without gas_used and success skips the receipt fetch (cryo
+    * transactions.rs:124-135). Range fetches cover the span of `blocks`;
+    * the point lookups (accounts, storage, eth_call, trace_call) go to
+    * the listed blocks only, like cryo's NumberChunk::Numbers. Each fetch
+    * is sized by `overList`'s rule; `numPartitions` lowers its bound. */
+  def fetchBronze(spark: SparkSession, blocks: BlockSyntax.Blocks,
+      datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
       calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
       numPartitions: Int = Int.MaxValue,
-      options: Freeze.BuildOptions = Freeze.BuildOptions()): Unit = {
-    val unknown = datasets.filterNot(d =>
-      Freeze.catalog.get(d).exists(_.bronze(options).subsetOf(RpcSource.liveBronze)))
-    require(unknown.isEmpty,
-      s"live extraction not wired for: ${unknown.mkString(", ")}")
-    val need = datasets.flatMap(Freeze.catalog(_).bronze(options)).toSet
-    val blocks = range.start until range.endExclusive
-    def write(name: String, df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      options: Freeze.BuildOptions = Freeze.BuildOptions()): Bronze = {
+    val need = RpcSource.liveTables(datasets, options)
+    require(!need("rpc_accounts") || addresses.nonEmpty,
+      "balances/nonces/codes live extraction requires --address")
+    require(!need("rpc_storage") || (slots.nonEmpty && addresses.nonEmpty),
+      "slots live extraction requires --address and --slot")
+    require(!need("rpc_calls") || calls.nonEmpty,
+      "eth_calls live extraction requires --contract and --call-data/--function")
+    require(!need("rpc_trace_calls") || calls.nonEmpty,
+      "trace_calls live extraction requires --contract and --call-data/--function")
+    require(!need("rpc_js_traces") || jsTracer.nonEmpty,
+      "javascript_traces live extraction requires --js-tracer")
+    val range = BlockSyntax.span(blocks)
+    val listed = blocks match {
+      case BlockSyntax.Range(a, b) => a until b
+      case BlockSyntax.Numbers(ns) => ns.distinct.sorted
+    }
+    // a ListMap keeps the fetch order below
+    val frames = scala.collection.immutable.ListMap.newBuilder[String, DataFrame]
+    // raw passes shared by several tables, unpersisted once the tables
+    // derived from them are held
+    val shared = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     def put(name: String)(df: => DataFrame): Unit =
-      if (need(name)) write(name, df)
+      if (need(name)) frames += name -> df
     if (need("rpc_transactions")) {
       // blocks_and_transactions multi: ONE full-block pass serves both
       // bronzes — every dataset that reads rpc_transactions also reads
       // rpc_blocks, so there is no separate header fetch
       val (b, t, done) = fetchBlocksAndTransactions(spark, range, numPartitions)
-      write("rpc_blocks", b)
-      write("rpc_transactions", t)
-      done()
+      frames ++= Seq("rpc_blocks" -> b, "rpc_transactions" -> t)
+      shared += done
     } else put("rpc_blocks")(fetchBlocks(spark, range, numPartitions))
     put("rpc_receipts")(fetchReceipts(spark, range, numPartitions))
     put("rpc_logs")(fetchLogs(spark, range, numPartitions = numPartitions))
@@ -878,36 +890,34 @@ class RpcSource(config: RpcConfig) extends Serializable {
     put("rpc_geth_opcodes")(fetchGethOpcodes(spark, range, numPartitions))
     put("rpc_vm_traces")(fetchVmTraces(spark, range, numPartitions))
     if (need.exists(_.endsWith("_diffs"))) {
-      val (diffs, diffsDone) = fetchStateDiffs(spark, range, numPartitions)
+      val (diffs, done) = fetchStateDiffs(spark, range, numPartitions)
       diffs.foreach { case (name, df) => put(name)(df) }
-      diffsDone()
+      shared += done
     }
-    if (need("rpc_accounts")) {
-      require(addresses.nonEmpty,
-        "balances/nonces/codes live extraction requires --address")
-      write("rpc_accounts", fetchAccounts(spark, blocks, addresses, numPartitions))
-    }
-    if (need("rpc_storage")) {
-      require(slots.nonEmpty && addresses.nonEmpty,
-        "slots live extraction requires --address and --slot")
-      val pairs = for (a <- addresses; s <- slots) yield (a, s)
-      write("rpc_storage", fetchStorage(spark, blocks, pairs, numPartitions))
-    }
-    if (need("rpc_calls")) {
-      require(calls.nonEmpty,
-        "eth_calls live extraction requires --contract and --call-data/--function")
-      write("rpc_calls", fetchEthCalls(spark, blocks, calls, numPartitions))
-    }
-    if (need("rpc_trace_calls")) {
-      require(calls.nonEmpty,
-        "trace_calls live extraction requires --contract and --call-data/--function")
-      write("rpc_trace_calls", fetchTraceCalls(spark, blocks, calls, numPartitions))
-    }
-    if (need("rpc_js_traces")) {
-      require(jsTracer.nonEmpty,
-        "javascript_traces live extraction requires --js-tracer")
-      write("rpc_js_traces", fetchJsTraces(spark, range, jsTracer.get, numPartitions))
-    }
+    put("rpc_accounts")(fetchAccounts(spark, listed, addresses, numPartitions))
+    put("rpc_storage")(fetchStorage(spark, listed,
+      for (a <- addresses; s <- slots) yield (a, s), numPartitions))
+    put("rpc_calls")(fetchEthCalls(spark, listed, calls, numPartitions))
+    put("rpc_trace_calls")(fetchTraceCalls(spark, listed, calls, numPartitions))
+    put("rpc_js_traces")(fetchJsTraces(spark, range, jsTracer.get, numPartitions))
+    try Bronze.persisted(frames.result())
+    finally shared.foreach(_())
+  }
+
+  /** `fetchBronze`, with each fetched table written to
+    * `outDir/<table>.parquet`, for callers that read bronze back from a
+    * directory (DiffTest's live side). */
+  def materializeBronze(spark: SparkSession, outDir: String,
+      blocks: BlockSyntax.Blocks, datasets: Seq[String],
+      addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
+      calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
+      numPartitions: Int = Int.MaxValue,
+      options: Freeze.BuildOptions = Freeze.BuildOptions()): Unit = {
+    val bronze = fetchBronze(spark, blocks, datasets, addresses, slots,
+      calls, jsTracer, numPartitions, options)
+    try RpcSource.liveTables(datasets, options).foreach(name =>
+      bronze(name).write.mode("overwrite").parquet(s"$outDir/$name.parquet"))
+    finally bronze.release()
   }
 }
 
@@ -1079,11 +1089,22 @@ object RpcSource {
     "rpc_vm_traces" -> vmTracesSchema, "rpc_accounts" -> accountsSchema,
     "rpc_storage" -> storageSchema, "rpc_trace_calls" -> traceCallsSchema)
 
-  /** the bronze tables materializeBronze can write: the fetched ones
-    * above plus the four state-diff tables fetchStateDiffs projects from
-    * its one replay pass */
+  /** the bronze tables fetchBronze can fetch: the ones above plus the
+    * four state-diff tables fetchStateDiffs projects from its one replay
+    * pass */
   private val liveBronze: Set[String] = bronzeSchemas.keySet ++ Set(
     "rpc_balance_diffs", "rpc_code_diffs", "rpc_nonce_diffs", "rpc_storage_diffs")
+
+  /** the bronze tables `datasets` read under `options`; a dataset whose
+    * bronze has no live fetch is refused before any request */
+  private def liveTables(datasets: Seq[String],
+      options: Freeze.BuildOptions): Set[String] = {
+    val unknown = datasets.filterNot(d =>
+      Freeze.catalog.get(d).exists(_.bronze(options).subsetOf(liveBronze)))
+    require(unknown.isEmpty,
+      s"live extraction not wired for: ${unknown.mkString(", ")}")
+    datasets.flatMap(Freeze.catalog(_).bronze(options)).toSet
+  }
 
   /** tagged union of the four state-diff families — one fetch pass,
     * projected into the per-family bronze shapes by fetchStateDiffs */

@@ -690,8 +690,10 @@ object FollowMode {
     * the bronze dir, where the SAME readAppendOnly → incrementalFreeze
     * pipeline (checkpointed, idempotent skip-existing) materializes
     * completed chunks as cryo-named files — no manual re-runs. Smallest
-    * honest scope: headers only (spec.datasets = blocks); the wider
-    * bronze set follows the same append pattern via materializeBronze.
+    * honest scope: headers only (spec.datasets = blocks). The append dir
+    * is a bronze directory, read through `Bronze.dir` by the freeze; a
+    * `Cli.run --rpc` freeze instead holds its fetched bronze in memory
+    * (RpcSource.fetchBronze) and stages nothing on disk.
     * Bounded by `maxPolls`; returns once the spec's range is fully
     * observed (or the poll budget runs out) and the stream has drained.
     *

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import graft.chain.{Datatypes, Freeze, LakeFs}
+import graft.chain.{Bronze, Datatypes, Freeze}
 import graft.queries.ChainQueries
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,18 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads: live extraction fetches exactly those, and a multi bundle
   * persists their union. A builder that reads a bronze its entry leaves
   * out would fail on every live freeze, so each entry is built from a
-  * directory holding only its declared bronzes. */
+  * Bronze holding only its declared tables. */
 class BronzeDepsSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def copyTree(from: Path, to: Path): Unit = {
-    val files = Files.walk(from)
-    try files.forEach { p =>
-      val dst = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(dst)
-      else Files.copy(p, dst)
-    } finally files.close()
-  }
 
   test("the catalog has one entry per dataset and per multi member") {
     assert(Freeze.catalog.keySet == Datatypes.canonicalNames,
@@ -31,21 +20,20 @@ class BronzeDepsSpec extends AnyFunSuite {
   }
 
   test("every catalog entry builds from its declared bronzes alone") {
-    val root = Files.createTempDirectory("graft_bronze_deps")
+    val fixtures = Bronze.dir(spark, ChainQueries.FixDir)
+    for ((dataset, entry) <- Freeze.catalog.toSeq.sortBy(_._1)) {
+      val declared = entry.bronze(Freeze.BuildOptions())
+      val bronze = Bronze.persisted(declared.map(t => t -> fixtures(t)).toMap)
+      try withClue(s"$dataset from ${declared.toSeq.sorted.mkString(", ")}: ") {
+        entry.build(Freeze.BuildOptions())(bronze)
+          .write.format("noop").mode("overwrite").save()
+      } finally bronze.release()
+    }
+    // a table the Bronze does not hold fails by its name
+    val blocksOnly = Bronze.persisted(Map("rpc_blocks" -> fixtures("rpc_blocks")))
     try {
-      for ((dataset, entry) <- Freeze.catalog.toSeq.sortBy(_._1)) {
-        val bronzes = entry.bronze(Freeze.BuildOptions())
-        val dir = root.resolve(dataset)
-        Files.createDirectories(dir)
-        bronzes.foreach { b =>
-          copyTree(Paths.get(ChainQueries.FixDir, s"$b.parquet"),
-            dir.resolve(s"$b.parquet"))
-        }
-        withClue(s"$dataset from ${bronzes.toSeq.sorted.mkString(", ")}: ") {
-          entry.build(Freeze.BuildOptions())(spark, dir.toString)
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-    } finally LakeFs.deleteTree(root.toString)
+      val e = intercept[NoSuchElementException](blocksOnly("rpc_logs"))
+      assert(e.getMessage.contains("rpc_logs"), e.getMessage)
+    } finally blocksOnly.release()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.math.BigInteger
 
-import graft.chain.{ChainDatasets, Datatypes, GenFixtures, TableSchema}
+import graft.chain.{Bronze, ChainDatasets, Datatypes, GenFixtures, TableSchema}
 import graft.functions.{Keccak, U256}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -107,11 +107,11 @@ class ChainDatasetsSpec extends AnyFunSuite {
   private val dir = graft.queries.ChainQueries.FixDir
 
   test("transactions: EIP-1559 effective gas price and success flag") {
-    val t = ChainDatasets.transactions(spark, dir)
+    val t = ChainDatasets.transactions(Bronze.dir(spark, dir))
     val type2 = t.filter(col("transaction_type") === 2).collect()
     assert(type2.nonEmpty)
     // effective price never exceeds max_fee
-    val raw = ChainDatasets.fx(spark, dir, "rpc_transactions")
+    val raw = Bronze.dir(spark, dir)("rpc_transactions")
       .filter(col("max_fee_per_gas").isNotNull)
       .select("transaction_hash", "max_fee_per_gas").collect()
       .map(r => new String(r.getAs[Array[Byte]](0).map("%02x".format(_)).mkString) -> r.getLong(1)).toMap
@@ -121,12 +121,12 @@ class ChainDatasetsSpec extends AnyFunSuite {
     }
     val failed = t.filter(!col("success")).count()
     assert(failed > 0 &&
-      ChainDatasets.transactions(spark, dir, excludeFailed = true)
+      ChainDatasets.transactions(Bronze.dir(spark, dir), excludeFailed = true)
         .filter(!col("success")).count() == 0)
   }
 
   test("transactions: no forced broadcast hints (base-fee dim is unbounded in history collects)") {
-    val t = ChainDatasets.transactions(spark, dir)
+    val t = ChainDatasets.transactions(Bronze.dir(spark, dir))
     val hints = t.queryExecution.analyzed.collect {
       case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
     }
@@ -134,7 +134,7 @@ class ChainDatasetsSpec extends AnyFunSuite {
   }
 
   test("decoded logs: value_string equals decimal of raw data") {
-    val dec = ChainDatasets.logs(spark, dir,
+    val dec = ChainDatasets.logs(Bronze.dir(spark, dir),
       eventSignature = Some("Transfer(address indexed from, address indexed to, uint256 value)"),
       u256Reprs = Seq(U256.Binary, U256.Str)).collect()
     assert(dec.nonEmpty)
@@ -145,9 +145,9 @@ class ChainDatasetsSpec extends AnyFunSuite {
   }
 
   test("erc20 transfers exclude malformed and 4-topic logs") {
-    val n20 = ChainDatasets.erc20Transfers(spark, dir).count()
-    val n721 = ChainDatasets.erc721Transfers(spark, dir).count()
-    val rawTransferTopic = ChainDatasets.fx(spark, dir, "rpc_logs")
+    val n20 = ChainDatasets.erc20Transfers(Bronze.dir(spark, dir)).count()
+    val n721 = ChainDatasets.erc721Transfers(Bronze.dir(spark, dir)).count()
+    val rawTransferTopic = Bronze.dir(spark, dir)("rpc_logs")
       .filter(get(col("topics"), lit(0)) === lit(Keccak.hash("Transfer(address,address,uint256)")))
       .count()
     assert(n20 > 0 && n721 > 0)
@@ -155,10 +155,10 @@ class ChainDatasetsSpec extends AnyFunSuite {
   }
 
   test("trace subtree pruning removes failed nodes and their descendants") {
-    val kept = ChainDatasets.traces(spark, dir, excludeFailed = true)
+    val kept = ChainDatasets.traces(Bronze.dir(spark, dir), excludeFailed = true)
       .select("transaction_hash", "trace_address").collect()
       .map(r => (Option(r.getAs[Array[Byte]](0)).map(_.toSeq), r.getString(1)))
-    val failed = ChainDatasets.fx(spark, dir, "rpc_traces")
+    val failed = Bronze.dir(spark, dir)("rpc_traces")
       .filter(col("error").isNotNull)
       .select("transaction_hash", "trace_address").collect()
       .map(r => (Option(r.getAs[Array[Byte]](0)).map(_.toSeq), r.getString(1)))
@@ -173,7 +173,7 @@ class ChainDatasetsSpec extends AnyFunSuite {
   }
 
   test("contracts: deployer is root sender; factory creates differ") {
-    val c = ChainDatasets.contracts(spark, dir).collect()
+    val c = ChainDatasets.contracts(Bronze.dir(spark, dir)).collect()
     assert(c.nonEmpty)
     // factory-created contracts (non-root creates) have factory != deployer
     val factoryCreates = c.filter(r =>
@@ -188,13 +188,13 @@ class ChainDatasetsSpec extends AnyFunSuite {
   }
 
   test("erc20 metadata scrubs control characters") {
-    val names = ChainDatasets.erc20Metadata(spark, dir)
+    val names = ChainDatasets.erc20Metadata(Bronze.dir(spark, dir))
       .select("name").collect().map(_.getString(0)).toSet
     assert(names == Set("Alpha Token", "BetaToken", "Gamma"))
   }
 
   test("native transfers include rewards and suicides with correct endpoints") {
-    val nt = ChainDatasets.nativeTransfers(spark, dir, Seq(U256.Str)).collect()
+    val nt = ChainDatasets.nativeTransfers(Bronze.dir(spark, dir), Seq(U256.Str)).collect()
     val rewards = nt.filter(_.isNullAt(1)) // reward rows: null transaction_index
     assert(rewards.nonEmpty)
     // reward endpoints (native_transfers.rs:99-103): from = zero address,
@@ -356,7 +356,7 @@ class ChainDatasetsSpec extends AnyFunSuite {
     val stats = graft.queries.ChainQueries
       .defs("chain_factory_stats")(spark, "/root/testdata/sf0.001").collect()
     val contracts = graft.chain.ChainDatasets
-      .contracts(spark, dir).collect()
+      .contracts(Bronze.dir(spark, dir)).collect()
     assert(stats.nonEmpty)
     assert(stats.map(_.getAs[Long]("n_contracts")).sum == contracts.length)
     stats.foreach { r =>
@@ -389,7 +389,7 @@ class ChainDatasetsSpec extends AnyFunSuite {
     }
     // every transfer contributes exactly one in and one out leg
     val nXfers = graft.chain.ChainDatasets
-      .erc20Transfers(spark, "/root/repo/fixtures/chain",
+      .erc20Transfers(Bronze.dir(spark, graft.queries.ChainQueries.FixDir),
         u256Reprs = Seq(graft.functions.U256.Binary)).count()
     assert(rows.map(_.getAs[Long]("n_in")).sum == nXfers)
     assert(rows.map(_.getAs[Long]("n_out")).sum == nXfers)

@@ -5,7 +5,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.HttpServer
-import graft.chain.{BlockSyntax, ChainDatasets}
+import graft.chain.{BlockSyntax, Bronze, ChainDatasets}
 import graft.sources.{RpcConfig, RpcSource}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.json4s._
@@ -678,23 +678,22 @@ class DifferentialSpec extends AnyFunSuite {
       t.count()
       t.write.mode("overwrite").parquet(s"$live/rpc_traces.parquet")
       t.unpersist()
-      def cmp(name: String, bld: (SparkSession, String) => DataFrame) = {
-        val ref = graft.chain.DiffTest.canon(bld(spark, fixDir))
-        val liv = graft.chain.DiffTest.canon(bld(spark, live))
+      def cmp(name: String, bld: Bronze => DataFrame) = {
+        val ref = graft.chain.DiffTest.canon(bld(Bronze.dir(spark, fixDir)))
+        val liv = graft.chain.DiffTest.canon(bld(Bronze.dir(spark, live)))
         graft.chain.DiffTest.Outcome(name, ref.size, liv.size,
           ref.zipAll(liv, "<m>", "<m>").find(p => p._1 != p._2))
       }
-      assert(cmp("blocks", ChainDatasets.blocks(_, _)).ok)
-      val nt = cmp("native_transfers",
-        (s, d) => ChainDatasets.nativeTransfers(s, d))
+      assert(cmp("blocks", ChainDatasets.blocks(_)).ok)
+      val nt = cmp("native_transfers", ChainDatasets.nativeTransfers(_))
       assert(!nt.ok && nt.refRows > nt.liveRows)
     } finally h.stop()
   }
 
   test("live --rpc freeze lands on a scheme'd (non-file://) output dir") {
-    // pins the round-9 staging fix: Paths.get on an s3a://-style output
-    // dir mangled it into a relative local tree; bronze now stages in a
-    // local tmpdir while the freeze output crosses the FileSystem API
+    // pins the round-9 fix: Paths.get on an s3a://-style output dir
+    // mangled it into a relative local tree; bronze is now held in
+    // memory while the freeze output crosses the FileSystem API
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
     val h = FixtureRpcServer.start(spark, fixDir)

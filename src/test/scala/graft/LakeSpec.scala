@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.chain.{BlockSyntax, Freeze, Lake}
+import graft.chain.{BlockSyntax, Bronze, Freeze, Lake}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class LakeSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val FixDir = "/root/repo/fixtures/chain"
+  private val FixDir = graft.queries.ChainQueries.FixDir
 
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -113,7 +113,7 @@ class LakeSpec extends AnyFunSuite {
   test("round trip is lossless vs the direct silver, parquet and csv") {
     val out = freshDir("lake_roundtrip_")
     freeze(out, Seq("blocks"), chunkSize = 20)
-    val direct = graft.chain.ChainDatasets.blocks(spark, FixDir)
+    val direct = graft.chain.ChainDatasets.blocks(Bronze.dir(spark, FixDir))
     val back = Lake.read(spark, out, "blocks")
     assert(back.schema == direct.schema)
     assert(back.exceptAll(direct).isEmpty && direct.exceptAll(back).isEmpty)
@@ -122,7 +122,7 @@ class LakeSpec extends AnyFunSuite {
     // the explicit schema (the pipeline path) and require EXACT row-set
     // equality with the hexified silver — and with each other, so every
     // sink format holds the same bytes
-    val hexDirect = graft.chain.Freeze.collect(spark, FixDir, "blocks",
+    val hexDirect = graft.chain.Freeze.collect(Bronze.dir(spark, FixDir), "blocks",
       BlockSyntax.Range(1000, 1060), hex = true).persist()
     hexDirect.count()
     val byFormat = Seq("csv", "json").map { fmt =>
@@ -513,7 +513,7 @@ class LakeSpec extends AnyFunSuite {
     // data read-back through the scheme matches the direct silver
     val lakeBlocks = Lake.read(spark, out, "blocks")
     assert(lakeBlocks.count() == 60L)
-    val direct = graft.chain.ChainDatasets.blocks(spark, FixDir)
+    val direct = graft.chain.ChainDatasets.blocks(Bronze.dir(spark, FixDir))
     assert(lakeBlocks.exceptAll(direct).isEmpty &&
       direct.exceptAll(lakeBlocks).isEmpty)
 

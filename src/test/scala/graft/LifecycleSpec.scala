@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.chain.{BlockSyntax, Freeze}
+import graft.chain.{BlockSyntax, Bronze, Freeze}
 import graft.chain.BlockSyntax.{Numbers, Range}
 import graft.sources.RpcCodec
 import graft.streaming.FollowMode
@@ -106,7 +106,7 @@ class FreezeSpec extends AnyFunSuite {
   }
 
   test("multi-dataset collect shares one persisted bronze scan") {
-    val multi = Freeze.collectMulti(spark, fixDir, "state_reads")
+    val multi = Freeze.collectMulti(Bronze.dir(spark, fixDir), "state_reads")
     try {
       assert(multi.tables.keySet ==
         Set("balance_reads", "code_reads", "nonce_reads", "storage_reads"))
@@ -137,8 +137,8 @@ class FreezeSpec extends AnyFunSuite {
 
   test("a failing chunk lands in errored, other work continues") {
     val out = Files.createTempDirectory("graft_err").toString
-    val boom: Freeze.DatasetBuilder = (_, _) => throw new RuntimeException("boom")
-    val r = Freeze.freeze(spark, fixDir, Freeze.FreezeSpec(
+    val boom: Freeze.DatasetBuilder = _ => throw new RuntimeException("boom")
+    val r = Freeze.freeze(Bronze.dir(spark, fixDir), Freeze.FreezeSpec(
       datasets = Seq("blocks", "logs"), blocks = Range(1000, 1040),
       chunkSize = 20, outputDir = out),
       overrides = Map("logs" -> boom))
@@ -195,7 +195,7 @@ class FreezeSpec extends AnyFunSuite {
   }
 
   test("collect returns one in-memory DataFrame filtered to blocks") {
-    val df = Freeze.collect(spark, fixDir, "txs", Range(1010, 1020))
+    val df = Freeze.collect(Bronze.dir(spark, fixDir), "txs", Range(1010, 1020))
     assert(df.columns.contains("gas_price"))
     val bns = df.select("block_number").distinct().collect().map(_.getInt(0))
     assert(bns.forall(n => n >= 1010 && n < 1020))
@@ -203,13 +203,13 @@ class FreezeSpec extends AnyFunSuite {
 
   test("collect honors column/u256/hex options like the CLI") {
     import graft.functions.U256
-    val df = Freeze.collect(spark, fixDir, "erc20_transfers", Range(1000, 1060),
+    val df = Freeze.collect(Bronze.dir(spark, fixDir), "erc20_transfers", Range(1000, 1060),
       u256Reprs = Seq(U256.Str), hex = true)
     assert(df.columns.contains("value_string") && !df.columns.contains("value_binary"))
     // hex projection: binary columns became 0x strings
     val erc = df.select("erc20").limit(1).collect()(0).getString(0)
     assert(erc.startsWith("0x") && erc.length == 42)
-    val cols = Freeze.collect(spark, fixDir, "blocks", Range(1000, 1010),
+    val cols = Freeze.collect(Bronze.dir(spark, fixDir), "blocks", Range(1000, 1010),
       columns = Some(Seq("block_number", "gas_used"))).columns.toSeq
     assert(cols == Seq("block_number", "gas_used"))
   }
@@ -227,8 +227,8 @@ class FreezeSpec extends AnyFunSuite {
 class TimestampSpec extends AnyFunSuite {
   import SparkTestSession._
   import graft.chain.TimestampSyntax
-  private def blocks = graft.chain.ChainDatasets.fx(
-    spark, graft.queries.ChainQueries.FixDir, "rpc_blocks")
+  private def blocks = Bronze.dir(
+    spark, graft.queries.ChainQueries.FixDir)("rpc_blocks")
   private val t0 = 1700000000L
 
   test("duration units and now-relative parsing") {
@@ -283,16 +283,16 @@ class TimestampSpec extends AnyFunSuite {
   }
 
   test("collect by transaction hashes") {
-    val hashes = graft.chain.ChainDatasets.fx(
-      spark, graft.queries.ChainQueries.FixDir, "rpc_transactions")
+    val hashes = Bronze.dir(
+      spark, graft.queries.ChainQueries.FixDir)("rpc_transactions")
       .select("transaction_hash").limit(3).collect()
       .map(_.getAs[Array[Byte]](0)).toSeq
     val df = graft.chain.Freeze.collectByTransaction(
-      spark, graft.queries.ChainQueries.FixDir, "txs", hashes)
+      Bronze.dir(spark, graft.queries.ChainQueries.FixDir), "txs", hashes)
     assert(df.count() == 3)
     intercept[IllegalArgumentException] {
       graft.chain.Freeze.collectByTransaction(
-        spark, graft.queries.ChainQueries.FixDir, "balances", hashes)
+        Bronze.dir(spark, graft.queries.ChainQueries.FixDir), "balances", hashes)
     }
   }
 }
@@ -411,7 +411,7 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("--txs collects by transaction hash into one file") {
-    val hashes = graft.chain.ChainDatasets.fx(spark, fixDir, "rpc_transactions")
+    val hashes = Bronze.dir(spark, fixDir)("rpc_transactions")
       .select("transaction_hash").limit(2).collect()
       .map(r => hx(r.getAs[Array[Byte]](0)))
     val (_, done) = runCli("txs", "--txs", hashes(0), hashes(1))
@@ -563,34 +563,6 @@ class CliSpec extends AnyFunSuite {
     // re-run above all derived from the SAME memoized audit runPrep
     // built — zero CC passes beyond runPrep's one
     assert(graft.queries.TextOps.clustersInvocations.get() == before + 1)
-  }
-
-  test("bronze staging: per-pid leaf, memoized per target, dead-pid corpses swept") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val out1 = "scheme://bucket/a" + System.nanoTime()
-    val a = Cli.bronzeStagingFor(out1)
-    // memoized per (JVM, target): repeated freezes reuse ONE dir
-    // instead of accumulating a corpus per call
-    assert(Cli.bronzeStagingFor(out1) == a)
-    // the leaf is per-pid, so concurrent freezes from another process
-    // can never share (and clobber) this staging
-    assert(a.getFileName.toString == s"p${ProcessHandle.current().pid()}")
-    val c = Cli.bronzeStagingFor(out1 + "x")
-    assert(c != a && c.getParent != a.getParent)
-    // a sibling leaf left by a SIGKILL'd process (its shutdown hook
-    // never ran) is swept on the first resolve for that target
-    val out2 = "scheme://bucket/b" + System.nanoTime()
-    val user = System.getProperty("user.name", "unknown")
-      .replaceAll("[^A-Za-z0-9._-]", "_")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(out2.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val corpse = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_bronze_$user", key, "p999999999")
-    JFiles.createDirectories(corpse)
-    JFiles.writeString(corpse.resolve("stale.parquet"), "x")
-    val mine2 = Cli.bronzeStagingFor(out2)
-    assert(!JFiles.exists(corpse), "dead-pid corpse must be swept")
-    assert(JFiles.exists(mine2))
   }
 
   test("index subcommand: build once, CLI search equals in-query search") {
@@ -1693,11 +1665,11 @@ class CliSpec extends AnyFunSuite {
   test("--exclude-failed drops failed txs and failed trace subtrees") {
     val (_, doneTx) = runCli("transactions", "--exclude-failed")
     val expectTx = graft.chain.ChainDatasets
-      .transactions(spark, fixDir, excludeFailed = true).count()
+      .transactions(Bronze.dir(spark, fixDir), excludeFailed = true).count()
     assert(spark.read.parquet(doneTx.head).count() == expectTx)
     val (_, doneTr) = runCli("traces", "--exclude-failed")
     val expectTr = graft.chain.ChainDatasets
-      .traces(spark, fixDir, excludeFailed = true).count()
+      .traces(Bronze.dir(spark, fixDir), excludeFailed = true).count()
     assert(spark.read.parquet(doneTr.head).count() == expectTr)
     assert(expectTx < spark.read.parquet(s"$fixDir/rpc_transactions.parquet").count())
   }
@@ -2527,7 +2499,7 @@ class StreamingSpec extends AnyFunSuite {
     val fixDir = graft.queries.ChainQueries.FixDir
     val src = Files.createTempDirectory("graft_if_src").toString
     val out = Files.createTempDirectory("graft_if_out").toString
-    val blocks = graft.chain.ChainDatasets.fx(spark, fixDir, "rpc_blocks")
+    val blocks = Bronze.dir(spark, fixDir)("rpc_blocks")
     // several files → several micro-batches, out-of-order arrival possible
     blocks.select("block_number").repartition(4)
       .write.mode("overwrite").parquet(src)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.chain.ChainDatasets
+import graft.chain.{Bronze, ChainDatasets}
 import graft.functions.Keccak
 import graft.operators.SaltedJoin
 import org.apache.spark.sql.functions._
@@ -159,9 +159,9 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("erc20 transfer from-filter pushes into topic position") {
     val dir = graft.queries.ChainQueries.FixDir
-    val all = ChainDatasets.erc20Transfers(spark, dir)
+    val all = ChainDatasets.erc20Transfers(Bronze.dir(spark, dir))
     val someFrom = all.select("from_address").limit(1).collect()(0).getAs[Array[Byte]](0)
-    val filtered = ChainDatasets.erc20Transfers(spark, dir, from = Some(someFrom))
+    val filtered = ChainDatasets.erc20Transfers(Bronze.dir(spark, dir), from = Some(someFrom))
     val n = filtered.count()
     assert(n > 0 && n < all.count())
     filtered.select("from_address").collect().foreach { r =>

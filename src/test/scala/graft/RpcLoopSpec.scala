@@ -189,12 +189,22 @@ class RpcLoopSpec extends AnyFunSuite {
   private def withStub[T](f: (String, AtomicInteger) => T): T =
     withStubRejecting(Set.empty)(f)
 
+  /** withStub, also counting the calls that reach it per method (a
+    * batch of n calls counts n) */
+  private def withCountingStub[T](f: (String, AtomicInteger, String => Int) => T): T =
+    serve(Set.empty)(f)
+
   /** withStub, but methods in `reject` answer a JSON-RPC method-not-found
     * error (HTTP 200) — how a node without e.g. eth_getBlockReceipts
     * actually behaves. */
   private def withStubRejecting[T](reject: Set[String])(
-      f: (String, AtomicInteger) => T): T = {
+      f: (String, AtomicInteger) => T): T =
+    serve(reject)((url, posts, _) => f(url, posts))
+
+  private def serve[T](reject: Set[String])(
+      f: (String, AtomicInteger, String => Int) => T): T = {
     val posts = new AtomicInteger(0)
+    val calls = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", { exchange =>
       posts.incrementAndGet()
@@ -205,6 +215,7 @@ class RpcLoopSpec extends AnyFunSuite {
       def one(req: JValue): String = {
         val id = (req \ "id") match { case JInt(i) => i.toString; case _ => "0" }
         val JString(method) = (req \ "method"): @unchecked
+        calls.computeIfAbsent(method, _ => new AtomicInteger(0)).incrementAndGet()
         if (reject(method))
           s"""{"jsonrpc":"2.0","id":$id,"error":{"code":-32601,"message":"the method $method does not exist/is not available"}}"""
         else
@@ -221,7 +232,8 @@ class RpcLoopSpec extends AnyFunSuite {
       exchange.close()
     })
     server.start()
-    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", posts)
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", posts,
+      m => Option(calls.get(m)).fold(0)(_.get()))
     finally server.stop(0)
   }
 
@@ -493,10 +505,8 @@ class RpcLoopSpec extends AnyFunSuite {
       val txs = spark.read.parquet(txFile)
       assert(txs.count() == 8) // 2 txs × 4 blocks, receipts joined
       assert(txs.columns.contains("gas_used"))
-      // only the needed bronzes were materialized
-      val bronze = new java.io.File(s"$out/.graft/bronze").list().toSet
-      assert(bronze == Set("rpc_blocks.parquet", "rpc_transactions.parquet",
-        "rpc_receipts.parquet"))
+      // bronze is held in memory, never staged under the output dir
+      assert(new java.io.File(s"$out/.graft").list().toSet == Set("reports"))
       // blocks+transactions share ONE full-block pass
       // (blocks_and_transactions multi): 2 driver probes (eth_chainId,
       // eth_blockNumber) + 2 shared full-block trips + 2 receipt trips
@@ -509,7 +519,7 @@ class RpcLoopSpec extends AnyFunSuite {
   }
 
   test("--rpc live mode: excluding gas_used/success skips the receipt fetch") {
-    withStub { (url, posts) =>
+    withCountingStub { (url, posts, calls) =>
       val out = java.nio.file.Files.createTempDirectory("graft_noreceipt").toString
       val r = Cli.run(Array("transactions", "--rpc", url,
         "--blocks", "16:20", "--chunk-size", "4", "--output-dir", out,
@@ -518,13 +528,45 @@ class RpcLoopSpec extends AnyFunSuite {
       val txs = spark.read.parquet(r.completed.head)
       assert(txs.count() == 8)
       assert(!txs.columns.contains("gas_used") && !txs.columns.contains("success"))
-      // receipts bronze never materialized...
-      val bronze = new java.io.File(s"$out/.graft/bronze").list().toSet
-      assert(bronze == Set("rpc_blocks.parquet", "rpc_transactions.parquet"))
-      // ...and never fetched: 2 driver probes + 2 full-block trips (4
+      assert(new java.io.File(s"$out/.graft").list().toSet == Set("reports"))
+      // receipts never fetched: 2 chain probes + 2 full-block trips (4
       // blocks in whole batches of 2), ZERO receipt round trips
       // (transactions.rs:124-135 semantics)
+      assert(calls("eth_getBlockReceipts") == 0)
       assert(posts.get() == 4, s"expected 4 round trips, got ${posts.get()}")
+    }
+  }
+
+  test("--rpc live mode: a file:// output dir gets its chunk files") {
+    withStub { (url, _) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_live_uri")
+      val r = Cli.run(Array("blocks", "transactions", "--rpc", url,
+        "--blocks", "16:20", "--chunk-size", "2", "--output-dir", out.toUri.toString.stripSuffix("/"),
+        "--inner-request-size", "2", "--no-verbose"), spark).get
+      assert(r.errored.isEmpty && r.completed.size == 4)
+      val files = out.toFile.list().filter(_.startsWith("ethereum__")).toSet
+      assert(files == Set("blocks", "transactions").flatMap(d =>
+        Seq(s"ethereum__${d}__00000016_to_00000017.parquet",
+          s"ethereum__${d}__00000018_to_00000019.parquet")))
+      assert(spark.read.parquet(out.resolve(
+        "ethereum__blocks__00000018_to_00000019.parquet").toString).count() == 2)
+      assert(spark.read.parquet(out.resolve(
+        "ethereum__transactions__00000016_to_00000017.parquet").toString).count() == 4)
+      assert(out.resolve(".graft").toFile.list().toSet == Set("reports"))
+    }
+  }
+
+  test("--rpc live mode: a listed --blocks fetches entity tables at the listed blocks only") {
+    withCountingStub { (url, _, calls) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_live_listed").toString
+      val r = Cli.run(Array("balances", "--rpc", url, "--blocks", "12:20:4",
+        "--address", h40(1), "--output-dir", out, "--no-verbose"), spark).get
+      // blocks 12 and 16, 3 account calls each — not one per block of
+      // the 12..16 span
+      for (m <- Seq("eth_getBalance", "eth_getTransactionCount", "eth_getCode"))
+        assert(calls(m) == 2, s"$m: ${calls(m)} calls")
+      val rows = spark.read.parquet(r.completed.head).collect()
+      assert(rows.map(_.getAs[Int]("block_number")).sorted.toSeq == Seq(12, 16))
     }
   }
 
@@ -603,6 +645,18 @@ class RpcLoopSpec extends AnyFunSuite {
         "--blocks", "16:18", "--output-dir", out, "--no-verbose"), spark)
       assert(df.count() == 4) // 2 txs × 2 blocks
       assert(df.columns.contains("gas_used"))
+    }
+  }
+
+  test("collectDf with --rpc: the returned frame keeps its fetched bronze") {
+    withStub { (url, posts) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_live4").toString
+      val df = Cli.collectDf(Array("transactions", "--rpc", url,
+        "--blocks", "16:18", "--output-dir", out, "--no-verbose"), spark)
+      assert(df.count() == 4)
+      val fetched = posts.get()
+      assert(df.count() == 4)
+      assert(posts.get() == fetched, s"re-fetched: ${posts.get() - fetched} POSTs")
     }
   }
 

@@ -116,7 +116,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     Graft.registerFunctions(spark)
     import graft.chain.{BlockSyntax, Freeze, Lake}
     val out = java.nio.file.Files.createTempDirectory("lake_tvf_").toString
-    Freeze.freeze(spark, "/root/repo/fixtures/chain", Freeze.FreezeSpec(
+    Freeze.freeze(spark, graft.queries.ChainQueries.FixDir, Freeze.FreezeSpec(
       datasets = Seq("blocks"), blocks = BlockSyntax.Range(1000, 1060),
       chunkSize = 10, outputDir = out, noReport = true,
       maxConcurrentChunks = 1))
