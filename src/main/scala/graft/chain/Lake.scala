@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 import java.nio.file.Path
 
 /** Query surface over a FROZEN lake — the directory of cryo-named chunk
-  * files that `Freeze.freeze` (and followLive's incremental appends)
+  * files that `Freeze.freeze` (and followLive, one freeze per poll)
   * produce: `{network}__{dataset}[__{label}][__{dim}]__{start}_to_{end}.{fmt}`
   * (Freeze.fileName; reference naming: types/files.rs:63-105,
   * number_chunk.rs:18-20). The reference writes these files and leaves

@@ -7,17 +7,21 @@ import org.apache.spark.sql.types.StructType
 
 /** Follow-the-head streaming — beyond-reference extension (SURVEY §2.8):
   * the reference's nearest equivalent is re-running with --reorg-buffer
-  * (manual incremental batch). Here the same incremental semantics run as
-  * a Structured Streaming job:
+  * (manual incremental batch). Two forms:
   *
-  *  - source: files appended to a bronze directory — by an external
-  *    writer or by `followLive`, which polls eth_blockNumber on a live
-  *    node and appends newly observed heads' bronze rows itself;
-  *    maxFilesPerTrigger bounds each micro-batch like block chunking
-  *  - watermark: the reorg buffer expressed in event time — late/reorged
-  *    rows inside the buffer update open windows, older ones drop
-  *  - sink: append-only parquet with checkpointing = the idempotent
-  *    skip-existing semantics, managed by the engine instead of filenames
+  *  - `followLive` is that re-run as a driver loop against a live node:
+  *    each eth_blockNumber poll fetches and freezes only the chunks that
+  *    just settled past the reorg buffer. It stages nothing on disk and
+  *    starts no streaming query.
+  *  - the Structured Streaming jobs below read files that an external
+  *    writer appends to a bronze directory (`readAppendOnly`;
+  *    maxFilesPerTrigger bounds each micro-batch like block chunking),
+  *    and `incrementalFreeze` freezes the chunks such a stream settles.
+  *    Their watermark is the reorg buffer in event time — late/reorged
+  *    rows inside the buffer update open windows, older ones drop — and
+  *    their sink is append-only parquet with checkpointing: the
+  *    idempotent skip-existing semantics, managed by the engine instead
+  *    of filenames.
   */
 object FollowMode {
 
@@ -651,13 +655,7 @@ object FollowMode {
     // Numbers spec to [min, max] would freeze blocks the caller
     // explicitly excluded (the batch Freeze path honors the list) —
     // refuse rather than diverge
-    val lo = spec.blocks match {
-      case BlockSyntax.Range(a, _) => a
-      case BlockSyntax.Numbers(ns) => throw new IllegalArgumentException(
-        s"follow mode needs a contiguous --blocks range; a block list " +
-          s"(${ns.take(3).mkString(",")}…) would be silently densified " +
-          "— freeze the list with the batch path instead")
-    }
+    val (lo, _) = contiguous(spec, "follow mode")
     val seenHead = new java.util.concurrent.atomic.AtomicLong(lo - 1)
     blockStream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val mx = batch.agg(max(col("block_number"))).collect()(0)
@@ -667,14 +665,8 @@ object FollowMode {
           case l: java.lang.Long => l.longValue
         }
         val hi = seenHead.accumulateAndGet(head, math.max(_, _))
-        // freeze only chunks fully SETTLED: at or below the observed
-        // head minus the reorg buffer. A ≤buffer-deep rollback can only
-        // orphan blocks the buffer kept out of every frozen file, so
-        // skip-existing never pins orphaned data (the reorg contract;
-        // buffer 0 = the old head-bounded behavior).
-        val settled = hi + 1 - spec.reorgBuffer
-        val end = lo +
-          (math.max(0L, settled - lo) / spec.chunkSize) * spec.chunkSize
+        val end = lo + (math.max(0L, settledBelow(hi, spec) - lo) /
+          spec.chunkSize) * spec.chunkSize
         if (end > lo)
           Freeze.freeze(spark, sourceDir,
             spec.copy(blocks = BlockSyntax.Range(lo, end)))
@@ -683,179 +675,102 @@ object FollowMode {
     }
   }
 
-  /** Live follow-the-head driver — the eth_blockNumber-polling source
-    * the bronze-dir file streams stood in for. The caller's thread polls
-    * the node's head; newly observed block headers are fetched through
-    * the normal RpcSource batching/concurrency machinery and APPENDED to
-    * the bronze dir, where the SAME readAppendOnly → incrementalFreeze
-    * pipeline (checkpointed, idempotent skip-existing) materializes
-    * completed chunks as cryo-named files — no manual re-runs. Smallest
-    * honest scope: headers only (spec.datasets = blocks). The append dir
-    * is a bronze directory, read through `Bronze.dir` by the freeze; a
-    * `Cli.run --rpc` freeze instead holds its fetched bronze in memory
-    * (RpcSource.fetchBronze) and stages nothing on disk.
-    * Bounded by `maxPolls`; returns once the spec's range is fully
-    * observed (or the poll budget runs out) and the stream has drained.
+  /** The settle rule both follow modes share: blocks below the returned
+    * bound are at or below `head − reorgBuffer`, so a rollback no deeper
+    * than the buffer can orphan none of them and a chunk that ends below
+    * it may be frozen for good (buffer 0 = settled as soon as seen). */
+  private def settledBelow(head: Long,
+      spec: graft.chain.Freeze.FreezeSpec): Long =
+    head + 1 - spec.reorgBuffer
+
+  /** the `[lo, hiEnd)` of a follow spec; a block list is refused */
+  private def contiguous(spec: graft.chain.Freeze.FreezeSpec,
+      who: String): (Long, Long) = spec.blocks match {
+    case graft.chain.BlockSyntax.Range(a, b) => (a, b)
+    case graft.chain.BlockSyntax.Numbers(ns) => throw new IllegalArgumentException(
+      s"$who needs a contiguous --blocks range; a block list " +
+        s"(${ns.take(3).mkString(",")}…) would be silently densified " +
+        "— freeze the list with the batch path instead")
+  }
+
+  /** Live follow-the-head driver: cryo's reorg-buffered freeze, re-run
+    * on every poll. The caller's thread polls the node's head
+    * (eth_blockNumber) every `pollMs`. Each poll takes the run of
+    * unfrozen chunks of `spec`'s range that have settled (head ≥ chunk
+    * end − 1 + reorgBuffer), fetches that whole span with ONE
+    * `RpcSource.fetchBronze` into Spark's cache, freezes it with
+    * `Freeze.freeze` and releases it. A block is fetched only once it has
+    * settled, so a rollback within the buffer never reaches anything
+    * fetched or frozen, and one call fetches no block twice.
+    * `spec.datasets` are fetched as a `Cli.run --rpc` freeze fetches
+    * them; the specs and the benchmark follow `blocks`.
     *
-    * A poll's new headers are one fetchBlocks call, sized like every
-    * fetch: one request per `innerRequestSize` blocks, the requests in
-    * whole runs on at most one task per core. A poll of about 110 blocks
-    * at the default 100 is 2 requests on 2 tasks. `fetchPartitions` is
-    * an upper bound on those tasks. */
+    * Fails loudly (IllegalStateException) rather than returning with
+    * chunks unfrozen: when a chunk's write errors (named), when the head
+    * rolls back below a frozen chunk's last block (a reorg deeper than
+    * the buffer), and when `maxPolls` runs out before the range's last
+    * chunk settles. A re-run resumes: skip-existing keeps the files
+    * already frozen, though their blocks are fetched again.
+    *
+    * A poll's fetch is sized like every fetch: one request per
+    * `innerRequestSize` blocks, the requests in whole runs on at most one
+    * task per core; `fetchPartitions` is an upper bound on those tasks.
+    * `bronzeDir` and `checkpointDir` are unused: the loop stages nothing
+    * on disk and starts no streaming query. */
   def followLive(spark: SparkSession, source: graft.sources.RpcSource,
       bronzeDir: String, spec: graft.chain.Freeze.FreezeSpec,
       checkpointDir: String, pollMs: Long = 250, maxPolls: Int = 600,
       fetchPartitions: Int = Int.MaxValue): Unit = {
-    import graft.chain.BlockSyntax
-    val blocksPath = s"$bronzeDir/rpc_blocks.parquet"
-    // same contiguity contract as incrementalFreeze (which this drives)
-    val (lo, hiEnd) = spec.blocks match {
-      case BlockSyntax.Range(a, b) => (a, b)
-      case BlockSyntax.Numbers(ns) => throw new IllegalArgumentException(
-        s"followLive needs a contiguous --blocks range; a block list " +
-          s"(${ns.take(3).mkString(",")}…) would be silently densified " +
-          "— freeze the list with the batch path instead")
-    }
-    var last = lo - 1           // highest block fetched into bronze
-    var rawHead = Long.MinValue // last head the node reported (uncapped)
-    var maxHead = Long.MinValue // highest head ever reported
-    // REORG tracking: a poll that reports a LOWER head than the previous
-    // one means the node switched forks — every block above the new head
-    // is orphaned. `refetchFrom` remembers the lowest such point until
-    // the canonical refetch lands.
-    var refetchFrom = Long.MaxValue
+    import graft.chain.{BlockSyntax, Freeze}
+    val (lo, hiEnd) = contiguous(spec, "followLive")
+    val chunks = BlockSyntax.chunks(spec.blocks, spec.chunkSize, spec.nChunks,
+      spec.align)
+    var frozen = 0 // chunks(0 until frozen) are on disk
+    var head = lo - 1
     var polls = 0
-    /** highest chunk boundary the buffered stream COULD have frozen by
-      * now (stream head ≤ maxHead; chunks freeze only below
-      * head − reorgBuffer) — the deep-reorg guard compares rollbacks
-      * against this bound, not against actual freeze timing, so the
-      * check is deterministic */
-    def frozenCeil: Long = lo + (math.max(0L,
-      math.min(maxHead, hiEnd - 1) + 1 - spec.reorgBuffer - lo)
-      / spec.chunkSize) * spec.chunkSize
-    /** poll once; fetch anything new (and re-fetch the post-reorg window).
-      * A reorged window REWRITES bronze to canonical-only rows — settled
-      * blocks below the rollback point plus the just-fetched canonical
-      * fork — via tmp + dir swap; `beforeRewrite` runs first so the
-      * caller can stop the file stream whose files are about to move. */
-    def fetchNew(beforeRewrite: () => Unit = () => ()): Boolean = {
-      val head = source.fetchLatestBlock()
-      // a head regression only taints bronze when bronze actually holds
-      // blocks above the new head (suspect set = fetched rows ≥ head+1).
-      // A rollback entirely above `last` — e.g. the head wobbling past
-      // the range end during the settle wait — orphans nothing we
-      // fetched; flagging it would set a refetchFrom ABOVE the range
-      // top that no rewrite can ever land (top = min(head, hiEnd-1)
-      // stays below it), turning a clean run into a spurious
-      // refetch-never-landed failure at exit.
-      if (rawHead != Long.MinValue && head < rawHead && head + 1 <= last) {
-        refetchFrom = math.min(refetchFrom, head + 1)
-        // a rollback reaching below what the buffer allowed to freeze
-        // means files on disk may hold orphaned rows skip-existing will
-        // never replace — refuse to continue silently (the reorg-buffer
-        // CONTRACT is "no fork deeper than the buffer"; when the chain
-        // breaks it, the honest move is a loud stop with a recovery
-        // path, not converged-looking bronze under diverged files).
-        // frozenCeil > lo gates the throw on a chunk actually having
-        // been freezable: frozenCeil floors at lo, so a rollback below
-        // lo before anything could freeze is just a pre-start reorg
-        // the refetch handles normally.
-        if (refetchFrom < frozenCeil && frozenCeil > lo)
+    while (frozen < chunks.size && polls <= maxPolls) {
+      if (polls > 0) Thread.sleep(pollMs)
+      head = source.fetchLatestBlock()
+      polls += 1
+      if (frozen > 0 && head < chunks(frozen - 1).endExclusive - 1)
+        throw new IllegalStateException(
+          s"reorg deeper than the buffer: head rolled back to $head but " +
+          s"chunks through block ${chunks(frozen - 1).endExclusive - 1} " +
+          s"are frozen (reorgBuffer=${spec.reorgBuffer}); re-run with " +
+          s"--overwrite from block ${head + 1} after raising the buffer")
+      val run = chunks.drop(frozen)
+        .takeWhile(_.endExclusive <= settledBelow(head, spec))
+      if (run.nonEmpty) {
+        val span = BlockSyntax.Range(run.head.start, run.last.endExclusive)
+        val bronze = source.fetchBronze(spark, span, spec.datasets,
+          numPartitions = fetchPartitions)
+        // re-chunk the span as planned: every chunk but the range's last
+        // is as long as the run's first (n-chunks and align included)
+        val r = try Freeze.freeze(bronze, spec.copy(blocks = span,
+          chunkSize = run.head.endExclusive - run.head.start,
+          nChunks = None, align = false))
+        finally bronze.release()
+        if (r.errored.nonEmpty)
           throw new IllegalStateException(
-            s"reorg deeper than the buffer: head rolled back to $head but " +
-            s"chunks below block $frozenCeil may already be frozen " +
-            s"(reorgBuffer=${spec.reorgBuffer}); re-run with --overwrite " +
-            s"from block $refetchFrom after raising the buffer")
+            s"followLive could not write ${r.errored.mkString(", ")}; " +
+            "re-run followLive to resume from the frozen chunks")
+        frozen += run.size
       }
-      rawHead = head
-      maxHead = math.max(maxHead, head)
-      val top = math.min(head, hiEnd - 1)
-      val from = math.min(last + 1, refetchFrom)
-      if (top >= from) {
-        val window = source.fetchBlocks(spark,
-          BlockSyntax.Range(from, top + 1), fetchPartitions)
-        if (refetchFrom <= top) {
-          beforeRewrite()
-          val tmp = blocksPath + "__reorg_tmp"
-          spark.read.parquet(blocksPath)
-            .filter(col("block_number") < refetchFrom)
-            .unionByName(window)
-            .write.mode("overwrite").parquet(tmp)
-          replaceDir(blocksPath, tmp)
-          refetchFrom = Long.MaxValue
-          last = top
-          true
-        } else {
-          window.write.mode("append").parquet(blocksPath)
-          last = top
-          false
-        }
-      } else false
     }
-    // a prior run may have died mid-swap — restore bronze before the
-    // first read/append touches it
-    recoverDir(blocksPath)
-    // wait for the head to reach the range start — the first append also
-    // creates the bronze dir the file source needs
-    fetchNew()
-    while (last < lo && polls < maxPolls) {
-      Thread.sleep(pollMs); fetchNew(); polls += 1
-    }
-    require(last >= lo, s"node head never reached range start $lo")
-    val schema = spark.read.parquet(blocksPath).schema
-    def startStream() =
-      incrementalFreeze(spark, bronzeDir, spec,
-        readAppendOnly(spark, blocksPath, schema))
-        .option("checkpointLocation", checkpointDir).start()
-    var q = startStream()
-    try {
-      // poll until the range is fully fetched AND settled: the node's
-      // head must clear the range end by the reorg buffer before the
-      // tail blocks count as final (buffer 0 = the old condition)
-      while ((last < hiEnd - 1 || rawHead < hiEnd - 1 + spec.reorgBuffer)
-          && polls < maxPolls) {
-        Thread.sleep(pollMs)
-        var restarted = false
-        fetchNew { () => q.stop(); restarted = true }
-        // a reorg rewrite replaced bronze files mid-stream: restart from
-        // the checkpoint — the file source re-lists, sees the canonical
-        // consolidated files as new, and the freeze jobs re-run
-        // idempotently (skip-existing)
-        if (restarted) q = startStream()
-        polls += 1
-      }
-      q.processAllAvailable()
-    } finally q.stop()
-    // closing flush: the buffered stream deliberately never freezes the
-    // final sub-buffer chunks; once the range is complete and settled
-    // (head cleared the end by the buffer, no refetch pending), freeze
-    // the full range — skip-existing touches only the missing tail.
-    // An INCOMPLETE exit (maxPolls exhausted before the range fetched,
-    // a detected reorg whose canonical refetch never landed, or a head
-    // that never settled past the buffer) must fail loudly: returning
-    // silently would leave tail chunks unfrozen — and after a pending
-    // reorg, bronze may retain orphaned fork rows — while looking
-    // converged. Same fail-loudly contract as the deep-reorg guard.
-    if (last == hiEnd - 1 && refetchFrom == Long.MaxValue &&
-        rawHead >= hiEnd - 1 + spec.reorgBuffer)
-      graft.chain.Freeze.freeze(spark, bronzeDir, spec)
-    else {
+    if (frozen < chunks.size) {
+      val end = chunks.last.endExclusive
       val why =
-        if (last < hiEnd - 1)
-          s"range incomplete: fetched through block $last of [${lo}, ${hiEnd})"
-        else if (refetchFrom != Long.MaxValue)
-          s"a detected reorg's canonical refetch (from block $refetchFrom) never landed"
+        if (head < end - 1)
+          s"range incomplete: the head reached block $head of [$lo, $hiEnd)"
         else
-          s"head $rawHead never settled past range end + reorgBuffer " +
-          s"(${hiEnd - 1 + spec.reorgBuffer})"
+          s"head $head never settled past range end + reorgBuffer " +
+          s"(${end - 1 + spec.reorgBuffer})"
       throw new IllegalStateException(
         s"followLive exited before the range settled — $why after $polls " +
-        s"polls (maxPolls=$maxPolls). Tail chunks are NOT frozen" +
-        (if (refetchFrom != Long.MaxValue)
-          " and bronze may retain orphaned fork rows" else "") +
-        "; re-run followLive to resume from the checkpoint (skip-existing " +
-        "makes the retry idempotent), raising maxPolls/pollMs if the node " +
-        "is slow.")
+        s"head polls (maxPolls=$maxPolls); ${chunks.size - frozen} of " +
+        s"${chunks.size} chunks are NOT frozen; re-run followLive to " +
+        "resume (skip-existing keeps the frozen chunks), raising " +
+        "maxPolls/pollMs if the node is slow.")
     }
   }
 
@@ -869,41 +784,4 @@ object FollowMode {
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(intervalMs))
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.delete(f))
-
-  /** Finish or undo an interrupted replaceDir so no crash point loses
-    * the bronze dir: a crash after move 1 (target gone, __old + tmp
-    * present) completes the swap from tmp; __old with no tmp restores
-    * the original; a surviving __old beside a live target (crash
-    * mid-delete) is cleaned. Runs at followLive start and before every
-    * swap (a stale __old would otherwise fail move 1 with
-    * FileAlreadyExists). */
-  private[graft] def recoverDir(target: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val t = Paths.get(target)
-    val old = Paths.get(target + "__old")
-    val tmp = Paths.get(target + "__reorg_tmp")
-    if (Files.exists(old)) {
-      if (!Files.exists(t)) {
-        if (Files.exists(tmp))
-          Files.move(tmp, t, StandardCopyOption.ATOMIC_MOVE)
-        else Files.move(old, t, StandardCopyOption.ATOMIC_MOVE)
-      }
-      if (Files.exists(t) && Files.exists(old)) deleteTree(old)
-    }
-  }
-
-  /** atomic-as-possible dir swap: target → __old, tmp → target, delete
-    * __old; recoverDir first so a stale __old from a crash heals. */
-  private[graft] def replaceDir(target: String, tmp: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    recoverDir(target)
-    val old = Paths.get(target + "__old")
-    Files.move(Paths.get(target), old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(target), StandardCopyOption.ATOMIC_MOVE)
-    deleteTree(old)
-  }
 }

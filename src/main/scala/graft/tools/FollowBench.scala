@@ -8,12 +8,12 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   * but no number anywhere. This drives the production follow-mode
   * pipeline shapes over the 60k-block chain corpus and the sf0.1
   * document corpus and records throughput (blocks/sec, rows/sec),
-  * micro-batch latency (p50/p99 of triggerExecution) and the
-  * reorg-recovery wall time, as one JSON record in bench_history.
+  * micro-batch latency (p50/p99 of triggerExecution), catch-up and
+  * live per-chunk lag, as one JSON record in bench_history.
   *
   * Method: the bronze tables are staged as ~`nFiles` contiguous
-  * block-range files (repartitionByRange on block_number — exactly the
-  * per-chunk append pattern followLive produces), then each pipeline
+  * block-range files (repartitionByRange on block_number — one file
+  * per settled chunk, as an appending writer leaves them), then each pipeline
   * runs as a real Structured Streaming query — FollowMode.readAppendOnly
   * with maxFilesPerTrigger=4 → the SAME ChainDatasets transform the
   * batch path uses (blocksOf/logsOf/erc20TransfersOf, ordered=false) →
@@ -21,14 +21,6 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   * drains the backlog in maxFilesPerTrigger-bounded micro-batches and
   * stops: every trigger is a measured micro-batch. Streams run
   * SEQUENTIALLY so latencies don't contend.
-  *
-  * Reorg recovery measures the followLive healing path end-to-end:
-  * stop the stream, rewrite bronze canonical-only via the production
-  * replaceDir swap, restart from the SAME checkpoint — the file source
-  * re-lists, sees the consolidated files as new, and reprocesses
-  * idempotently. Recovery wall time is therefore ~one full drain of
-  * the post-reorg bronze (the documented cost of a rewrite, not a
-  * partial patch).
   *
   * Usage: runMain graft.tools.FollowBench [chainFixtureDir] [docsParquet] [outJson]
   */
@@ -266,39 +258,6 @@ object FollowBench {
       s"${batchKeep.size - semMismatches}/${batchKeep.size} match")
     spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
 
-    // reorg recovery, the production healing path: rewrite bronze
-    // canonical-only (tail window re-fetched) via replaceDir, restart
-    // the SAME checkpointed query, drain. The file source re-lists and
-    // reprocesses the consolidated files idempotently — recovery cost
-    // is one full drain of the post-reorg bronze by design. r14: a
-    // {cold, warm} PAIR — the cold pass drops the page cache after the
-    // rewrite, so the drain first-touches the full bronze from disk
-    // (the r13 "37 s first run" that previously lived only in prose);
-    // the warm pass repeats the cycle with the cache populated.
-    def healCycle(label: String, cutoffBack: Long, cold: Boolean): (M, Double, Boolean) = {
-      val tmp = blocksPath + "__reorg_tmp"
-      val t0 = System.nanoTime()
-      val all = spark.read.parquet(blocksPath)
-      val cutoff = all.agg(max(col("block_number")).cast("long"))
-        .collect()(0).getLong(0) - cutoffBack
-      all.filter(col("block_number") < cutoff)
-        .unionByName(all.filter(col("block_number") >= cutoff)) // canonical refetch stand-in
-        .repartitionByRange(120, col("block_number"))
-        .write.mode("overwrite").parquet(tmp)
-      FollowMode.replaceDir(blocksPath, tmp)
-      spark.catalog.refreshByPath(blocksPath)
-      val dropped = cold && dropCaches()
-      val m = run(label, blocksPath,
-        df => graft.chain.ChainDatasets.blocksOf(df, ordered = false),
-        // SAME checkpoint AND sink: genuine restart-from-checkpoint
-        s"$work/ck_blocks", sinkDir = Some(s"$work/out_blocks"))
-      (m, (System.nanoTime() - t0) / 1e9, dropped)
-    }
-    val (mRecoverCold, recoverColdSec, recoverColdDropped) =
-      healCycle("blocks_reorg_heal_cold", 500, cold = true)
-    val (mRecover, recoverSec, _) =
-      healCycle("blocks_reorg_heal", 600, cold = false)
-
     // r13 (brief item 4b): catch-up-from-genesis + steady-state lag —
     // the incremental consumer's worst day. Stage everything below the
     // live window as the genesis backlog, drain it from block 0 with
@@ -306,8 +265,8 @@ object FollowBench {
     // worst-day number is the production configuration, not a tuned
     // batch size), then keep the SAME checkpointed query running under
     // ProcessingTime and feed the live window in chunk-file appends
-    // (atomic part-file moves — exactly what followLive's settled-chunk
-    // writer leaves behind), measuring per-chunk lag from
+    // (atomic part-file moves, one file per settled chunk as
+    // followLive's freeze writes them), measuring per-chunk lag from
     // file-visibility to rows-committed.
     val allBlocks = spark.read.parquet(blocksPath)
     val headBlock = allBlocks.agg(max(col("block_number")).cast("long"))
@@ -399,9 +358,7 @@ object FollowBench {
     val record =
       s"""{"corpus":"$chainDir","n_blocks":$nBlocks,"n_vecs":$nVecs,""" +
         s""""blocks_per_sec":${f"$blocksPerSec%.0f"},""" +
-        s""""reorg_recovery_sec":${f"$recoverSec%.3f"},""" +
-        s""""reorg_recovery_cold_sec":${f"$recoverColdSec%.3f"},""" +
-        s""""cold_cache_dropped":${recoverColdDropped && catchupColdDropped},""" +
+        s""""cold_cache_dropped":$catchupColdDropped,""" +
         s""""semdedup_batch_verdicts":${batchKeep.size},""" +
         s""""semdedup_keepdrop_mismatches":$semMismatches,""" +
         s""""semdedup_state_partitions":$semParts,""" +
@@ -415,12 +372,12 @@ object FollowBench {
         s""""lags_ms":${lags.mkString("[", ",", "]")}},""" +
         s""""streams":{${(Seq(mBlocks, mLogs, mXfer, mDedup, mSemdedup) ++
           mSemdedupRocks.toSeq ++
-          Seq(mRecoverCold, mRecover, mCatchupCold, mCatchup))
+          Seq(mCatchupCold, mCatchup))
           .map(_.json).mkString(",")}}}"""
     val p = java.nio.file.Paths.get(outJson)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.writeString(p, record)
-    println(s"""{"metric":"follow_blocks_per_sec","value":${f"$blocksPerSec%.0f"},"unit":"blocks/sec","reorg_recovery_sec":${f"$recoverSec%.3f"}}""")
+    println(s"""{"metric":"follow_blocks_per_sec","value":${f"$blocksPerSec%.0f"},"unit":"blocks/sec"}""")
     spark.stop()
   }
 }

@@ -2037,36 +2037,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("followLive dir swap recovery heals every crash window") {
-    import java.nio.file.{Files => F, Paths}
-    def mk(dir: String, name: String, content: String): Unit = {
-      F.createDirectories(Paths.get(dir))
-      F.writeString(Paths.get(dir, name), content)
-    }
-    def readMarker(dir: String): String =
-      F.readString(Paths.get(dir, "m"))
-    // crash after move 1: target gone, __old + tmp present → the swap
-    // completes from tmp (tmp is the canonical rewrite)
-    val a = Files.createTempDirectory("graft_swap_a").toString + "/b.parquet"
-    mk(a + "__old", "m", "old"); mk(a + "__reorg_tmp", "m", "new")
-    FollowMode.recoverDir(a)
-    assert(readMarker(a) == "new" && !F.exists(Paths.get(a + "__old")))
-    // crash after move 1 with no tmp (shouldn't happen, but heals):
-    // restore the original
-    val b = Files.createTempDirectory("graft_swap_b").toString + "/b.parquet"
-    mk(b + "__old", "m", "old")
-    FollowMode.recoverDir(b)
-    assert(readMarker(b) == "old" && !F.exists(Paths.get(b + "__old")))
-    // crash mid-delete: live target beside a stale __old → __old cleaned
-    val c = Files.createTempDirectory("graft_swap_c").toString + "/b.parquet"
-    mk(c, "m", "new"); mk(c + "__old", "m", "old")
-    FollowMode.recoverDir(c)
-    assert(readMarker(c) == "new" && !F.exists(Paths.get(c + "__old")))
-    // healthy dir: no-op
-    FollowMode.recoverDir(c)
-    assert(readMarker(c) == "new")
-  }
-
   test("streaming exact dedup suppresses cross-batch duplicate content") {
     val src = Files.createTempDirectory("graft_dedup_src").toString
     val docs = Tables(spark, sf, "documents").select("doc_id", "text")
@@ -2617,9 +2587,9 @@ class TrainedCentsLifecycleSpec extends AnyFunSuite {
       SimilarityOps.trainedCentsOf(spark, corpus, 16).count()
       val idxDir = new java.io.File(base).listFiles().head.toString
       assert(graft.operators.IndexCompact.currentVersion(idxDir, art16) == 1)
-      // follow-mode append: the same append-mode parquet write
-      // followLive's bronze appender commits (FollowMode.scala:585),
-      // enough copies to outgrow the 16-cell floor (target 32 cells)
+      // follow-mode append: a plain append-mode parquet write into the
+      // corpus dir, enough copies to outgrow the 16-cell floor (target
+      // 32 cells)
       val n0 = e0.count()
       val copies = (32 * SimilarityOps.CellTargetSize / n0 + 1).toInt
       val grown = (1 to copies).map(i =>

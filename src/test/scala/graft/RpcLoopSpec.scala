@@ -763,6 +763,66 @@ class RpcLoopSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("followLive: a resumed follow fetches each settled block once and freezes no duplicates") {
+    // The advancing stub of the test above, with a head cap the test
+    // raises between two calls: run 1 stops at 1055 with "range
+    // incomplete", and the SAME call re-run once the head moves on must
+    // freeze the tail chunk with each block exactly once.
+    val cap = new java.util.concurrent.atomic.AtomicLong(1055L)
+    val head = new java.util.concurrent.atomic.AtomicLong(999L)
+    val getBlocks = new AtomicInteger(0)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", { exchange =>
+      val body = new String(exchange.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      def one(req: JValue): String = {
+        val id = (req \ "id") match { case JInt(i) => i.toString; case _ => "0" }
+        val JString(method) = (req \ "method"): @unchecked
+        if (method == "eth_getBlockByNumber") getBlocks.incrementAndGet()
+        val res =
+          if (method == "eth_blockNumber")
+            "\"0x" + head.getAndUpdate(h => math.min(h + 13, cap.get())).toHexString + "\""
+          else result(method, req \ "params")
+        s"""{"jsonrpc":"2.0","id":$id,"result":$res}"""
+      }
+      val resp = JsonMethods.parse(body) match {
+        case JArray(reqs) => reqs.map(one).mkString("[", ",", "]")
+        case req => one(req)
+      }
+      val bytes = resp.getBytes(StandardCharsets.UTF_8)
+      exchange.getResponseHeaders.set("Content-Type", "application/json")
+      exchange.sendResponseHeaders(200, bytes.length)
+      exchange.getResponseBody.write(bytes)
+      exchange.close()
+    })
+    server.start()
+    try {
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/"
+      val bronze = java.nio.file.Files.createTempDirectory("graft_rs_bronze").toString
+      val out = java.nio.file.Files.createTempDirectory("graft_rs_out").toString
+      val chk = java.nio.file.Files.createTempDirectory("graft_rs_chk").toString
+      val spec = graft.chain.Freeze.FreezeSpec(
+        datasets = Seq("blocks"), blocks = BlockSyntax.Range(1000, 1060),
+        chunkSize = 25, outputDir = out)
+      def follow(): Unit = graft.streaming.FollowMode.followLive(spark,
+        new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
+        bronze, spec, chk, pollMs = 10, maxPolls = 100, fetchPartitions = 2)
+      val ex = intercept[IllegalStateException](follow())
+      assert(ex.getMessage.contains("range incomplete"))
+      // one header call per frozen block; none for the unsettled 1050-1055
+      assert(getBlocks.get() == 50, s"${getBlocks.get()} eth_getBlockByNumber calls")
+      cap.set(1100L)
+      follow()
+      val tail = java.nio.file.Files.list(java.nio.file.Paths.get(out))
+        .toArray.map(_.toString)
+        .filter(_.endsWith("00001050_to_00001059.parquet")).toSeq
+      assert(tail.size == 1, s"tail chunk files: $tail")
+      val bns = spark.read.parquet(tail.head).select("block_number")
+        .collect().map(_.getInt(0))
+      assert(bns.length == 10 && bns.distinct.length == 10,
+        s"tail rows: ${bns.sorted.mkString(",")}")
+    } finally server.stop(0)
+  }
+
   test("followLive: a 2-block reorg converges to the canonical chain") {
     // The node advances to head 1023, ROLLS BACK to 1021 (blocks
     // 1022-1023 were a dead fork with different hashes), then re-advances
