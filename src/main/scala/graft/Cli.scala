@@ -973,6 +973,8 @@ object Cli {
     if (sortCols == Seq("none")) sortCols = Seq.empty
     require(sortCols.isEmpty || datasets.size == 1,
       "--sort applies to single-datatype runs only")
+    require(maxConcurrentChunks >= 1,
+      s"--max-concurrent-chunks must be at least 1, got $maxConcurrentChunks")
 
     // expand multis + aliases via the registry (meta.rs clustering names)
     val expanded = datasets.reverse.flatMap { d =>
@@ -1114,7 +1116,7 @@ object Cli {
         val stub = txHashes.head.stripPrefix("0x").take(8) + s"_${txHashes.size}txs"
         val target = graft.chain.LakeFs.display(new org.apache.hadoop.fs.Path(
           outputDir, s"${network}__${name}__txs_$stub.$format"))
-        Freeze.writeOneFile(df, target, format)
+        Freeze.writeSingleFile(df, target, format)
         target
       }
       return Right(Some(Freeze.FreezeResult(completed, Nil, Nil, -1)))
@@ -1177,17 +1179,17 @@ object Cli {
         blocksSpec = BlockSyntax.Numbers(kept)
     }
 
-    // the bronze the builders read: fetched from the node under --rpc
-    // (every request made before this returns), else --source-dir's
-    // tables. Dry runs plan file layout only — no node traffic (run.rs
-    // dry path).
-    def openBronze(): Bronze = liveSource match {
+    // the bronze the builders read over some blocks: fetched from the
+    // node under --rpc (every request made before this returns), else
+    // --source-dir's tables. Dry runs plan file layout only — no node
+    // traffic (run.rs dry path).
+    def openBronze(blocks: BlockSyntax.Blocks): Bronze = liveSource match {
       case Some(src) if !dryRun =>
         val liveCalls = for {
           to <- contract
           data <- composedCallData
         } yield (to, data)
-        src.fetchBronze(spark, blocksSpec, expanded,
+        src.fetchBronze(spark, blocks, expanded,
           addresses = addressF, slots = slotsF, calls = liveCalls,
           jsTracer = jsTracer, options = buildOptions)
       case _ => Bronze.dir(spark, sourceDir)
@@ -1198,7 +1200,7 @@ object Cli {
     // bronze stays held for as long as the returned frame is used.
     if (collectMode) {
       require(expanded.size == 1, "collect() takes exactly one datatype")
-      val df = Freeze.filterBlocks(decorated(expanded.head)(openBronze()), blocksSpec)
+      val df = Freeze.filterBlocks(decorated(expanded.head)(openBronze(blocksSpec)), blocksSpec)
       return Left(if (hex) Freeze.hexifyBinary(df) else df)
     }
 
@@ -1251,8 +1253,7 @@ object Cli {
 
     if (verbose) printIntro(spec, chunks.size, rpcUrl.getOrElse(sourceDir))
     val t0 = System.nanoTime()
-    val bronze = openBronze()
-    val result = try Freeze.freeze(bronze, spec, decorated) finally bronze.release()
+    val result = Freeze.freeze(openBronze(_), spec, decorated)
     if (verbose)
       printConclusion(result, chunks.size * expanded.size, (System.nanoTime() - t0) / 1e9)
     Right(Some(result))

@@ -24,6 +24,7 @@ object BlockSyntax {
   /** contiguous [start, endExclusive) */
   case class Range(start: Long, endExclusive: Long) extends Blocks {
     require(start < endExclusive, s"empty range $start:$endExclusive")
+    def contains(b: Long): Boolean = b >= start && b < endExclusive
   }
   /** explicit list (sampled / strided) */
   case class Numbers(values: Seq[Long]) extends Blocks

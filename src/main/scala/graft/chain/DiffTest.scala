@@ -91,50 +91,46 @@ object DiffTest {
     "geth_balance_diffs", "geth_calls", "geth_opcodes", "vm_traces",
     "javascript_traces")
 
-  /** Materialize every bronze the corpus needs from the live endpoint:
-    * the block-range bronzes through the production materializeBronze,
-    * the entity-scoped ones over work lists (blocks × addresses / slots /
-    * calls) pinned from the reference dir's own bronzes. */
+  /** Fetch every bronze the corpus needs from the live endpoint into one
+    * `Bronze.persisted`: the block-range bronzes through the production
+    * fetchBronze, the entity-scoped ones over work lists (blocks ×
+    * addresses / slots / calls) pinned from the reference dir's own
+    * bronzes. Release it when done. */
   def materializeBronzes(spark: SparkSession, src: RpcSource,
-      refDir: String, outDir: String, range: BlockSyntax.Range,
-      nParts: Int, jsTracer: String): Unit = {
-    src.materializeBronze(spark, outDir, range, rangeDatasets,
-      jsTracer = Some(jsTracer), numPartitions = nParts)
-
-    // entity-scoped bronzes, work lists pinned from the reference side
-    def put(name: String)(df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      refDir: String, range: BlockSyntax.Range,
+      nParts: Int, jsTracer: String): Bronze = {
+    def ref(table: String) = spark.read.parquet(s"$refDir/$table.parquet")
+    def hex(r: org.apache.spark.sql.Row, i: Int): String =
+      "0x" + r.getAs[Array[Byte]](i).map("%02x".format(_)).mkString
     def hexes(table: String, col: String): Seq[String] =
-      spark.read.parquet(s"$refDir/$table.parquet")
-        .select(col).distinct().collect()
-        .map(r => "0x" + r.getAs[Array[Byte]](0).map("%02x".format(_)).mkString)
-        .sorted.toSeq
-    def blocksOf(table: String): Seq[Long] =
-      spark.read.parquet(s"$refDir/$table.parquet")
-        .select("block_number").distinct().collect()
-        .map(_.getInt(0).toLong).sorted.toSeq
+      ref(table).select(col).distinct().collect().map(hex(_, 0)).sorted.toSeq
+    def blocksOf(table: String): Seq[Long] = ref(table).select("block_number")
+      .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
     def pairs(table: String, c1: String, c2: String): Seq[(String, String)] =
-      spark.read.parquet(s"$refDir/$table.parquet")
-        .select(c1, c2).distinct().collect()
-        .map(r => ("0x" + r.getAs[Array[Byte]](0).map("%02x".format(_)).mkString,
-          "0x" + r.getAs[Array[Byte]](1).map("%02x".format(_)).mkString))
-        .sortBy(p => (p._1, p._2)).toSeq
-
-    put("rpc_accounts")(src.fetchAccounts(spark,
-      blocksOf("rpc_accounts"), hexes("rpc_accounts", "address"), nParts))
-    put("rpc_storage")(src.fetchStorage(spark, blocksOf("rpc_storage"),
-      pairs("rpc_storage", "address", "slot"), nParts))
-    put("rpc_calls")(src.fetchEthCalls(spark, blocksOf("rpc_calls"),
-      pairs("rpc_calls", "contract_address", "call_data"), nParts))
-    put("rpc_calls_erc721")(src.fetchEthCalls(spark,
-      blocksOf("rpc_calls_erc721"),
-      pairs("rpc_calls_erc721", "contract_address", "call_data"), nParts))
-    put("rpc_trace_calls")(src.fetchTraceCalls(spark,
-      blocksOf("rpc_trace_calls"),
-      pairs("rpc_trace_calls", "contract_address", "tx_call_data"), nParts))
+      ref(table).select(c1, c2).distinct().collect().map(r => (hex(r, 0), hex(r, 1))).sorted.toSeq
+    // entity-scoped bronzes, work lists pinned from the reference side;
+    // the frames are lazy, so they fetch after the range bronzes
+    val entity = Map(
+      "rpc_accounts" -> src.fetchAccounts(spark,
+        blocksOf("rpc_accounts"), hexes("rpc_accounts", "address"), nParts),
+      "rpc_storage" -> src.fetchStorage(spark, blocksOf("rpc_storage"),
+        pairs("rpc_storage", "address", "slot"), nParts),
+      "rpc_calls" -> src.fetchEthCalls(spark, blocksOf("rpc_calls"),
+        pairs("rpc_calls", "contract_address", "call_data"), nParts),
+      "rpc_calls_erc721" -> src.fetchEthCalls(spark,
+        blocksOf("rpc_calls_erc721"),
+        pairs("rpc_calls_erc721", "contract_address", "call_data"), nParts),
+      "rpc_trace_calls" -> src.fetchTraceCalls(spark,
+        blocksOf("rpc_trace_calls"),
+        pairs("rpc_trace_calls", "contract_address", "tx_call_data"), nParts))
+    // a failed entity fetch releases the range frames with the rest
+    val ranged = src.fetchBronze(spark, range, rangeDatasets,
+      jsTracer = Some(jsTracer), numPartitions = nParts)
+    Bronze.persisted(rangeDatasets.flatMap(Freeze.catalog(_).bronze(Freeze.BuildOptions()))
+      .map(t => t -> ranged(t)).toMap ++ entity)
   }
 
-  /** Full sweep: materialize live bronzes, then diff every corpus
+  /** Full sweep: fetch the live bronzes, then diff every corpus
     * datatype (plus javascript_traces JSON-normalized, plus the
     * by-transaction time dimension for every hash-capable datatype).
     * Returns every outcome; callers decide how loudly to fail. */
@@ -147,21 +143,6 @@ object DiffTest {
       // drive the production retry/backoff path end-to-end
       maxRetries: Int = 0, initialBackoffMs: Long = 500,
       computeUnitsPerSecond: Long = 50): Seq[Outcome] = {
-    val live = java.nio.file.Files.createTempDirectory("graft_difftest_").toString
-    try runOver(spark, refDir, rpcUrl, live, range, nParts, jsTracer,
-      byTxSampleBlock, maxRetries, initialBackoffMs, computeUnitsPerSecond)
-    finally {
-      // the staged live bronze is a full corpus per invocation —
-      // repeated CI sweeps would otherwise fill the host's tmp
-      try LakeFs.deleteTree(live) catch { case _: Exception => () }
-    }
-  }
-
-  private def runOver(spark: SparkSession, refDir: String, rpcUrl: String,
-      live: String, range: BlockSyntax.Range, nParts: Int,
-      jsTracer: String, byTxSampleBlock: Option[Long],
-      maxRetries: Int, initialBackoffMs: Long,
-      computeUnitsPerSecond: Long): Seq[Outcome] = {
     // detect the chain id from the node like the freeze CLI does
     // (runImpl's loud-failure discipline): a hardcoded 1 would stamp
     // mainnet onto every live row and false-fail all 37+ datatypes the
@@ -178,13 +159,18 @@ object DiffTest {
     val src = new RpcSource(RpcConfig(rpcUrl, chainId = cid,
       maxRetries = maxRetries, initialBackoffMs = initialBackoffMs,
       computeUnitsPerSecond = computeUnitsPerSecond))
-    materializeBronzes(spark, src, refDir, live, range, nParts, jsTracer)
+    val live = materializeBronzes(spark, src, refDir, range, nParts, jsTracer)
+    try compareAll(spark, refDir, live, range, byTxSampleBlock)
+    finally live.release()
+  }
 
+  private def compareAll(spark: SparkSession, refDir: String, live: Bronze,
+      range: BlockSyntax.Range, byTxSampleBlock: Option[Long]): Seq[Outcome] = {
     def compare(name: String, c: DataFrame => Seq[String],
         bld: Freeze.DatasetBuilder,
         allowEmpty: Boolean = false): Outcome = {
       val ref = c(bld(Bronze.dir(spark, refDir)))
-      val liv = c(bld(Bronze.dir(spark, live)))
+      val liv = c(bld(live))
       Outcome(name, ref.size, liv.size,
         ref.zipAll(liv, "<missing>", "<missing>").find(p => p._1 != p._2),
         allowEmpty)

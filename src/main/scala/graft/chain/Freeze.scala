@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   *
   * Each chunk becomes one output file
   * `{network}__{datatype}[__{label}]__{start:08d}_to_{end:08d}.parquet`;
-  * existing files are skipped unless overwrite — re-running a job touches
-  * only missing chunks (incremental/resumable extraction). Writes go
-  * through a `._tmp` directory + single-file promotion (export.rs:13-23)
-  * over the Hadoop FileSystem of the output path — a lake can live on
-  * local disk, HDFS or an object store (see LakeFs for the per-FS
-  * rename semantics; PLANS.md carries the swap-site atomicity audit).
+  * existing files are skipped unless overwrite, before any bronze is
+  * opened — re-running a job fetches and touches only missing chunks
+  * (incremental/resumable extraction). Writes go through a `._tmp`
+  * directory + single-file promotion (export.rs:13-23) over the Hadoop
+  * FileSystem of the output path — a lake can live on local disk, HDFS
+  * or an object store (see LakeFs for the per-FS rename semantics;
+  * PLANS.md carries the swap-site atomicity audit).
   *
   * Scale note: each chunk writes via a block-range filter that Catalyst
   * pushes into the parquet scan (partition pruning), so a 1000-chunk
@@ -63,7 +64,7 @@ object Freeze {
       /** omit column statistics (args.rs --no-stats):
         * parquet.column.statistics.enabled=false */
       noStats: Boolean = false,
-      /** chunk-file writes in flight at once (freeze.rs:85-87 semaphore) */
+      /** chunk-file writes in flight at once, at least 1 (freeze.rs:85-87) */
       maxConcurrentChunks: Int = 4,
       /** recorded in the run report (reports.rs cli_command/args) */
       cliCommand: Option[String] = None,
@@ -276,17 +277,27 @@ object Freeze {
   /** Chunked file extraction with skip-existing. Returns the run report
     * (freeze.rs:149-168 summary semantics).
     *
+    * A chunk whose files all exist (without overwrite) is skipped before
+    * anything is opened (freeze.rs:92-110). `open` is called once per
+    * maximal run of the other chunks adjacent in block order, with the
+    * run's span (of a block list, its listed blocks); a fresh freeze is
+    * one run. What it returns is released once the run's files are
+    * written. Discovered partition values (`partitionBy` without
+    * `partitionValues`) name files from the data, so those chunks are
+    * always opened and each file is skipped once it is named.
+    *
     * Scale shape (fixes from r1's plan audit): one Spark job per output
     * file with NO pre-count (row counts come from an `observe` metric on
     * the write itself), up to `maxConcurrentChunks` chunk jobs in flight
     * (cryo's semaphore, freeze.rs:85-87), and partition-by dim values
-    * discovered in ONE job per dataset (a broadcast range-join against the
-    * chunk table) instead of a driver collect per chunk.
+    * discovered in ONE job per dataset and run (a broadcast range-join
+    * against the chunk table) instead of a driver collect per chunk.
     */
-  def freeze(bronze: Bronze, spec: FreezeSpec,
+  def freeze(open: BlockSyntax.Blocks => Bronze, spec: FreezeSpec,
       overrides: Map[String, DatasetBuilder] = Map.empty): FreezeResult = {
     def builderOf(canonical: String): DatasetBuilder =
       overrides.getOrElse(canonical, builder(canonical))
+    require(spec.maxConcurrentChunks >= 1, s"maxConcurrentChunks ${spec.maxConcurrentChunks} < 1")
     // a label equal to a dataset name would make cryo filenames
     // ambiguous for lake readers (Lake.readStream prunes by globbing
     // the dataset segment; `*__blocks__*` would also match a
@@ -313,61 +324,15 @@ object Freeze {
       case other => throw new IllegalArgumentException(
         s"invalid chunk order '$other', use normal, reverse, or random")
     }
-    // multi-dim partitioning (types/partitions.rs:290-337): one file per
-    // (chunk × dim value present in that chunk); binary dims use the
-    // 8-hex-char prefix stub (binary_chunk.rs:16-24). All (chunk, value)
-    // combos for a dataset come from a single aggregation job: the tiny
-    // chunk-boundary table broadcast-range-joins the scan, so discovery
-    // cost is one pass per dataset, not one driver collect per chunk.
-    def dimValuesByChunk(canonical: String): Map[Int, Seq[Option[Any]]] =
-      spec.partitionBy match {
-        case None => chunks.indices.map(_ -> Seq(Option.empty[Any])).toMap
-        // cryo semantics: user-supplied dim values (CLI entity lists)
-        // cross-product every chunk — no data-driven discovery at all
-        // (types/partitions.rs:290-337,340-404).
-        case Some(_) if spec.partitionValues.nonEmpty =>
-          chunks.indices
-            .map(_ -> spec.partitionValues.map(Option(_))).toMap
-        case Some(dim) =>
-          // spec.blocks, NOT the densified range: a Numbers list must
-          // not discover dim values that exist only at unlisted blocks
-          // (runTask's membership filter would then write empty
-          // partition files for them)
-          val scan = filterBlocks(builderOf(canonical)(bronze), spec.blocks)
-          val spark = scan.sparkSession
-          import spark.implicits._
-          val bounds = chunks.zipWithIndex
-            .map { case (c, i) => (i, c.start, c.endExclusive) }
-            .toDF("chunk_idx", "c_start", "c_end")
-          // limit BEFORE collect: bounds the driver-side list, so a
-          // high-cardinality dim fails fast instead of OOMing the driver.
-          val collected = scan.join(broadcast(bounds),
-              col("block_number") >= col("c_start") &&
-                col("block_number") < col("c_end"))
-            .select(col("chunk_idx"), col(dim).as("dim_value"))
-            .distinct().limit(spec.maxDiscoveredPartitions + 1).collect()
-          require(collected.length <= spec.maxDiscoveredPartitions,
-            s"--partition-by $dim: more than ${spec.maxDiscoveredPartitions} " +
-              "(chunk, value) partitions discovered; pass explicit values " +
-              "via the matching entity flag (--address/--contract/--topic0) " +
-              "or raise maxDiscoveredPartitions")
-          collected
-            .groupBy(_.getInt(0))
-            .map { case (idx, rs) =>
-              idx -> rs.map(r => Option(r.get(1))).toSeq.sortBy(_.map {
-                case b: Array[Byte] => b.map("%02x".format(_)).mkString
-                case v => v.toString
-              }.getOrElse(""))
-            }
-      }
-    // build the ordered task list up front (skip decisions are driver-side)
-    val tasks = for {
-      dataset <- spec.datasets
-      canonical = Datatypes(dataset).name
-      dims = dimValuesByChunk(canonical)
-      (chunk, idx) <- chunks.zipWithIndex
-      dimValue <- dims.getOrElse(idx, Seq.empty)
-    } yield {
+    val datasets = spec.datasets.map(Datatypes(_).name).distinct
+    def dirOf(canonical: String): HPath = spec.subdirs.map {
+      case "datatype" => canonical
+      case "network" => spec.network
+      case custom => custom
+    }.foldLeft(new HPath(spec.outputDir))(new HPath(_, _))
+    datasets.foreach(d => LakeFs.mkdirs(dirOf(d).toString))
+    def target(canonical: String, chunk: BlockSyntax.Range,
+        dimValue: Option[Any]): String = {
       val stub = dimValue.map {
         case b: Array[Byte] => "__" + b.take(4).map("%02x".format(_)).mkString
         case v =>
@@ -384,16 +349,72 @@ object Freeze {
       }.getOrElse("")
       val name = fileName(spec, canonical, chunk)
         .replace(s"__${chunkStub(chunk)}", s"$stub" + s"__${chunkStub(chunk)}")
-      val sub = spec.subdirs.map {
-        case "datatype" => canonical
-        case "network" => spec.network
-        case custom => custom
-      }
-      val dir = sub.foldLeft(new HPath(spec.outputDir))(new HPath(_, _))
-      LakeFs.mkdirs(dir.toString)
-      (canonical, chunk, dimValue, LakeFs.display(new HPath(dir, name)))
+      LakeFs.display(new HPath(dirOf(canonical), name))
     }
-    def runTask(canonical: String, chunk: BlockSyntax.Range,
+    // every chunk's dim values, unless discovered from the data (cryo:
+    // entity-list values cross-product every chunk, partitions.rs:290-404)
+    val givenDims: Option[Seq[Option[Any]]] =
+      if (spec.partitionBy.isEmpty) Some(Seq(None))
+      else Option.when(spec.partitionValues.nonEmpty)(spec.partitionValues.map(Option(_)))
+    // multi-dim partitioning (types/partitions.rs:290-337): one file per
+    // (chunk × dim value present in that chunk); binary dims use the
+    // 8-hex-char prefix stub (binary_chunk.rs:16-24). All (chunk, value)
+    // combos of a run come from one aggregation job per dataset: the tiny
+    // chunk-boundary table broadcast-range-joins the scan, not one driver
+    // collect per chunk.
+    def dimValuesByChunk(canonical: String, bronze: Bronze,
+        run: Seq[BlockSyntax.Range]): Map[BlockSyntax.Range, Seq[Option[Any]]] =
+      givenDims.map(dims => run.map(_ -> dims).toMap).getOrElse {
+        val dim = spec.partitionBy.get
+        // spec.blocks, NOT the densified range: a Numbers list must
+        // not discover dim values that exist only at unlisted blocks
+        // (runTask's membership filter would then write empty
+        // partition files for them)
+        val scan = filterBlocks(builderOf(canonical)(bronze), spec.blocks)
+        val spark = scan.sparkSession
+        import spark.implicits._
+        val bounds = run.zipWithIndex
+          .map { case (c, i) => (i, c.start, c.endExclusive) }
+          .toDF("chunk_idx", "c_start", "c_end")
+        // limit BEFORE collect: bounds the driver-side list, so a
+        // high-cardinality dim fails fast instead of OOMing the driver.
+        val collected = scan.join(broadcast(bounds),
+            col("block_number") >= col("c_start") &&
+              col("block_number") < col("c_end"))
+          .select(col("chunk_idx"), col(dim).as("dim_value"))
+          .distinct().limit(spec.maxDiscoveredPartitions + 1).collect()
+        require(collected.length <= spec.maxDiscoveredPartitions,
+          s"--partition-by $dim: more than ${spec.maxDiscoveredPartitions} " +
+            "(chunk, value) partitions discovered; pass explicit values " +
+            "via the matching entity flag (--address/--contract/--topic0) " +
+            "or raise maxDiscoveredPartitions")
+        collected
+          .groupBy(_.getInt(0))
+          .map { case (idx, rs) =>
+            run(idx) -> rs.map(r => Option(r.get(1))).toSeq.sortBy(_.map {
+              case b: Array[Byte] => b.map("%02x".format(_)).mkString
+              case v => v.toString
+            }.getOrElse(""))
+          }
+      }
+    // the chunks whose files all exist: skipped before anything is opened
+    val finished: Set[BlockSyntax.Range] = givenDims.filterNot(_ => spec.overwrite)
+      .fold(Set.empty[BlockSyntax.Range])(dims => ordered.filter(c => datasets.forall(d =>
+        dims.forall(v => LakeFs.exists(target(d, c, v))))).toSet)
+    // maximal runs of unfinished chunks adjacent in block order, in collection order
+    val pos = chunks.zipWithIndex.toMap
+    val runs = Seq.unfold(ordered)(cs => Option(cs.dropWhile(finished))
+      .filter(_.nonEmpty).map(_.span(!finished(_)))).sortBy(_.map(pos).min)
+    // a run holding no listed block still writes its (empty) files
+    def blocksOf(run: Seq[BlockSyntax.Range]): BlockSyntax.Blocks = {
+      val span = BlockSyntax.Range(run.head.start, run.last.endExclusive)
+      spec.blocks match {
+        case BlockSyntax.Numbers(ns) if ns.exists(span.contains) =>
+          BlockSyntax.Numbers(ns.filter(span.contains))
+        case _ => span
+      }
+    }
+    def runTask(bronze: Bronze, canonical: String, chunk: BlockSyntax.Range,
         dimValue: Option[Any], target: String): TaskOutcome =
       if (LakeFs.exists(target) && !spec.overwrite) {
         Skipped(target) // freeze.rs:92-110 idempotent skip
@@ -424,21 +445,29 @@ object Freeze {
       }
     // cryo keeps a bounded number of chunks in flight; Spark schedules the
     // concurrent jobs' stages across the same executor pool
-    val outcomes: Seq[TaskOutcome] =
-      if (spec.maxConcurrentChunks <= 1 || tasks.size <= 1)
-        tasks.map { case (c, ch, dv, t) => runTask(c, ch, dv, t) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          spec.maxConcurrentChunks)
-        try {
-          val futures = tasks.map { case (c, ch, dv, t) =>
-            pool.submit(new java.util.concurrent.Callable[TaskOutcome] {
-              def call(): TaskOutcome = runTask(c, ch, dv, t)
-            })
-          }
-          futures.map(_.get()) // preserves task order regardless of finish order
-        } finally pool.shutdown()
-      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(spec.maxConcurrentChunks)
+    val ran: Map[(String, BlockSyntax.Range), Seq[TaskOutcome]] = try runs.flatMap { run =>
+      val bronze = open(blocksOf(run))
+      try {
+        val runChunks = chunks.filter(run.toSet)
+        // the run's task list is built before any task starts
+        val tasks = for {
+          canonical <- datasets
+          dims = dimValuesByChunk(canonical, bronze, runChunks)
+          chunk <- runChunks
+          dimValue <- dims.getOrElse(chunk, Seq.empty)
+        } yield (canonical, chunk, dimValue, target(canonical, chunk, dimValue))
+        tasks.map { case (c, ch, dv, t) => (c, ch) -> pool.submit(() => runTask(bronze, c, ch, dv, t)) }
+          .map { case (k, f) => k -> f.get() }
+      } finally bronze.release()
+    }.groupMap(_._1)(_._2) finally pool.shutdown()
+    // task order: dataset, then chunk in collection order
+    val outcomes = for {
+      canonical <- datasets
+      chunk <- chunks
+      o <- if (finished(chunk)) givenDims.get.map(v => Skipped(target(canonical, chunk, v)))
+        else ran.getOrElse((canonical, chunk), Nil)
+    } yield o
     val result = FreezeResult(
       outcomes.collect { case Completed(p, _) => p },
       outcomes.collect { case Skipped(p) => p },
@@ -450,7 +479,7 @@ object Freeze {
 
   /** `freeze` over the bronze tables of a directory */
   def freeze(spark: SparkSession, sourceDir: String, spec: FreezeSpec): FreezeResult =
-    freeze(Bronze.dir(spark, sourceDir), spec)
+    freeze(_ => Bronze.dir(spark, sourceDir), spec)
 
   /** re-encode all binary columns as 0x-hex strings */
   private[graft] def hexifyBinary(df: DataFrame): DataFrame = {
@@ -462,10 +491,6 @@ object Freeze {
     }.toSeq: _*)
   }
 
-  /** single-file write for non-chunked collection modes (e.g. --txs) */
-  def writeOneFile(df: DataFrame, target: String, format: String): Long =
-    writeSingleFile(df, target, format)
-
   /** one file per chunk via tmp dir + single-file promotion
     * (export.rs:13-23), over the Hadoop FileSystem of the target path —
     * local, hdfs:// and s3a:// lakes all take the same path. The
@@ -474,8 +499,8 @@ object Freeze {
     * dir lake listings skip (LakeFs scaladoc has the full semantics).
     * The row count rides the write job as an `observe` metric — the chunk
     * is computed exactly once (r1 pre-counted with df.count(), doubling
-    * every chunk's work). */
-  private def writeSingleFile(df: DataFrame, target: String, format: String,
+    * every chunk's work). Non-chunked writes (--txs, compaction) use it too. */
+  private[graft] def writeSingleFile(df: DataFrame, target: String, format: String,
       compression: Option[String] = None, rowGroupSize: Option[Int] = None,
       noStats: Boolean = false): Long = {
     val targetPath = new HPath(target)

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.col
   *    block coverage the lake does not have (freeze's idempotent-skip
   *    and follow-mode resumption both reason from filename ranges).
   *  - Crash-safe without a journal: the merged file is written first
-  *    (tmp + atomic rename inside Freeze.writeOneFile), then the
+  *    (tmp + atomic rename inside Freeze.writeSingleFile), then the
   *    originals are deleted. A crash in between leaves BOTH — which is
   *    why `Lake.select` drops files strictly CONTAINED in another file
   *    of the same key: readers see each row exactly once through the
@@ -115,7 +115,7 @@ object LakeCompact {
           val src = spark.read.parquet(paths: _*)
           // the row-preservation recheck reads source FOOTERS, not data:
           // a src.count() pre-pass re-scanned every run twice (the exact
-          // cost writeOneFile's observe metric exists to avoid) — the
+          // cost writeSingleFile's observe metric exists to avoid) — the
           // footer record counts are the same independent ground truth
           // at near-zero I/O
           val hconf = spark.sessionState.newHadoopConf()
@@ -129,7 +129,7 @@ object LakeCompact {
             .filter(src.columns.contains)
           val ordered =
             if (sortKeys.isEmpty) src else src.orderBy(sortKeys.map(col): _*)
-          val n = Freeze.writeOneFile(ordered, target, "parquet")
+          val n = Freeze.writeSingleFile(ordered, target, "parquet")
           if (n != expected) {
             // the bad merged file must NOT survive: the containment rule
             // would make reads prefer it over the (correct) originals,

@@ -44,9 +44,6 @@ object TextOps {
     * token row; the array-lambda `shingles` runs interpreted per element,
     * 3-5× slower). Downstream groupBy(doc_id) aggregations partial-agg
     * before their shuffle, so only |docs|-scale rows ever move. */
-  private def shingleRows(s: SparkSession, dir: String): DataFrame =
-    shingleRowsOf(Tables(s, dir, "documents"))
-
   private def shingleRowsOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSql
     docs
@@ -56,11 +53,6 @@ object TextOps {
           .as("shingle"))
   }
 
-  /** flat (doc_id, shingle) rows with per-doc DISTINCT shingles emitted
-    * by the Generator itself: a document's shingle set is row-local, so
-    * the `.distinct()` this replaces paid a corpus-scale exchange to
-    * dedup rows that never had cross-partition duplicates. The
-    * decontamination family's set semantics start here. */
   /** IVF-probed semantic decontamination (see q_doc_sem_decontam_ivf
     * in `queries` for the full contract): both sides assign to
     * `nCents` seed cells row-locally, train compares only against

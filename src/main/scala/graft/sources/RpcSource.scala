@@ -205,9 +205,6 @@ object RpcCodec {
     s"""{"jsonrpc":"2.0","id":$id,"method":"debug_traceBlockByNumber","params":["${hexQuantity(blockNumber)}"$cfg]}"""
   }
 
-  def debugTraceTransactionRequest(id: Long, txHash: String): String =
-    s"""{"jsonrpc":"2.0","id":$id,"method":"debug_traceTransaction","params":["$txHash",{}]}"""
-
   /** debug_traceBlockByNumber default (struct-log) tracer with the
     * schema-driven capture flags (geth_opcodes.rs:44-59): memory/stack/
     * storage are only captured when the schema asks for those columns —
@@ -906,7 +903,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
 
   /** `fetchBronze`, with each fetched table written to
     * `outDir/<table>.parquet`, for callers that read bronze back from a
-    * directory (DiffTest's live side). */
+    * directory; the benchmark's traced freeze pass is the only one. */
   def materializeBronze(spark: SparkSession, outDir: String,
       blocks: BlockSyntax.Blocks, datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,

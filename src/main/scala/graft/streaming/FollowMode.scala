@@ -697,10 +697,10 @@ object FollowMode {
     * on every poll. The caller's thread polls the node's head
     * (eth_blockNumber) every `pollMs`. Each poll takes the run of
     * unfrozen chunks of `spec`'s range that have settled (head ≥ chunk
-    * end − 1 + reorgBuffer), fetches that whole span with ONE
-    * `RpcSource.fetchBronze` into Spark's cache, freezes it with
-    * `Freeze.freeze` and releases it. A block is fetched only once it has
-    * settled, so a rollback within the buffer never reaches anything
+    * end − 1 + reorgBuffer) and freezes them with `Freeze.freeze`, which
+    * fetches each run of missing chunks with ONE `RpcSource.fetchBronze`
+    * into Spark's cache and releases it. A block is fetched only once it
+    * has settled, so a rollback within the buffer never reaches anything
     * fetched or frozen, and one call fetches no block twice.
     * `spec.datasets` are fetched as a `Cli.run --rpc` freeze fetches
     * them; the specs and the benchmark follow `blocks`.
@@ -710,7 +710,7 @@ object FollowMode {
     * rolls back below a frozen chunk's last block (a reorg deeper than
     * the buffer), and when `maxPolls` runs out before the range's last
     * chunk settles. A re-run resumes: skip-existing keeps the files
-    * already frozen, though their blocks are fetched again.
+    * already frozen and fetches none of their blocks.
     *
     * A poll's fetch is sized like every fetch: one request per
     * `innerRequestSize` blocks, the requests in whole runs on at most one
@@ -741,15 +741,13 @@ object FollowMode {
       val run = chunks.drop(frozen)
         .takeWhile(_.endExclusive <= settledBelow(head, spec))
       if (run.nonEmpty) {
-        val span = BlockSyntax.Range(run.head.start, run.last.endExclusive)
-        val bronze = source.fetchBronze(spark, span, spec.datasets,
-          numPartitions = fetchPartitions)
-        // re-chunk the span as planned: every chunk but the range's last
-        // is as long as the run's first (n-chunks and align included)
-        val r = try Freeze.freeze(bronze, spec.copy(blocks = span,
-          chunkSize = run.head.endExclusive - run.head.start,
-          nChunks = None, align = false))
-        finally bronze.release()
+        // re-chunk the run's span as planned: every chunk but the range's
+        // last is as long as the run's first (n-chunks and align included)
+        val r = Freeze.freeze(
+          source.fetchBronze(spark, _, spec.datasets, numPartitions = fetchPartitions),
+          spec.copy(blocks = BlockSyntax.Range(run.head.start, run.last.endExclusive),
+            chunkSize = run.head.endExclusive - run.head.start,
+            nChunks = None, align = false))
         if (r.errored.nonEmpty)
           throw new IllegalStateException(
             s"followLive could not write ${r.errored.mkString(", ")}; " +

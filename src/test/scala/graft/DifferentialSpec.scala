@@ -665,28 +665,27 @@ class DifferentialSpec extends AnyFunSuite {
     // stub whose traces hide an action type — the affected datatypes
     // must FAIL while blocks still passes (no silent cross-talk)
     val h = FixtureRpcServer.start(spark, fixDir)
-    val live = java.nio.file.Files.createTempDirectory("graft_diff_bad").toString
     try {
       val src = new RpcSource(RpcConfig(h.url, chainId = 1, maxRetries = 0))
       val range = BlockSyntax.Range(1000, 1060)
-      graft.chain.DiffTest.materializeBronzes(spark, src, fixDir, live,
+      val live = graft.chain.DiffTest.materializeBronzes(spark, src, fixDir,
         range, 4, "{fake: true}")
       // tamper: drop every reward trace from the live bronze
-      val t = spark.read.parquet(s"$live/rpc_traces.parquet")
-        .filter(org.apache.spark.sql.functions.col("action_type") =!= "reward")
-        .cache()
-      t.count()
-      t.write.mode("overwrite").parquet(s"$live/rpc_traces.parquet")
-      t.unpersist()
+      val tampered = Bronze.persisted(Map(
+        "rpc_blocks" -> live("rpc_blocks"),
+        "rpc_traces" -> live("rpc_traces")
+          .filter(org.apache.spark.sql.functions.col("action_type") =!= "reward")))
       def cmp(name: String, bld: Bronze => DataFrame) = {
         val ref = graft.chain.DiffTest.canon(bld(Bronze.dir(spark, fixDir)))
-        val liv = graft.chain.DiffTest.canon(bld(Bronze.dir(spark, live)))
+        val liv = graft.chain.DiffTest.canon(bld(tampered))
         graft.chain.DiffTest.Outcome(name, ref.size, liv.size,
           ref.zipAll(liv, "<m>", "<m>").find(p => p._1 != p._2))
       }
-      assert(cmp("blocks", ChainDatasets.blocks(_)).ok)
-      val nt = cmp("native_transfers", ChainDatasets.nativeTransfers(_))
-      assert(!nt.ok && nt.refRows > nt.liveRows)
+      try {
+        assert(cmp("blocks", ChainDatasets.blocks(_)).ok)
+        val nt = cmp("native_transfers", ChainDatasets.nativeTransfers(_))
+        assert(!nt.ok && nt.refRows > nt.liveRows)
+      } finally { tampered.release(); live.release() }
     } finally h.stop()
   }
 

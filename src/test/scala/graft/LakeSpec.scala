@@ -422,15 +422,18 @@ class LakeSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("collides with a dataset name"))
     // the same guard covers explicit partition-dim values (binary dims
-    // are immune — an 8-hex stub cannot spell a dataset name)
-    val e2 = intercept[IllegalArgumentException] {
-      Freeze.freeze(spark, FixDir, Freeze.FreezeSpec(
-        datasets = Seq("transactions"), blocks = BlockSyntax.Range(1000, 1010),
-        outputDir = freshDir("lake_badpv_"), partitionBy = Some("to_address"),
-        partitionValues = Seq("blocks"), noReport = true,
-        maxConcurrentChunks = 1))
+    // are immune — an 8-hex stub cannot spell a dataset name), also
+    // under --overwrite, where no file's existence is checked first
+    for (overwrite <- Seq(false, true)) {
+      val e2 = intercept[IllegalArgumentException] {
+        Freeze.freeze(spark, FixDir, Freeze.FreezeSpec(
+          datasets = Seq("transactions"), blocks = BlockSyntax.Range(1000, 1010),
+          outputDir = freshDir("lake_badpv_"), partitionBy = Some("to_address"),
+          partitionValues = Seq("blocks"), noReport = true, overwrite = overwrite,
+          maxConcurrentChunks = 1))
+      }
+      assert(e2.getMessage.contains("collides with a dataset name"))
     }
-    assert(e2.getMessage.contains("collides with a dataset name"))
     // an ALIAS is a legal label: filenames and readStream globs carry
     // only canonical dataset segments, so "txs" can never glob-collide
     val okDir = freshDir("lake_aliaslabel_")

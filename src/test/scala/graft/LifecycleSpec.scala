@@ -138,7 +138,7 @@ class FreezeSpec extends AnyFunSuite {
   test("a failing chunk lands in errored, other work continues") {
     val out = Files.createTempDirectory("graft_err").toString
     val boom: Freeze.DatasetBuilder = _ => throw new RuntimeException("boom")
-    val r = Freeze.freeze(Bronze.dir(spark, fixDir), Freeze.FreezeSpec(
+    val r = Freeze.freeze(_ => Bronze.dir(spark, fixDir), Freeze.FreezeSpec(
       datasets = Seq("blocks", "logs"), blocks = Range(1000, 1040),
       chunkSize = 20, outputDir = out),
       overrides = Map("logs" -> boom))

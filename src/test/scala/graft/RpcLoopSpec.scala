@@ -538,11 +538,12 @@ class RpcLoopSpec extends AnyFunSuite {
   }
 
   test("--rpc live mode: a file:// output dir gets its chunk files") {
-    withStub { (url, _) =>
+    withCountingStub { (url, posts, calls) =>
       val out = java.nio.file.Files.createTempDirectory("graft_live_uri")
-      val r = Cli.run(Array("blocks", "transactions", "--rpc", url,
+      def freeze() = Cli.run(Array("blocks", "transactions", "--rpc", url,
         "--blocks", "16:20", "--chunk-size", "2", "--output-dir", out.toUri.toString.stripSuffix("/"),
         "--inner-request-size", "2", "--no-verbose"), spark).get
+      val r = freeze()
       assert(r.errored.isEmpty && r.completed.size == 4)
       val files = out.toFile.list().filter(_.startsWith("ethereum__")).toSet
       assert(files == Set("blocks", "transactions").flatMap(d =>
@@ -553,6 +554,22 @@ class RpcLoopSpec extends AnyFunSuite {
       assert(spark.read.parquet(out.resolve(
         "ethereum__transactions__00000016_to_00000017.parquet").toString).count() == 4)
       assert(out.resolve(".graft").toFile.list().toSet == Set("reports"))
+      // a re-run skips every file before it fetches anything: only the
+      // two driver probes reach the node (cryo freeze.rs:92-110)
+      val (posts1, blocks1) = (posts.get(), calls("eth_getBlockByNumber"))
+      val r2 = freeze()
+      assert(r2.skipped.size == 4 && r2.completed.isEmpty)
+      assert(posts.get() - posts1 == 2 && calls("eth_chainId") == 2 &&
+        calls("eth_blockNumber") == 2, s"${posts.get() - posts1} re-run POSTs")
+      // one missing file: only its chunk's blocks are fetched again
+      val gone = "ethereum__blocks__00000018_to_00000019.parquet"
+      java.nio.file.Files.delete(out.resolve(gone))
+      java.nio.file.Files.deleteIfExists(out.resolve(s".$gone.crc"))
+      val r3 = freeze()
+      assert(calls("eth_getBlockByNumber") - blocks1 == 2,
+        s"${calls("eth_getBlockByNumber") - blocks1} eth_getBlockByNumber calls")
+      assert(r3.completed.map(_.split('/').last) == Seq(gone) && r3.skipped.size == 3)
+      assert(spark.read.parquet(out.resolve(gone).toString).count() == 2)
     }
   }
 
@@ -610,8 +627,10 @@ class RpcLoopSpec extends AnyFunSuite {
     // `--inner-request-size -1` made eth_getLogs' range step negative,
     // so the logs bronze came out empty without an error; 0 failed with
     // "step cannot be 0"
+    // `--max-concurrent-chunks 0` or `-1` silently ran one chunk at a time
     for ((flag, value) <- Seq("--inner-request-size" -> "-1",
-        "--inner-request-size" -> "0", "--max-concurrent-requests" -> "0"))
+        "--inner-request-size" -> "0", "--max-concurrent-requests" -> "0",
+        "--max-concurrent-chunks" -> "0", "--max-concurrent-chunks" -> "-1"))
       withStub { (url, posts) =>
         val out = java.nio.file.Files.createTempDirectory("graft_badflag").toString
         val e = intercept[IllegalArgumentException] {
@@ -812,6 +831,8 @@ class RpcLoopSpec extends AnyFunSuite {
       assert(getBlocks.get() == 50, s"${getBlocks.get()} eth_getBlockByNumber calls")
       cap.set(1100L)
       follow()
+      // the re-run fetches only the tail: 1000-1049 are frozen already
+      assert(getBlocks.get() == 60, s"${getBlocks.get()} eth_getBlockByNumber calls")
       val tail = java.nio.file.Files.list(java.nio.file.Paths.get(out))
         .toArray.map(_.toString)
         .filter(_.endsWith("00001050_to_00001059.parquet")).toSeq
