@@ -211,16 +211,17 @@ def index_compact(index_dir, spark=None):
     spark._jvm.graft.Cli.indexRun(_jarr(spark, argv), spark._jsparkSession)
 
 
-def difftest(rpc, source_dir, spark=None, blocks="1000:1060", partitions=4):
+def difftest(rpc, source_dir, spark=None, blocks="1000:1060"):
     """Run the cryo_test-style differential sweep: collect every corpus
     datatype live from ``rpc`` AND from the reference bronze dir, diff
-    canonical rows. Returns a list of dicts ``{datatype, ok, ref_rows,
-    live_rows}`` — does not raise on mismatches."""
+    canonical rows. Each live fetch runs one task per core of the
+    session (fewer for a short range). Returns a list of dicts
+    ``{datatype, ok, ref_rows, live_rows}`` — does not raise on
+    mismatches."""
     import json
     if spark is None:
         raise ValueError("pass spark=<SparkSession>")
-    argv = ["--rpc", rpc, "--source-dir", source_dir,
-            "--blocks", blocks, "--partitions", str(partitions)]
+    argv = ["--rpc", rpc, "--source-dir", source_dir, "--blocks", blocks]
     out = spark._jvm.graft.Cli.diffTestJson(_jarr(spark, argv),
                                             spark._jsparkSession)
     return json.loads(out)

@@ -314,7 +314,7 @@ object Cli {
   }
 
   /** `graft.Cli difftest --rpc URL --source-dir DIR [--blocks a:b]
-    * [--partitions N] [--js-tracer CODE]` — the cryo_test-style
+    * [--js-tracer CODE]` — the cryo_test-style
     * differential sweep against an arbitrary endpoint: every corpus
     * datatype (37 scalars, JSON-normalized js traces, plus the
     * by-transaction dimension) collects live from --rpc AND from the
@@ -325,13 +325,12 @@ object Cli {
   def runDiffTest(args: Seq[String], spark: SparkSession,
       failOnMismatch: Boolean = true): Seq[graft.chain.DiffTest.Outcome] = {
     val usage = "usage: difftest --rpc URL --source-dir DIR " +
-      "[--blocks a:b] [--partitions N] [--js-tracer CODE] " +
+      "[--blocks a:b] [--js-tracer CODE] " +
       "[--max-retries N] [--initial-backoff MS] " +
       "[--compute-units-per-second N]"
     var rpc: Option[String] = None
     var sourceDir: Option[String] = None
     var blocks = "1000:1060"
-    var partitions = 4
     var jsTracer = "{fake: true}"
     // same retry surface as freeze (difftest against a flaky real node
     // needs the production backoff path, not fail-fast)
@@ -345,7 +344,6 @@ object Cli {
         case "--rpc" => rpc = Some(value("--rpc")); i += 1
         case "--source-dir" => sourceDir = Some(value("--source-dir")); i += 1
         case "--blocks" => blocks = value("--blocks"); i += 1
-        case "--partitions" => partitions = value("--partitions").toInt; i += 1
         case "--js-tracer" => jsTracer = value("--js-tracer"); i += 1
         case "--max-retries" =>
           maxRetries = value("--max-retries").toInt; i += 1
@@ -374,7 +372,7 @@ object Cli {
         s"difftest needs a contiguous a:b block range; $usage")
     }
     val outcomes = graft.chain.DiffTest.run(spark, ref, url, range,
-      partitions, jsTracer, maxRetries = maxRetries,
+      jsTracer, maxRetries = maxRetries,
       initialBackoffMs = initialBackoffMs,
       computeUnitsPerSecond = computeUnitsPerSecond)
     outcomes.foreach(o => println(o.describe))
@@ -975,6 +973,10 @@ object Cli {
       "--sort applies to single-datatype runs only")
     require(maxConcurrentChunks >= 1,
       s"--max-concurrent-chunks must be at least 1, got $maxConcurrentChunks")
+    require(chunkSize >= 1, s"--chunk-size must be at least 1, got $chunkSize")
+    require(nChunks.forall(_ >= 1), s"--n-chunks must be at least 1, got ${nChunks.get}")
+    require(nRowGroups.forall(_ >= 1),
+      s"--n-row-groups must be at least 1, got ${nRowGroups.get}")
 
     // expand multis + aliases via the registry (meta.rs clustering names)
     val expanded = datasets.reverse.flatMap { d =>
@@ -1128,23 +1130,14 @@ object Cli {
     // them as they read a --source-dir (live extraction and fixtures
     // share one transform path), and nothing is staged on disk.
     val liveSource: Option[graft.sources.RpcSource] = rpcUrl.map { url =>
-      // built outside the chain-id probe, so a bad flag value reports
-      // itself instead of reading as an unreachable node
-      val config = graft.sources.RpcConfig(url,
+      val src = graft.sources.RpcSource.detect(graft.sources.RpcConfig(url,
         maxConcurrentRequests = maxConcurrentRequests,
         requestsPerSecond = requestsPerSecond, maxRetries = maxRetries,
         initialBackoffMs = initialBackoffMs,
         innerRequestSize = innerRequestSize,
-        computeUnitsPerSecond = computeUnitsPerSecond)
-      def src(cid: Long) = new graft.sources.RpcSource(config.copy(chainId = cid))
-      val cid = try src(1).fetchChainId() catch {
-        case e: Exception => throw new IllegalStateException(
-          s"could not detect the chain id from $url: ${e.getMessage} — " +
-            "a silent mainnet default would stamp chain_id=1 on another " +
-            "chain's data", e)
-      }
-      if (!networkExplicit) network = Freeze.networkName(cid)
-      src(cid)
+        computeUnitsPerSecond = computeUnitsPerSecond))
+      if (!networkExplicit) network = Freeze.networkName(src.chainId)
+      src
     }
     require(liveSource.isEmpty || timestamps.isEmpty,
       "--timestamps with --rpc is not supported; pass --blocks")

@@ -102,6 +102,7 @@ object BlockSyntax {
     * multiples (dropping partial edges when aligning —
     * cryo types/chunks/subchunks.rs:13-33, number_chunk.rs:76-89). */
   def subchunk(r: Range, chunkSize: Long, align: Boolean = false): Seq[Range] = {
+    require(chunkSize >= 1, s"--chunk-size must be at least 1, got $chunkSize")
     val (start, end) =
       if (!align) (r.start, r.endExclusive)
       else {

@@ -103,6 +103,17 @@ object ChainDatasets {
     excludeFailed || used.contains("gas_used") || used.contains("success")
   }
 
+  private val gethCaptures = Seq("memory", "stack", "storage")
+
+  /** The struct-log captures `geth_opcodes` reads: those of memory, stack
+    * and storage its resolved schema carries. All three are off by
+    * default; the builder selects these, and a live run asks the tracer
+    * to capture exactly these (cryo geth_opcodes.rs:44-59). */
+  def gethOpcodesCaptures(include: Seq[String], exclude: Seq[String],
+      columns: Option[Seq[String]]): Set[String] =
+    TableSchema.resolve(Datatypes.gethOpcodes, include, exclude, columns)
+      .filter(gethCaptures.contains).toSet
+
   /** datasets/logs.rs:11-191 — topics split to topic0..3; optional
     * address/topic0 predicate; optional ABI decode appending event__*
     * columns and dropping raw topic/data columns (to_df/lib.rs:165-166).
@@ -570,21 +581,13 @@ object ChainDatasets {
         "chain_id")
       .sortWithinPartitions("block_number", "transaction_index", "pc")
 
-  /** datasets/geth_opcodes.rs:14-167 — struct-log opcode trace. The
-    * memory/stack/storage columns are off by default and toggle the
-    * tracer's fetch options (schema-pruned IO: the flags are only read —
-    * and at RPC time only requested — when the schema asks for them,
-    * geth_opcodes.rs:44-59). */
-  def gethOpcodes(bronze: Bronze,
-      includeMemory: Boolean = false, includeStack: Boolean = false,
-      includeStorage: Boolean = false): DataFrame = {
+  /** datasets/geth_opcodes.rs:14-167 — struct-log opcode trace, with
+    * the memory/stack/storage `captures` (see gethOpcodesCaptures). */
+  def gethOpcodes(bronze: Bronze, captures: Set[String] = Set.empty): DataFrame = {
     val base = Seq("block_number", "transaction_index", "pc", "op", "gas",
       "gas_cost", "depth")
-    val opt = (if (includeMemory) Seq("memory") else Nil) ++
-      (if (includeStack) Seq("stack") else Nil) ++
-      (if (includeStorage) Seq("storage") else Nil)
     bronze("rpc_geth_opcodes")
-      .select(base ++ opt :+ "chain_id" map col: _*)
+      .select(base ++ gethCaptures.filter(captures) :+ "chain_id" map col: _*)
       .sortWithinPartitions("block_number", "transaction_index", "pc")
   }
 

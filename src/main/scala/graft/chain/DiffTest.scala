@@ -98,7 +98,7 @@ object DiffTest {
     * bronzes. Release it when done. */
   def materializeBronzes(spark: SparkSession, src: RpcSource,
       refDir: String, range: BlockSyntax.Range,
-      nParts: Int, jsTracer: String): Bronze = {
+      jsTracer: String): Bronze = {
     def ref(table: String) = spark.read.parquet(s"$refDir/$table.parquet")
     def hex(r: org.apache.spark.sql.Row, i: Int): String =
       "0x" + r.getAs[Array[Byte]](i).map("%02x".format(_)).mkString
@@ -112,20 +112,20 @@ object DiffTest {
     // the frames are lazy, so they fetch after the range bronzes
     val entity = Map(
       "rpc_accounts" -> src.fetchAccounts(spark,
-        blocksOf("rpc_accounts"), hexes("rpc_accounts", "address"), nParts),
+        blocksOf("rpc_accounts"), hexes("rpc_accounts", "address")),
       "rpc_storage" -> src.fetchStorage(spark, blocksOf("rpc_storage"),
-        pairs("rpc_storage", "address", "slot"), nParts),
+        pairs("rpc_storage", "address", "slot")),
       "rpc_calls" -> src.fetchEthCalls(spark, blocksOf("rpc_calls"),
-        pairs("rpc_calls", "contract_address", "call_data"), nParts),
+        pairs("rpc_calls", "contract_address", "call_data")),
       "rpc_calls_erc721" -> src.fetchEthCalls(spark,
         blocksOf("rpc_calls_erc721"),
-        pairs("rpc_calls_erc721", "contract_address", "call_data"), nParts),
+        pairs("rpc_calls_erc721", "contract_address", "call_data")),
       "rpc_trace_calls" -> src.fetchTraceCalls(spark,
         blocksOf("rpc_trace_calls"),
-        pairs("rpc_trace_calls", "contract_address", "tx_call_data"), nParts))
+        pairs("rpc_trace_calls", "contract_address", "tx_call_data")))
     // a failed entity fetch releases the range frames with the rest
     val ranged = src.fetchBronze(spark, range, rangeDatasets,
-      jsTracer = Some(jsTracer), numPartitions = nParts)
+      jsTracer = Some(jsTracer))
     Bronze.persisted(rangeDatasets.flatMap(Freeze.catalog(_).bronze(Freeze.BuildOptions()))
       .map(t => t -> ranged(t)).toMap ++ entity)
   }
@@ -135,31 +135,20 @@ object DiffTest {
     * by-transaction time dimension for every hash-capable datatype).
     * Returns every outcome; callers decide how loudly to fail. */
   def run(spark: SparkSession, refDir: String, rpcUrl: String,
-      range: BlockSyntax.Range, nParts: Int = 4,
-      jsTracer: String = "{fake: true}",
+      range: BlockSyntax.Range, jsTracer: String = "{fake: true}",
       byTxSampleBlock: Option[Long] = None,
       // retry knobs (r11): default 0 keeps difftest fail-fast against a
       // healthy stub; the fault-injection harness turns them on to
       // drive the production retry/backoff path end-to-end
       maxRetries: Int = 0, initialBackoffMs: Long = 500,
       computeUnitsPerSecond: Long = 50): Seq[Outcome] = {
-    // detect the chain id from the node like the freeze CLI does
-    // (runImpl's loud-failure discipline): a hardcoded 1 would stamp
-    // mainnet onto every live row and false-fail all 37+ datatypes the
-    // moment the harness points at a non-mainnet node
-    val cid = try
-      new RpcSource(RpcConfig(rpcUrl, chainId = 1, maxRetries = maxRetries,
-        initialBackoffMs = initialBackoffMs,
-        computeUnitsPerSecond = computeUnitsPerSecond))
-        .fetchChainId()
-    catch {
-      case e: Exception => throw new IllegalStateException(
-        s"could not detect the chain id from $rpcUrl: ${e.getMessage}", e)
-    }
-    val src = new RpcSource(RpcConfig(rpcUrl, chainId = cid,
-      maxRetries = maxRetries, initialBackoffMs = initialBackoffMs,
+    // the chain id comes from the node, as in the freeze CLI: a
+    // hardcoded 1 would stamp mainnet onto every live row and
+    // false-fail all 37+ datatypes against a non-mainnet node
+    val src = RpcSource.detect(RpcConfig(rpcUrl, maxRetries = maxRetries,
+      initialBackoffMs = initialBackoffMs,
       computeUnitsPerSecond = computeUnitsPerSecond))
-    val live = materializeBronzes(spark, src, refDir, range, nParts, jsTracer)
+    val live = materializeBronzes(spark, src, refDir, range, jsTracer)
     try compareAll(spark, refDir, live, range, byTxSampleBlock)
     finally live.release()
   }

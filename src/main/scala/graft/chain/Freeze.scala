@@ -173,7 +173,8 @@ object Freeze {
       // tracer-family datasets are catalogued like the rest so the CLI
       // freeze path covers them, not just the driver query registry
       "vm_traces" -> reads("rpc_vm_traces")(_ => CD.vmTraces),
-      "geth_opcodes" -> reads("rpc_geth_opcodes")(_ => CD.gethOpcodes(_)),
+      "geth_opcodes" -> reads("rpc_geth_opcodes")(o => CD.gethOpcodes(_,
+        CD.gethOpcodesCaptures(o.include, o.exclude, o.columns))),
       "geth_calls" -> reads("rpc_geth_calls")(o => CD.gethCalls(_, o.u256Reprs)),
       "javascript_traces" -> reads("rpc_js_traces")(_ => CD.javascriptTraces),
       "trace_calls" -> reads("rpc_trace_calls")(_ => CD.traceCalls),

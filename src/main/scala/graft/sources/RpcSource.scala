@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.reflect.ClassTag
 
-import graft.chain.{BlockSyntax, Bronze, Freeze}
+import graft.chain.{BlockSyntax, Bronze, ChainDatasets, Freeze}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -47,6 +47,9 @@ case class RpcConfig(
     s"--inner-request-size must be at least 1, got $innerRequestSize")
   require(maxConcurrentRequests >= 1,
     s"--max-concurrent-requests must be at least 1, got $maxConcurrentRequests")
+  // a negative count makes no attempt at all, so every request would
+  // fail without one being sent
+  require(maxRetries >= 0, s"--max-retries must be at least 0, got $maxRetries")
 }
 
 object RpcConfig {
@@ -280,10 +283,9 @@ final class TokenBucket(ratePerSecond: Double) extends Serializable {
   * Items are batched `innerRequestSize` calls per HTTP round trip (ids
   * are batch indices), the batch's answer is checked for one part per
   * request, and responses come back in submission order. Tasks fetch
-  * disjoint work; there is no shuffle. The `numPartitions` every fetch
-  * takes is an upper bound on its tasks, not a task count: the default,
-  * Int.MaxValue, leaves the count to the session's cores and the work's
-  * requests (see `overList`).
+  * disjoint work; there is no shuffle. No fetch takes a task count: it
+  * follows from the session's cores, the work's requests and
+  * `--max-concurrent-requests` alone (see `overList`).
   *
   * Error parts: a node that rejects one request still answers the batch
   * with HTTP 200 and an `error` object for that request. Such a part
@@ -446,14 +448,14 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * cut into HTTP requests of `perRequest` items (only the last may be
     * short), and the requests into contiguous runs, one per task; each
     * task streams its run through one Link. Tasks: the fewest of the
-    * session's cores, the requests, `--max-concurrent-requests` and
-    * `cap`, so every task runs at once and the window and rate shares
-    * add up to the configured totals. */
+    * session's cores, the requests and `--max-concurrent-requests`, so
+    * every task runs at once and the window and rate shares add up to
+    * the configured totals. */
   private def overList[A: ClassTag, R: ClassTag](spark: SparkSession,
-      work: Seq[A], perRequest: Int, cap: Int)(
+      work: Seq[A], perRequest: Int)(
       stage: (Link, Iterator[A]) => Iterator[R]): RDD[R] = {
     val runs = RpcSource.runs(work.size, perRequest,
-      Seq(spark.sparkContext.defaultParallelism, config.maxConcurrentRequests, cap).min)
+      math.min(spark.sparkContext.defaultParallelism, config.maxConcurrentRequests))
       // drop/take, unlike slice, keep a block range a NumericRange
       .map { case (from, until) => work.drop(from).take(until - from) }
     val window = inflightWindow(runs.size)
@@ -465,14 +467,13 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** per-block work, one request per `innerRequestSize` blocks: a task's
     * run starts at `range.start + k·innerRequestSize` */
   private def overBlocks[R: ClassTag](spark: SparkSession,
-      range: BlockSyntax.Range, cap: Int)(
+      range: BlockSyntax.Range)(
       stage: (Link, Iterator[Long]) => Iterator[R]): RDD[R] =
-    overList(spark, range.start until range.endExclusive, perBatch(1), cap)(stage)
+    overList(spark, range.start until range.endExclusive, perBatch(1))(stage)
 
   /** Fetch block headers for a range into the rpc_blocks shape. */
-  def fetchBlocks(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.blocksSchema, numPartitions)(
+  def fetchBlocks(spark: SparkSession, range: BlockSyntax.Range): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.blocksSchema)(
       (i, n) => RpcCodec.getBlockRequest(i, n, fullTxs = false))(
       (body, _) => Seq(RpcExtract.blockHeader(body, config.chainId)))
 
@@ -486,11 +487,11 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * resource, not local IO. The third element unpersists the shared
     * pass; call it once both frames are materialized (fetchBronze does,
     * after persisting them). */
-  def fetchBlocksAndTransactions(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): (DataFrame, DataFrame, () => Unit) = {
+  def fetchBlocksAndTransactions(spark: SparkSession,
+      range: BlockSyntax.Range): (DataFrame, DataFrame, () => Unit) = {
     import org.apache.spark.storage.StorageLevel
     val conf = config
-    val raw = fetchPerBlockRaw(spark, range, numPartitions)(
+    val raw = fetchPerBlockRaw(spark, range)(
       (i, n) => RpcCodec.getBlockRequest(i, n, fullTxs = true))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val blocksDf = spark.createDataFrame(
@@ -509,13 +510,12 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * (types/rpc_params.rs:99-131): interior wildcards are None, trailing
     * ones are trimmed. */
   def fetchLogs(spark: SparkSession, range: BlockSyntax.Range,
-      address: Option[String] = None, topics: Seq[Option[String]] = Nil,
-      numPartitions: Int = Int.MaxValue): DataFrame = {
+      address: Option[String] = None, topics: Seq[Option[String]] = Nil): DataFrame = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val conf = config
     val starts = range.start until range.endExclusive by conf.innerRequestSize
-    val rdd = overList(spark, starts, 1, numPartitions) { (link, ss) =>
+    val rdd = overList(spark, starts, 1) { (link, ss) =>
       link.each(ss) { s0 =>
         val to = math.min(s0 + conf.innerRequestSize, range.endExclusive) - 1
         RpcCodec.getLogsRequest(1, s0, to, address, topics)
@@ -563,11 +563,11 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** Generic per-block fetch: one request per block, batched by the fetch
     * loop and parsed by a pure RpcExtract function into bronze rows. */
   private def fetchPerBlock(spark: SparkSession, range: BlockSyntax.Range,
-      schema: StructType, numPartitions: Int)(
+      schema: StructType)(
       request: (Long, Long) => String)(
       parse: (String, Long) => Seq[Row]): DataFrame =
     spark.createDataFrame(
-      fetchPerBlockRaw(spark, range, numPartitions)(request)
+      fetchPerBlockRaw(spark, range)(request)
         .flatMap { case (n, part) => parse(part, n) },
       schema)
 
@@ -576,10 +576,9 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * several bronze shapes. An error part fails the block: every
     * array-shaped parser downstream maps "not an array" to Nil, which
     * would write a bronze missing the block. */
-  private def fetchPerBlockRaw(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int)(
+  private def fetchPerBlockRaw(spark: SparkSession, range: BlockSyntax.Range)(
       request: (Long, Long) => String): RDD[(Long, String)] =
-    overBlocks(spark, range, numPartitions) { (link, nums) =>
+    overBlocks(spark, range) { (link, nums) =>
       link.batched(nums)(Fail(n => s"block $n"), (n, id) => Seq(request(id, n)))
         .map { case (n, Seq(part)) => (n, part) }
     }
@@ -593,9 +592,8 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * requests through the same Link, so degraded mode keeps the fast
     * path's window and rate budget. Blocks the node answers cost zero
     * extra round trips. */
-  def fetchReceipts(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame = {
-    val rdd = overBlocks(spark, range, numPartitions) { (link, nums) =>
+  def fetchReceipts(spark: SparkSession, range: BlockSyntax.Range): DataFrame = {
+    val rdd = overBlocks(spark, range) { (link, nums) =>
       val failed = scala.collection.mutable.ArrayBuffer.empty[Long]
       val fast = link.batched(nums)(Keep,
         (n, id) => Seq(RpcCodec.getBlockReceiptsRequest(id, n))).flatMap {
@@ -621,26 +619,23 @@ class RpcSource(config: RpcConfig) extends Serializable {
   }
 
   /** rpc_traces via trace_block (traces.rs extract). */
-  def fetchTraces(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.tracesSchema, numPartitions)(
+  def fetchTraces(spark: SparkSession, range: BlockSyntax.Range): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.tracesSchema)(
       (i, n) => RpcCodec.traceBlockRequest(i, n))(
       (body, _) => RpcExtract.traceBlock(body, config.chainId))
 
   /** rpc_geth_prestate via debug_traceBlockByNumber(prestateTracer,
     * diffMode) (geth_state_diffs.rs extract). */
-  def fetchGethPrestate(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.gethPrestateSchema, numPartitions)(
+  def fetchGethPrestate(spark: SparkSession, range: BlockSyntax.Range): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.gethPrestateSchema)(
       (i, n) => RpcCodec.debugTraceBlockRequest(i, n,
         tracer = Some("prestateTracer"), diffMode = true))(
       (body, n) => RpcExtract.gethPrestateBlock(body, n.toInt, config.chainId))
 
   /** rpc_geth_calls via debug_traceBlockByNumber(callTracer)
     * (geth_calls.rs extract). */
-  def fetchGethCalls(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.gethCallsSchema, numPartitions)(
+  def fetchGethCalls(spark: SparkSession, range: BlockSyntax.Range): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.gethCallsSchema)(
       (i, n) => RpcCodec.debugTraceBlockRequest(i, n, tracer = Some("callTracer")))(
       (body, n) => RpcExtract.gethCallFrames(body, n.toInt, config.chainId))
 
@@ -649,11 +644,10 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * is parsed once into a tagged union RDD, persisted, and projected
     * into the per-family bronze shapes — the node is hit once per block,
     * not once per family. Caller unpersists via the returned handle. */
-  def fetchStateDiffs(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): (Map[String, DataFrame], () => Unit) = {
+  def fetchStateDiffs(spark: SparkSession,
+      range: BlockSyntax.Range): (Map[String, DataFrame], () => Unit) = {
     val conf = config
-    val unified = fetchPerBlock(spark, range,
-      RpcSource.stateDiffUnionSchema, numPartitions)(
+    val unified = fetchPerBlock(spark, range, RpcSource.stateDiffUnionSchema)(
       (i, n) => RpcCodec.traceReplayBlockRequest(i, n)) { (body, n) =>
       val d = RpcExtract.stateDiffBlock(body, n.toInt, conf.chainId)
       def tag(kind: String, rs: Seq[Row]): Seq[Row] = rs.map { r =>
@@ -698,10 +692,10 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * cross-product of cli/parse/args). The one batched reader that keeps
     * error parts: a reverted call is a row with a null output. */
   def fetchEthCalls(spark: SparkSession, blocks: Seq[Long],
-      calls: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
+      calls: Seq[(String, String)]): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1)) { (link, items) =>
       link.batched(items)(Keep, { case ((b, to, data), id) =>
         Seq(RpcCodec.ethCallRequest(id, to, data, b)) }).map {
         case ((b, to, data), Seq(res)) =>
@@ -713,29 +707,27 @@ class RpcSource(config: RpcConfig) extends Serializable {
   }
 
   /** rpc_geth_opcodes via debug_traceBlockByNumber default tracer
-    * (geth_opcodes.rs extract — struct logs per tx). The capture flags
-    * default off: memory/stack/storage cost the node dearly and are
-    * excluded from the default schema (schema-pruned fetch flags). */
+    * (geth_opcodes.rs extract — struct logs per tx). The tracer captures
+    * only the listed `captures` of memory/stack/storage, which cost the
+    * node dearly (ChainDatasets.gethOpcodesCaptures, schema-pruned). */
   def fetchGethOpcodes(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue, memory: Boolean = false,
-      stack: Boolean = false, storage: Boolean = false): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.gethOpcodesSchema, numPartitions)(
-      (i, n) => RpcCodec.debugTraceBlockOpcodeRequest(i, n, memory, stack, storage))(
+      captures: Set[String] = Set.empty): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.gethOpcodesSchema)(
+      (i, n) => RpcCodec.debugTraceBlockOpcodeRequest(i, n, captures("memory"),
+        captures("stack"), captures("storage")))(
       (body, n) => RpcExtract.gethOpcodesBlock(body, n.toInt, config.chainId))
 
   /** rpc_js_traces via debug_traceBlockByNumber with a user JS tracer
     * (javascript_traces.rs extract). */
-  def fetchJsTraces(spark: SparkSession, range: BlockSyntax.Range,
-      js: String, numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.jsTracesSchema, numPartitions)(
+  def fetchJsTraces(spark: SparkSession, range: BlockSyntax.Range, js: String): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.jsTracesSchema)(
       (i, n) => RpcCodec.debugTraceBlockJsRequest(i, n, js))(
       (body, n) => RpcExtract.jsTraceBlock(body, n.toInt, config.chainId))
 
   /** rpc_vm_traces via trace_replayBlockTransactions(vmTrace)
     * (vm_traces.rs extract). */
-  def fetchVmTraces(spark: SparkSession, range: BlockSyntax.Range,
-      numPartitions: Int = Int.MaxValue): DataFrame =
-    fetchPerBlock(spark, range, RpcSource.vmTracesSchema, numPartitions)(
+  def fetchVmTraces(spark: SparkSession, range: BlockSyntax.Range): DataFrame =
+    fetchPerBlock(spark, range, RpcSource.vmTracesSchema)(
       (i, n) => RpcCodec.traceReplayBlockVmRequest(i, n))(
       (body, n) => RpcExtract.vmTraceBlock(body, n.toInt, config.chainId))
 
@@ -744,7 +736,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * (datasets/{balances,nonces,codes}.rs) share one bronze. Three
     * requests per item ride one batch, ids encode item×3+field. */
   def fetchAccounts(spark: SparkSession, blocks: Seq[Long],
-      addresses: Seq[String], numPartitions: Int = Int.MaxValue): DataFrame = {
+      addresses: Seq[String]): DataFrame = {
     import org.json4s._
     val conf = config
     val work = for (b <- blocks; a <- addresses) yield (b, a)
@@ -752,7 +744,7 @@ class RpcSource(config: RpcConfig) extends Serializable {
       (org.json4s.jackson.JsonMethods.parse(s) \ "result") match {
         case JString(x) => x; case _ => null
       }
-    val rdd = overList(spark, work, perBatch(3), numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(3)) { (link, items) =>
       link.batched(items, callsPerItem = 3)(
         Fail { case (b, a) => s"account $a at block $b" },
         { case ((b, a), id) => Seq(
@@ -773,11 +765,11 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_storage via batched eth_getStorageAt over
     * (block × (address, slot)) (datasets/storages.rs extract). */
   def fetchStorage(spark: SparkSession, blocks: Seq[Long],
-      slots: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
+      slots: Seq[(String, String)]): DataFrame = {
     import org.json4s._
     val conf = config
     val work = for (b <- blocks; (a, s) <- slots) yield (b, a, s)
-    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1)) { (link, items) =>
       link.batched(items)(Fail { case (b, a, s) => s"slot $s of $a at block $b" },
         { case ((b, a, s), id) => Seq(RpcCodec.getStorageAtRequest(id, a, s, b)) })
         .map { case ((b, a, s), Seq(part)) =>
@@ -794,10 +786,10 @@ class RpcSource(config: RpcConfig) extends Serializable {
   /** rpc_trace_calls via batched trace_call: the simulated call's trace
     * tree per (block × (contract, calldata)) (trace_calls.rs extract). */
   def fetchTraceCalls(spark: SparkSession, blocks: Seq[Long],
-      calls: Seq[(String, String)], numPartitions: Int = Int.MaxValue): DataFrame = {
+      calls: Seq[(String, String)]): DataFrame = {
     val conf = config
     val work = for (b <- blocks; (to, data) <- calls) yield (b, to, data)
-    val rdd = overList(spark, work, perBatch(1), numPartitions) { (link, items) =>
+    val rdd = overList(spark, work, perBatch(1)) { (link, items) =>
       link.batched(items)(Fail { case (b, to, _) => s"trace_call to $to at block $b" },
         { case ((b, to, data), id) => Seq(RpcCodec.traceCallRequest(id, to, data, b)) })
         .flatMap { case ((b, to, data), Seq(part)) =>
@@ -828,6 +820,9 @@ class RpcSource(config: RpcConfig) extends Serializable {
   def fetchChainId(): Long =
     RpcConfig.parseChainId(driverCall(RpcConfig.chainIdRequest(1)))
 
+  /** the chain id stamped on every fetched row */
+  def chainId: Long = config.chainId
+
   /** The bronze a live run reads: ONLY the tables the requested
     * datasets read under `options` (their Freeze.catalog entries), each
     * fetched once and held in Spark's cache before this returns — the
@@ -841,12 +836,11 @@ class RpcSource(config: RpcConfig) extends Serializable {
     * transactions.rs:124-135). Range fetches cover the span of `blocks`;
     * the point lookups (accounts, storage, eth_call, trace_call) go to
     * the listed blocks only, like cryo's NumberChunk::Numbers. Each fetch
-    * is sized by `overList`'s rule; `numPartitions` lowers its bound. */
+    * is sized by `overList`'s rule. */
   def fetchBronze(spark: SparkSession, blocks: BlockSyntax.Blocks,
       datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
       calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
-      numPartitions: Int = Int.MaxValue,
       options: Freeze.BuildOptions = Freeze.BuildOptions()): Bronze = {
     val need = RpcSource.liveTables(datasets, options)
     require(!need("rpc_accounts") || addresses.nonEmpty,
@@ -875,28 +869,29 @@ class RpcSource(config: RpcConfig) extends Serializable {
       // blocks_and_transactions multi: ONE full-block pass serves both
       // bronzes — every dataset that reads rpc_transactions also reads
       // rpc_blocks, so there is no separate header fetch
-      val (b, t, done) = fetchBlocksAndTransactions(spark, range, numPartitions)
+      val (b, t, done) = fetchBlocksAndTransactions(spark, range)
       frames ++= Seq("rpc_blocks" -> b, "rpc_transactions" -> t)
       shared += done
-    } else put("rpc_blocks")(fetchBlocks(spark, range, numPartitions))
-    put("rpc_receipts")(fetchReceipts(spark, range, numPartitions))
-    put("rpc_logs")(fetchLogs(spark, range, numPartitions = numPartitions))
-    put("rpc_traces")(fetchTraces(spark, range, numPartitions))
-    put("rpc_geth_prestate")(fetchGethPrestate(spark, range, numPartitions))
-    put("rpc_geth_calls")(fetchGethCalls(spark, range, numPartitions))
-    put("rpc_geth_opcodes")(fetchGethOpcodes(spark, range, numPartitions))
-    put("rpc_vm_traces")(fetchVmTraces(spark, range, numPartitions))
+    } else put("rpc_blocks")(fetchBlocks(spark, range))
+    put("rpc_receipts")(fetchReceipts(spark, range))
+    put("rpc_logs")(fetchLogs(spark, range))
+    put("rpc_traces")(fetchTraces(spark, range))
+    put("rpc_geth_prestate")(fetchGethPrestate(spark, range))
+    put("rpc_geth_calls")(fetchGethCalls(spark, range))
+    put("rpc_geth_opcodes")(fetchGethOpcodes(spark, range, ChainDatasets
+      .gethOpcodesCaptures(options.include, options.exclude, options.columns)))
+    put("rpc_vm_traces")(fetchVmTraces(spark, range))
     if (need.exists(_.endsWith("_diffs"))) {
-      val (diffs, done) = fetchStateDiffs(spark, range, numPartitions)
+      val (diffs, done) = fetchStateDiffs(spark, range)
       diffs.foreach { case (name, df) => put(name)(df) }
       shared += done
     }
-    put("rpc_accounts")(fetchAccounts(spark, listed, addresses, numPartitions))
+    put("rpc_accounts")(fetchAccounts(spark, listed, addresses))
     put("rpc_storage")(fetchStorage(spark, listed,
-      for (a <- addresses; s <- slots) yield (a, s), numPartitions))
-    put("rpc_calls")(fetchEthCalls(spark, listed, calls, numPartitions))
-    put("rpc_trace_calls")(fetchTraceCalls(spark, listed, calls, numPartitions))
-    put("rpc_js_traces")(fetchJsTraces(spark, range, jsTracer.get, numPartitions))
+      for (a <- addresses; s <- slots) yield (a, s)))
+    put("rpc_calls")(fetchEthCalls(spark, listed, calls))
+    put("rpc_trace_calls")(fetchTraceCalls(spark, listed, calls))
+    put("rpc_js_traces")(fetchJsTraces(spark, range, jsTracer.get))
     try Bronze.persisted(frames.result())
     finally shared.foreach(_())
   }
@@ -908,10 +903,9 @@ class RpcSource(config: RpcConfig) extends Serializable {
       blocks: BlockSyntax.Blocks, datasets: Seq[String],
       addresses: Seq[String] = Nil, slots: Seq[String] = Nil,
       calls: Seq[(String, String)] = Nil, jsTracer: Option[String] = None,
-      numPartitions: Int = Int.MaxValue,
       options: Freeze.BuildOptions = Freeze.BuildOptions()): Unit = {
     val bronze = fetchBronze(spark, blocks, datasets, addresses, slots,
-      calls, jsTracer, numPartitions, options)
+      calls, jsTracer, options)
     try RpcSource.liveTables(datasets, options).foreach(name =>
       bronze(name).write.mode("overwrite").parquet(s"$outDir/$name.parquet"))
     finally bronze.release()
@@ -919,6 +913,20 @@ class RpcSource(config: RpcConfig) extends Serializable {
 }
 
 object RpcSource {
+  /** A source for `config` at the chain id the node reports
+    * (eth_chainId, sources.rs:119-150), `config.chainId` ignored. An
+    * unanswered probe fails loudly, naming the url: a silent mainnet
+    * default would stamp chain_id=1 on another chain's data. */
+  def detect(config: RpcConfig): RpcSource = {
+    val cid = try new RpcSource(config).fetchChainId() catch {
+      case e: Exception => throw new IllegalStateException(
+        s"could not detect the chain id from ${config.url}: ${e.getMessage} — " +
+          "a silent mainnet default would stamp chain_id=1 on another " +
+          "chain's data", e)
+    }
+    new RpcSource(config.copy(chainId = cid))
+  }
+
   /** A fetch's runs: `items` work items in requests of `perRequest`
     * (only the last may be short) are split into `maxTasks` (at least
     * one, at most one per request) contiguous runs of whole requests, as

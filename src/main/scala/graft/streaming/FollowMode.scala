@@ -712,15 +712,14 @@ object FollowMode {
     * chunk settles. A re-run resumes: skip-existing keeps the files
     * already frozen and fetches none of their blocks.
     *
-    * A poll's fetch is sized like every fetch: one request per
-    * `innerRequestSize` blocks, the requests in whole runs on at most one
-    * task per core; `fetchPartitions` is an upper bound on those tasks.
+    * It makes at most `maxPolls` head polls. A poll's fetch is sized like
+    * every fetch: one request per `innerRequestSize` blocks, the requests
+    * in whole runs on at most one task per core.
     * `bronzeDir` and `checkpointDir` are unused: the loop stages nothing
     * on disk and starts no streaming query. */
   def followLive(spark: SparkSession, source: graft.sources.RpcSource,
       bronzeDir: String, spec: graft.chain.Freeze.FreezeSpec,
-      checkpointDir: String, pollMs: Long = 250, maxPolls: Int = 600,
-      fetchPartitions: Int = Int.MaxValue): Unit = {
+      checkpointDir: String, pollMs: Long = 250, maxPolls: Int = 600): Unit = {
     import graft.chain.{BlockSyntax, Freeze}
     val (lo, hiEnd) = contiguous(spec, "followLive")
     val chunks = BlockSyntax.chunks(spec.blocks, spec.chunkSize, spec.nChunks,
@@ -728,7 +727,7 @@ object FollowMode {
     var frozen = 0 // chunks(0 until frozen) are on disk
     var head = lo - 1
     var polls = 0
-    while (frozen < chunks.size && polls <= maxPolls) {
+    while (frozen < chunks.size && polls < maxPolls) {
       if (polls > 0) Thread.sleep(pollMs)
       head = source.fetchLatestBlock()
       polls += 1
@@ -744,7 +743,7 @@ object FollowMode {
         // re-chunk the run's span as planned: every chunk but the range's
         // last is as long as the run's first (n-chunks and align included)
         val r = Freeze.freeze(
-          source.fetchBronze(spark, _, spec.datasets, numPartitions = fetchPartitions),
+          source.fetchBronze(spark, _, spec.datasets),
           spec.copy(blocks = BlockSyntax.Range(run.head.start, run.last.endExclusive),
             chunkSize = run.head.endExclusive - run.head.start,
             nChunks = None, align = false))

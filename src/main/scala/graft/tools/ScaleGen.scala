@@ -76,7 +76,7 @@ object ScaleGen extends Serializable {
     val nDocs = 5000L * m
     val nVecs = 2000L * m
     val nLines = 600000L * m
-    val nParts = 20000L * m
+    val nPartKeys = 20000L * m
     val nSupps = 1000L * m
 
     // documents: per-language word salad with planted exact/near dups.
@@ -180,7 +180,7 @@ object ScaleGen extends Serializable {
     val liRdd = spark.sparkContext.range(0L, nLines, numSlices = 32).map { id =>
       val r = rng(6, id)
       val qty = 1.0 + r.nextInt(50)
-      Row(r.nextLong(nOrders), r.nextLong(nParts), r.nextLong(nSupps),
+      Row(r.nextLong(nOrders), r.nextLong(nPartKeys), r.nextLong(nSupps),
         1 + r.nextInt(7), qty,
         math.rint(qty * (900.0 + 1200.0 * r.nextDouble()) * 100.0) / 100.0,
         r.nextInt(11) / 100.0, r.nextInt(9) / 100.0,
@@ -204,7 +204,7 @@ object ScaleGen extends Serializable {
       StructField("p_retailprice", DoubleType, false)))
     val pTypes = IndexedSeq("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
       "STANDARD")
-    val partRdd = spark.sparkContext.range(0L, nParts, numSlices = 32).map { id =>
+    val partRdd = spark.sparkContext.range(0L, nPartKeys, numSlices = 32).map { id =>
       val r = rng(7, id)
       Row(id, s"${adjs(r.nextInt(8))} ${nouns(r.nextInt(8))}",
         s"Brand#${1 + r.nextInt(25)}", pTypes(r.nextInt(6)),

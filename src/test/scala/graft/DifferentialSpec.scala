@@ -574,8 +574,7 @@ class DifferentialSpec extends AnyFunSuite {
     val h = FixtureRpcServer.start(spark, fixDir)
     try {
       val outcomes = Cli.runDiffTest(Seq("--rpc", h.url,
-        "--source-dir", fixDir, "--blocks", "1000:1060",
-        "--partitions", "4"), spark)
+        "--source-dir", fixDir, "--blocks", "1000:1060"), spark)
       // 37 scalars (36 corpus + js-normalized) plus >=10 by-transaction
       assert(outcomes.count(!_.datatype.contains("by-transaction")) == 37)
       assert(outcomes.count(_.datatype.contains("by-transaction")) >= 10)
@@ -603,7 +602,7 @@ class DifferentialSpec extends AnyFunSuite {
     try {
       val outcomes = Cli.runDiffTest(Seq("--rpc", p.url,
         "--source-dir", dir, "--blocks", "1000:1600",
-        "--partitions", "4", "--max-retries", "8",
+        "--max-retries", "8",
         "--initial-backoff", "5",
         "--compute-units-per-second", "1000000"), spark)
       assert(outcomes.count(!_.datatype.contains("by-transaction")) == 37)
@@ -629,8 +628,7 @@ class DifferentialSpec extends AnyFunSuite {
     val h = FixtureRpcServer.start(spark, dir5)
     try {
       val outcomes = Cli.runDiffTest(Seq("--rpc", h.url,
-        "--source-dir", dir5, "--blocks", "1000:1020",
-        "--partitions", "4"), spark)
+        "--source-dir", dir5, "--blocks", "1000:1020"), spark)
       assert(outcomes.count(!_.datatype.contains("by-transaction")) == 37)
       assert(outcomes.count(_.datatype.contains("by-transaction")) >= 10)
       assert(outcomes.forall(_.ok),
@@ -658,6 +656,11 @@ class DifferentialSpec extends AnyFunSuite {
         "--blocks", "0:100/3"), spark)
     }
     assert(e3.getMessage.contains("contiguous"))
+    // each fetch sizes itself from the session's cores: no task-count flag
+    val e4 = intercept[IllegalArgumentException] {
+      Cli.runDiffTest(Seq("--partitions", "4"), spark)
+    }
+    assert(e4.getMessage.contains("unknown difftest flag --partitions"))
   }
 
   test("difftest surfaces a live-vs-reference mismatch loudly") {
@@ -669,7 +672,7 @@ class DifferentialSpec extends AnyFunSuite {
       val src = new RpcSource(RpcConfig(h.url, chainId = 1, maxRetries = 0))
       val range = BlockSyntax.Range(1000, 1060)
       val live = graft.chain.DiffTest.materializeBronzes(spark, src, fixDir,
-        range, 4, "{fake: true}")
+        range, "{fake: true}")
       // tamper: drop every reward trace from the live bronze
       val tampered = Bronze.persisted(Map(
         "rpc_blocks" -> live("rpc_blocks"),

@@ -396,6 +396,16 @@ class CliSpec extends AnyFunSuite {
     assert(!spark.read.parquet(d2.head).columns.contains("extra_data"))
   }
 
+  test("--include-columns / --columns select geth_opcodes' capture columns") {
+    val (_, d1) = runCli("geth_opcodes", "--include-columns", "memory")
+    val ops = spark.read.parquet(d1.head)
+    assert(ops.columns.contains("memory") && !ops.columns.contains("stack"))
+    assert(ops.filter("memory IS NOT NULL").count() > 0)
+    val (_, d2) = runCli("geth_opcodes", "--columns", "all")
+    val all = spark.read.parquet(d2.head).columns
+    assert(Seq("memory", "stack", "storage").forall(all.contains), all.toSeq)
+  }
+
   test("--u256-types controls value representations") {
     val (_, done) = runCli("erc20_transfers", "--u256-types", "string", "f64")
     val cols = spark.read.parquet(done.head).columns.toSeq

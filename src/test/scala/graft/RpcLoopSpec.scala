@@ -192,23 +192,29 @@ class RpcLoopSpec extends AnyFunSuite {
   /** withStub, also counting the calls that reach it per method (a
     * batch of n calls counts n) */
   private def withCountingStub[T](f: (String, AtomicInteger, String => Int) => T): T =
-    serve(Set.empty)(f)
+    serve(Set.empty)((url, posts, calls, _) => f(url, posts, calls))
+
+  /** withStub, also handing over every request body received so far */
+  private def withRecordingStub[T](f: (String, () => Seq[String]) => T): T =
+    serve(Set.empty)((url, _, _, bodies) => f(url, bodies))
 
   /** withStub, but methods in `reject` answer a JSON-RPC method-not-found
     * error (HTTP 200) — how a node without e.g. eth_getBlockReceipts
     * actually behaves. */
   private def withStubRejecting[T](reject: Set[String])(
       f: (String, AtomicInteger) => T): T =
-    serve(reject)((url, posts, _) => f(url, posts))
+    serve(reject)((url, posts, _, _) => f(url, posts))
 
   private def serve[T](reject: Set[String])(
-      f: (String, AtomicInteger, String => Int) => T): T = {
+      f: (String, AtomicInteger, String => Int, () => Seq[String]) => T): T = {
     val posts = new AtomicInteger(0)
     val calls = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/", { exchange =>
       posts.incrementAndGet()
       val body = new String(exchange.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      bodies.add(body)
       if (sys.env.contains("GRAFT_STUB_DEBUG"))
         println(s"[stub] post#${posts.get()}: " + "\"method\":\"(\\w+)\"".r
           .findAllMatchIn(body).map(_.group(1)).toSeq.distinct.mkString(","))
@@ -233,7 +239,8 @@ class RpcLoopSpec extends AnyFunSuite {
     })
     server.start()
     try f(s"http://127.0.0.1:${server.getAddress.getPort}/", posts,
-      m => Option(calls.get(m)).fold(0)(_.get()))
+      m => Option(calls.get(m)).fold(0)(_.get()),
+      () => bodies.toArray(Array.empty[String]).toSeq)
     finally server.stop(0)
   }
 
@@ -245,7 +252,7 @@ class RpcLoopSpec extends AnyFunSuite {
 
   test("fetchBlocks: batched headers land in the bronze shape") {
     withStub { (url, posts) =>
-      val df = src(url).fetchBlocks(spark, range, numPartitions = 1)
+      val df = src(url).fetchBlocks(spark, range)
       val rows = df.collect().sortBy(_.getInt(0))
       assert(rows.map(_.getInt(0)).toSeq == Seq(16, 17, 18, 19))
       assert(rows.head.getAs[Long]("gas_used") == 0xa410L)
@@ -258,8 +265,7 @@ class RpcLoopSpec extends AnyFunSuite {
   test("fetchTransactions: full-tx blocks flatten, batched") {
     // rpc_transactions comes from the shared full-block pass alone
     withStub { (url, posts) =>
-      val (_, t, done) = src(url).fetchBlocksAndTransactions(spark, range,
-        numPartitions = 1)
+      val (_, t, done) = src(url).fetchBlocksAndTransactions(spark, range)
       val rows = t.collect()
       assert(rows.length == 8) // 2 txs × 4 blocks
       assert(posts.get() == 2)
@@ -272,8 +278,7 @@ class RpcLoopSpec extends AnyFunSuite {
 
   test("fetchBlocksAndTransactions: one full-block pass serves both bronzes") {
     withStub { (url, posts) =>
-      val (b, t, done) = src(url).fetchBlocksAndTransactions(spark, range,
-        numPartitions = 1)
+      val (b, t, done) = src(url).fetchBlocksAndTransactions(spark, range)
       assert(b.collect().map(_.getInt(0)).sorted.toSeq == Seq(16, 17, 18, 19))
       assert(t.count() == 8)
       done()
@@ -284,8 +289,8 @@ class RpcLoopSpec extends AnyFunSuite {
   test("fetchReceipts + fetchTraces: per-block families batch and parse") {
     withStub { (url, posts) =>
       val s = src(url)
-      assert(s.fetchReceipts(spark, range, numPartitions = 1).count() == 8)
-      assert(s.fetchTraces(spark, range, numPartitions = 1).count() == 8)
+      assert(s.fetchReceipts(spark, range).count() == 8)
+      assert(s.fetchTraces(spark, range).count() == 8)
       assert(posts.get() == 4) // 2 batched round trips per family
     }
   }
@@ -295,12 +300,12 @@ class RpcLoopSpec extends AnyFunSuite {
       .map(r => (BigInt(r.getAs[Array[Byte]](0)), r.getLong(1), r.getInt(2)))
       .sortBy(_._1).toSeq
     val fast = withStub { (url, posts) =>
-      val rows = src(url).fetchReceipts(spark, range, numPartitions = 1).collect()
+      val rows = src(url).fetchReceipts(spark, range).collect()
       assert(posts.get() == 2) // supported node: zero extra round trips
       norm(rows)
     }
     withStubRejecting(Set("eth_getBlockReceipts")) { (url, posts) =>
-      val rows = src(url).fetchReceipts(spark, range, numPartitions = 1).collect()
+      val rows = src(url).fetchReceipts(spark, range).collect()
       // degraded bronze is identical to the fast path's
       assert(norm(rows) == fast)
       // 2 rejected block-receipt trips + 2 hash-list trips + 4 per-tx
@@ -310,19 +315,24 @@ class RpcLoopSpec extends AnyFunSuite {
   }
 
   test("receipt fallback keeps >1 request in flight per partition") {
-    // Every eth_getTransactionReceipt batch blocks until TWO such batches
-    // are present simultaneously — only the sliding-window pipeline
-    // (window = maxConcurrentRequests / numTasks = 2) satisfies the
-    // latch; a serial fallback loop would time out.
-    val latch = new java.util.concurrent.CountDownLatch(2)
+    // One fast-path batch of 2 blocks per task, so each task's fallback
+    // sends 2 receipt batches (2 blocks × 2 txs at innerRequestSize 2).
+    // Every eth_getTransactionReceipt batch blocks until ALL of them,
+    // 2 per task, are present simultaneously — only the sliding-window
+    // pipeline (window = maxConcurrentRequests / tasks = 2) satisfies
+    // the latch; a serial fallback loop holds one per task and times out.
+    // A timed-out wait is recorded, not thrown: a dropped exchange would be
+    // re-sent through the retry path and count down the latch anyway.
+    val tasks = spark.sparkContext.defaultParallelism
+    val latch = new java.util.concurrent.CountDownLatch(2 * tasks)
+    val starved = new java.util.concurrent.atomic.AtomicBoolean(false)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
     server.createContext("/", { exchange =>
       val body = new String(exchange.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       if (body.contains("eth_getTransactionReceipt")) {
         latch.countDown()
-        assert(latch.await(10, java.util.concurrent.TimeUnit.SECONDS),
-          "second fallback batch never arrived: fallback lost the async window")
+        if (!latch.await(10, java.util.concurrent.TimeUnit.SECONDS)) starved.set(true)
       }
       def one(req: JValue): String = {
         val id = (req \ "id") match { case JInt(i) => i.toString; case _ => "0" }
@@ -344,16 +354,17 @@ class RpcLoopSpec extends AnyFunSuite {
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/"
       val cfg = RpcConfig(url, chainId = 1, innerRequestSize = 2,
-        maxConcurrentRequests = 2, maxRetries = 0)
-      val rows = new RpcSource(cfg).fetchReceipts(spark, range, numPartitions = 1)
-        .collect()
-      assert(rows.length == 8) // 2 txs × 4 blocks via the per-tx path
+        maxConcurrentRequests = 2 * tasks, maxRetries = 0)
+      val rows = new RpcSource(cfg)
+        .fetchReceipts(spark, BlockSyntax.Range(16, 16 + 2 * tasks)).collect()
+      assert(rows.length == 4 * tasks) // 2 txs a block via the per-tx path
+      assert(!starved.get(), "a fallback batch never arrived: fallback lost the async window")
     } finally server.stop(0)
   }
 
   test("fetchGethCalls: call frames flatten depth-first") {
     withStub { (url, _) =>
-      val df = src(url).fetchGethCalls(spark, range, numPartitions = 1)
+      val df = src(url).fetchGethCalls(spark, range)
       val rows = df.collect()
       assert(rows.length == 16) // (root + 1 nested) × 2 txs × 4 blocks
       assert(rows.map(_.getAs[Int]("depth")).toSet == Set(0, 1))
@@ -363,7 +374,7 @@ class RpcLoopSpec extends AnyFunSuite {
 
   test("fetchStateDiffs: one replay pass feeds all four diff bronzes") {
     withStub { (url, posts) =>
-      val (diffs, diffsDone) = src(url).fetchStateDiffs(spark, range, numPartitions = 1)
+      val (diffs, diffsDone) = src(url).fetchStateDiffs(spark, range)
       // per block: 2 txs × (addr1: balance,nonce,storage; addr2: balance,code)
       assert(diffs("rpc_balance_diffs").count() == 16)
       assert(diffs("rpc_nonce_diffs").count() == 8)
@@ -385,7 +396,7 @@ class RpcLoopSpec extends AnyFunSuite {
   test("fetchEthCalls: batched calls pair request context with outputs") {
     withStub { (url, posts) =>
       val calls = Seq((h40(7), "0x18160ddd"), (h40(8), "0x06fdde03"))
-      val df = src(url).fetchEthCalls(spark, Seq(16L, 17L), calls, numPartitions = 1)
+      val df = src(url).fetchEthCalls(spark, Seq(16L, 17L), calls)
       val rows = df.collect()
       assert(rows.length == 4) // 2 blocks × 2 calls
       assert(rows.forall(_.getAs[Array[Byte]]("output_data").length == 32))
@@ -397,12 +408,11 @@ class RpcLoopSpec extends AnyFunSuite {
   test("fetchGethOpcodes + fetchJsTraces: block-level geth tracers") {
     withStub { (url, _) =>
       val s = src(url)
-      val ops = s.fetchGethOpcodes(spark, range, numPartitions = 1).collect()
+      val ops = s.fetchGethOpcodes(spark, range).collect()
       assert(ops.length == 16) // 2 logs × 2 txs × 4 blocks
       assert(ops.map(_.getAs[String]("op")).toSet == Set("PUSH1", "SSTORE"))
       val js = s.fetchJsTraces(spark, range,
-        """{count: 0, step: function() {}, result: function() { return this.count }}""",
-        numPartitions = 1).collect()
+        """{count: 0, step: function() {}, result: function() { return this.count }}""").collect()
       assert(js.length == 8)
       assert(js.forall(_.getAs[String]("output").contains("myCount")))
     }
@@ -410,7 +420,7 @@ class RpcLoopSpec extends AnyFunSuite {
 
   test("fetchVmTraces: parity opcode trace flattens sub-calls depth-first") {
     withStub { (url, _) =>
-      val rows = src(url).fetchVmTraces(spark, range, numPartitions = 1).collect()
+      val rows = src(url).fetchVmTraces(spark, range).collect()
       assert(rows.length == 24) // (2 ops + 1 sub op) × 2 txs × 4 blocks
       val sstore = rows.filter(_.getAs[String]("op") == "SSTORE")
       assert(sstore.forall { r =>
@@ -426,7 +436,7 @@ class RpcLoopSpec extends AnyFunSuite {
     withStub { (url, posts) =>
       val s = src(url, batchSize = 6)
       val accts = s.fetchAccounts(spark, Seq(16L, 17L),
-        Seq(h40(1), h40(2)), numPartitions = 1).collect()
+        Seq(h40(1), h40(2))).collect()
       assert(accts.length == 4) // 2 blocks × 2 addresses
       assert(accts.forall(_.getAs[Long]("nonce") == 42L))
       assert(accts.forall(r => BigInt(r.getAs[Array[Byte]]("balance")) ==
@@ -434,7 +444,7 @@ class RpcLoopSpec extends AnyFunSuite {
       val postsAfterAccounts = posts.get()
       assert(postsAfterAccounts == 2) // 4 items × 3 reqs at 6/batch
       val sto = s.fetchStorage(spark, Seq(16L),
-        Seq((h40(1), h64(0)), (h40(1), h64(1))), numPartitions = 1).collect()
+        Seq((h40(1), h64(0)), (h40(1), h64(1)))).collect()
       assert(sto.length == 2)
       assert(sto.forall(r => BigInt(r.getAs[Array[Byte]]("value")) == 321))
     }
@@ -443,12 +453,11 @@ class RpcLoopSpec extends AnyFunSuite {
     withStubRejecting(Set("eth_getCode", "eth_getStorageAt")) { (url, _) =>
       val s = src(url, batchSize = 6)
       val ea = intercept[org.apache.spark.SparkException] {
-        s.fetchAccounts(spark, Seq(16L), Seq(h40(1)), numPartitions = 1).collect()
+        s.fetchAccounts(spark, Seq(16L), Seq(h40(1))).collect()
       }
       assert(ea.getMessage.contains("RPC error for account"), ea.getMessage)
       val es = intercept[org.apache.spark.SparkException] {
-        s.fetchStorage(spark, Seq(16L), Seq((h40(1), h64(0))),
-          numPartitions = 1).collect()
+        s.fetchStorage(spark, Seq(16L), Seq((h40(1), h64(0)))).collect()
       }
       assert(es.getMessage.contains("RPC error for slot"), es.getMessage)
     }
@@ -457,7 +466,7 @@ class RpcLoopSpec extends AnyFunSuite {
   test("fetchTraceCalls: simulated call trace tagged with request context") {
     withStub { (url, _) =>
       val rows = src(url).fetchTraceCalls(spark, Seq(16L),
-        Seq((h40(7), "0x18160ddd")), numPartitions = 1).collect()
+        Seq((h40(7), "0x18160ddd"))).collect()
       assert(rows.length == 2) // root + 1 subtrace
       assert(rows.forall(r =>
         r.getAs[Array[Byte]]("tx_call_data").toSeq ==
@@ -468,7 +477,7 @@ class RpcLoopSpec extends AnyFunSuite {
     withStubRejecting(Set("trace_call")) { (url, _) =>
       val e = intercept[org.apache.spark.SparkException] {
         src(url).fetchTraceCalls(spark, Seq(16L),
-          Seq((h40(7), "0x18160ddd")), numPartitions = 1).collect()
+          Seq((h40(7), "0x18160ddd"))).collect()
       }
       assert(e.getMessage.contains("RPC error for trace_call"), e.getMessage)
     }
@@ -478,8 +487,7 @@ class RpcLoopSpec extends AnyFunSuite {
     withStub { (url, posts) =>
       val sig = h64(0xbeef)
       val df = src(url).fetchLogs(spark, range,
-        address = Some(h40(5)), topics = Seq(Some(sig), None, None, None),
-        numPartitions = 1)
+        address = Some(h40(5)), topics = Seq(Some(sig), None, None, None))
       val rows = df.collect()
       assert(rows.length == 4) // 1 log per block, served per range batch
       assert(posts.get() == 2) // 4 blocks at innerRequestSize=2 ranges
@@ -591,13 +599,12 @@ class RpcLoopSpec extends AnyFunSuite {
     assert(spark.sparkContext.defaultParallelism == 4, "a 4-core session")
     /** the fetch's partition count, each partition's lowest block, and
       * the POSTs one pass over the range makes */
-    def layout(blocks: Long, cap: Option[Int] = None,
-        window: Int = 100): (Int, Seq[Long], Int) =
+    def layout(blocks: Long, window: Int = 100): (Int, Seq[Long], Int) =
       withStub { (url, posts) =>
         val s = new RpcSource(RpcConfig(url, innerRequestSize = 100,
           maxConcurrentRequests = window, maxRetries = 0))
         val r = BlockSyntax.Range(1000, 1000 + blocks)
-        val df = cap.fold(s.fetchBlocks(spark, r))(s.fetchBlocks(spark, r, _))
+        val df = s.fetchBlocks(spark, r)
         val lows = df.rdd.mapPartitions(rows =>
           if (rows.hasNext) Iterator(rows.map(_.getInt(0).toLong).min)
           else Iterator.empty).collect().sorted.toSeq
@@ -613,9 +620,8 @@ class RpcLoopSpec extends AnyFunSuite {
     // 150 blocks are 2 requests, so 2 tasks, the second one partial
     val (parts150, lows150, posts150) = layout(150)
     assert(parts150 == 2 && lows150 == Seq(1000L, 1100L) && posts150 == 2)
-    // an explicit numPartitions is an upper bound, and so is the
-    // request window: each task holds at least one request in flight
-    assert(layout(1000, cap = Some(1))._1 == 1)
+    // the request window bounds the tasks too: each task holds at least
+    // one request in flight
     assert(layout(1000, window = 2)._1 == 2)
     // the runs are whole requests, as even as they can be
     assert(RpcSource.runs(10, 1, 4) == Seq((0, 2), (2, 5), (5, 7), (7, 10)))
@@ -628,9 +634,15 @@ class RpcLoopSpec extends AnyFunSuite {
     // so the logs bronze came out empty without an error; 0 failed with
     // "step cannot be 0"
     // `--max-concurrent-chunks 0` or `-1` silently ran one chunk at a time
+    // `--chunk-size 0` died with "step cannot be 0", `-1` planned no
+    // chunks and reported success; `--n-chunks 0` was refused only after
+    // the chain-id probe; `--n-row-groups 0` divided by zero;
+    // `--max-retries -1` failed every request without sending it
     for ((flag, value) <- Seq("--inner-request-size" -> "-1",
         "--inner-request-size" -> "0", "--max-concurrent-requests" -> "0",
-        "--max-concurrent-chunks" -> "0", "--max-concurrent-chunks" -> "-1"))
+        "--max-concurrent-chunks" -> "0", "--max-concurrent-chunks" -> "-1",
+        "--chunk-size" -> "0", "--chunk-size" -> "-1", "--n-chunks" -> "0",
+        "--n-row-groups" -> "0", "--max-retries" -> "-1"))
       withStub { (url, posts) =>
         val out = java.nio.file.Files.createTempDirectory("graft_badflag").toString
         val e = intercept[IllegalArgumentException] {
@@ -676,6 +688,20 @@ class RpcLoopSpec extends AnyFunSuite {
       val fetched = posts.get()
       assert(df.count() == 4)
       assert(posts.get() == fetched, s"re-fetched: ${posts.get() - fetched} POSTs")
+    }
+  }
+
+  test("--rpc live mode: geth_opcodes asks the tracer for the columns it writes") {
+    withRecordingStub { (url, bodies) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_live_ops").toString
+      val r = Cli.run(Array("geth_opcodes", "--rpc", url, "--blocks", "16:20",
+        "--include-columns", "memory", "--output-dir", out, "--no-verbose"),
+        spark).get
+      assert(spark.read.parquet(r.completed.head).columns.contains("memory"))
+      val traces = bodies().filter(_.contains("debug_traceBlockByNumber"))
+      assert(traces.nonEmpty && traces.forall(b =>
+        b.contains(""""enableMemory":true""") &&
+          b.contains(""""disableStack":true""")), traces)
     }
   }
 
@@ -765,7 +791,7 @@ class RpcLoopSpec extends AnyFunSuite {
       val ex = intercept[IllegalStateException] {
         graft.streaming.FollowMode.followLive(spark,
           new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-          bronze, spec, chk, pollMs = 10, maxPolls = 100, fetchPartitions = 2)
+          bronze, spec, chk, pollMs = 10, maxPolls = 100)
       }
       assert(ex.getMessage.contains("range incomplete") &&
         ex.getMessage.contains("re-run followLive"))
@@ -824,7 +850,7 @@ class RpcLoopSpec extends AnyFunSuite {
         chunkSize = 25, outputDir = out)
       def follow(): Unit = graft.streaming.FollowMode.followLive(spark,
         new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-        bronze, spec, chk, pollMs = 10, maxPolls = 100, fetchPartitions = 2)
+        bronze, spec, chk, pollMs = 10, maxPolls = 100)
       val ex = intercept[IllegalStateException](follow())
       assert(ex.getMessage.contains("range incomplete"))
       // one header call per frozen block; none for the unsettled 1050-1055
@@ -917,7 +943,7 @@ class RpcLoopSpec extends AnyFunSuite {
           chunkSize = 20, reorgBuffer = 2, outputDir = out)
         graft.streaming.FollowMode.followLive(spark,
           new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-          bronze, spec, chk, pollMs = 10, maxPolls = 80, fetchPartitions = 2)
+          bronze, spec, chk, pollMs = 10, maxPolls = 80)
         val files = java.nio.file.Files.list(java.nio.file.Paths.get(out))
           .toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
         val rows = files.map(f => spark.read.parquet(f)
@@ -978,7 +1004,7 @@ class RpcLoopSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException] {
         graft.streaming.FollowMode.followLive(spark,
           new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-          bronze, spec, chk, pollMs = 10, maxPolls = 40, fetchPartitions = 2)
+          bronze, spec, chk, pollMs = 10, maxPolls = 40)
       }
       assert(e.getMessage.contains("deeper than the buffer"))
     } finally server.stop(0)
@@ -1026,7 +1052,7 @@ class RpcLoopSpec extends AnyFunSuite {
         chunkSize = 20, reorgBuffer = 2, outputDir = out)
       graft.streaming.FollowMode.followLive(spark,
         new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-        bronze, spec, chk, pollMs = 10, maxPolls = 80, fetchPartitions = 2)
+        bronze, spec, chk, pollMs = 10, maxPolls = 80)
       val files = java.nio.file.Files.list(java.nio.file.Paths.get(out))
         .toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
       assert(files.size == 2, s"expected both chunks frozen: $files")
@@ -1077,28 +1103,33 @@ class RpcLoopSpec extends AnyFunSuite {
       val e = intercept[IllegalStateException] {
         graft.streaming.FollowMode.followLive(spark,
           new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
-          bronze, spec, chk, pollMs = 10, maxPolls = 15, fetchPartitions = 2)
+          bronze, spec, chk, pollMs = 10, maxPolls = 15)
       }
       assert(e.getMessage.contains("never settled") &&
         e.getMessage.contains("re-run followLive"))
+      // exactly maxPolls head polls, not one more
+      assert(idx.get() == 15, s"${idx.get()} eth_blockNumber calls")
     } finally server.stop(0)
   }
 
   test("async pipelining: >1 request in flight per partition") {
     // A latch-gated stub: every eth_getBlockByNumber handler blocks until
-    // TWO requests are present simultaneously, then all respond. With the
-    // old synchronous per-partition loop (one request at a time in one
-    // task) the first request would wait out the 10s latch and fail; the
-    // sliding-window pipeline holds window = maxConcurrentRequests /
-    // numTasks = 2 batches in flight, so both arrive concurrently.
-    val latch = new java.util.concurrent.CountDownLatch(2)
+    // all 2 × tasks requests are present simultaneously, then all
+    // respond. With a synchronous per-partition loop (one request at a
+    // time in each task) only `tasks` would be in flight and the latch
+    // would time out; the sliding-window pipeline holds window =
+    // maxConcurrentRequests / tasks = 2 batches in flight per task. A
+    // timed-out wait is recorded, not thrown: a dropped exchange would be
+    // re-sent through the retry path and count down the latch anyway.
+    val tasks = spark.sparkContext.defaultParallelism
+    val latch = new java.util.concurrent.CountDownLatch(2 * tasks)
+    val starved = new java.util.concurrent.atomic.AtomicBoolean(false)
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
     server.createContext("/", { exchange =>
       val body = new String(exchange.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       latch.countDown()
-      assert(latch.await(10, java.util.concurrent.TimeUnit.SECONDS),
-        "second request never arrived: no overlap between in-flight requests")
+      if (!latch.await(10, java.util.concurrent.TimeUnit.SECONDS)) starved.set(true)
       val resp = JsonMethods.parse(body) match {
         case JArray(reqs) => reqs.map { req =>
           val id = (req \ "id") match { case JInt(i) => i.toString; case _ => "0" }
@@ -1113,13 +1144,14 @@ class RpcLoopSpec extends AnyFunSuite {
     server.start()
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/"
-      // 4 blocks / innerRequestSize 2 = 2 batches in ONE partition;
-      // maxConcurrentRequests 2 / 1 task = window 2
+      // 4 × tasks blocks / innerRequestSize 2 = 2 batches per task;
+      // maxConcurrentRequests 2 × tasks / tasks = window 2
       val cfg = RpcConfig(url, chainId = 1, innerRequestSize = 2,
-        maxConcurrentRequests = 2, maxRetries = 0)
-      val rows = new RpcSource(cfg).fetchBlocks(spark, range, numPartitions = 1)
-        .collect()
-      assert(rows.map(_.getInt(0)).sorted.toSeq == Seq(16, 17, 18, 19))
+        maxConcurrentRequests = 2 * tasks, maxRetries = 0)
+      val blocks = BlockSyntax.Range(16, 16 + 4 * tasks)
+      val rows = new RpcSource(cfg).fetchBlocks(spark, blocks).collect()
+      assert(rows.map(_.getInt(0).toLong).sorted.toSeq == (16L until 16L + 4 * tasks))
+      assert(!starved.get(), "a request never arrived: no overlap between in-flight requests")
     } finally server.stop(0)
   }
 
@@ -1148,7 +1180,7 @@ class RpcLoopSpec extends AnyFunSuite {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/"
       val cfg = RpcConfig(url, chainId = 1, innerRequestSize = 4,
         maxRetries = 3, initialBackoffMs = 10)
-      val df = new RpcSource(cfg).fetchBlocks(spark, range, numPartitions = 1)
+      val df = new RpcSource(cfg).fetchBlocks(spark, range)
       assert(df.count() == 4)
     } finally server.stop(0)
   }
