@@ -977,6 +977,7 @@ object Cli {
     require(nChunks.forall(_ >= 1), s"--n-chunks must be at least 1, got ${nChunks.get}")
     require(nRowGroups.forall(_ >= 1),
       s"--n-row-groups must be at least 1, got ${nRowGroups.get}")
+    require(reorgBuffer >= 0, s"--reorg-buffer must be at least 0, got $reorgBuffer")
 
     // expand multis + aliases via the registry (meta.rs clustering names)
     val expanded = datasets.reverse.flatMap { d =>
@@ -1112,16 +1113,16 @@ object Cli {
         return Left(if (hex) Freeze.hexifyBinary(df) else df)
       }
       graft.chain.LakeFs.mkdirs(outputDir)
-      val completed = expanded.map { name =>
+      val written = expanded.map { name =>
         val df = decorate(name)(
           Freeze.collectByTransaction(Bronze.dir(spark, sourceDir), name, hashes.toSeq))
         val stub = txHashes.head.stripPrefix("0x").take(8) + s"_${txHashes.size}txs"
         val target = graft.chain.LakeFs.display(new org.apache.hadoop.fs.Path(
           outputDir, s"${network}__${name}__txs_$stub.$format"))
-        Freeze.writeSingleFile(df, target, format)
-        target
+        target -> Freeze.writeSingleFile(df, target, format)
       }
-      return Right(Some(Freeze.FreezeResult(completed, Nil, Nil, -1)))
+      return Right(Some(Freeze.FreezeResult(written.map(_._1), Nil, Nil,
+        written.map(_._2).sum)))
     }
 
     // Live mode (--rpc, sources.rs:119-150): detect the chain id, resolve

@@ -19,20 +19,9 @@ object ChainDatasets {
   def blocks(bronze: Bronze,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None): DataFrame =
-    blocksOf(bronze("rpc_blocks"), include, exclude, columns)
-
-  /** streaming-composable twin of `blocks`: the same projection over an
-    * ALREADY-READ bronze frame (FollowMode.readAppendOnly hands a
-    * streaming one). `ordered = false` skips the local sort streaming
-    * plans disallow — follow-mode sinks order per file by arrival. */
-  def blocksOf(bronze: DataFrame,
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None,
-      ordered: Boolean = true): DataFrame = {
-    val out = bronze.select(
-      TableSchema.resolve(Datatypes.blocks, include, exclude, columns).map(col): _*)
-    if (ordered) out.sortWithinPartitions("block_number") else out
-  }
+    bronze("rpc_blocks")
+      .select(TableSchema.resolve(Datatypes.blocks, include, exclude, columns).map(col): _*)
+      .sortWithinPartitions("block_number")
 
   /** datasets/transactions.rs:14-318 — tx ⋈ receipt, EIP-1559 effective
     * gas price, input-byte stats, success flag.
@@ -126,7 +115,10 @@ object ChainDatasets {
       columns: Option[Seq[String]] = None): DataFrame =
     eventSignature match {
       case None =>
-        logsOf(bronze("rpc_logs"), address, include, exclude, columns)
+        splitTopics(bronze("rpc_logs"), address)
+          .select(TableSchema.resolve(Datatypes.logs, include, exclude, columns)
+            .map(col): _*)
+          .sortWithinPartitions("block_number", "log_index")
       case Some(sig) =>
         val event = Abi.parseEvent(sig)
         // the user's column selection applies to the BASE columns in
@@ -164,26 +156,13 @@ object ChainDatasets {
       .withColumn("topic3", get(col("topics"), lit(3)))
       .withColumn("n_data_bytes", length(col("data")))
 
-  /** streaming-composable twin of `logs` (non-decoded branch): topic
-    * split + byte stats over an already-read bronze frame */
-  def logsOf(bronze: DataFrame, address: Option[Array[Byte]] = None,
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None,
-      ordered: Boolean = true): DataFrame = {
-    val out = splitTopics(bronze, address)
-      .select(TableSchema.resolve(Datatypes.logs, include, exclude, columns)
-        .map(col): _*)
-    if (ordered) out.sortWithinPartitions("block_number", "log_index") else out
-  }
-
   /** shared shape for erc20_transfers / erc20_approvals
     * (datasets/erc20_transfers.rs:12-131: 3 topics + 32-byte data). */
   private def erc20Shaped(logsBronze: DataFrame,
       topic0: Array[Byte], contractCol: String,
       u256Reprs: Seq[U256.Repr],
       from: Option[Array[Byte]] = None,
-      to: Option[Array[Byte]] = None,
-      ordered: Boolean = true): DataFrame = {
+      to: Option[Array[Byte]] = None): DataFrame = {
     val base = logsBronze
       .filter(logTopic(1) === lit(topic0) &&
               size(col("topics")) === 3 && length(col("data")) === 32)
@@ -192,14 +171,14 @@ object ChainDatasets {
     // (datasets/erc20_transfers.rs:61-71 pushdown)
     val f1 = from.map(a => base.filter(logTopic(2) === lit(GenFixtures.pad32(a)))).getOrElse(base)
     val f2 = to.map(a => f1.filter(logTopic(3) === lit(GenFixtures.pad32(a)))).getOrElse(f1)
-    val out = f2
+    f2
       .select(Seq(
         col("block_number"), col("transaction_index"), col("log_index"),
         col("transaction_hash"), col("address").as(contractCol),
         expr("substring(topics[1], 13, 20)").as("from_address"),
         expr("substring(topics[2], 13, 20)").as("to_address")) ++
         U256.expand(col("data"), "value", u256Reprs) :+ col("chain_id"): _*)
-    if (ordered) out.sortWithinPartitions("block_number", "log_index") else out
+      .sortWithinPartitions("block_number", "log_index")
   }
 
   def erc20Transfers(bronze: Bronze,
@@ -209,14 +188,6 @@ object ChainDatasets {
     erc20Shaped(bronze("rpc_logs"),
       Keccak.hash("Transfer(address,address,uint256)"),
       "erc20", u256Reprs, from, to)
-
-  /** streaming-composable twin of `erc20Transfers` — the same row-local
-    * topic filter + decode over an already-read logs bronze frame */
-  def erc20TransfersOf(logsBronze: DataFrame,
-      u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
-      ordered: Boolean = true): DataFrame =
-    erc20Shaped(logsBronze, Keccak.hash("Transfer(address,address,uint256)"),
-      "erc20", u256Reprs, ordered = ordered)
 
   def erc20Approvals(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =

@@ -104,7 +104,7 @@ object DiffTest {
       "0x" + r.getAs[Array[Byte]](i).map("%02x".format(_)).mkString
     def hexes(table: String, col: String): Seq[String] =
       ref(table).select(col).distinct().collect().map(hex(_, 0)).sorted.toSeq
-    def blocksOf(table: String): Seq[Long] = ref(table).select("block_number")
+    def blockNumbers(table: String): Seq[Long] = ref(table).select("block_number")
       .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
     def pairs(table: String, c1: String, c2: String): Seq[(String, String)] =
       ref(table).select(c1, c2).distinct().collect().map(r => (hex(r, 0), hex(r, 1))).sorted.toSeq
@@ -112,16 +112,16 @@ object DiffTest {
     // the frames are lazy, so they fetch after the range bronzes
     val entity = Map(
       "rpc_accounts" -> src.fetchAccounts(spark,
-        blocksOf("rpc_accounts"), hexes("rpc_accounts", "address")),
-      "rpc_storage" -> src.fetchStorage(spark, blocksOf("rpc_storage"),
+        blockNumbers("rpc_accounts"), hexes("rpc_accounts", "address")),
+      "rpc_storage" -> src.fetchStorage(spark, blockNumbers("rpc_storage"),
         pairs("rpc_storage", "address", "slot")),
-      "rpc_calls" -> src.fetchEthCalls(spark, blocksOf("rpc_calls"),
+      "rpc_calls" -> src.fetchEthCalls(spark, blockNumbers("rpc_calls"),
         pairs("rpc_calls", "contract_address", "call_data")),
       "rpc_calls_erc721" -> src.fetchEthCalls(spark,
-        blocksOf("rpc_calls_erc721"),
+        blockNumbers("rpc_calls_erc721"),
         pairs("rpc_calls_erc721", "contract_address", "call_data")),
       "rpc_trace_calls" -> src.fetchTraceCalls(spark,
-        blocksOf("rpc_trace_calls"),
+        blockNumbers("rpc_trace_calls"),
         pairs("rpc_trace_calls", "contract_address", "tx_call_data")))
     // a failed entity fetch releases the range frames with the rest
     val ranged = src.fetchBronze(spark, range, rangeDatasets,

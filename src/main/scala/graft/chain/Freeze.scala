@@ -407,7 +407,7 @@ object Freeze {
     val runs = Seq.unfold(ordered)(cs => Option(cs.dropWhile(finished))
       .filter(_.nonEmpty).map(_.span(!finished(_)))).sortBy(_.map(pos).min)
     // a run holding no listed block still writes its (empty) files
-    def blocksOf(run: Seq[BlockSyntax.Range]): BlockSyntax.Blocks = {
+    def blocksIn(run: Seq[BlockSyntax.Range]): BlockSyntax.Blocks = {
       val span = BlockSyntax.Range(run.head.start, run.last.endExclusive)
       spec.blocks match {
         case BlockSyntax.Numbers(ns) if ns.exists(span.contains) =>
@@ -448,7 +448,7 @@ object Freeze {
     // concurrent jobs' stages across the same executor pool
     val pool = java.util.concurrent.Executors.newFixedThreadPool(spec.maxConcurrentChunks)
     val ran: Map[(String, BlockSyntax.Range), Seq[TaskOutcome]] = try runs.flatMap { run =>
-      val bronze = open(blocksOf(run))
+      val bronze = open(blocksIn(run))
       try {
         val runChunks = chunks.filter(run.toSet)
         // the run's task list is built before any task starts

@@ -388,6 +388,15 @@ object RpcExtract {
     StateDiffRows(bal.result(), cod.result(), non.result(), sto.result())
   }
 
+  /** A struct log's memory/stack/storage capture as compact JSON text
+    * (the array or object the tracer returned, stored as
+    * javascript_traces stores tracer output); null when the log carries
+    * none, as it does unless the capture was requested. */
+  private def capture(l: JValue, key: String): String = (l \ key) match {
+    case JNothing | JNull => null
+    case v => JsonMethods.compact(JsonMethods.render(v))
+  }
+
   private def structLogRow(l: JValue, blockNumber: Int, txIndex: Int,
       chainId: Long): Row =
     Row(blockNumber, txIndex,
@@ -396,7 +405,7 @@ object RpcExtract {
       jlong(l, "gas").getOrElse(0L),
       jlong(l, "gasCost").getOrElse(0L),
       boxI(jlong(l, "depth")),
-      null, null, null, // memory/stack/storage omitted unless requested
+      capture(l, "memory"), capture(l, "stack"), capture(l, "storage"),
       chainId)
 
   /** rpc_geth_opcodes rows from one debug_traceTransaction default

@@ -2,30 +2,27 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** Follow-the-head streaming — beyond-reference extension (SURVEY §2.8):
-  * the reference's nearest equivalent is re-running with --reorg-buffer
-  * (manual incremental batch). Two forms:
+/** Follow the chain head, plus the streaming forms of the document and
+  * event operators.
   *
-  *  - `followLive` is that re-run as a driver loop against a live node:
-  *    each eth_blockNumber poll fetches and freezes only the chunks that
-  *    just settled past the reorg buffer. It stages nothing on disk and
-  *    starts no streaming query.
-  *  - the Structured Streaming jobs below read files that an external
-  *    writer appends to a bronze directory (`readAppendOnly`;
-  *    maxFilesPerTrigger bounds each micro-batch like block chunking),
-  *    and `incrementalFreeze` freezes the chunks such a stream settles.
-  *    Their watermark is the reorg buffer in event time — late/reorged
-  *    rows inside the buffer update open windows, older ones drop — and
-  *    their sink is append-only parquet with checkpointing: the
-  *    idempotent skip-existing semantics, managed by the engine instead
-  *    of filenames.
+  * `followLive` is cryo's follow (SURVEY §2.8): a re-run with
+  * --reorg-buffer and skip-existing, as a driver loop against a live
+  * node. Each eth_blockNumber poll fetches and freezes only the chunks
+  * that just settled past the reorg buffer. It stages nothing on disk
+  * and starts no streaming query.
+  *
+  * The Structured Streaming jobs (`windowedCounts`, `sessionize`, the
+  * dedup and near-dup streams, `cardStream`) are the incremental forms
+  * of batch operators in EventsOps, TextOps and SimilarityOps. They read
+  * files that a writer appends to a directory (`readAppendOnly`;
+  * maxFilesPerTrigger bounds each micro-batch), and their state is
+  * managed by the engine and checkpointed.
   */
 object FollowMode {
 
-  /** stream of raw events/blocks from a growing parquet directory */
+  /** stream of the rows appended to a growing parquet directory */
   def readAppendOnly(spark: SparkSession, dir: String, schema: StructType,
       maxFilesPerTrigger: Int = 4): DataFrame =
     spark.readStream
@@ -640,58 +637,23 @@ object FollowMode {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"),
         max(col("n_toks")).as("max_doc_tokens"))
 
-  /** Incremental freeze: follow the chain head and materialize completed
-    * chunks as cryo-named files. Each micro-batch advances a high-water
-    * mark over the observed block numbers and re-runs `Freeze.freeze` for
-    * every chunk fully below it — skip-existing makes the repetition
-    * exactly-once per file, and a restart resumes from whatever files
-    * already exist (the same idempotence the batch lifecycle has). The
-    * stream carries only block numbers; the freeze jobs re-read bronze. */
-  def incrementalFreeze(spark: SparkSession, sourceDir: String,
-      spec: graft.chain.Freeze.FreezeSpec,
-      blockStream: DataFrame): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.chain.{BlockSyntax, Freeze}
-    // follow modes track a CONTIGUOUS head: silently densifying a
-    // Numbers spec to [min, max] would freeze blocks the caller
-    // explicitly excluded (the batch Freeze path honors the list) —
-    // refuse rather than diverge
-    val (lo, _) = contiguous(spec, "follow mode")
-    val seenHead = new java.util.concurrent.atomic.AtomicLong(lo - 1)
-    blockStream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val mx = batch.agg(max(col("block_number"))).collect()(0)
-      if (!mx.isNullAt(0)) {
-        val head: Long = mx.get(0) match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long => l.longValue
-        }
-        val hi = seenHead.accumulateAndGet(head, math.max(_, _))
-        val end = lo + (math.max(0L, settledBelow(hi, spec) - lo) /
-          spec.chunkSize) * spec.chunkSize
-        if (end > lo)
-          Freeze.freeze(spark, sourceDir,
-            spec.copy(blocks = BlockSyntax.Range(lo, end)))
-      }
-      ()
-    }
-  }
-
-  /** The settle rule both follow modes share: blocks below the returned
-    * bound are at or below `head − reorgBuffer`, so a rollback no deeper
-    * than the buffer can orphan none of them and a chunk that ends below
-    * it may be frozen for good (buffer 0 = settled as soon as seen). */
+  /** The settle rule of `followLive`: blocks below the returned bound
+    * are at or below `head − reorgBuffer`, so a rollback no deeper than
+    * the buffer can orphan none of them and a chunk that ends below it
+    * may be frozen for good (buffer 0 = settled as soon as seen). */
   private def settledBelow(head: Long,
       spec: graft.chain.Freeze.FreezeSpec): Long =
     head + 1 - spec.reorgBuffer
 
   /** the `[lo, hiEnd)` of a follow spec; a block list is refused */
-  private def contiguous(spec: graft.chain.Freeze.FreezeSpec,
-      who: String): (Long, Long) = spec.blocks match {
-    case graft.chain.BlockSyntax.Range(a, b) => (a, b)
-    case graft.chain.BlockSyntax.Numbers(ns) => throw new IllegalArgumentException(
-      s"$who needs a contiguous --blocks range; a block list " +
-        s"(${ns.take(3).mkString(",")}…) would be silently densified " +
-        "— freeze the list with the batch path instead")
-  }
+  private def contiguous(spec: graft.chain.Freeze.FreezeSpec): (Long, Long) =
+    spec.blocks match {
+      case graft.chain.BlockSyntax.Range(a, b) => (a, b)
+      case graft.chain.BlockSyntax.Numbers(ns) => throw new IllegalArgumentException(
+        s"followLive needs a contiguous --blocks range; a block list " +
+          s"(${ns.take(3).mkString(",")}…) would be silently densified " +
+          "— freeze the list with the batch path instead")
+    }
 
   /** Live follow-the-head driver: cryo's reorg-buffered freeze, re-run
     * on every poll. The caller's thread polls the node's head
@@ -721,7 +683,9 @@ object FollowMode {
       bronzeDir: String, spec: graft.chain.Freeze.FreezeSpec,
       checkpointDir: String, pollMs: Long = 250, maxPolls: Int = 600): Unit = {
     import graft.chain.{BlockSyntax, Freeze}
-    val (lo, hiEnd) = contiguous(spec, "followLive")
+    require(spec.reorgBuffer >= 0,
+      s"followLive needs reorgBuffer >= 0, got ${spec.reorgBuffer}")
+    val (lo, hiEnd) = contiguous(spec)
     val chunks = BlockSyntax.chunks(spec.blocks, spec.chunkSize, spec.nChunks,
       spec.align)
     var frozen = 0 // chunks(0 until frozen) are on disk
@@ -770,15 +734,4 @@ object FollowMode {
         "maxPolls/pollMs if the node is slow.")
     }
   }
-
-  /** write an append-only parquet sink with checkpoint (exactly-once per
-    * micro-batch; restart-safe like freeze's skip-existing). */
-  def sink(df: DataFrame, outDir: String, checkpoint: String,
-      intervalMs: Long = 1000): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(intervalMs))
 }

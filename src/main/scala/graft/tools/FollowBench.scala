@@ -4,25 +4,25 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
-/** Follow-mode measured record (r12 brief item 5): streaming had specs
-  * but no number anywhere. This drives the production follow-mode
-  * pipeline shapes over the 60k-block chain corpus and the sf0.1
-  * document corpus and records throughput (blocks/sec, rows/sec),
-  * micro-batch latency (p50/p99 of triggerExecution), catch-up and
-  * live per-chunk lag, as one JSON record in bench_history.
+/** Measured record of the document and embedding streams in FollowMode:
+  * throughput (rows/sec) and micro-batch latency (p50/p99 of
+  * triggerExecution) of the streaming exact dedup (`dedupStream`) over
+  * the sf0.1 document corpus and of the streaming SemDeDup
+  * (`semdedupStream`) over its embeddings, the latter on the default
+  * state store and on RocksDB, as one JSON record in bench_history. The
+  * run fails unless the SemDeDup stream's keep/drop verdicts equal the
+  * batch `semdedupOf` on every vector.
   *
-  * Method: the bronze tables are staged as ~`nFiles` contiguous
-  * block-range files (repartitionByRange on block_number — one file
-  * per settled chunk, as an appending writer leaves them), then each pipeline
-  * runs as a real Structured Streaming query — FollowMode.readAppendOnly
-  * with maxFilesPerTrigger=4 → the SAME ChainDatasets transform the
-  * batch path uses (blocksOf/logsOf/erc20TransfersOf, ordered=false) →
-  * a checkpointed parquet sink — under Trigger.AvailableNow, which
-  * drains the backlog in maxFilesPerTrigger-bounded micro-batches and
-  * stops: every trigger is a measured micro-batch. Streams run
-  * SEQUENTIALLY so latencies don't contend.
+  * Method: each corpus is staged as ~`nFiles` contiguous id-range files
+  * (repartitionByRange — as an appending writer leaves them), then each
+  * pipeline runs as a real Structured Streaming query —
+  * FollowMode.readAppendOnly with maxFilesPerTrigger=4 → the stream →
+  * a checkpointed sink — under Trigger.AvailableNow, which drains the
+  * backlog in maxFilesPerTrigger-bounded micro-batches and stops: every
+  * trigger is a measured micro-batch. Streams run SEQUENTIALLY so
+  * latencies don't contend.
   *
-  * Usage: runMain graft.tools.FollowBench [chainFixtureDir] [docsParquet] [outJson]
+  * Usage: runMain graft.tools.FollowBench [docsParquet] [outJson] [embeddingsParquet]
   */
 object FollowBench {
 
@@ -35,30 +35,24 @@ object FollowBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val chainDir = args.lift(0).getOrElse("fixtures/chain_sf1")
-    val docsPath = args.lift(1).getOrElse("/root/testdata/sf0.1/documents.parquet")
-    val outJson = args.lift(2).getOrElse("bench_history/r13_follow.json")
-    val embPath = args.lift(3).getOrElse("/root/testdata/sf0.1/embeddings.parquet")
+    val docsPath = args.lift(0).getOrElse("/root/testdata/sf0.1/documents.parquet")
+    val outJson = args.lift(1).getOrElse("bench_history/r13_follow.json")
+    val embPath = args.lift(2).getOrElse("/root/testdata/sf0.1/embeddings.parquet")
     val cpus = graft.GraftSession.defaultCpus
     val spark = graft.GraftSession(cpus)
     import graft.streaming.FollowMode
 
     val work = java.nio.file.Files.createTempDirectory("graft_followbench").toString
 
-    // stage bronze as contiguous block-range files — the shape a
-    // follow-mode appender leaves behind (one file per settled chunk)
+    // stage a corpus as contiguous id-range files — the shape an
+    // appending writer leaves behind
     def stage(src: DataFrame, name: String, nFiles: Int, rangeCol: String): String = {
       val p = s"$work/$name"
       src.repartitionByRange(nFiles, col(rangeCol)).write.parquet(p)
       p
     }
-    val blocksPath = stage(
-      spark.read.parquet(s"$chainDir/rpc_blocks.parquet"), "rpc_blocks", 120, "block_number")
-    val logsPath = stage(
-      spark.read.parquet(s"$chainDir/rpc_logs.parquet"), "rpc_logs", 120, "block_number")
     val docsStaged = stage(
       spark.read.parquet(docsPath), "documents", 40, "doc_id")
-    val nBlocks = spark.read.parquet(blocksPath).count()
 
     // per-query micro-batch metrics via the engine's own listener
     val durations = new java.util.concurrent.ConcurrentHashMap[java.util.UUID,
@@ -79,30 +73,12 @@ object FollowBench {
       if (xs.isEmpty) 0L else xs.sorted.apply(math.min(xs.size - 1,
         (p * xs.size).toInt))
 
-    // r14 (brief item 7): the COLD page-cache day is the incremental
-    // consumer's worst day (r13 discarded a 37 s first-touch reorg
-    // recovery as a fixture artifact — it was the honest cold number
-    // and lived only in prose). Best-effort: requires root; the record
-    // states whether the drop actually happened, so a "cold" reading
-    // on an unprivileged host is never silently warm.
-    def dropCaches(): Boolean =
-      try new ProcessBuilder("sh", "-c",
-        "sync && echo 3 > /proc/sys/vm/drop_caches")
-        .start().waitFor() == 0
-      catch { case _: Throwable => false }
-
     /** run one streaming pipeline to exhaustion under AvailableNow;
-      * returns measured metrics. Reusing `ckpt` (and its paired `sink`
-      * dir — the file sink's _spark_metadata log lives there) =
-      * restart-from-checkpoint. Stateful update-mode twins (semdedup)
+      * returns measured metrics. Stateful update-mode twins (semdedup)
       * pass outputMode="update"/format="noop": the parquet sink is
       * append-only, and what's measured is the pipeline, not the sink. */
     def run(label: String, src: String, build: DataFrame => DataFrame,
-        ckpt: String, sinkDir: Option[String] = None,
-        outputMode: String = "append", format: String = "parquet"): M = {
-      // a restart-from-checkpoint REUSES the persisted query id, so the
-      // collector must start empty or the heal run pools the original
-      // run's batches into its own metrics
+        ckpt: String, outputMode: String = "append", format: String = "parquet"): M = {
       durations.clear()
       val schema = spark.read.parquet(src).schema
       val out = build(FollowMode.readAppendOnly(spark, src, schema,
@@ -113,7 +89,7 @@ object FollowBench {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
       val q = (if (format == "parquet")
-        w0.option("path", sinkDir.getOrElse(s"$work/out_$label")) else w0)
+        w0.option("path", s"$work/out_$label") else w0)
         .start()
       val t0 = System.nanoTime()
       q.awaitTermination()
@@ -144,18 +120,7 @@ object FollowBench {
       m
     }
 
-    // the three chain follow pipelines + the streaming exact-dedup twin,
-    // each the SAME transform the batch dataset runs (ordered=false: the
-    // one divergence streaming plans force, stated in the twins' docs)
-    val mBlocks = run("blocks", blocksPath,
-      df => graft.chain.ChainDatasets.blocksOf(df, ordered = false),
-      s"$work/ck_blocks")
-    val mLogs = run("logs", logsPath,
-      df => graft.chain.ChainDatasets.logsOf(df, ordered = false),
-      s"$work/ck_logs")
-    val mXfer = run("erc20_transfers", logsPath,
-      df => graft.chain.ChainDatasets.erc20TransfersOf(df, ordered = false),
-      s"$work/ck_xfer")
+    // the streaming exact-dedup twin of q_doc_dedup_exact
     val mDedup = run("doc_dedup", docsStaged,
       df => FollowMode.dedupStream(df).select("doc_id", "fp"),
       s"$work/ck_dedup")
@@ -256,128 +221,16 @@ object FollowBench {
         s"$semMismatches of ${batchKeep.size} verdicts")
     println(s"[follow] semdedup stream==batch keep/drop: " +
       s"${batchKeep.size - semMismatches}/${batchKeep.size} match")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus.toLong)
-
-    // r13 (brief item 4b): catch-up-from-genesis + steady-state lag —
-    // the incremental consumer's worst day. Stage everything below the
-    // live window as the genesis backlog, drain it from block 0 with
-    // the production trigger knob (maxFilesPerTrigger=4 — the honest
-    // worst-day number is the production configuration, not a tuned
-    // batch size), then keep the SAME checkpointed query running under
-    // ProcessingTime and feed the live window in chunk-file appends
-    // (atomic part-file moves, one file per settled chunk as
-    // followLive's freeze writes them), measuring per-chunk lag from
-    // file-visibility to rows-committed.
-    val allBlocks = spark.read.parquet(blocksPath)
-    val headBlock = allBlocks.agg(max(col("block_number")).cast("long"))
-      .collect()(0).getLong(0)
-    val liveStart = headBlock - 5000
-    val catchupDir = s"$work/catchup_blocks"
-    allBlocks.filter(col("block_number") < liveStart)
-      .repartitionByRange(110, col("block_number"))
-      .write.parquet(catchupDir)
-    val nBacklog = spark.read.parquet(catchupDir).count()
-    // {cold, warm} pair (r14): the cold drain first-touches the staged
-    // backlog from disk under its own checkpoint; the warm drain then
-    // re-reads it cached under the checkpoint the live phase continues
-    val catchupColdDropped = dropCaches()
-    val mCatchupCold = run("catchup_from_genesis_cold", catchupDir,
-      df => graft.chain.ChainDatasets.blocksOf(df, ordered = false),
-      s"$work/ck_catchup_cold")
-    val mCatchup = run("catchup_from_genesis", catchupDir,
-      df => graft.chain.ChainDatasets.blocksOf(df, ordered = false),
-      s"$work/ck_catchup")
-    // live phase: 10 chunks of ~500 blocks arrive one at a time
-    val chunkBounds = (0 until 10).map(i => (liveStart + i * 500, liveStart + (i + 1) * 500))
-    val chunkFiles = chunkBounds.zipWithIndex.map { case ((lo, hi), i) =>
-      val tmpDir = s"$work/chunk_stage_$i"
-      val chunk = allBlocks.filter(col("block_number") >= lo && col("block_number") < hi)
-      chunk.coalesce(1).write.parquet(tmpDir)
-      val part = new java.io.File(tmpDir).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      (part.toPath, chunk.count())
-    }
-    durations.clear()
-    val liveSchema = spark.read.parquet(catchupDir).schema
-    val liveQ = graft.chain.ChainDatasets.blocksOf(
-        FollowMode.readAppendOnly(spark, catchupDir, liveSchema,
-          maxFilesPerTrigger = 4), ordered = false)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$work/out_catchup_from_genesis")
-      .option("checkpointLocation", s"$work/ck_catchup")
-      .trigger(Trigger.ProcessingTime("250 milliseconds"))
-      .start()
-    // cumulative live-phase rows from the (cleared) listener collector —
-    // recentProgress is synchronous but capped at 100 entries, and a
-    // 250ms trigger cadence can evict data-carrying entries mid-phase;
-    // the listener map is unbounded (its ms-scale async delivery is
-    // noise against the lag being measured)
-    def liveRows(): Long = Option(durations.get(liveQ.id))
-      .map(_.map(_._2).sum).getOrElse(0L)
-    // settle: let the restarted source finish its initial (empty) listing
-    Thread.sleep(1500)
-    // r14 (ADVICE r13): a chunk that never commits inside the deadline
-    // must not fold a ~60000 ms artifact into the percentiles — and
-    // because expectedRows is cumulative, one timeout would cascade
-    // into every later chunk. Timed-out samples are MARKED and
-    // excluded from p50/p99 (the record carries their count loudly),
-    // and expectedRows resyncs to what actually committed so one bad
-    // chunk can't corrupt the rest of the phase.
-    val lags = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var lagTimeouts = 0
-    var expectedRows = liveRows()
-    chunkFiles.zipWithIndex.foreach { case ((part, rows), i) =>
-      expectedRows += rows
-      val tA = System.nanoTime()
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(s"$catchupDir/live-chunk-$i.parquet"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      val deadline2 = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (liveRows() < expectedRows && System.nanoTime() < deadline2)
-        Thread.sleep(25)
-      if (liveRows() < expectedRows) {
-        lagTimeouts += 1
-        System.err.println(s"[follow] live chunk $i TIMED OUT after 60 s " +
-          s"(${liveRows()} of $expectedRows rows committed) — excluded " +
-          "from lag percentiles")
-        expectedRows = liveRows() // resync: don't cascade the shortfall
-      } else lags += (System.nanoTime() - tA) / (1000 * 1000)
-      Thread.sleep(750) // inter-arrival gap: lag measurements don't overlap
-    }
-    liveQ.stop()
-    val lagP50 = pct(lags.toSeq, 0.5)
-    val lagP99 = pct(lags.toSeq, 0.99)
-    val catchupBlocksPerSec = nBacklog / math.max(mCatchup.wallSec, 1e-9)
-    println(f"[follow] catchup ${nBacklog}%d blocks in ${mCatchup.wallSec}%.2f s " +
-      f"(${catchupBlocksPerSec}%.0f blocks/s); live lag p50=${lagP50}%d ms p99=${lagP99}%d ms")
-
-    val blocksPerSec = nBlocks / math.max(mBlocks.wallSec, 1e-9)
-    val catchupColdBps = nBacklog / math.max(mCatchupCold.wallSec, 1e-9)
     val record =
-      s"""{"corpus":"$chainDir","n_blocks":$nBlocks,"n_vecs":$nVecs,""" +
-        s""""blocks_per_sec":${f"$blocksPerSec%.0f"},""" +
-        s""""cold_cache_dropped":$catchupColdDropped,""" +
+      s"""{"docs":"$docsPath","n_vecs":$nVecs,""" +
         s""""semdedup_batch_verdicts":${batchKeep.size},""" +
         s""""semdedup_keepdrop_mismatches":$semMismatches,""" +
         s""""semdedup_state_partitions":$semParts,""" +
-        s""""catchup":{"backlog_blocks":$nBacklog,""" +
-        s""""wall_sec":${f"${mCatchup.wallSec}%.3f"},""" +
-        s""""blocks_per_sec":${f"$catchupBlocksPerSec%.0f"},""" +
-        s""""cold_wall_sec":${f"${mCatchupCold.wallSec}%.3f"},""" +
-        s""""cold_blocks_per_sec":${f"$catchupColdBps%.0f"},""" +
-        s""""live_chunks":${lags.size},"timed_out":$lagTimeouts,""" +
-        s""""lag_p50_ms":$lagP50,"lag_p99_ms":$lagP99,""" +
-        s""""lags_ms":${lags.mkString("[", ",", "]")}},""" +
-        s""""streams":{${(Seq(mBlocks, mLogs, mXfer, mDedup, mSemdedup) ++
-          mSemdedupRocks.toSeq ++
-          Seq(mCatchupCold, mCatchup))
+        s""""streams":{${(Seq(mDedup, mSemdedup) ++ mSemdedupRocks.toSeq)
           .map(_.json).mkString(",")}}}"""
     val p = java.nio.file.Paths.get(outJson)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.writeString(p, record)
-    println(s"""{"metric":"follow_blocks_per_sec","value":${f"$blocksPerSec%.0f"},"unit":"blocks/sec"}""")
     spark.stop()
   }
 }

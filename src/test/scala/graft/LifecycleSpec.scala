@@ -424,9 +424,13 @@ class CliSpec extends AnyFunSuite {
     val hashes = Bronze.dir(spark, fixDir)("rpc_transactions")
       .select("transaction_hash").limit(2).collect()
       .map(r => hx(r.getAs[Array[Byte]](0)))
-    val (_, done) = runCli("txs", "--txs", hashes(0), hashes(1))
-    assert(done.size == 1 && done.head.contains("__txs_"))
-    assert(spark.read.parquet(done.head).count() == 2)
+    val out = Files.createTempDirectory("graft_cli").toString
+    val r = Cli.run(Array("--source-dir", fixDir, "--output-dir", out,
+      "--chunk-size", "60", "--blocks", "1000:1060",
+      "txs", "--txs", hashes(0), hashes(1)), spark).get
+    assert(r.completed.size == 1 && r.completed.head.contains("__txs_"))
+    assert(spark.read.parquet(r.completed.head).count() == 2)
+    assert(r.rows == 2)
   }
 
   test("binary-list flags accept parquet column references") {
@@ -1921,6 +1925,24 @@ class RpcCodecSpec extends AnyFunSuite {
     val rows = RpcExtract.gethOpcodes(body, blockNumber = 16, txIndex = 0, chainId = 1)
     assert(rows.map(_.getString(3)) == Seq("PUSH1", "MSTORE"))
     assert(rows(1).getLong(5) == 12L)
+    // memory/stack/storage: absent captures are null
+    assert(rows.forall(r => (7 to 9).forall(r.isNullAt)))
+    // a log that carries all three captures writes each as compact JSON
+    val captured =
+      """{"result":{"structLogs":[
+        | {"pc":4,"op":"SSTORE","gas":99985,"gasCost":20000,"depth":1,
+        |  "memory":["0000000000000000000000000000000000000000000000000000000000000080"],
+        |  "stack":["0x1", "0x2"],
+        |  "storage":{"0000000000000000000000000000000000000000000000000000000000000001":
+        |    "0000000000000000000000000000000000000000000000000000000000000002"}}]}}""".stripMargin
+    val c = RpcExtract.gethOpcodes(captured, blockNumber = 16, txIndex = 1, chainId = 1)
+    assert(c.size == 1)
+    assert(c.head.getString(7) ==
+      """["0000000000000000000000000000000000000000000000000000000000000080"]""")
+    assert(c.head.getString(8) == """["0x1","0x2"]""")
+    assert(c.head.getString(9) ==
+      """{"0000000000000000000000000000000000000000000000000000000000000001":""" +
+        """"0000000000000000000000000000000000000000000000000000000000000002"}""")
   }
 
   test("getLogs topic position filters: trailing trim, interior wildcard") {
@@ -2473,32 +2495,6 @@ class StreamingSpec extends AnyFunSuite {
           r.getAs[Boolean]("keep")).toMap
       assert(got == want && got.nonEmpty)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-  }
-
-  test("incremental freeze follows the head and writes completed chunks once") {
-    val fixDir = graft.queries.ChainQueries.FixDir
-    val src = Files.createTempDirectory("graft_if_src").toString
-    val out = Files.createTempDirectory("graft_if_out").toString
-    val blocks = Bronze.dir(spark, fixDir)("rpc_blocks")
-    // several files → several micro-batches, out-of-order arrival possible
-    blocks.select("block_number").repartition(4)
-      .write.mode("overwrite").parquet(src)
-    val stream = FollowMode.readAppendOnly(spark, src,
-      blocks.select("block_number").schema, maxFilesPerTrigger = 1)
-    val spec = graft.chain.Freeze.FreezeSpec(
-      datasets = Seq("blocks"), blocks = Range(1000, 1060),
-      chunkSize = 25, outputDir = out)
-    val q = FollowMode.incrementalFreeze(spark, fixDir, spec, stream)
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_if_chk").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // head 1059 → chunks [1000,1025) and [1025,1050) complete; [1050,1060)
-    // is a partial chunk and must NOT be frozen yet
-    val written = Files.list(Paths.get(out)).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).sorted.toSeq
-    assert(written.map(p => p.substring(p.indexOf("__000") + 2)) ==
-      Seq("00001000_to_00001024.parquet", "00001025_to_00001049.parquet"))
   }
 
   test("follow-mode windowed aggregation over an append-only directory") {

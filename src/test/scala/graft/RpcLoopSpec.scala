@@ -637,12 +637,14 @@ class RpcLoopSpec extends AnyFunSuite {
     // `--chunk-size 0` died with "step cannot be 0", `-1` planned no
     // chunks and reported success; `--n-chunks 0` was refused only after
     // the chain-id probe; `--n-row-groups 0` divided by zero;
-    // `--max-retries -1` failed every request without sending it
+    // `--max-retries -1` failed every request without sending it;
+    // `--reorg-buffer -1` was silently ignored
     for ((flag, value) <- Seq("--inner-request-size" -> "-1",
         "--inner-request-size" -> "0", "--max-concurrent-requests" -> "0",
         "--max-concurrent-chunks" -> "0", "--max-concurrent-chunks" -> "-1",
         "--chunk-size" -> "0", "--chunk-size" -> "-1", "--n-chunks" -> "0",
-        "--n-row-groups" -> "0", "--max-retries" -> "-1"))
+        "--n-row-groups" -> "0", "--max-retries" -> "-1",
+        "--reorg-buffer" -> "-1"))
       withStub { (url, posts) =>
         val out = java.nio.file.Files.createTempDirectory("graft_badflag").toString
         val e = intercept[IllegalArgumentException] {
@@ -806,6 +808,28 @@ class RpcLoopSpec extends AnyFunSuite {
       val bns = frozen.select("block_number").collect().map(_.getInt(0)).sorted
       assert(bns.head == 1000 && bns.last == 1049 && bns.distinct.length == 50)
     } finally server.stop(0)
+  }
+
+  test("followLive: a block list or a negative reorg buffer is refused before any request") {
+    // a block list would be densified to its span, and a negative buffer
+    // would take blocks past the head as settled
+    val specs = Seq(
+      BlockSyntax.Numbers(Seq(1000L, 1002L)) -> 0L,
+      BlockSyntax.Range(1000, 1060) -> -1L)
+    for ((blocks, reorgBuffer) <- specs) withStub { (url, posts) =>
+      val out = java.nio.file.Files.createTempDirectory("graft_fl_refuse").toString
+      val spec = graft.chain.Freeze.FreezeSpec(datasets = Seq("blocks"),
+        blocks = blocks, chunkSize = 25, reorgBuffer = reorgBuffer,
+        outputDir = out)
+      val e = intercept[IllegalArgumentException] {
+        graft.streaming.FollowMode.followLive(spark,
+          new RpcSource(RpcConfig(url, chainId = 1, maxRetries = 0)),
+          out, spec, out, pollMs = 10, maxPolls = 5)
+      }
+      assert(e.getMessage.contains(
+        if (reorgBuffer < 0) "reorgBuffer" else "contiguous"), e.getMessage)
+      assert(posts.get() == 0)
+    }
   }
 
   test("followLive: a resumed follow fetches each settled block once and freezes no duplicates") {
