@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions.{col, lit}
   *     [--columns c…|all] [--include-columns c…] [--exclude-columns c…]
   *     [--u256-types t…] [--sort c…] [--txs h…] [--timestamps T1:T2]
   *     [--partition-by col] [--chunk-order normal|reverse|random]
-  *     [--max-concurrent-chunks N]
+  *     [--max-concurrent-chunks N]  (dataset write jobs in flight)
   *
   * Plus `graft.Cli pipeline <query> <sf-dir> [--out DIR] [--show N]`,
   * which runs any registered SparkEntry query
@@ -158,6 +158,7 @@ object Cli {
       |  --u256-types t…  --sort c…  --txs h…  --timestamps T1:T2
       |  --contract A…  --address A…  --topic0..3 H…  --exclude-failed
       |  --partition-by col  --chunk-order normal|reverse|random
+      |  --max-concurrent-chunks N (dataset write jobs in flight)
       |  --rpc URL  --requests-per-second N  --max-retries N
       |  --dry-run  --no-report  --remember  --verbose|--no-verbose
       |
@@ -1022,7 +1023,7 @@ object Cli {
           "cannot specify both call_data and function/inputs")
       }
 
-    /** wrap a dataset builder with the entity / column / sort flags */
+    /** wrap a dataset builder with the entity and column flags */
     def decorate(name: String)(df0: DataFrame): DataFrame = {
       var df = df0
       def filt(c: String, hexVals: Seq[String]): Unit =
@@ -1049,10 +1050,12 @@ object Cli {
         }
         df = df.select(keep.map(col).toSeq: _*)
       }
-      if (sortCols.nonEmpty)
-        df = df.sortWithinPartitions(sortCols.map(col): _*)
       df
     }
+    // --sort on the writes outside a chunked freeze, which sorts each
+    // file itself (FreezeSpec.sort)
+    def sorted(df: DataFrame): DataFrame =
+      if (sortCols.isEmpty) df else df.sortWithinPartitions(sortCols.map(col): _*)
 
     // an entity flag whose mapped column exists on NO requested dataset
     // is a typo or a wrong dataset choice — silently skipping the filter
@@ -1084,6 +1087,12 @@ object Cli {
       expanded.foreach(n =>
         TableSchema.resolve(Datatypes(n), Seq.empty, Seq.empty, Some(cols)))
     }
+    // a chunked freeze files each row by its block_number, so the written
+    // columns must keep it (collect and --txs write no chunk files)
+    if (!collectMode && txHashes.isEmpty)
+      expanded.foreach(n => require(TableSchema.resolve(Datatypes(n),
+        includeCols, excludeCols, explicitCols).contains("block_number"),
+        s"a chunked freeze of $n needs block_number among its columns"))
 
     // --event-signature ABI-decodes logs into event__ columns
     // (log_decoder.rs); --exclude-failed drops failed txs / failed trace
@@ -1108,14 +1117,14 @@ object Cli {
       val hashes = txHashes.map(RpcCodec.parseHexBytes)
       if (collectMode) {
         require(expanded.size == 1, "collect() takes exactly one datatype")
-        val df = decorate(expanded.head)(Freeze.collectByTransaction(
-          Bronze.dir(spark, sourceDir), expanded.head, hashes.toSeq))
+        val df = sorted(decorate(expanded.head)(Freeze.collectByTransaction(
+          Bronze.dir(spark, sourceDir), expanded.head, hashes.toSeq)))
         return Left(if (hex) Freeze.hexifyBinary(df) else df)
       }
       graft.chain.LakeFs.mkdirs(outputDir)
       val written = expanded.map { name =>
-        val df = decorate(name)(
-          Freeze.collectByTransaction(Bronze.dir(spark, sourceDir), name, hashes.toSeq))
+        val df = sorted(decorate(name)(
+          Freeze.collectByTransaction(Bronze.dir(spark, sourceDir), name, hashes.toSeq)))
         val stub = txHashes.head.stripPrefix("0x").take(8) + s"_${txHashes.size}txs"
         val target = graft.chain.LakeFs.display(new org.apache.hadoop.fs.Path(
           outputDir, s"${network}__${name}__txs_$stub.$format"))
@@ -1186,7 +1195,7 @@ object Cli {
         src.fetchBronze(spark, blocks, expanded,
           addresses = addressF, slots = slotsF, calls = liveCalls,
           jsTracer = jsTracer, options = buildOptions)
-      case _ => Bronze.dir(spark, sourceDir)
+      case _ => Bronze.dir(spark, sourceDir, blocks)
     }
 
     // In-memory collect: one datatype, decorated + block-filtered, no
@@ -1194,7 +1203,8 @@ object Cli {
     // bronze stays held for as long as the returned frame is used.
     if (collectMode) {
       require(expanded.size == 1, "collect() takes exactly one datatype")
-      val df = Freeze.filterBlocks(decorated(expanded.head)(openBronze(blocksSpec)), blocksSpec)
+      val df = sorted(Freeze.filterBlocks(
+        decorated(expanded.head)(openBronze(blocksSpec)), blocksSpec))
       return Left(if (hex) Freeze.hexifyBinary(df) else df)
     }
 
@@ -1234,7 +1244,7 @@ object Cli {
       maxConcurrentChunks = maxConcurrentChunks,
       cliCommand = Some(("graft" +: args.toSeq).mkString(" ")),
       noReport = noReport, reportDirOverride = reportDir,
-      subdirs = subdirs)
+      subdirs = subdirs, sort = sortCols)
 
     val chunks = BlockSyntax.chunks(blocksSpec, chunkSize, nChunks, align)
     if (dryRun) {

@@ -16,6 +16,17 @@ object Bronze {
   def dir(spark: SparkSession, path: String): Bronze =
     new Bronze(name => spark.read.parquet(s"$path/$name.parquet"), () => ())
 
+  /** `dir` holding only `blocks`: every table with a `block_number`
+    * is filtered by them (Catalyst pushes the filter into the parquet
+    * scan); `rpc_receipts`, keyed by transaction, is read whole */
+  def dir(spark: SparkSession, path: String, blocks: BlockSyntax.Blocks): Bronze = {
+    val all = dir(spark, path)
+    new Bronze(name => {
+      val df = all(name)
+      if (df.columns.contains("block_number")) Freeze.filterBlocks(df, blocks) else df
+    }, () => ())
+  }
+
   /** Persists every frame and materializes each once before it returns,
     * so whatever computes them (a node fetch) runs here and never again
     * while the frames are held. `release()` unpersists them. A table it

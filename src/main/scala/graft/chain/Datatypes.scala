@@ -146,7 +146,7 @@ object Datatypes {
       "used" -> UInt64, "push" -> Binary, "mem_off" -> UInt32,
       "mem_data" -> Binary, "storage_key" -> Binary, "storage_val" -> Binary,
       "op" -> Str, chainId),
-    sortColumns = Seq("block_number", "transaction_index"),
+    sortColumns = Seq("block_number", "transaction_index", "pc"),
     byBlock = true, byTransaction = true)
 
   val nativeTransfers = DatasetDef(
@@ -268,7 +268,7 @@ object Datatypes {
     name = "trace_calls",
     columns = traces.columns.filterNot(c => c._1 == "transaction_index" || c._1 == "transaction_hash") :+
       ("tx_call_data" -> Binary),
-    sortColumns = Seq("block_number"),
+    sortColumns = Seq("block_number", "trace_address"),
     requiredDims = Seq(Contract, CallData))
 
   val gethCalls = DatasetDef(
@@ -287,7 +287,7 @@ object Datatypes {
       "gas_cost" -> UInt64, "depth" -> UInt32, "memory" -> Str,
       "stack" -> Str, "storage" -> Str, chainId),
     defaultExclude = Seq("memory", "stack", "storage"),
-    sortColumns = Seq("block_number", "transaction_index"),
+    sortColumns = Seq("block_number", "transaction_index", "pc"),
     byBlock = true, byTransaction = true)
 
   private def gethDiff(nm: String, valueType: ColType, u256: Seq[String],

@@ -2,8 +2,9 @@ package graft.chain
 
 import graft.functions.U256
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** The freeze lifecycle: chunked, idempotent, resumable extraction to
   * named files — the Spark rendering of cryo's `freeze()`
@@ -14,16 +15,18 @@ import org.apache.spark.sql.functions._
   * `{network}__{datatype}[__{label}]__{start:08d}_to_{end:08d}.parquet`;
   * existing files are skipped unless overwrite, before any bronze is
   * opened — re-running a job fetches and touches only missing chunks
-  * (incremental/resumable extraction). Writes go through a `._tmp`
-  * directory + single-file promotion (export.rs:13-23) over the Hadoop
-  * FileSystem of the output path — a lake can live on local disk, HDFS
-  * or an object store (see LakeFs for the per-FS rename semantics;
+  * (incremental/resumable extraction). Each dataset's files of a run are
+  * written by one partitioned Spark job into a `._tmp` directory, and
+  * each file is then promoted to its name (export.rs:13-23) over the
+  * Hadoop FileSystem of the output path — a lake can live on local disk,
+  * HDFS or an object store (see LakeFs for the per-FS rename semantics;
   * PLANS.md carries the swap-site atomicity audit).
   *
-  * Scale note: each chunk writes via a block-range filter that Catalyst
-  * pushes into the parquet scan (partition pruning), so a 1000-chunk
-  * freeze over 100 TB reads each row group at most once per overlapping
-  * chunk, not once per chunk.
+  * Scale note: the freeze filters no block range itself. The opener
+  * returns bronze holding only the run's blocks (a node fetch of the
+  * run, or `Bronze.dir`'s block filter, which Catalyst pushes into the
+  * parquet scan), so a 1000-chunk freeze over 100 TB reads each row
+  * group once per run that overlaps it.
   */
 object Freeze {
 
@@ -64,7 +67,9 @@ object Freeze {
       /** omit column statistics (args.rs --no-stats):
         * parquet.column.statistics.enabled=false */
       noStats: Boolean = false,
-      /** chunk-file writes in flight at once, at least 1 (freeze.rs:85-87) */
+      /** dataset write jobs in flight at once, at least 1 (cryo's chunk
+        * semaphore, freeze.rs:85-87; each job writes all of a run's
+        * files of one dataset) */
       maxConcurrentChunks: Int = 4,
       /** recorded in the run report (reports.rs cli_command/args) */
       cliCommand: Option[String] = None,
@@ -75,7 +80,10 @@ object Freeze {
       reportDirOverride: Option[String] = None,
       /** output subdirectory layout (types/files.rs:63-105 --subdirs):
         * any of "datatype", "network", or a literal custom label */
-      subdirs: Seq[String] = Seq.empty)
+      subdirs: Seq[String] = Seq.empty,
+      /** sort keys of every file (`--sort`, single-dataset runs); empty:
+        * the dataset's default sort (TableSchema.sortKeys) */
+      sort: Seq[String] = Seq.empty)
 
   case class FreezeResult(
       completed: Seq[String], skipped: Seq[String], errored: Seq[String],
@@ -271,9 +279,46 @@ object Freeze {
   }
 
   private sealed trait TaskOutcome
-  private case class Completed(path: String, rows: Long) extends TaskOutcome
+  private case class Completed(path: String) extends TaskOutcome
   private case class Skipped(path: String) extends TaskOutcome
   private case class Errored(path: String) extends TaskOutcome
+
+  /** one output file of a run: its chunk, the lookup key of its
+    * partition value (None without `partitionBy`, or for a null value)
+    * and its path */
+  private case class Target(chunk: BlockSyntax.Range, key: Option[String], path: String)
+
+  /** the column a write tags each row with: the index of the file the
+    * row belongs to, which is also the `partitionBy` dir it lands in */
+  private val FileIndex = "file_index"
+
+  /** The index in `run` (chunks in block order) of the chunk holding a
+    * block, or -1 for a block outside them or, under a block list, not
+    * listed. The bounds are data the function closes over, so a plan
+    * that calls it holds no literal of the run. */
+  private def chunkIndex(run: Seq[BlockSyntax.Range], blocks: BlockSyntax.Blocks): Long => Int = {
+    val starts = run.map(_.start).toArray
+    val ends = run.map(_.endExclusive).toArray
+    val listed: Long => Boolean = blocks match {
+      case BlockSyntax.Numbers(ns) => ns.filter(n => n >= starts.head && n < ends.last).toSet
+      case _ => _ => true
+    }
+    bn => {
+      val i = java.util.Arrays.binarySearch(starts, bn)
+      val k = if (i >= 0) i else -i - 2
+      if (k >= 0 && bn < ends(k) && listed(bn)) k else -1
+    }
+  }
+
+  /** a partition value's lookup key: upper-case hex of a binary value,
+    * else its string form, on the driver (`keyOf`) and per row (`keyColumn`) */
+  private def keyOf(v: Any): String = v match {
+    case b: Array[Byte] => b.map("%02X".format(_)).mkString
+    case other => other.toString
+  }
+
+  private def keyColumn(df: DataFrame, dim: String): Column =
+    if (df.schema(dim).dataType == BinaryType) hex(col(dim)) else col(dim).cast("string")
 
   /** Chunked file extraction with skip-existing. Returns the run report
     * (freeze.rs:149-168 summary semantics).
@@ -287,12 +332,19 @@ object Freeze {
     * `partitionValues`) name files from the data, so those chunks are
     * always opened and each file is skipped once it is named.
     *
-    * Scale shape (fixes from r1's plan audit): one Spark job per output
-    * file with NO pre-count (row counts come from an `observe` metric on
-    * the write itself), up to `maxConcurrentChunks` chunk jobs in flight
-    * (cryo's semaphore, freeze.rs:85-87), and partition-by dim values
-    * discovered in ONE job per dataset and run (a broadcast range-join
-    * against the chunk table) instead of a driver collect per chunk.
+    * Scale shape: ONE Spark write job per dataset and run, whatever its
+    * number of chunk files (cryo writes one file per chunk and datatype,
+    * freeze.rs:85-110). The job tags every row with the index of its file
+    * through a lookup that holds the run's chunk bounds and partition
+    * values as data, shuffles on that index, sorts each file by `sort`
+    * (else the dataset's default sort) and writes with `partitionBy`; each
+    * part file is then promoted to its cryo name. The plan holds no chunk
+    * bound, so it compiles once per dataset and every later run and
+    * follow poll reuses it. A builder that shuffles builds the run once.
+    * Row counts come from an `observe` metric on the write itself (no
+    * pre-count), up to `maxConcurrentChunks` dataset jobs are in flight
+    * (cryo's semaphore, freeze.rs:85-87), and discovered partition values
+    * come from ONE job per dataset and run.
     */
   def freeze(open: BlockSyntax.Blocks => Bronze, spec: FreezeSpec,
       overrides: Map[String, DatasetBuilder] = Map.empty): FreezeResult = {
@@ -360,43 +412,31 @@ object Freeze {
     // multi-dim partitioning (types/partitions.rs:290-337): one file per
     // (chunk × dim value present in that chunk); binary dims use the
     // 8-hex-char prefix stub (binary_chunk.rs:16-24). All (chunk, value)
-    // combos of a run come from one aggregation job per dataset: the tiny
-    // chunk-boundary table broadcast-range-joins the scan, not one driver
-    // collect per chunk.
+    // combos of a run come from one aggregation job per dataset, tagged
+    // by the same chunk lookup as the write; each value comes with its
+    // lookup key.
     def dimValuesByChunk(canonical: String, bronze: Bronze,
-        run: Seq[BlockSyntax.Range]): Map[BlockSyntax.Range, Seq[Option[Any]]] =
-      givenDims.map(dims => run.map(_ -> dims).toMap).getOrElse {
+        run: Seq[BlockSyntax.Range]): Map[BlockSyntax.Range, Seq[(Option[Any], Option[String])]] =
+      givenDims.map(dims => run.map(_ -> dims.map(v => v -> v.map(keyOf))).toMap).getOrElse {
         val dim = spec.partitionBy.get
-        // spec.blocks, NOT the densified range: a Numbers list must
-        // not discover dim values that exist only at unlisted blocks
-        // (runTask's membership filter would then write empty
-        // partition files for them)
-        val scan = filterBlocks(builderOf(canonical)(bronze), spec.blocks)
-        val spark = scan.sparkSession
-        import spark.implicits._
-        val bounds = run.zipWithIndex
-          .map { case (c, i) => (i, c.start, c.endExclusive) }
-          .toDF("chunk_idx", "c_start", "c_end")
+        val scan = builderOf(canonical)(bronze)
+        val chunkOf = udf(chunkIndex(run, spec.blocks))
         // limit BEFORE collect: bounds the driver-side list, so a
         // high-cardinality dim fails fast instead of OOMing the driver.
-        val collected = scan.join(broadcast(bounds),
-            col("block_number") >= col("c_start") &&
-              col("block_number") < col("c_end"))
-          .select(col("chunk_idx"), col(dim).as("dim_value"))
+        val collected = scan
+          .select(chunkOf(col("block_number")).as("chunk_idx"),
+            col(dim).as("dim_value"), keyColumn(scan, dim).as("dim_key"))
+          .filter(col("chunk_idx") >= 0)
           .distinct().limit(spec.maxDiscoveredPartitions + 1).collect()
         require(collected.length <= spec.maxDiscoveredPartitions,
           s"--partition-by $dim: more than ${spec.maxDiscoveredPartitions} " +
             "(chunk, value) partitions discovered; pass explicit values " +
             "via the matching entity flag (--address/--contract/--topic0) " +
             "or raise maxDiscoveredPartitions")
-        collected
-          .groupBy(_.getInt(0))
-          .map { case (idx, rs) =>
-            run(idx) -> rs.map(r => Option(r.get(1))).toSeq.sortBy(_.map {
-              case b: Array[Byte] => b.map("%02x".format(_)).mkString
-              case v => v.toString
-            }.getOrElse(""))
-          }
+        collected.toSeq.groupBy(_.getInt(0)).map { case (idx, rs) =>
+          run(idx) -> rs.map(r => Option(r.get(1)) -> Option(r.getString(2)))
+            .sortBy(_._2.getOrElse(""))
+        }
       }
     // the chunks whose files all exist: skipped before anything is opened
     val finished: Set[BlockSyntax.Range] = givenDims.filterNot(_ => spec.overwrite)
@@ -415,76 +455,82 @@ object Freeze {
         case _ => span
       }
     }
-    def runTask(bronze: Bronze, canonical: String, chunk: BlockSyntax.Range,
-        dimValue: Option[Any], target: String): TaskOutcome =
-      if (LakeFs.exists(target) && !spec.overwrite) {
-        Skipped(target) // freeze.rs:92-110 idempotent skip
-      } else try {
-        val ranged = filterBlocks(builderOf(canonical)(bronze), chunk)
-        // explicit block LISTS (a:b/n sampling, a:b:k strides, parquet
-        // refs) keep their membership filter inside each chunk — the
-        // chunk range alone would admit unlisted blocks
-        val base = spec.blocks match {
-          case n: BlockSyntax.Numbers => filterBlocks(ranged, n)
-          case _ => ranged
+    // one dataset's files of a run: skip the existing (freeze.rs:92-110),
+    // write the rest with one job; returns each file's outcome and the
+    // rows written
+    def writeRun(bronze: Bronze, canonical: String, run: Seq[BlockSyntax.Range],
+        targets: Seq[Target]): (Seq[(Target, TaskOutcome)], Long) = {
+      val todo = targets.filter(t => spec.overwrite || !LakeFs.exists(t.path))
+      val span = BlockSyntax.Range(run.head.start, run.last.endExclusive)
+      val (written, rows) = if (todo.isEmpty) (true, 0L) else try {
+        val df = builderOf(canonical)(bronze)
+        val chunkOf = chunkIndex(run, spec.blocks)
+        val files = todo.zipWithIndex.map { case (t, i) => (run.indexOf(t.chunk), t.key) -> i }.toMap
+        val fileOf = spec.partitionBy match {
+          case None =>
+            udf((bn: Long) => files.getOrElse((chunkOf(bn), None), -1)).apply(col("block_number"))
+          case Some(dim) =>
+            udf((bn: Long, key: String) => files.getOrElse((chunkOf(bn), Option(key)), -1))
+              .apply(col("block_number"), keyColumn(df, dim))
         }
-        val df0 = (spec.partitionBy, dimValue) match {
-          case (Some(dim), Some(v)) => base.filter(col(dim) === lit(v))
-          case (Some(dim), None) => base.filter(col(dim).isNull)
-          case _ => base
-        }
-        // CSV/JSON force hex encoding of binary columns; parquet only
-        // under --hex (cryo cli/parse/schemas.rs:37-40 coupling)
-        val df = if (spec.format != "parquet" || spec.hex) hexifyBinary(df0) else df0
-        Completed(target,
-          writeSingleFile(df, target, spec.format, spec.compression,
-            spec.rowGroupSize, spec.noStats))
+        val keys =
+          if (spec.sort.nonEmpty) spec.sort
+          else TableSchema.sortKeys(Datatypes(canonical), df.columns.toSeq)
+        val tmp = new HPath(dirOf(canonical), fileName(spec, canonical, span) + "._tmp")
+        (true, writeFiles(df.withColumn(FileIndex, fileOf).filter(col(FileIndex) >= 0),
+          keys, todo.map(_.path), tmp, spec))
       } catch {
         case e: Exception =>
-          System.err.println(s"[freeze] $target failed: ${e.getMessage}")
-          Errored(target.toString)
+          System.err.println(s"[freeze] $canonical ${chunkStub(span)} failed: ${e.getMessage}")
+          (false, 0L)
       }
-    // cryo keeps a bounded number of chunks in flight; Spark schedules the
+      val writing = todo.toSet
+      (targets.map(t => t -> (if (!writing(t)) Skipped(t.path)
+        else if (written) Completed(t.path) else Errored(t.path))), rows)
+    }
+    // cryo keeps a bounded number of writes in flight; Spark schedules the
     // concurrent jobs' stages across the same executor pool
     val pool = java.util.concurrent.Executors.newFixedThreadPool(spec.maxConcurrentChunks)
-    val ran: Map[(String, BlockSyntax.Range), Seq[TaskOutcome]] = try runs.flatMap { run =>
+    val ran = try runs.flatMap { run =>
       val bronze = open(blocksIn(run))
       try {
         val runChunks = chunks.filter(run.toSet)
-        // the run's task list is built before any task starts
-        val tasks = for {
-          canonical <- datasets
-          dims = dimValuesByChunk(canonical, bronze, runChunks)
-          chunk <- runChunks
-          dimValue <- dims.getOrElse(chunk, Seq.empty)
-        } yield (canonical, chunk, dimValue, target(canonical, chunk, dimValue))
-        tasks.map { case (c, ch, dv, t) => (c, ch) -> pool.submit(() => runTask(bronze, c, ch, dv, t)) }
-          .map { case (k, f) => k -> f.get() }
+        // every file of the run is named before any job starts
+        val jobs = for (canonical <- datasets) yield {
+          val dims = dimValuesByChunk(canonical, bronze, run)
+          canonical -> (for {
+            chunk <- runChunks
+            (value, key) <- dims.getOrElse(chunk, Seq.empty)
+          } yield Target(chunk, key, target(canonical, chunk, value)))
+        }
+        jobs.map { case (c, ts) => c -> pool.submit(() => writeRun(bronze, c, run, ts)) }
+          .map { case (c, f) => val (os, rows) = f.get(); (c, os, rows) }
       } finally bronze.release()
-    }.groupMap(_._1)(_._2) finally pool.shutdown()
+    } finally pool.shutdown()
+    val byChunk = ran.flatMap { case (c, os, _) => os.map { case (t, o) => (c, t.chunk) -> o } }
+      .groupMap(_._1)(_._2)
     // task order: dataset, then chunk in collection order
     val outcomes = for {
       canonical <- datasets
       chunk <- chunks
       o <- if (finished(chunk)) givenDims.get.map(v => Skipped(target(canonical, chunk, v)))
-        else ran.getOrElse((canonical, chunk), Nil)
+        else byChunk.getOrElse((canonical, chunk), Nil)
     } yield o
     val result = FreezeResult(
-      outcomes.collect { case Completed(p, _) => p },
+      outcomes.collect { case Completed(p) => p },
       outcomes.collect { case Skipped(p) => p },
       outcomes.collect { case Errored(p) => p },
-      outcomes.collect { case Completed(_, n) => n }.sum)
+      ran.map(_._3).sum)
     writeReport(spec, tStart, Some(result))
     result
   }
 
   /** `freeze` over the bronze tables of a directory */
   def freeze(spark: SparkSession, sourceDir: String, spec: FreezeSpec): FreezeResult =
-    freeze(_ => Bronze.dir(spark, sourceDir), spec)
+    freeze(Bronze.dir(spark, sourceDir, _), spec)
 
   /** re-encode all binary columns as 0x-hex strings */
   private[graft] def hexifyBinary(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.BinaryType
     df.select(df.schema.fields.map { fld =>
       if (fld.dataType == BinaryType)
         graft.functions.HexCodec.toHex(col(fld.name)).as(fld.name)
@@ -492,30 +538,56 @@ object Freeze {
     }.toSeq: _*)
   }
 
-  /** one file per chunk via tmp dir + single-file promotion
-    * (export.rs:13-23), over the Hadoop FileSystem of the target path —
-    * local, hdfs:// and s3a:// lakes all take the same path. The
-    * promotion is an atomic rename on HDFS/local; on object stores the
-    * part file lands as one object copy whose source sits in the `._tmp`
-    * dir lake listings skip (LakeFs scaladoc has the full semantics).
-    * The row count rides the write job as an `observe` metric — the chunk
-    * is computed exactly once (r1 pre-counted with df.count(), doubling
-    * every chunk's work). Non-chunked writes (--txs, compaction) use it too. */
-  private[graft] def writeSingleFile(df: DataFrame, target: String, format: String,
-      compression: Option[String] = None, rowGroupSize: Option[Int] = None,
-      noStats: Boolean = false): Long = {
-    val targetPath = new HPath(target)
-    val tmp = new HPath(targetPath.getParent, targetPath.getName + "._tmp")
-    val obs = org.apache.spark.sql.Observation(
-      s"freeze_${targetPath.getName}_${System.nanoTime()}")
-    val writer0 = df.observe(obs, count(lit(1)).as("rows"))
-      .coalesce(1).write.mode("overwrite")
+  /** The files of one write job: the rows of `df` whose `FileIndex` is i
+    * become the one file `targets(i)`, sorted by `keys`. The job shuffles
+    * on the index, sorts within partitions by (index, keys) and writes
+    * with `partitionBy(FileIndex)` into `tmp`; each `FileIndex=i` part
+    * file is then promoted (see writeSingleFile) and `tmp` deleted. A
+    * target with no rows gets a schema-only file. Returns the rows
+    * written, from an `observe` metric on the job. */
+  private def writeFiles(df: DataFrame, keys: Seq[String], targets: Seq[String],
+      tmp: HPath, spec: FreezeSpec): Long = {
+    val obs = org.apache.spark.sql.Observation(s"freeze_${tmp.getName}_${System.nanoTime()}")
+    // the observation sits above the sort: beneath it, it would keep the
+    // optimizer from dropping the builder's own sort below the exchange
+    val sorted = df.repartition(col(FileIndex))
+      .sortWithinPartitions((FileIndex +: keys).map(col): _*)
+      .observe(obs, count(lit(1)).as("rows"))
+    // CSV/JSON force hex encoding of binary columns; parquet only
+    // under --hex (cryo cli/parse/schemas.rs:37-40 coupling)
+    val out = if (spec.format != "parquet" || spec.hex) hexifyBinary(sorted) else sorted
+    save(out.write.partitionBy(FileIndex), tmp, spec.format, spec.compression,
+      spec.rowGroupSize, spec.noStats)
+    val tfs = LakeFs.fs(tmp)
+    targets.zipWithIndex.foreach { case (target, i) =>
+      val dir = new HPath(tmp, s"$FileIndex=$i")
+      if (tfs.exists(dir)) LakeFs.promote(partFile(dir, target), new HPath(target))
+      else writeSingleFile(out.drop(FileIndex).limit(0), target, spec.format,
+        spec.compression, spec.rowGroupSize, spec.noStats)
+    }
+    tfs.delete(tmp, true)
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** the one part- file a write left in `dir`, failing with the real
+    * cause instead of a bare NoSuchElementException */
+  private def partFile(dir: HPath, target: String): HPath = {
+    val parts = LakeFs.fs(dir).listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-"))
+    require(parts.length == 1,
+      s"freeze wrote ${parts.length} part- files under $dir for $target, not 1")
+    parts.head
+  }
+
+  /** `writer` with the format options (codec, row groups, statistics)
+    * applied, run into `path` */
+  private def save(writer0: DataFrameWriter[Row], path: HPath, format: String,
+      compression: Option[String], rowGroupSize: Option[Int], noStats: Boolean): Unit = {
     // parquet default codec is lz4 raw like the reference
     // (args.rs:191, file_output.rs:107); csv/json keep Spark's default
     val codec = compression.orElse(
       if (format == "parquet") Some("lz4_raw") else None)
     var writer = codec.map(c => writer0.option("compression", c))
-      .getOrElse(writer0)
+      .getOrElse(writer0).mode("overwrite")
     // Spark forwards unrecognized write options into the per-job hadoop
     // conf, where parquet-mr reads them (prepareWrite →
     // newHadoopConfWithOptions).
@@ -524,20 +596,32 @@ object Freeze {
     if (noStats)
       writer = writer.option("parquet.column.statistics.enabled", "false")
     format match {
-      case "parquet" => writer.parquet(tmp.toString)
-      case "csv" => writer.option("header", "true").csv(tmp.toString)
-      case "json" => writer.json(tmp.toString)
+      case "parquet" => writer.parquet(path.toString)
+      case "csv" => writer.option("header", "true").csv(path.toString)
+      case "json" => writer.json(path.toString)
     }
-    // fail with the real cause if no part- file materialized instead of
-    // a bare NoSuchElementException
-    val tfs = LakeFs.fs(tmp)
-    val part = tfs.listStatus(tmp)
-      .find(_.getPath.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(
-        s"freeze wrote no part- file under $tmp for $target"))
-      .getPath
-    LakeFs.promote(part, targetPath)
-    tfs.delete(tmp, true)
+  }
+
+  /** one file via tmp dir + single-file promotion (export.rs:13-23), over
+    * the Hadoop FileSystem of the target path — local, hdfs:// and s3a://
+    * lakes all take the same path. The promotion is an atomic rename on
+    * HDFS/local; on object stores the part file lands as one object copy
+    * whose source sits in the `._tmp` dir lake listings skip (LakeFs
+    * scaladoc has the full semantics). The row count rides the write job
+    * as an `observe` metric, so the frame is computed exactly once. The
+    * writes outside a chunked freeze (--txs, compaction) and a freeze's
+    * schema-only files use it. */
+  private[graft] def writeSingleFile(df: DataFrame, target: String, format: String,
+      compression: Option[String] = None, rowGroupSize: Option[Int] = None,
+      noStats: Boolean = false): Long = {
+    val targetPath = new HPath(target)
+    val tmp = new HPath(targetPath.getParent, targetPath.getName + "._tmp")
+    val obs = org.apache.spark.sql.Observation(
+      s"freeze_${targetPath.getName}_${System.nanoTime()}")
+    save(df.observe(obs, count(lit(1)).as("rows")).coalesce(1).write, tmp,
+      format, compression, rowGroupSize, noStats)
+    LakeFs.promote(partFile(tmp, target), targetPath)
+    LakeFs.fs(tmp).delete(tmp, true)
     obs.get("rows").asInstanceOf[Long]
   }
 

@@ -125,8 +125,7 @@ object LakeCompact {
                 new org.apache.hadoop.fs.Path(f.path), hconf))
             try reader.getRecordCount finally reader.close()
           }.sum
-          val sortKeys = TableSchema.defaultSort(Datatypes(dataset))
-            .filter(src.columns.contains)
+          val sortKeys = TableSchema.sortKeys(Datatypes(dataset), src.columns.toSeq)
           val ordered =
             if (sortKeys.isEmpty) src else src.orderBy(sortKeys.map(col): _*)
           val n = Freeze.writeSingleFile(ordered, target, "parquet")

@@ -74,9 +74,7 @@ object TableSchema {
       ds.sortColumns.filterNot(_ == "transaction_index")
     else ds.sortColumns
 
-  def sorted(df: DataFrame, ds: DatasetDef, used: Seq[String]): DataFrame = {
-    val keys = defaultSort(ds).filter(used.contains)
-    if (keys.isEmpty) df
-    else df.sortWithinPartitions(keys.map(col): _*)
-  }
+  /** the default sort keys among the columns a frame holds */
+  def sortKeys(ds: DatasetDef, used: Seq[String]): Seq[String] =
+    defaultSort(ds).filter(used.contains)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.chain.{Bronze, Datatypes, Freeze}
+import graft.chain.{Bronze, Datatypes, Freeze, TableSchema}
 import graft.queries.ChainQueries
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,5 +35,21 @@ class BronzeDepsSpec extends AnyFunSuite {
       val e = intercept[NoSuchElementException](blocksOnly("rpc_logs"))
       assert(e.getMessage.contains("rpc_logs"), e.getMessage)
     } finally blocksOnly.release()
+  }
+
+  test("every builder sorts by its dataset's default sort") {
+    // a freeze sorts each file by TableSchema.defaultSort, so a builder
+    // that ends on other keys would write rows in another order than its
+    // in-memory frame
+    val fixtures = Bronze.dir(spark, ChainQueries.FixDir)
+    for (dataset <- Freeze.catalog.keys.toSeq.sorted) {
+      val plan = Freeze.builder(dataset)(fixtures).queryExecution.analyzed
+      val keys = plan match {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
+          s.order.map(_.child.references.head.name)
+        case other => fail(s"$dataset ends on ${other.nodeName}, not a sort")
+      }
+      assert(keys == TableSchema.defaultSort(Datatypes(dataset)), dataset)
+    }
   }
 }

@@ -149,6 +149,38 @@ class FreezeSpec extends AnyFunSuite {
     assert(body.contains("errored_paths") && body.contains("__logs__"))
   }
 
+  test("every chunk file is sorted by its dataset's keys, however bronze is partitioned") {
+    val out = Files.createTempDirectory("graft_sorted").toString
+    // each bronze table round-robin over 4 partitions: no partition
+    // holds a contiguous block range, so a file is sorted only if the
+    // write sorts it whole
+    val fixtures = Bronze.dir(spark, fixDir)
+    val r = Freeze.freeze(_ => Bronze.persisted(Seq("rpc_traces", "rpc_logs")
+        .map(t => t -> fixtures(t).repartition(4)).toMap),
+      Freeze.FreezeSpec(datasets = Seq("traces", "logs"), blocks = Range(1000, 1060),
+        chunkSize = 20, outputDir = out))
+    assert(r.errored.isEmpty && r.completed.size == 6)
+    for (path <- r.completed) {
+      val ds = graft.chain.Datatypes(if (path.contains("__traces__")) "traces" else "logs")
+      val keys = graft.chain.TableSchema.defaultSort(ds).map(col)
+      val file = spark.read.parquet(path).select(keys: _*)
+      val rows = file.collect().toSeq
+      assert(rows.size > 1, path)
+      assert(rows == file.orderBy(keys: _*).collect().toSeq, s"$path is not sorted by $keys")
+    }
+  }
+
+  test("a chunk with no rows still gets a schema-only file") {
+    val out = Files.createTempDirectory("graft_empty").toString
+    // a block list whose middle chunks hold no listed block
+    val r = Freeze.freeze(spark, fixDir, Freeze.FreezeSpec(datasets = Seq("blocks"),
+      blocks = Numbers(Seq(1000L, 1045L)), chunkSize = 10, outputDir = out))
+    assert(r.errored.isEmpty && r.completed.size == 5 && r.rows == 2)
+    val columns = spark.read.parquet(r.completed.head).columns.toSeq
+    assert(r.completed.map(p => spark.read.parquet(p).count()) == Seq(1, 0, 0, 0, 1))
+    assert(r.completed.forall(p => spark.read.parquet(p).columns.toSeq == columns))
+  }
+
   test("chunk collection order: normal, reverse, random (seeded)") {
     def stubs(order: String, seed: Long = 0): Seq[String] = {
       val out = Files.createTempDirectory(s"graft_ord_$order").toString
@@ -387,6 +419,14 @@ class CliSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       runCli("blocks", "--columns", "no_such_column")
     }
+  }
+
+  test("--columns without block_number: refused for chunk files, kept for collect") {
+    val e = intercept[IllegalArgumentException](runCli("blocks", "--columns", "gas_used"))
+    assert(e.getMessage.contains("needs block_number"), e.getMessage)
+    val df = Cli.collectDf(Array("blocks", "--source-dir", fixDir,
+      "--blocks", "1000:1010", "--columns", "gas_used"), spark)
+    assert(df.columns.toSeq == Seq("gas_used") && df.count() == 10)
   }
 
   test("--include-columns / --exclude-columns adjust the default set") {

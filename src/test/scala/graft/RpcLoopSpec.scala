@@ -581,6 +581,49 @@ class RpcLoopSpec extends AnyFunSuite {
     }
   }
 
+  test("--rpc live mode: one write job per dataset, and a second range compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every query the session runs, by its plan's root node; listener
+    // events arrive in order, so a marker query's arrival means all
+    // earlier ones have arrived
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(qe.analyzed.nodeName + "(" + qe.analyzed.output.map(_.name).mkString(",") + ")")
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def drain(): Seq[String] = {
+      spark.range(1).toDF("rpc_loop_marker").collect()
+      val out = Seq.newBuilder[String]
+      var q = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (q != null && !q.contains("rpc_loop_marker")) { out += q; q = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS) }
+      assert(q != null, "the marker query never reached the listener")
+      out.result()
+    }
+    val datasets = Seq("blocks", "transactions", "logs")
+    spark.listenerManager.register(listener)
+    try withStub { (url, _) =>
+      def freeze(blocks: String) = Cli.run((datasets ++ Seq("--rpc", url,
+        "--blocks", blocks, "--chunk-size", "2", "--inner-request-size", "2",
+        "--output-dir", java.nio.file.Files.createTempDirectory("graft_reuse").toString,
+        "--no-verbose")).toArray, spark).get
+      val r1 = freeze("8:12")
+      assert(r1.errored.isEmpty && r1.completed.size == 6)
+      drain()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      // a disjoint range of the same datasets and chunk size: every
+      // generated class is reused, none compiled
+      val r2 = freeze("12:16")
+      assert(r2.errored.isEmpty && r2.completed.size == 6)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled} classes compiled")
+      val writes = drain().filter(_.startsWith("InsertIntoHadoopFsRelationCommand"))
+      assert(writes.size == datasets.size, writes.mkString("\n"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("--rpc live mode: a listed --blocks fetches entity tables at the listed blocks only") {
     withCountingStub { (url, _, calls) =>
       val out = java.nio.file.Files.createTempDirectory("graft_live_listed").toString
