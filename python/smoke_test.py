@@ -48,7 +48,10 @@ assert fees.count() > 0
 # index lifecycle: build once, search the persisted artifacts
 idx = tempfile.mkdtemp(prefix="graft_pyidx")
 graft.index_build("/root/testdata/sf0.001", idx, spark=spark)
-assert glob.glob(idx + "/codes.parquet/*"), "codes not written"
+# artifacts publish through the pointer layout: <name>.ptr.vN names the
+# version dir <name>.vN-<uid> that holds the parquet parts
+assert glob.glob(idx + "/codes.parquet.ptr.v*"), "codes pointer not written"
+assert glob.glob(idx + "/codes.parquet.v*/part-*"), "codes not written"
 res_dir = tempfile.mkdtemp(prefix="graft_pyres") + "/res"
 graft.index_search("/root/testdata/sf0.001", idx, spark=spark, out=res_dir)
 found = spark.read.parquet(res_dir)

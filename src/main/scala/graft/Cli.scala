@@ -54,8 +54,10 @@ object Cli {
     "contracts" -> "contract_address",
     "eth_calls" -> "contract_address", "trace_calls" -> "contract_address")
 
-  private val u256Suffixes =
-    Seq("binary", "string", "f32", "f64", "u32", "u64", "d128").map("_" + _)
+  /** --call-data / --function column: trace_calls keeps the simulated
+    * call's data as tx_call_data (datasets/trace_calls.rs) */
+  private def callDataCol(dataset: String): String =
+    if (dataset == "trace_calls") "tx_call_data" else "call_data"
 
   /** single source of truth for the version is the freeze/report layer */
   val Version: String = Freeze.Version
@@ -752,8 +754,8 @@ object Cli {
   /** In-memory collect with the full CLI flag vocabulary — the library /
     * python surface (cryo collect.rs:5-30, crates/python
     * collect_adapter.rs): exactly one datatype, no files, returns the
-    * decorated DataFrame. Callable from PySpark via the py4j gateway
-    * (python/graft.py). */
+    * filtered, column-selected and sorted DataFrame. Callable from
+    * PySpark via the py4j gateway (python/graft.py). */
   def collectDf(args: Array[String],
       spark: SparkSession): org.apache.spark.sql.DataFrame =
     runImpl(args, spark, collectMode = true) match {
@@ -1023,62 +1025,38 @@ object Cli {
           "cannot specify both call_data and function/inputs")
       }
 
-    /** wrap a dataset builder with the entity and column flags */
-    def decorate(name: String)(df0: DataFrame): DataFrame = {
-      var df = df0
-      def filt(c: String, hexVals: Seq[String]): Unit =
-        if (hexVals.nonEmpty && df.columns.contains(c)) {
-          val vals = hexVals.map(RpcCodec.parseHexBytes)
-          df = if (vals.size == 1) df.filter(col(c) === lit(vals.head))
-          else df.filter(col(c).isin(vals: _*))
-        }
-      filt(contractCol.getOrElse(name, "contract_address"), contract)
-      filt("address", addressF)
-      filt("to_address", toAddress)
-      filt("from_address", fromAddress)
-      filt("slot", slotsF)
-      (0 until 4).foreach(k => filt(s"topic$k", topics(k)))
-      filt("call_data", composedCallData)
-      if (explicitCols.isDefined || includeCols.nonEmpty || excludeCols.nonEmpty) {
-        val used = TableSchema.resolve(Datatypes(name),
-          includeCols, excludeCols, explicitCols)
-        // canonical names → physical columns (u256 columns are expanded
-        // with _binary/_string/… suffixes by the builders)
-        val keep = df.columns.filter { pc =>
-          used.contains(pc) || u256Suffixes.exists(sfx =>
-            pc.endsWith(sfx) && used.contains(pc.dropRight(sfx.length)))
-        }
-        df = df.select(keep.map(col).toSeq: _*)
+    // each entity flag: its name, the column it filters in a dataset
+    // (parse/query.rs:31-108 remapping) and its values
+    val entityFlags: Seq[(String, String => String, Seq[String])] = Seq(
+      ("--contract", (n: String) => contractCol.getOrElse(n, "contract_address"), contract),
+      ("--address", (_: String) => "address", addressF),
+      ("--to-address", (_: String) => "to_address", toAddress),
+      ("--from-address", (_: String) => "from_address", fromAddress),
+      ("--slot", (_: String) => "slot", slotsF)) ++
+      (0 until 4).map(k => (s"--topic$k", (_: String) => s"topic$k", topics(k))) :+
+      (("--call-data / --function", callDataCol _, composedCallData))
+
+    /** the entity flags as a row filter of a dataset's built table */
+    def entities(name: String)(df: DataFrame): DataFrame =
+      entityFlags.foldLeft(df) { case (d, (_, colFor, hexVals)) =>
+        val c = colFor(name)
+        val vals = hexVals.map(RpcCodec.parseHexBytes)
+        if (vals.isEmpty || !d.columns.contains(c)) d
+        else if (vals.size == 1) d.filter(col(c) === lit(vals.head))
+        else d.filter(col(c).isin(vals: _*))
       }
-      df
-    }
-    // --sort on the writes outside a chunked freeze, which sorts each
-    // file itself (FreezeSpec.sort)
-    def sorted(df: DataFrame): DataFrame =
-      if (sortCols.isEmpty) df else df.sortWithinPartitions(sortCols.map(col): _*)
 
     // an entity flag whose mapped column exists on NO requested dataset
     // is a typo or a wrong dataset choice — silently skipping the filter
     // returned the FULL table while looking like a successful filter.
     // (In a multi-dataset run the flag legitimately applies to a subset,
     // so the requirement is ≥1 matching dataset, mirrored per dataset by
-    // decorate's column check.)
-    locally {
-      val checks: Seq[(String, String => String, Seq[String])] = Seq(
-        ("--contract", (n: String) => contractCol.getOrElse(n, "contract_address"), contract),
-        ("--address", (_: String) => "address", addressF),
-        ("--to-address", (_: String) => "to_address", toAddress),
-        ("--from-address", (_: String) => "from_address", fromAddress),
-        ("--slot", (_: String) => "slot", slotsF),
-        ("--call-data / --function", (_: String) => "call_data", composedCallData)) ++
-        (0 until 4).map(k => (s"--topic$k", (_: String) => s"topic$k", topics(k)))
-      checks.foreach { case (flag, colFor, vals) =>
-        if (vals.nonEmpty)
-          require(expanded.exists(n =>
-              Datatypes(n).columnNames.contains(colFor(n))),
-            s"$flag does not apply to ${expanded.mkString("/")}: no such " +
-              "filter column on any requested dataset")
-      }
+    // entities' column check.)
+    entityFlags.foreach { case (flag, colFor, vals) =>
+      if (vals.nonEmpty)
+        require(expanded.exists(n => Datatypes(n).columnNames.contains(colFor(n))),
+          s"$flag does not apply to ${expanded.mkString("/")}: no such " +
+            "filter column on any requested dataset")
     }
 
     // validate explicit column lists eagerly (schemas.rs: unknown names in
@@ -1099,11 +1077,8 @@ object Cli {
     // subtrees (args.rs)
     val buildOptions = Freeze.BuildOptions(reprs, includeCols, excludeCols,
       explicitCols, eventSignature, excludeFailed)
-    val decorated: Map[String, Freeze.DatasetBuilder] =
-      expanded.map { name =>
-        val build = Freeze.catalog(name).build(buildOptions)
-        name -> ((b: Bronze) => decorate(name)(build(b)))
-      }.toMap
+    val builders: Map[String, Freeze.DatasetBuilder] =
+      expanded.map(name => name -> Freeze.build(name, buildOptions, entities(name))).toMap
 
     // TimeDimension::Transactions: a tx-hash list replaces the block range
     // (types/queries.rs:75-80) — one file per dataset, hash-prefix stub
@@ -1115,20 +1090,20 @@ object Cli {
           "local bronze dir — freeze the blocks live first, then collect " +
           "--txs against that bronze with --source-dir")
       val hashes = txHashes.map(RpcCodec.parseHexBytes)
+      def byTx(name: String): DataFrame = Freeze.collectByTransaction(
+        Bronze.dir(spark, sourceDir), name, hashes.toSeq, buildOptions, entities(name))
       if (collectMode) {
         require(expanded.size == 1, "collect() takes exactly one datatype")
-        val df = sorted(decorate(expanded.head)(Freeze.collectByTransaction(
-          Bronze.dir(spark, sourceDir), expanded.head, hashes.toSeq)))
+        val df = Freeze.ordered(expanded.head, byTx(expanded.head), sortCols)
         return Left(if (hex) Freeze.hexifyBinary(df) else df)
       }
       graft.chain.LakeFs.mkdirs(outputDir)
       val written = expanded.map { name =>
-        val df = sorted(decorate(name)(
-          Freeze.collectByTransaction(Bronze.dir(spark, sourceDir), name, hashes.toSeq)))
+        val df = byTx(name)
         val stub = txHashes.head.stripPrefix("0x").take(8) + s"_${txHashes.size}txs"
         val target = graft.chain.LakeFs.display(new org.apache.hadoop.fs.Path(
           outputDir, s"${network}__${name}__txs_$stub.$format"))
-        target -> Freeze.writeSingleFile(df, target, format)
+        target -> Freeze.writeSingleFile(df, Freeze.sortKeys(name, df, sortCols), target, format)
       }
       return Right(Some(Freeze.FreezeResult(written.map(_._1), Nil, Nil,
         written.map(_._2).sum)))
@@ -1198,13 +1173,15 @@ object Cli {
       case _ => Bronze.dir(spark, sourceDir, blocks)
     }
 
-    // In-memory collect: one datatype, decorated + block-filtered, no
-    // files (cryo collect.rs:5-30 single-datatype guard). A fetched
-    // bronze stays held for as long as the returned frame is used.
+    // In-memory collect: one datatype, entity- and block-filtered,
+    // sorted, no files (cryo collect.rs:5-30 single-datatype guard). A
+    // fetched bronze stays held for as long as the returned frame is used.
     if (collectMode) {
       require(expanded.size == 1, "collect() takes exactly one datatype")
-      val df = sorted(Freeze.filterBlocks(
-        decorated(expanded.head)(openBronze(blocksSpec)), blocksSpec))
+      val name = expanded.head
+      val df = Freeze.ordered(name, Freeze.build(name, buildOptions,
+        t => Freeze.filterBlocks(entities(name)(t), blocksSpec))(openBronze(blocksSpec)),
+        sortCols)
       return Left(if (hex) Freeze.hexifyBinary(df) else df)
     }
 
@@ -1257,7 +1234,7 @@ object Cli {
 
     if (verbose) printIntro(spec, chunks.size, rpcUrl.getOrElse(sourceDir))
     val t0 = System.nanoTime()
-    val result = Freeze.freeze(openBronze(_), spec, decorated)
+    val result = Freeze.freeze(openBronze(_), spec, builders)
     if (verbose)
       printConclusion(result, chunks.size * expanded.size, (System.nanoTime() - t0) / 1e9)
     Right(Some(result))

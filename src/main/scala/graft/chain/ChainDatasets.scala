@@ -11,17 +11,19 @@ import org.apache.spark.sql.expressions.Window
   * DataFrame code — Catalyst prunes, pushes filters into the scan, and
   * broadcasts the dimension sides; nothing here shuffles except the few
   * window/groupBy operators, which shuffle on their natural keys.
+  *
+  * Each builder emits every column its `Datatypes` declaration lists,
+  * unsorted. The only columns a builder leaves out are those whose
+  * bronze its options leave unfetched (`transactions`' receipt columns,
+  * `geth_opcodes`' captures) or that a decode consumes (`logs`' topic1–3
+  * and data). Column selection (`TableSchema.select`, through
+  * `Freeze.build`) and row order (`Freeze.sortKeys`) happen once, at the
+  * output.
   */
 object ChainDatasets {
 
-  /** datasets/blocks.rs:11-125 — header projection; include/exclude/
-    * columns follow the effective-schema rules (types/schemas.rs). */
-  def blocks(bronze: Bronze,
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None): DataFrame =
-    bronze("rpc_blocks")
-      .select(TableSchema.resolve(Datatypes.blocks, include, exclude, columns).map(col): _*)
-      .sortWithinPartitions("block_number")
+  /** datasets/blocks.rs:11-125 — the block headers, as fetched */
+  def blocks(bronze: Bronze): DataFrame = bronze("rpc_blocks")
 
   /** datasets/transactions.rs:14-318 — tx ⋈ receipt, EIP-1559 effective
     * gas price, input-byte stats, success flag.
@@ -37,13 +39,14 @@ object ChainDatasets {
     * at chunk scale and shuffles it at history scale. (cryo computes the
     * effective gas price inline per chunk, transactions.rs:287-302; no
     * broadcast exists to mimic.)
+    *
+    * `receipts` off leaves out gas_used and success and never reads the
+    * receipts bronze (see transactionsNeedReceipts); excludeFailed
+    * reads it regardless.
     */
   def transactions(bronze: Bronze,
-      excludeFailed: Boolean = false,
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None): DataFrame = {
-    val used = TableSchema.resolve(Datatypes.transactions, include, exclude, columns)
-    val needReceipts = transactionsNeedReceipts(excludeFailed, include, exclude, columns)
+      excludeFailed: Boolean = false, receipts: Boolean = true): DataFrame = {
+    val needReceipts = receipts || excludeFailed
     val txs = bronze("rpc_transactions")
     val baseFees = bronze("rpc_blocks")
       .select(col("block_number").as("bf_bn"), col("base_fee_per_gas"))
@@ -75,9 +78,8 @@ object ChainDatasets {
         .withColumn("success", col("status") === 1)
       else out0
     val filtered = if (excludeFailed) out.filter(col("success")) else out
-    filtered
-      .select(used.map(col): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
+    filtered.select(Datatypes.transactions.columnNames
+      .filter(filtered.columns.contains).map(col): _*)
   }
 
   /** Whether `transactions` reads the receipts bronze. Receipts feed
@@ -110,22 +112,14 @@ object ChainDatasets {
   def logs(bronze: Bronze,
       address: Option[Array[Byte]] = None,
       eventSignature: Option[String] = None,
-      u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
-      include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
-      columns: Option[Seq[String]] = None): DataFrame =
+      u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
     eventSignature match {
       case None =>
         splitTopics(bronze("rpc_logs"), address)
-          .select(TableSchema.resolve(Datatypes.logs, include, exclude, columns)
-            .map(col): _*)
-          .sortWithinPartitions("block_number", "log_index")
+          .select(Datatypes.logs.columnNames.map(col): _*)
       case Some(sig) =>
         val event = Abi.parseEvent(sig)
-        // the user's column selection applies to the BASE columns in
-        // the decode branch too (the None arm honors it; silently
-        // dropping --columns/--include/--exclude here diverged) —
-        // decode-consumed topics/data stay excluded either way
-        val base = TableSchema.resolve(Datatypes.logs, include, exclude, columns)
+        val base = Datatypes.logs.columnNames
           .filterNot(Seq("topic1", "topic2", "topic3", "data").contains)
         val decoded = splitTopics(bronze("rpc_logs"), address)
           .withColumn("dec", Abi.decodeEvent(col("topics"), col("data"), sig))
@@ -139,7 +133,6 @@ object ChainDatasets {
           }
         }
         decoded.select(base.map(col) ++ eventCols: _*)
-          .sortWithinPartitions("block_number", "log_index")
     }
 
   // null-safe topic accessor (get() returns null out of bounds; ANSI
@@ -178,7 +171,6 @@ object ChainDatasets {
         expr("substring(topics[1], 13, 20)").as("from_address"),
         expr("substring(topics[2], 13, 20)").as("to_address")) ++
         U256.expand(col("data"), "value", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "log_index")
   }
 
   def erc20Transfers(bronze: Bronze,
@@ -207,7 +199,6 @@ object ChainDatasets {
         expr("substring(topics[1], 13, 20)").as("from_address"),
         expr("substring(topics[2], 13, 20)").as("to_address")) ++
         U256.expand(get(col("topics"), lit(3)), "token_id", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "log_index")
 
   /** datasets/traces.rs:13-289. `excludeFailed` prunes failed subtrees:
     * a trace is dropped when any trace of the same tx with a prefix
@@ -223,7 +214,7 @@ object ChainDatasets {
   def traces(bronze: Bronze,
       excludeFailed: Boolean = false): DataFrame = {
     val t = bronze("rpc_traces")
-    val out = if (!excludeFailed) t else {
+    if (!excludeFailed) t else {
       val failed = t.filter(col("error").isNotNull)
         .select(col("transaction_hash").as("f_tx"), col("trace_address").as("f_path"))
       t.join(failed,
@@ -233,8 +224,6 @@ object ChainDatasets {
              col("f_path") === ""),
           "left_anti")
     }
-    out.select(TableSchema.resolve(Datatypes.traces).map(col): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
   }
 
   /** datasets/native_transfers.rs:11-107 — every value movement: calls &
@@ -268,7 +257,6 @@ object ChainDatasets {
         col("to_unified").as("to_address")) ++
         U256.expand(BinaryStats.u256FromString(col("action_value")), "value", u256Reprs) :+
         col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "transfer_index")
   }
 
   /** datasets/contracts.rs:12-108 — one row per creation; deployer is the
@@ -296,7 +284,6 @@ object ChainDatasets {
         length(col("result_code")).as("n_code_bytes"),
         Keccak256.keccak256(col("result_code")).as("code_hash"),
         col("chain_id"))
-      .sortWithinPartitions("block_number", "create_index")
   }
 
   /** datasets/four_byte_counts.rs — per-tx selector histogram, derived
@@ -317,7 +304,6 @@ object ChainDatasets {
       .agg(count(lit(1)).as("count"))
       .select("block_number", "transaction_index", "transaction_hash",
         "signature", "size", "count", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/address_appearances.rs:15-344 — union of address mentions
     * across blocks/txs/logs/traces with relationship labels (an unpivot).
@@ -370,7 +356,6 @@ object ChainDatasets {
         col("action_from") -> "trace_from",
         col("action_to") -> "trace_to",
         col("result_address") -> "trace_created")))
-      .sortWithinPartitions("block_number", "transaction_index", "address", "relationship")
   }
 
   /** point-lookup family (balances/codes/nonces/slots, datasets/balances.rs
@@ -380,24 +365,20 @@ object ChainDatasets {
     bronze("rpc_accounts")
       .select(Seq(col("block_number"), col("address")) ++
         U256.expand(col("balance"), "balance", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "address")
 
   def nonces(bronze: Bronze): DataFrame =
     bronze("rpc_accounts")
       .select("block_number", "address", "nonce", "chain_id")
-      .sortWithinPartitions("block_number", "address")
 
   def codes(bronze: Bronze): DataFrame =
     bronze("rpc_accounts")
       .select("block_number", "address", "code", "chain_id")
-      .sortWithinPartitions("block_number", "address")
 
   def slots(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
     bronze("rpc_storage")
       .select(Seq(col("block_number"), col("address"), col("slot")) ++
         U256.expand(col("value"), "value", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "address", "slot")
 
   /** state-diff family (multi_datasets/state_diffs.rs:8-75) — one shared
     * scan would feed all four at once via persist(); as standalone
@@ -409,7 +390,6 @@ object ChainDatasets {
         col("transaction_hash"), col("address"), col("slot")) ++
         U256.expand(col("from_value"), "from_value", u256Reprs) ++
         U256.expand(col("to_value"), "to_value", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def balanceDiffs(bronze: Bronze,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs): DataFrame =
@@ -418,19 +398,16 @@ object ChainDatasets {
         col("transaction_hash"), col("address")) ++
         U256.expand(col("from_value"), "from_value", u256Reprs) ++
         U256.expand(col("to_value"), "to_value", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def nonceDiffs(bronze: Bronze): DataFrame =
     bronze("rpc_nonce_diffs")
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "from_value", "to_value", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def codeDiffs(bronze: Bronze): DataFrame =
     bronze("rpc_code_diffs")
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "from_value", "to_value", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   /** geth prestate-diff family (multi_datasets/geth_state_diffs.rs):
     * pre FULL OUTER post per (tx, address[, slot]) with blank-state fill
@@ -457,7 +434,6 @@ object ChainDatasets {
       .withColumn("to_value", coalesce(col("post_value"), zero))
       .filter(col("from_value") =!= col("to_value"))
     project(joined, u256Reprs)
-      .sortWithinPartitions("block_number", "transaction_index")
   }
 
   private def u256DiffProject(withSlot: Boolean)(df: DataFrame, reprs: Seq[U256.Repr]): DataFrame =
@@ -500,7 +476,6 @@ object ChainDatasets {
         col("output_data"),
         Keccak256.keccak256(col("output_data")).as("output_data_hash"),
         col("chain_id"))
-      .sortWithinPartitions("block_number", "contract_address")
 
   /** datasets/erc20_metadata.rs:8-93 — pivot the three metadata calls into
     * one row per contract; ABI string decode + control-char scrub
@@ -531,7 +506,6 @@ object ChainDatasets {
         abiStr(col("symbol_raw")).as("symbol"),
         U256.toU32(col("decimals_raw")).cast("int").as("decimals"),
         col("chain_id"))
-      .sortWithinPartitions("symbol", "block_number")
   }
 
   /** datasets/erc20_supplies.rs — totalSupply per contract/block. */
@@ -541,7 +515,6 @@ object ChainDatasets {
       .filter(col("call_data") === lit(GenFixtures.selTotalSupply))
       .select(Seq(col("block_number"), col("contract_address").as("erc20")) ++
         U256.expand(col("output_data"), "total_supply", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("erc20", "block_number")
 
   /** datasets/vm_traces.rs:13-133 — one row per EVM opcode step (the
     * recursive sub-call flatten already happened at bronze time). */
@@ -550,7 +523,6 @@ object ChainDatasets {
       .select("block_number", "transaction_index", "pc", "cost", "used",
         "push", "mem_off", "mem_data", "storage_key", "storage_val", "op",
         "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index", "pc")
 
   /** datasets/geth_opcodes.rs:14-167 — struct-log opcode trace, with
     * the memory/stack/storage `captures` (see gethOpcodesCaptures). */
@@ -559,7 +531,6 @@ object ChainDatasets {
       "gas_cost", "depth")
     bronze("rpc_geth_opcodes")
       .select(base ++ gethCaptures.filter(captures) :+ "chain_id" map col: _*)
-      .sortWithinPartitions("block_number", "transaction_index", "pc")
   }
 
   /** datasets/geth_calls.rs — flattened callTracer frames. */
@@ -571,7 +542,6 @@ object ChainDatasets {
         U256.expand(col("value"), "value", u256Reprs) ++
         Seq(col("gas"), col("gas_used"), col("input"), col("output"),
           col("call_type"), col("error"), col("depth"), col("chain_id")): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/javascript_traces.rs:10-90 — opaque user-tracer JSON
     * strings; downstream extraction is from_json/get_json_object. */
@@ -579,7 +549,6 @@ object ChainDatasets {
     bronze("rpc_js_traces")
       .select("block_number", "transaction_index", "transaction_hash",
         "output", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/trace_calls.rs:9-179 — call tree of a simulated call,
     * keyed by (contract, calldata) instead of a transaction. */
@@ -589,7 +558,6 @@ object ChainDatasets {
         "action_from", "action_to", "action_value", "action_gas",
         "action_input", "action_type", "trace_address", "subtraces",
         "error", "chain_id")
-      .sortWithinPartitions("block_number", "trace_address")
 
   /** state-reads family (multi_datasets/state_reads.rs:8-111) — account
     * state touched during execution: the prestate tracer's pre-phase
@@ -607,26 +575,22 @@ object ChainDatasets {
       .select(Seq(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address")) ++
         U256.expand(col("balance"), "balance", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def nonceReads(bronze: Bronze): DataFrame =
     stateReads(bronze, "nonce", withSlot = false)
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "nonce", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def codeReads(bronze: Bronze): DataFrame =
     stateReads(bronze, "code", withSlot = false)
       .select("block_number", "transaction_index", "transaction_hash",
         "address", "code", "chain_id")
-      .sortWithinPartitions("block_number", "transaction_index")
 
   def storageReads(bronze: Bronze): DataFrame =
     stateReads(bronze, "slot_value", withSlot = true)
       .select(col("block_number"), col("transaction_index"),
         col("transaction_hash"), col("address"), col("slot"),
         col("slot_value").as("value"), col("chain_id"))
-      .sortWithinPartitions("block_number", "transaction_index")
 
   /** datasets/erc721_metadata.rs — name/symbol per NFT contract. */
   def erc721Metadata(bronze: Bronze): DataFrame = {
@@ -642,7 +606,6 @@ object ChainDatasets {
         abiStr(col("name_raw")).as("name"),
         abiStr(col("symbol_raw")).as("symbol"),
         col("chain_id"))
-      .sortWithinPartitions("symbol", "block_number")
   }
 
   /** datasets/erc20_balances.rs:8-58 — balanceOf(address) results; the
@@ -655,5 +618,4 @@ object ChainDatasets {
       .select(Seq(col("block_number"), col("contract_address").as("erc20"),
         expr("substring(call_data, 17, 20)").as("address")) ++
         U256.expand(col("output_data"), "balance", u256Reprs) :+ col("chain_id"): _*)
-      .sortWithinPartitions("erc20", "block_number", "address")
 }

@@ -266,8 +266,10 @@ object Datatypes {
 
   val traceCalls = DatasetDef(
     name = "trace_calls",
-    columns = traces.columns.filterNot(c => c._1 == "transaction_index" || c._1 == "transaction_hash") :+
-      ("tx_call_data" -> Binary),
+    columns = Seq(bn, "contract_address" -> Binary, "tx_call_data" -> Binary,
+      "action_from" -> Binary, "action_to" -> Binary, "action_value" -> Str,
+      "action_gas" -> UInt32, "action_input" -> Binary, "action_type" -> Str,
+      "trace_address" -> Str, "subtraces" -> UInt32, "error" -> Str, chainId),
     sortColumns = Seq("block_number", "trace_address"),
     requiredDims = Seq(Contract, CallData))
 

@@ -167,7 +167,7 @@ object DiffTest {
 
     val scalar = corpus.map { case (n, bld) => compare(n, canon, bld) }
     val js = compare("javascript_traces", canonJs,
-      ChainDatasets.javascriptTraces)
+      Freeze.builder("javascript_traces"))
 
     // by-transaction dimension: hash list sampled from one reference
     // block (cryo_test default_combos pairs every datatype with both

@@ -82,7 +82,7 @@ object Freeze {
         * any of "datatype", "network", or a literal custom label */
       subdirs: Seq[String] = Seq.empty,
       /** sort keys of every file (`--sort`, single-dataset runs); empty:
-        * the dataset's default sort (TableSchema.sortKeys) */
+        * the dataset's default sort (sortKeys). The builders sort nothing */
       sort: Seq[String] = Seq.empty)
 
   case class FreezeResult(
@@ -102,10 +102,10 @@ object Freeze {
   /** dataset name → full DataFrame builder over its bronze tables */
   type DatasetBuilder = Bronze => DataFrame
 
-  /** The schema and filter settings a builder takes: `--u256-types`,
+  /** The schema and filter settings a table is built with: `--u256-types`,
     * `--include-columns`, `--exclude-columns`, `--columns`,
     * `--event-signature` and `--exclude-failed`. Each builder reads the
-    * ones that apply to its dataset. */
+    * ones that apply to its dataset; `build` selects the columns. */
   case class BuildOptions(
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
@@ -115,7 +115,8 @@ object Freeze {
 
   /** One dataset, declared once (cryo datatype_macros.rs
     * define_datatypes!): the bronze tables its builder reads and the
-    * builder itself, both for given options. */
+    * builder itself, both for given options. The builder emits the
+    * dataset's declared columns, unsorted (see ChainDatasets). */
   case class Entry(bronze: BuildOptions => Set[String],
       build: BuildOptions => DatasetBuilder)
 
@@ -138,17 +139,13 @@ object Freeze {
     val diffs = Seq("rpc_balance_diffs", "rpc_code_diffs",
       "rpc_nonce_diffs", "rpc_storage_diffs")
     Map(
-      "blocks" -> reads("rpc_blocks")(o =>
-        CD.blocks(_, o.include, o.exclude, o.columns)),
+      "blocks" -> reads("rpc_blocks")(_ => CD.blocks),
       "transactions" -> Entry(
         o => Set("rpc_transactions", "rpc_blocks") ++ (
-          if (CD.transactionsNeedReceipts(o.excludeFailed,
-              o.include, o.exclude, o.columns)) Set("rpc_receipts")
-          else Set.empty),
-        o => CD.transactions(_, o.excludeFailed, o.include, o.exclude, o.columns)),
+          if (txReceipts(o)) Set("rpc_receipts") else Set.empty),
+        o => CD.transactions(_, o.excludeFailed, receipts = txReceipts(o))),
       "logs" -> reads(logs)(o => CD.logs(_, eventSignature = o.eventSignature,
-        u256Reprs = o.u256Reprs, include = o.include, exclude = o.exclude,
-        columns = o.columns)),
+        u256Reprs = o.u256Reprs)),
       "traces" -> reads(traces)(o => CD.traces(_, o.excludeFailed)),
       "erc20_transfers" -> reads(logs)(o => CD.erc20Transfers(_, o.u256Reprs)),
       "erc20_approvals" -> reads(logs)(o => CD.erc20Approvals(_, o.u256Reprs)),
@@ -189,28 +186,50 @@ object Freeze {
       "erc721_metadata" -> reads("rpc_calls_erc721")(_ => CD.erc721Metadata))
   }
 
-  /** a dataset's builder at the default options */
-  def builder(dataset: String): DatasetBuilder =
-    catalog(dataset).build(BuildOptions())
+  private def txReceipts(o: BuildOptions): Boolean =
+    ChainDatasets.transactionsNeedReceipts(o.excludeFailed, o.include, o.exclude, o.columns)
+
+  /** A dataset's table as every output gets it: its catalog builder under
+    * `o`, then `filter` (the entity filters), then the columns `o`
+    * selects (TableSchema.select). Unsorted: each output sorts by
+    * `sortKeys` (a freeze's files, writeSingleFile, the collects). */
+  def build(dataset: String, o: BuildOptions = BuildOptions(),
+      filter: DataFrame => DataFrame = identity): DatasetBuilder = {
+    val ds = Datatypes(dataset)
+    val raw = catalog(ds.name).build(o)
+    bronze => TableSchema.select(filter(raw(bronze)), ds, o.include, o.exclude, o.columns)
+  }
+
+  /** a dataset's table at the default options */
+  def builder(dataset: String): DatasetBuilder = build(dataset)
+
+  /** The keys an output of `dataset` is sorted by: `sort` (`--sort`), else
+    * the dataset's default sort among the columns `df` holds. */
+  private[graft] def sortKeys(dataset: String, df: DataFrame,
+      sort: Seq[String] = Seq.empty): Seq[String] =
+    if (sort.nonEmpty) sort else TableSchema.sortKeys(Datatypes(dataset), df.columns.toSeq)
+
+  /** `df` in the order of `sortKeys`, as a collect returns it */
+  private[graft] def ordered(dataset: String, df: DataFrame,
+      sort: Seq[String] = Seq.empty): DataFrame =
+    df.orderBy(sortKeys(dataset, df, sort).map(col): _*)
 
   /** every dataset's default builder over a bronze directory */
   val builders: Map[String, (SparkSession, String) => DataFrame] =
     catalog.transform((name, _) => (spark, dir) => builder(name)(Bronze.dir(spark, dir)))
 
   /** In-memory collect — the library API of the reference
-    * (cryo collect.rs:5-30): one dataset, no files. Takes the same
-    * schema/representation options as the CLI. */
+    * (cryo collect.rs:5-30): one dataset, no files, sorted by its default
+    * sort. Takes the same schema/representation options as the CLI. */
   def collect(bronze: Bronze, dataset: String,
       blocks: BlockSyntax.Blocks,
       u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
       include: Seq[String] = Seq.empty, exclude: Seq[String] = Seq.empty,
       columns: Option[Seq[String]] = None,
       hex: Boolean = false): DataFrame = {
-    val canonical = Datatypes(dataset).name
-    val df0 = catalog(canonical).build(
-      BuildOptions(u256Reprs, include, exclude, columns))(bronze)
-    val df = if (hex) hexifyBinary(df0) else df0
-    filterBlocks(df, blocks)
+    val df = ordered(dataset, build(dataset, BuildOptions(u256Reprs, include, exclude, columns),
+      filterBlocks(_, blocks))(bronze))
+    if (hex) hexifyBinary(df) else df
   }
 
   /** chain_id → canonical network name for file naming when --network is
@@ -231,27 +250,31 @@ object Freeze {
   /** Collect by transaction hashes — TimeDimension::Transactions
     * (cryo types/queries.rs:75-80, collect_generic.rs:14-19): the unit of
     * collection is a tx-hash list instead of a block range. Hash lists are
-    * small → an isin/broadcast-semi filter on transaction_hash. */
+    * small → an isin/broadcast-semi filter on transaction_hash, applied
+    * with `filter` before the columns are selected. Unsorted: the CLI
+    * sorts at its output. */
   def collectByTransaction(bronze: Bronze, dataset: String,
-      txHashes: Seq[Array[Byte]]): DataFrame = {
+      txHashes: Seq[Array[Byte]], o: BuildOptions = BuildOptions(),
+      filter: DataFrame => DataFrame = identity): DataFrame = {
     val ds = Datatypes(dataset)
     require(ds.byTransaction, s"${ds.name} does not support tx-hash collection")
-    val df = builder(ds.name)(bronze)
-    if (df.columns.contains("transaction_hash"))
-      df.filter(col("transaction_hash").isin(txHashes: _*))
-    else {
-      // block-keyed datasets (blocks itself): the reference's
-      // CollectByTransaction resolves each tx's CONTAINING block
-      // (blocks.rs:71-90) — map hashes to block numbers through the
-      // transactions bronze, then filter the block dimension. The
-      // collect is |hash list|-bounded (tx lists are small by
-      // construction, the same discipline as the isin filter above).
-      val bns = bronze("rpc_transactions")
-        .filter(col("transaction_hash").isin(txHashes: _*))
-        .select("block_number").distinct()
-        .collect().map(_.get(0)).toSeq
-      df.filter(col("block_number").isin(bns: _*))
-    }
+    build(ds.name, o, filter.andThen { df =>
+      if (df.columns.contains("transaction_hash"))
+        df.filter(col("transaction_hash").isin(txHashes: _*))
+      else {
+        // block-keyed datasets (blocks itself): the reference's
+        // CollectByTransaction resolves each tx's CONTAINING block
+        // (blocks.rs:71-90) — map hashes to block numbers through the
+        // transactions bronze, then filter the block dimension. The
+        // collect is |hash list|-bounded (tx lists are small by
+        // construction, the same discipline as the isin filter above).
+        val bns = bronze("rpc_transactions")
+          .filter(col("transaction_hash").isin(txHashes: _*))
+          .select("block_number").distinct()
+          .collect().map(_.get(0)).toSeq
+        df.filter(col("block_number").isin(bns: _*))
+      }
+    })(bronze)
   }
 
   private[graft] def filterBlocks(df: DataFrame, blocks: BlockSyntax.Blocks): DataFrame =
@@ -266,7 +289,8 @@ object Freeze {
     * (cryo types/datatypes/meta.rs:23-39 clustering): the union of the
     * members' bronze tables is held once in a `Bronze.persisted`, and
     * every member builds from it, so N member tables cost one scan of
-    * each table. Call `release()` when done.
+    * each table. Each member comes sorted by its default sort. Call
+    * `release()` when done.
     */
   case class MultiResult(tables: Map[String, DataFrame], release: () => Unit)
 
@@ -275,7 +299,8 @@ object Freeze {
       throw new IllegalArgumentException(s"unknown multi: $multiName"))
     val held = Bronze.persisted(members.flatMap(catalog(_).bronze(BuildOptions()))
       .distinct.map(t => t -> bronze(t)).toMap)
-    MultiResult(members.map(m => m -> builder(m)(held)).toMap, () => held.release())
+    MultiResult(members.map(m => m -> ordered(m, builder(m)(held))).toMap,
+      () => held.release())
   }
 
   private sealed trait TaskOutcome
@@ -473,9 +498,7 @@ object Freeze {
             udf((bn: Long, key: String) => files.getOrElse((chunkOf(bn), Option(key)), -1))
               .apply(col("block_number"), keyColumn(df, dim))
         }
-        val keys =
-          if (spec.sort.nonEmpty) spec.sort
-          else TableSchema.sortKeys(Datatypes(canonical), df.columns.toSeq)
+        val keys = sortKeys(canonical, df, spec.sort)
         val tmp = new HPath(dirOf(canonical), fileName(spec, canonical, span) + "._tmp")
         (true, writeFiles(df.withColumn(FileIndex, fileOf).filter(col(FileIndex) >= 0),
           keys, todo.map(_.path), tmp, spec))
@@ -562,7 +585,7 @@ object Freeze {
     targets.zipWithIndex.foreach { case (target, i) =>
       val dir = new HPath(tmp, s"$FileIndex=$i")
       if (tfs.exists(dir)) LakeFs.promote(partFile(dir, target), new HPath(target))
-      else writeSingleFile(out.drop(FileIndex).limit(0), target, spec.format,
+      else writeSingleFile(out.drop(FileIndex).limit(0), Nil, target, spec.format,
         spec.compression, spec.rowGroupSize, spec.noStats)
     }
     tfs.delete(tmp, true)
@@ -607,19 +630,21 @@ object Freeze {
     * lakes all take the same path. The promotion is an atomic rename on
     * HDFS/local; on object stores the part file lands as one object copy
     * whose source sits in the `._tmp` dir lake listings skip (LakeFs
-    * scaladoc has the full semantics). The row count rides the write job
-    * as an `observe` metric, so the frame is computed exactly once. The
-    * writes outside a chunked freeze (--txs, compaction) and a freeze's
-    * schema-only files use it. */
-  private[graft] def writeSingleFile(df: DataFrame, target: String, format: String,
-      compression: Option[String] = None, rowGroupSize: Option[Int] = None,
-      noStats: Boolean = false): Long = {
+    * scaladoc has the full semantics). The file is sorted by `keys` (the
+    * one partition sorted whole, like a freeze's chunk files). The row
+    * count rides the write job as an `observe` metric, so the frame is
+    * computed exactly once. The writes outside a chunked freeze (--txs,
+    * compaction) and a freeze's schema-only files use it. */
+  private[graft] def writeSingleFile(df: DataFrame, keys: Seq[String], target: String,
+      format: String, compression: Option[String] = None,
+      rowGroupSize: Option[Int] = None, noStats: Boolean = false): Long = {
     val targetPath = new HPath(target)
     val tmp = new HPath(targetPath.getParent, targetPath.getName + "._tmp")
     val obs = org.apache.spark.sql.Observation(
       s"freeze_${targetPath.getName}_${System.nanoTime()}")
-    save(df.observe(obs, count(lit(1)).as("rows")).coalesce(1).write, tmp,
-      format, compression, rowGroupSize, noStats)
+    val one = df.observe(obs, count(lit(1)).as("rows")).coalesce(1)
+      .sortWithinPartitions(keys.map(col): _*)
+    save(one.write, tmp, format, compression, rowGroupSize, noStats)
     LakeFs.promote(partFile(tmp, target), targetPath)
     LakeFs.fs(tmp).delete(tmp, true)
     obs.get("rows").asInstanceOf[Long]

@@ -2,7 +2,6 @@ package graft.chain
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 /** Small-file compaction for a frozen lake — the maintenance operator a
   * follow-mode lake needs at scale: followLive freezes reorg-buffer-
@@ -16,8 +15,9 @@ import org.apache.spark.sql.functions.col
   *
   * Invariants:
   *  - CONTENT-preserving: the merged file holds exactly the union of its
-  *    source files' rows (row-count re-checked before any delete; order
-  *    follows the dataset's declared default sort). File BYTES are not
+  *    source files' rows (row-count re-checked before any delete; the
+  *    merged file is sorted by the dataset's default sort keys, like a
+  *    freeze's chunk files, in Freeze.writeSingleFile). File BYTES are not
   *    preserved — this is a rewrite, like parquet compaction anywhere.
   *  - Never bridges a GAP: only runs where each file starts at the
   *    previous file's end+1 merge, so a merged file's name never claims
@@ -125,10 +125,7 @@ object LakeCompact {
                 new org.apache.hadoop.fs.Path(f.path), hconf))
             try reader.getRecordCount finally reader.close()
           }.sum
-          val sortKeys = TableSchema.sortKeys(Datatypes(dataset), src.columns.toSeq)
-          val ordered =
-            if (sortKeys.isEmpty) src else src.orderBy(sortKeys.map(col): _*)
-          val n = Freeze.writeSingleFile(ordered, target, "parquet")
+          val n = Freeze.writeSingleFile(src, Freeze.sortKeys(dataset, src), target, "parquet")
           if (n != expected) {
             // the bad merged file must NOT survive: the containment rule
             // would make reads prefer it over the (correct) originals,

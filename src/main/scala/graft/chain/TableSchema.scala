@@ -1,7 +1,7 @@
 package graft.chain
 
-import graft.functions.{HexCodec, U256}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.U256
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Effective-schema resolution — the Spark rendering of the reference's
@@ -39,32 +39,20 @@ object TableSchema {
     }
   }
 
-  /** Project a canonical DataFrame (u256 columns as 32-byte binary) to the
-    * physical output schema: u256 expansion + optional hex re-encoding of
-    * binary columns (forced for CSV/JSON, cryo cli/parse/schemas.rs:37-40).
-    */
-  def project(
-      df: DataFrame,
-      ds: DatasetDef,
-      used: Seq[String],
-      u256Reprs: Seq[U256.Repr] = U256.defaultReprs,
-      hex: Boolean = false): DataFrame = {
-    val typeOf = ds.columns.toMap
-    val cols: Seq[Column] = used.flatMap { name =>
-      typeOf(name) match {
-        case ColType.U256 =>
-          u256Reprs.map { r =>
-            val base = U256.repr(col(name), r)
-            val alias = s"${name}_${r.suffix}"
-            if (hex && r == U256.Binary) HexCodec.toHex(base).as(alias)
-            else base.as(alias)
-          }
-        case ColType.Binary if hex =>
-          Seq(HexCodec.toHex(col(name)).as(name))
-        case _ => Seq(col(name))
-      }
-    }
-    df.select(cols: _*)
+  /** The output columns of a built table: the columns `resolve` selects,
+    * in its order. A u256 column maps to its `<name>_<suffix>` columns the
+    * frame holds (and to itself, where a builder keeps it raw), a
+    * selected column the builder left out for this input is skipped, and
+    * the `event__*` columns an event decode appends are kept. Entity
+    * filters run before it, so they may read any built column. */
+  def select(df: DataFrame, ds: DatasetDef, include: Seq[String],
+      exclude: Seq[String], columns: Option[Seq[String]]): DataFrame = {
+    val suffixes = U256.allReprs.map("_" + _.suffix)
+    val kept = resolve(ds, include, exclude, columns).flatMap { c =>
+      df.columns.filter(p => p == c ||
+        ds.u256Columns.contains(c) && suffixes.exists(c + _ == p))
+    } ++ df.columns.filter(_.startsWith("event__"))
+    df.select(kept.map(col).toSeq: _*)
   }
 
   /** default sort per cryo types/columns.rs:34-51: as declared, with

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.chain.{BlockSyntax, Bronze, ChainDatasets => CD, Freeze, GenFixtures, Lake}
+import graft.chain.{BlockSyntax, Bronze, Freeze, GenFixtures, Lake}
 import graft.functions.U256
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -348,9 +348,13 @@ object ChainQueries {
       Freeze.collect(Bronze.dir(s, fixDir), "blocks", BlockSyntax.Range(1000, 1001),
         hex = true).schema)
 
-  /** the chain fixture bronze for a testdata sf dir */
-  private def bronze(s: SparkSession, sfDir: String): Bronze =
-    Bronze.dir(s, chainDir(sfDir))
+  /** a chain dataset over the fixture bronze of a testdata sf dir, built
+    * as every output builds it (Freeze.build) */
+  private def silver(s: SparkSession, sfDir: String, dataset: String,
+      o: Freeze.BuildOptions = Freeze.BuildOptions()): DataFrame =
+    Freeze.build(dataset, o)(Bronze.dir(s, chainDir(sfDir)))
+
+  private val binary = Freeze.BuildOptions(u256Reprs = Seq(U256.Binary))
 
   private val rawDefs: Map[String, Q] = Map(
     // Frozen-lake read-back — freeze the fixture blocks into a 6-chunk
@@ -443,16 +447,16 @@ object ChainQueries {
         min(col("block_number")).as("first_block"),
         max(col("block_number")).as("last_block"))
     },
-    "chain_blocks" -> ((s, d) => CD.blocks(bronze(s, d))),
+    "chain_blocks" -> ((s, d) => silver(s, d, "blocks")),
     "chain_transactions" -> { (s, d) =>
-      CD.transactions(bronze(s, d)).select(
+      silver(s, d, "transactions").select(
         "block_number", "transaction_index", "transaction_hash",
         "from_address", "to_address", "value", "gas_limit", "gas_used",
         "gas_price", "transaction_type", "success", "n_input_bytes",
         "n_input_zero_bytes", "chain_id")
     },
     "chain_transactions_exclude_failed" -> { (s, d) =>
-      CD.transactions(bronze(s, d), excludeFailed = true)
+      silver(s, d, "transactions", Freeze.BuildOptions(excludeFailed = true))
         .select("block_number", "transaction_index", "transaction_hash",
           "success", "gas_price", "chain_id")
     },
@@ -464,7 +468,7 @@ object ChainQueries {
     // scale, and DuckDB errors on bigint overflow where Spark wraps).
     "chain_fee_analytics" -> { (s, d) =>
       import org.apache.spark.sql.functions._
-      CD.transactions(bronze(s, d))
+      silver(s, d, "transactions")
         .groupBy("block_number")
         .agg(count(lit(1)).as("n_txs"),
           sum(when(col("success"), 1L).otherwise(0L)).as("n_success"),
@@ -487,7 +491,7 @@ object ChainQueries {
     "chain_fee_percentiles" -> { (s, d) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val ranked = CD.transactions(bronze(s, d))
+      val ranked = silver(s, d, "transactions")
         .select("block_number", "transaction_index", "gas_price")
         .filter(col("gas_price").isNotNull)
         .withColumn("rn", row_number().over(Window.partitionBy("block_number")
@@ -511,7 +515,7 @@ object ChainQueries {
     // aggregates Catalyst plans itself.
     "chain_factory_stats" -> { (s, d) =>
       import org.apache.spark.sql.functions._
-      CD.contracts(bronze(s, d))
+      silver(s, d, "contracts")
         .groupBy(col("factory"))
         .agg(count(lit(1)).as("n_contracts"),
           countDistinct(col("deployer")).as("n_deployers"),
@@ -546,7 +550,7 @@ object ChainQueries {
     "chain_erc20_net_flows" -> { (s, d) =>
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.GraftSql
-      val t = CD.erc20Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))
+      val t = silver(s, d, "erc20_transfers", binary)
         .select(col("erc20"), col("from_address"), col("to_address"),
           GraftSql.column(graft.functions.U256ToDecimal(
             GraftSql.expression(col("value_binary")))).as("v"))
@@ -572,85 +576,70 @@ object ChainQueries {
           (sum(col("in_v")) - sum(col("out_v")))
             .cast("decimal(38,0)").cast("double").as("net_flow"))
     },
-    "chain_logs" -> ((s, d) => CD.logs(bronze(s, d))),
+    "chain_logs" -> ((s, d) => silver(s, d, "logs")),
     "chain_logs_decoded" -> { (s, d) =>
-      CD.logs(bronze(s, d),
-        eventSignature = Some("Transfer(address indexed from, address indexed to, uint256 value)"),
-        u256Reprs = Seq(U256.Binary))
+      silver(s, d, "logs", binary.copy(eventSignature =
+        Some("Transfer(address indexed from, address indexed to, uint256 value)")))
     },
-    "chain_erc20_transfers" -> ((s, d) =>
-      CD.erc20Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_erc20_transfers" -> ((s, d) => silver(s, d, "erc20_transfers", binary)),
     // hex output mode (--hex / CSV coupling): binary → 0x-prefixed strings
     "chain_logs_hex" -> { (s, d) =>
       import org.apache.spark.sql.types.BinaryType
-      val df = CD.logs(bronze(s, d))
+      val df = silver(s, d, "logs")
       df.select(df.schema.fields.map { f =>
         if (f.dataType == BinaryType)
           graft.functions.HexCodec.toHex(org.apache.spark.sql.functions.col(f.name)).as(f.name)
         else org.apache.spark.sql.functions.col(f.name)
       }.toSeq: _*)
     },
-    "chain_erc20_approvals" -> ((s, d) =>
-      CD.erc20Approvals(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_erc721_transfers" -> ((s, d) =>
-      CD.erc721Transfers(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_traces" -> ((s, d) => CD.traces(bronze(s, d))),
+    "chain_erc20_approvals" -> ((s, d) => silver(s, d, "erc20_approvals", binary)),
+    "chain_erc721_transfers" -> ((s, d) => silver(s, d, "erc721_transfers", binary)),
+    "chain_traces" -> ((s, d) => silver(s, d, "traces")),
     "chain_traces_exclude_failed" -> ((s, d) =>
-      CD.traces(bronze(s, d), excludeFailed = true)
+      silver(s, d, "traces", Freeze.BuildOptions(excludeFailed = true))
+
         .select("block_number", "transaction_index", "transaction_hash",
           "trace_address", "action_type", "error", "chain_id")),
     "chain_native_transfers" -> ((s, d) =>
-      CD.nativeTransfers(bronze(s, d), u256Reprs = Seq(U256.Str))),
+      silver(s, d, "native_transfers",
+        Freeze.BuildOptions(u256Reprs = Seq(U256.Str)))),
     "chain_contracts" -> ((s, d) =>
-      CD.contracts(bronze(s, d))
+      silver(s, d, "contracts")
         .select("block_number", "create_index", "transaction_hash",
           "contract_address", "deployer", "factory", "n_init_code_bytes",
           "n_code_bytes", "chain_id")),
-    "chain_four_byte_counts" -> ((s, d) => CD.fourByteCounts(bronze(s, d))),
-    "chain_address_appearances" -> ((s, d) => CD.addressAppearances(bronze(s, d))),
-    "chain_balances" -> ((s, d) =>
-      CD.balances(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonces" -> ((s, d) => CD.nonces(bronze(s, d))),
-    "chain_slots" -> ((s, d) =>
-      CD.slots(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_storage_diffs" -> ((s, d) =>
-      CD.storageDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_eth_calls" -> ((s, d) =>
-      CD.ethCalls(bronze(s, d))
-        .select("block_number", "contract_address", "call_data",
-          "output_data", "chain_id")),
-    "chain_balance_diffs" -> ((s, d) =>
-      CD.balanceDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonce_diffs" -> ((s, d) => CD.nonceDiffs(bronze(s, d))),
-    "chain_code_diffs" -> ((s, d) => CD.codeDiffs(bronze(s, d))),
-    "chain_codes" -> ((s, d) => CD.codes(bronze(s, d))),
-    "chain_vm_traces" -> ((s, d) => CD.vmTraces(bronze(s, d))),
-    "chain_geth_opcodes" -> ((s, d) => CD.gethOpcodes(bronze(s, d))),
-    "chain_geth_calls" -> ((s, d) =>
-      CD.gethCalls(bronze(s, d), u256Reprs = Seq(U256.Binary))),
+    "chain_four_byte_counts" -> ((s, d) => silver(s, d, "four_byte_counts")),
+    "chain_address_appearances" -> ((s, d) => silver(s, d, "address_appearances")),
+    "chain_balances" -> ((s, d) => silver(s, d, "balances", binary)),
+    "chain_nonces" -> ((s, d) => silver(s, d, "nonces")),
+    "chain_slots" -> ((s, d) => silver(s, d, "slots", binary)),
+    "chain_storage_diffs" -> ((s, d) => silver(s, d, "storage_diffs", binary)),
+    "chain_eth_calls" -> ((s, d) => silver(s, d, "eth_calls")),
+    "chain_balance_diffs" -> ((s, d) => silver(s, d, "balance_diffs", binary)),
+    "chain_nonce_diffs" -> ((s, d) => silver(s, d, "nonce_diffs")),
+    "chain_code_diffs" -> ((s, d) => silver(s, d, "code_diffs")),
+    "chain_codes" -> ((s, d) => silver(s, d, "codes")),
+    "chain_vm_traces" -> ((s, d) => silver(s, d, "vm_traces")),
+    "chain_geth_opcodes" -> ((s, d) => silver(s, d, "geth_opcodes")),
+    "chain_geth_calls" -> ((s, d) => silver(s, d, "geth_calls", binary)),
     "chain_js_traces" -> { (s, d) =>
       import org.apache.spark.sql.functions.{col, get_json_object}
-      CD.javascriptTraces(bronze(s, d))
+      silver(s, d, "javascript_traces")
         .withColumn("gas_used", get_json_object(col("output"), "$.gasUsed").cast("long"))
     },
-    "chain_trace_calls" -> ((s, d) => CD.traceCalls(bronze(s, d))),
-    "chain_balance_reads" -> ((s, d) =>
-      CD.balanceReads(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_nonce_reads" -> ((s, d) => CD.nonceReads(bronze(s, d))),
-    "chain_code_reads" -> ((s, d) => CD.codeReads(bronze(s, d))),
-    "chain_storage_reads" -> ((s, d) => CD.storageReads(bronze(s, d))),
-    "chain_erc721_metadata" -> ((s, d) => CD.erc721Metadata(bronze(s, d))),
-    "chain_geth_balance_diffs" -> ((s, d) =>
-      CD.gethBalanceDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_geth_storage_diffs" -> ((s, d) =>
-      CD.gethStorageDiffs(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_geth_nonce_diffs" -> ((s, d) => CD.gethNonceDiffs(bronze(s, d))),
-    "chain_geth_code_diffs" -> ((s, d) => CD.gethCodeDiffs(bronze(s, d))),
-    "chain_erc20_metadata" -> ((s, d) => CD.erc20Metadata(bronze(s, d))),
-    "chain_erc20_supplies" -> ((s, d) =>
-      CD.erc20Supplies(bronze(s, d), u256Reprs = Seq(U256.Binary))),
-    "chain_erc20_balances" -> ((s, d) =>
-      CD.erc20Balances(bronze(s, d), u256Reprs = Seq(U256.Binary)))
+    "chain_trace_calls" -> ((s, d) => silver(s, d, "trace_calls")),
+    "chain_balance_reads" -> ((s, d) => silver(s, d, "balance_reads", binary)),
+    "chain_nonce_reads" -> ((s, d) => silver(s, d, "nonce_reads")),
+    "chain_code_reads" -> ((s, d) => silver(s, d, "code_reads")),
+    "chain_storage_reads" -> ((s, d) => silver(s, d, "storage_reads")),
+    "chain_erc721_metadata" -> ((s, d) => silver(s, d, "erc721_metadata")),
+    "chain_geth_balance_diffs" -> ((s, d) => silver(s, d, "geth_balance_diffs", binary)),
+    "chain_geth_storage_diffs" -> ((s, d) => silver(s, d, "geth_storage_diffs", binary)),
+    "chain_geth_nonce_diffs" -> ((s, d) => silver(s, d, "geth_nonce_diffs")),
+    "chain_geth_code_diffs" -> ((s, d) => silver(s, d, "geth_code_diffs")),
+    "chain_erc20_metadata" -> ((s, d) => silver(s, d, "erc20_metadata")),
+    "chain_erc20_supplies" -> ((s, d) => silver(s, d, "erc20_supplies", binary)),
+    "chain_erc20_balances" -> ((s, d) => silver(s, d, "erc20_balances", binary))
   )
 
   /** driver-facing entries: raw transforms behind the comparator-safe hex

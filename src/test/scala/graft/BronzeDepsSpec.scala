@@ -1,7 +1,10 @@
 package graft
 
 import graft.chain.{Bronze, Datatypes, Freeze, TableSchema}
+import graft.functions.U256
 import graft.queries.ChainQueries
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Each `Freeze.catalog` entry declares the bronze tables its builder
@@ -37,19 +40,46 @@ class BronzeDepsSpec extends AnyFunSuite {
     } finally blocksOnly.release()
   }
 
-  test("every builder sorts by its dataset's default sort") {
-    // a freeze sorts each file by TableSchema.defaultSort, so a builder
-    // that ends on other keys would write rows in another order than its
-    // in-memory frame
+  test("every catalog entry emits its declared columns unsorted; outputs sort") {
+    // the builders are the one source of a table's columns and sort
+    // nothing: column selection and order happen once, at the output
     val fixtures = Bronze.dir(spark, ChainQueries.FixDir)
-    for (dataset <- Freeze.catalog.keys.toSeq.sorted) {
-      val plan = Freeze.builder(dataset)(fixtures).queryExecution.analyzed
-      val keys = plan match {
-        case s: org.apache.spark.sql.catalyst.plans.logical.Sort =>
-          s.order.map(_.child.references.head.name)
-        case other => fail(s"$dataset ends on ${other.nodeName}, not a sort")
+    val all = Freeze.BuildOptions(columns = Some(Seq("all")))
+    val suffixes = U256.allReprs.map("_" + _.suffix)
+    for ((dataset, entry) <- Freeze.catalog.toSeq.sortBy(_._1)) {
+      val ds = Datatypes(dataset)
+      val df = entry.build(all)(fixtures)
+      // a u256 family collapses to its declared column
+      val emitted = df.columns.toSeq.map(c =>
+        ds.u256Columns.find(u => suffixes.exists(u + _ == c)).getOrElse(c)).distinct
+      assert(emitted == ds.columnNames, dataset)
+      val sorts = df.queryExecution.analyzed.collect {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
       }
-      assert(keys == TableSchema.defaultSort(Datatypes(dataset)), dataset)
+      assert(sorts.isEmpty, s"$dataset builds a sort")
     }
+    // the outputs sort whole over bronze of several part files: an
+    // in-memory collect and a --txs file
+    val sf = "fixtures/chain_sf0.1"
+    def assertSorted(dataset: String, df: DataFrame): Unit = {
+      val keys = TableSchema.defaultSort(Datatypes(dataset)).map(col)
+      val rows = df.select(keys: _*).collect().toSeq
+      assert(rows.size > 1, dataset)
+      assert(rows == df.select(keys: _*).orderBy(keys: _*).collect().toSeq,
+        s"$dataset is not sorted by $keys")
+    }
+    for (dataset <- Seq("logs", "transactions", "traces"))
+      assertSorted(dataset, Cli.collectDf(Array(dataset, "--source-dir", sf,
+        "--blocks", "1000:7000"), spark))
+    val hashes = spark.read.parquet(s"$sf/rpc_transactions.parquet")
+      .select("transaction_hash").orderBy("transaction_hash").limit(300).collect()
+      .map(r => "0x" + r.getAs[Array[Byte]](0).map("%02x".format(_)).mkString)
+    val out = java.nio.file.Files.createTempDirectory("graft_txs_sorted").toString
+    val r = Cli.run(Array("transactions", "logs", "--source-dir", sf,
+      "--output-dir", out, "--txs") ++ hashes, spark).get
+    assert(r.completed.size == 2)
+    for (path <- r.completed)
+      assertSorted(if (path.contains("__logs__")) "logs" else "transactions",
+        spark.read.parquet(path))
   }
 }

@@ -113,7 +113,7 @@ class LakeSpec extends AnyFunSuite {
   test("round trip is lossless vs the direct silver, parquet and csv") {
     val out = freshDir("lake_roundtrip_")
     freeze(out, Seq("blocks"), chunkSize = 20)
-    val direct = graft.chain.ChainDatasets.blocks(Bronze.dir(spark, FixDir))
+    val direct = graft.chain.Freeze.builder("blocks")(Bronze.dir(spark, FixDir))
     val back = Lake.read(spark, out, "blocks")
     assert(back.schema == direct.schema)
     assert(back.exceptAll(direct).isEmpty && direct.exceptAll(back).isEmpty)
@@ -516,7 +516,7 @@ class LakeSpec extends AnyFunSuite {
     // data read-back through the scheme matches the direct silver
     val lakeBlocks = Lake.read(spark, out, "blocks")
     assert(lakeBlocks.count() == 60L)
-    val direct = graft.chain.ChainDatasets.blocks(Bronze.dir(spark, FixDir))
+    val direct = graft.chain.Freeze.builder("blocks")(Bronze.dir(spark, FixDir))
     assert(lakeBlocks.exceptAll(direct).isEmpty &&
       direct.exceptAll(lakeBlocks).isEmpty)
 

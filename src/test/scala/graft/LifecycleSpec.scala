@@ -244,6 +244,11 @@ class FreezeSpec extends AnyFunSuite {
     val cols = Freeze.collect(Bronze.dir(spark, fixDir), "blocks", Range(1000, 1010),
       columns = Some(Seq("block_number", "gas_used"))).columns.toSeq
     assert(cols == Seq("block_number", "gas_used"))
+    // every dataset reads the column options, not only blocks, txs and logs
+    val contracts = Freeze.collect(Bronze.dir(spark, fixDir), "contracts", Range(1000, 1060),
+      exclude = Seq("init_code", "code")).columns.toSeq
+    assert(contracts == graft.chain.Datatypes.contracts.columnNames
+      .filterNot(Seq("init_code", "code").contains), contracts)
   }
 
   test("network name resolves from chain id with fallback") {
@@ -1737,6 +1742,27 @@ class CliSpec extends AnyFunSuite {
     // topic1-3/data drop after a successful decode (to_df/src/lib.rs:165)
     assert(!df.columns.contains("topic1") && !df.columns.contains("data"))
     assert(df.count() > 0)
+  }
+
+  test("a column flag keeps --event-signature's event__ columns") {
+    val sig = "Transfer(address indexed from, address indexed to, uint256 value)"
+    val (_, d1) = runCli("logs", "--event-signature", sig)
+    val (_, d2) = runCli("logs", "--event-signature", sig, "--exclude-columns", "chain_id")
+    val all = spark.read.parquet(d1.head).columns.toSeq
+    assert(all.count(_.startsWith("event__")) >= 3, all)
+    assert(spark.read.parquet(d2.head).columns.toSeq == all.filterNot(_ == "chain_id"))
+  }
+
+  test("trace_calls: --contract and --call-data select a call; column flags keep contract_address") {
+    import graft.chain.GenFixtures.{addr, pad32, selBalanceOf, token}
+    val (_, done) = runCli("trace_calls", "--contract", hx(token(0)),
+      "--call-data", hx(selBalanceOf ++ pad32(addr(0))), "--exclude-columns", "error")
+    val df = spark.read.parquet(done.head)
+    assert(df.count() == 2)
+    assert(df.columns.contains("contract_address") && !df.columns.contains("error"))
+    val contracts = df.select("contract_address").distinct().collect()
+      .map(_.getAs[Array[Byte]](0).toSeq)
+    assert(contracts.toSeq == Seq(token(0).toSeq))
   }
 
   test("--no-report suppresses reports; --report-dir redirects them") {
